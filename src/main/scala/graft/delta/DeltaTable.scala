@@ -18,6 +18,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val catalog: Option[CatalogClient] = None,
     committerOverride: Option[Committer] = None,
     val correlationId: Option[String] = None) {
+  import DeltaTable.{Actions, Blind, Maintenance, Reads, Strict}
   val root = new Path(pathStr)
 
   /** Handle whose commits carry an opaque caller-supplied correlation
@@ -68,8 +69,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   // ---------------- commit machinery ----------------
 
-  /** Atomic put-if-absent commit with conflict resolution (reference
-    * committer/filesystem.rs + transaction/mod.rs:327-590). On losing
+  /** The conflict loop under [[commit]] (writers call `commit`; tests
+    * drive this directly): atomic put-if-absent commit with conflict
+    * resolution (reference committer/filesystem.rs +
+    * transaction/mod.rs:327-590). On losing
     * the race at version v the WINNING commit is read and examined:
     * protocol/metadata changes and same-appId transactions surface as
     * typed conflicts regardless of retryability (a blind append must
@@ -192,60 +195,166 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       retryable: Boolean): Long =
     commitActions(startVersion, (_: Long) => actions, retryable, Nil)
 
+  /** The one way a writer commits a table version (reference
+    * transaction/mod.rs:327-590). The writer hands over the snapshot it
+    * planned against (`base`; None creates the table at version 0),
+    * its typed `actions` and a conflict `mode`; everything else is
+    * derived here, once:
+    *  - the writer gate (mutating = the commit removes data);
+    *  - the commitInfo line with the correlation id and an in-commit
+    *    timestamp regenerated per attempt against the ACTUAL
+    *    predecessor; a commit turning ICT on also records the
+    *    enablement boundary (time travel orders commits below it by
+    *    file mtime, at or above it by ICT);
+    *  - the rebase policy: a commit carrying protocol, metadata or
+    *    domain metadata never rebases (its table definition, or a
+    *    high-water mark such as row tracking's, was derived from
+    *    `base`); otherwise `mode` picks blind retry, a predicate read
+    *    set, or the maintenance read set, over `actions.removes`;
+    *  - the `.crc` deltas and the post-commit hooks (auto-checkpoint;
+    *    auto-compact after blind appends only).
+    */
+  private def commit(base: Option[Snapshot], op: String,
+      params: Map[String, String], actions: Actions,
+      mode: DeltaTable.CommitMode): Long = {
+    import DeltaTable.{ICT_ENABLED_KEY, ICT_ENABLEMENT_TIMESTAMP_KEY,
+      ICT_ENABLEMENT_VERSION_KEY, ReadSet}
+    val start = base.fold(0L)(_.version + 1)
+    val baseMeta = base.map(_.metadata)
+    writerGate(base.map(_.protocol).orElse(actions.protocol).get,
+      baseMeta.orElse(actions.metadata).get,
+      mutating = actions.removes.exists(_.dataChange))
+    def ictOn(m: graft.delta.Metadata) =
+      m.configuration.get(ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
+    val stampsIct = (baseMeta ++ actions.metadata).exists(ictOn)
+    // protocol: strictly greater than the predecessor's ICT, regardless
+    // of clock skew (reference transaction/commit_info.rs:484)
+    def ictAt(v: Long): Option[Long] =
+      if (!stampsIct) None
+      else Some(math.max(now(), commitIct(v - 1).getOrElse(0L) + 1))
+    val firstIct = ictAt(start)
+    val meta = actions.metadata.map { m =>
+      if (baseMeta.exists(!ictOn(_)) && ictOn(m))
+        m.copy(configuration = m.configuration +
+          (ICT_ENABLEMENT_VERSION_KEY -> start.toString) +
+          (ICT_ENABLEMENT_TIMESTAMP_KEY -> firstIct.get.toString))
+      else m
+    }
+    val acts = actions.copy(metadata = meta)
+    val body = (acts.protocol.map(p => SingleAction(protocol = Some(p))) ++
+      acts.metadata.map(m => SingleAction(metaData = Some(m))) ++
+      acts.domains.map(d => SingleAction(domainMetadata = Some(d))) ++
+      acts.txns.map(t => SingleAction(txn = Some(t))) ++
+      acts.removes.map(r => SingleAction(remove = Some(r))) ++
+      acts.adds.map(a => SingleAction(add = Some(a))) ++
+      acts.cdc.map(c => SingleAction(cdc = Some(c))))
+      .map(JsonLog.writeAction).toSeq
+    val redefines = acts.protocol.isDefined || acts.metadata.isDefined ||
+      acts.domains.nonEmpty
+    def removedKeys = acts.removes.map(r => Storage.canonicalPathKey(r.path))
+      .toSet
+    val readSet = (mode, base) match {
+      case (_, _) if redefines => None
+      case (Reads(predicate), Some(s)) =>
+        Some(ReadSet(s, predicate, removedKeys))
+      case (Maintenance, Some(s)) =>
+        Some(ReadSet(s, None, removedKeys, maintenance = true))
+      case _ => None
+    }
+    if (base.isEmpty) fs.mkdirs(logDir)
+    val committed =
+      try commitActions(start,
+        cv => commitInfoLine(op, params,
+          if (cv == start) firstIct else ictAt(cv)) +: body,
+        retryable = mode == Blind && !redefines,
+        txnAppIds = acts.txns.map(_.appId),
+        readCheck = readSet,
+        serializable =
+          baseMeta.exists(TableProperties.serializableIsolation))
+      catch { case _: ConcurrentWriteException if base.isEmpty =>
+        throw new IllegalStateException(s"table already exists at $pathStr")
+      }
+    maybeWriteChecksum(committed, acts)
+    val finalMeta = meta.orElse(baseMeta).get
+    maybeAutoCheckpoint(committed, finalMeta)
+    if (mode == Blind)
+      maybeAutoCompact(finalMeta, acts.adds.map(_.partitionValues).toSet)
+    committed
+  }
+
   private def now(): Long = System.currentTimeMillis()
+
+  /** The protocol's tombstone for a live add. It MUST carry the add's
+    * DV descriptor: the replay dedup key is (path, dvUniqueId), so a
+    * DV-less remove would never shadow a DV-carrying add — its rows
+    * would resurrect.
+    */
+  private def tombstone(a: AddFile, dataChange: Boolean): RemoveFile =
+    RemoveFile(a.path, Some(now()), dataChange,
+      extendedFileMetadata = Some(true),
+      partitionValues = Some(a.partitionValues), size = Some(a.size),
+      deletionVector = a.deletionVector)
 
   /** Writer gate (reference table_features write gates): refuse to
     * commit when the protocol declares writer features this engine does
     * not implement, and enforce delta.appendOnly for mutating ops.
+    * [[commit]] runs it on every commit; writers also call it up front
+    * where it rejects a write before any data is staged.
     */
-  private def writerGate(snap: Snapshot, mutating: Boolean): Unit = {
-    require(snap.protocol.minWriterVersion <= 7,
-      s"unsupported minWriterVersion ${snap.protocol.minWriterVersion}")
+  private def writerGate(snap: Snapshot, mutating: Boolean): Unit =
+    writerGate(snap.protocol, snap.metadata, mutating)
+
+  private def writerGate(protocol: Protocol, metadata: graft.delta.Metadata,
+      mutating: Boolean): Unit = {
+    require(protocol.minWriterVersion <= 7,
+      s"unsupported minWriterVersion ${protocol.minWriterVersion}")
     // reference committer/filesystem.rs test contract: a filesystem
     // committer must never write to a catalog-managed table — its
     // put-if-absent "win" would bypass the catalog's arbitration
-    if (CatalogManaged.isCatalogManaged(snap.protocol) &&
+    if (CatalogManaged.isCatalogManaged(protocol) &&
         !committer.isCatalogCommitter)
       throw new IllegalStateException(
         "This table is catalog-managed and requires a catalog " +
           "committer: open it with DeltaTable.forPath(spark, path, catalog)")
-    val bad = TableFeatures.unsupportedWriterFeatures(
-      snap.protocol, snap.metadata)
+    val bad = TableFeatures.unsupportedWriterFeatures(protocol, metadata)
     require(bad.isEmpty,
       s"cannot write: unsupported writer features ${bad.mkString(", ")}")
     if (mutating)
-      require(!snap.metadata.configuration.get("delta.appendOnly")
+      require(!metadata.configuration.get("delta.appendOnly")
           .exists(_.equalsIgnoreCase("true")),
         s"table at $pathStr is append-only (delta.appendOnly=true)")
   }
 
   /** Best-effort incremental `.crc` update after a commit (reference
-    * kernel/src/crc/): previous version's checksum + this commit's
-    * added/removed file sizes — totals AND the per-bin file-size
-    * histogram advance without listing anything. Skipped when the
-    * chain is broken (no prior crc) — never load-bearing.
+    * kernel/src/crc/): the previous version's checksum (an empty one for
+    * a new table) + this commit's added/removed file sizes — totals AND
+    * the per-bin file-size histogram advance without listing anything.
+    * Skipped when the chain is broken (no prior crc) — never
+    * load-bearing.
     */
-  private def maybeWriteChecksum(v: Long, addedSizes: Seq[Long],
-      removedSizes: Seq[Long],
-      newMeta: Option[graft.delta.Metadata] = None,
-      newProto: Option[Protocol] = None): Unit =
+  private def maybeWriteChecksum(v: Long, acts: Actions): Unit =
     try {
-      Checksum.read(fs, logDir, v - 1).foreach { prev =>
-        val hist = prev.fileSizeHistogram.map { h0 =>
-          val h1 = addedSizes.foldLeft(h0)(_.insert(_))
-          removedSizes.foldLeft(h1)(_.remove(_))
+      val prev =
+        if (v == 0) Some(Checksum.VersionChecksum(0L, 0L, acts.protocol.get,
+          acts.metadata.get, Some(FileSizeHistogram.empty)))
+        else Checksum.read(fs, logDir, v - 1)
+      val added = acts.adds.map(_.size)
+      val removed = acts.removes.map(_.size.getOrElse(0L))
+      prev.foreach { p =>
+        val hist = p.fileSizeHistogram.map { h0 =>
+          removed.foldLeft(added.foldLeft(h0)(_.insert(_)))(_.remove(_))
         }
         Checksum.write(fs, logDir, v, Checksum.VersionChecksum(
-          prev.tableSizeBytes + addedSizes.sum - removedSizes.sum,
-          prev.numFiles + addedSizes.size - removedSizes.size,
-          newProto.getOrElse(prev.protocol),
-          newMeta.getOrElse(prev.metadata),
+          p.tableSizeBytes + added.sum - removed.sum,
+          p.numFiles + added.size - removed.size,
+          acts.protocol.getOrElse(p.protocol),
+          acts.metadata.getOrElse(p.metadata),
           hist))
       }
     } catch { case _: Exception => () }
 
   private def commitInfoLine(op: String, params: Map[String, String],
-      ict: Option[Long] = None): String =
+      ict: Option[Long]): String =
     JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
       timestamp = now(), operation = op, operationParameters = params,
       engineInfo = Some("graft-spark/0.1.0"),
@@ -263,8 +372,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   /** In-commit timestamp of the commit file at `version`, if any. */
   private def commitIct(version: Long): Option[Long] = {
+    if (version < 0) return None
     val p = resolveCommitPath(version)
-    if (version < 0 || !fs.exists(p)) None
+    if (!fs.exists(p)) None
     else Storage.readLines(fs, p).iterator
       .filter(_.contains("\"commitInfo\""))
       .map(JsonLog.parseLine)
@@ -273,22 +383,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         .filterNot(_.isNull).map(_.asLong))
       .nextOption()
   }
-
-  /** Monotonic in-commit timestamp for a commit whose PREDECESSOR is
-    * `predVersion` (reference transaction/commit_info.rs:484; protocol:
-    * strictly greater than the predecessor's, regardless of clock
-    * skew). Commit retries must recompute this against the commit that
-    * actually won the race, not the stale snapshot — a concurrent
-    * writer may have committed a larger ICT.
-    */
-  private def ictAt(snap: Snapshot, predVersion: Long): Option[Long] = {
-    if (!snap.metadata.configuration.get(DeltaTable.ICT_ENABLED_KEY)
-        .exists(_.equalsIgnoreCase("true"))) return None
-    Some(math.max(now(), commitIct(predVersion).getOrElse(0L) + 1))
-  }
-
-  private def ictFor(snap: Snapshot): Option[Long] =
-    ictAt(snap, snap.version)
 
   /** Publish ratified catalog commits `<= upToVersion` (default: all)
     * to their `_delta_log/{version}.json` locations (reference
@@ -475,18 +569,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       // getRawPath keeps %-escapes so a literal '%' or space in a
       // partition dir name round-trips exactly
       val rel = relOf(abs)
-      val pv: Map[String, String] = hiveRel.split('/').dropRight(1)
-        .map(uriDecodeSegment)
-        .filter(_.contains('='))
-        .map { seg =>
-          val Array(k0, v) = seg.split("=", 2)
-          // materialized-partition writes partition on an alias of the
-          // physical column (see above) — strip it back off
-          val k = if (k0.startsWith(DeltaTable.MAT_PART_PREFIX))
-            k0.stripPrefix(DeltaTable.MAT_PART_PREFIX) else k0
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                else unescapePathName(v))
-        }.toMap
+      // materialized-partition writes partition on an alias of the
+      // physical column (see above) — strip it back off
+      val pv = PartitionValues.fromHivePath(hiveRel).map { case (k, v) =>
+        k.stripPrefix(DeltaTable.MAT_PART_PREFIX) -> v }
       AddFile(
         path = rel,
         partitionValues =
@@ -567,7 +653,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   def alterClusterBy(cols: Seq[String]): Long = {
     val snap = snapshot()
-    writerGate(snap, mutating = false)
     require(cols.intersect(snap.partitionColumns).isEmpty,
       "a column cannot be both a partition and a clustering column")
     cols.foreach { c =>
@@ -593,18 +678,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         Clustering.domainFor(Nil).copy(removed = true)
       else Clustering.domainFor(cols.map(c => Seq(
         ColumnMapping.physicalName(snap.schema.fields.find(_.name == c).get))))
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE",
-        Map("operation" -> "CLUSTER BY",
-          "clusterBy" -> cols.mkString(",")), ictFor(snap))) ++
-      proto.map(p =>
-        JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq ++
-      Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(domain))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newProto = proto)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commit(Some(snap), "ALTER TABLE",
+      Map("operation" -> "CLUSTER BY", "clusterBy" -> cols.mkString(",")),
+      Actions(protocol = proto, domains = Seq(domain)), Strict)
   }
 
   /** Bin-packing OPTIMIZE for any table: rewrite the live file set
@@ -722,22 +798,25 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // PRUNED partition would silently skip its compaction); capped at
     // 64 touched partitions so the predicate never explodes — wider
     // commits fall back to the full scan.
-    val partCols0 = snap.partitionColumns
-    val safePartTypes = partCols0.forall { c =>
-      snap.schema.fields.find(_.name == c).map(_.dataType).exists {
-        case StringType | IntegerType | LongType | ShortType |
-             ByteType | BooleanType => true
-        case _ => false
-      }
-    }
+    // partitionValues are keyed by PHYSICAL name (column mapping); the
+    // predicate names the logical column and backslash-escapes its
+    // literal (Spark SQL string literals treat '\' as an escape)
+    val partFields = snap.partitionColumns.map(c =>
+      snap.schema.fields.find(_.name == c).get)
+    val safePartTypes = partFields.forall(_.dataType match {
+      case StringType | IntegerType | LongType | ShortType |
+           ByteType | BooleanType => true
+      case _ => false
+    })
     val predicate: Option[String] = touchedPartitions
-      .filter(p => partCols0.nonEmpty && safePartTypes &&
+      .filter(p => partFields.nonEmpty && safePartTypes &&
         p.nonEmpty && p.size <= 64)
       .map(_.toSeq.map { pv =>
-        partCols0.map { c =>
-          pv.getOrElse(c, null) match {
-            case null => s"`$c` IS NULL"
-            case v => s"`$c` = '${v.replace("'", "''")}'"
+        partFields.map { f =>
+          pv.getOrElse(ColumnMapping.physicalName(f), null) match {
+            case null => s"`${f.name}` IS NULL"
+            case v => s"`${f.name}` = '" +
+              v.replace("\\", "\\\\").replace("'", "\\'") + "'"
           }
         }.mkString("(", " AND ", ")")
       }.mkString(" OR "))
@@ -768,7 +847,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * can tune without a metadata commit.
     */
   private def maybeAutoCompact(metadata: graft.delta.Metadata,
-      touchedPartitions: Option[Set[Map[String, String]]] = None): Unit = {
+      touchedPartitions: Set[Map[String, String]]): Unit = {
     val on = metadata.configuration
       .get(DeltaTable.AUTO_COMPACT_KEY).exists(_.equalsIgnoreCase("true"))
     if (!on || RowTracking.enabled(metadata)) return
@@ -782,7 +861,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val target = spark.conf
         .getOption("spark.graft.autoCompact.targetFileBytes")
         .map(_.toLong).getOrElse(0L)
-      autoCompact(minN, target, touchedPartitions)
+      autoCompact(minN, target, Some(touchedPartitions))
     } catch { case e: Exception =>
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"auto-compact after commit failed (best-effort): $e")
@@ -838,40 +917,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // fresh default ids for the new files + an advanced high-water mark
     // (adds still REQUIRE baseRowId per protocol; the materialized
     // columns override them row-by-row on read)
-    val (staged, rtLines) =
-      if (!rtEnabled) (staged0, Nil)
-      else {
-        val (assigned, hwm) = RowTracking.assign(staged0,
-          RowTracking.highWaterMark(snap), snap.version + 1)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(domainMetadata =
-          Some(RowTracking.domainMetadataFor(hwm))))))
-      }
-    val removes = existing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = false,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val adds = staged.map(_.copy(dataChange = false))
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
+    val (staged, domains) = assignRowIds(snap, staged0)
     // concurrent appends rebase past a pure compaction (their files are
-    // never among those compacted); row-tracking OPTIMIZE keeps
-    // fail-fast — its high-water-mark domain metadata must not slide
-    // past a winner that also advanced the HWM
-    val readSet =
-      if (rtEnabled) None
-      else Some(DeltaTable.ReadSet(snap, None,
-        existing.map(a => Storage.canonicalPathKey(a.path)).toSet,
-        maintenance = true))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("OPTIMIZE", params, ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil, readSet)
-    maybeWriteChecksum(committed, adds.map(_.size),
-      existing.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    // never among those compacted); a row-tracking OPTIMIZE carries the
+    // high-water mark and so stays fail-fast
+    commit(Some(snap), "OPTIMIZE", params,
+      Actions(domains = domains,
+        removes = existing.map(tombstone(_, dataChange = false)),
+        adds = staged.map(_.copy(dataChange = false))),
+      Maintenance)
   }
 
   /** Rename logical columns to physical names + field ids for writing
@@ -932,39 +986,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .map { st =>
         val rel = st.getPath.toUri.getRawPath.stripPrefix(
           fs.makeQualified(root).toUri.getRawPath).stripPrefix("/")
-        val pv: Map[String, String] = rel.split('/').dropRight(1)
-          .map(uriDecodeSegment)
-          .filter(_.contains('='))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                  else unescapePathName(v))
-          }.toMap
+        val pv = PartitionValues.fromHivePath(rel)
         AddCDCFile(rel,
           physPartCols.map(c => c -> pv.getOrElse(c, null)).toMap,
           st.getLen, dataChange = false)
       }
-  }
-
-  /** URI-decode one path segment ('+' stays literal). */
-  private def uriDecodeSegment(s: String): String =
-    try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
-    catch { case _: IllegalArgumentException => s }
-
-  /** Hive-style partition-dir unescaping (%XX only — '+' stays). */
-  private def unescapePathName(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length) {
-        try {
-          b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => b.append(c); i += 1 }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
   }
 
   /** Blind append (reference transaction/mod.rs add_files + commit).
@@ -1066,41 +1092,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val (dfComplete, identityCols) = IdentityColumns.assign(df, snap)
     val staged = stageFiles(dfComplete, snap,
       nullGeneratedAsOmitted = nullGeneratedAsOmitted)
-    val rowTracking = RowTracking.enabled(snap.metadata)
-    val v = snap.version + 1
-    val (adds, hwmLine) =
-      if (!rowTracking) (staged, Nil)
-      else {
-        val (assigned, hwm) =
-          RowTracking.assign(staged, RowTracking.highWaterMark(snap), v)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(
-          domainMetadata = Some(RowTracking.domainMetadataFor(hwm))))))
-      }
+    val (adds, domains) = assignRowIds(snap, staged)
     // identity marks advance from the staged stats; the commit then
     // carries the updated metadata and is no longer blind-retryable
     // (a concurrent writer may have consumed the same value range)
     val idHwms = IdentityColumns.hwmFromStats(staged, snap, identityCols)
     val idMeta = if (idHwms.isEmpty) None
       else Some(IdentityColumns.advance(snap.metadata, idHwms))
-    val tail =
-      txn.map(t => JsonLog.writeAction(SingleAction(txn = Some(t)))).toSeq ++
-      hwmLine ++
-      idMeta.map(m =>
-        JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    // commitInfo regenerates per attempt: the ICT predecessor after a
-    // rebase is the commit that won the race, not the stale snapshot
-    val committed = commitActions(v,
-      cv => commitInfoLine("WRITE", Map("mode" -> "Append"),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = !rowTracking && idMeta.isEmpty,
-      txnAppIds = txn.map(_.appId).toSeq,
-      serializable = TableProperties.serializableIsolation(snap.metadata))
-    maybeWriteChecksum(committed, adds.map(_.size), Nil, newMeta = idMeta)
-    maybeAutoCheckpoint(committed, idMeta.getOrElse(snap.metadata))
-    maybeAutoCompact(snap.metadata,
-      Some(adds.map(_.partitionValues).toSet))
-    committed
+    commit(Some(snap), "WRITE", Map("mode" -> "Append"),
+      Actions(metadata = idMeta, domains = domains, txns = txn.toSeq,
+        adds = adds),
+      Blind)
   }
 
   /** Replace the table's contents atomically: one commit removes every
@@ -1153,20 +1155,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // row-tracking tables assign fresh baseRowIds + advance the HWM on
     // EVERY data-adding commit — an overwrite without them would serve
     // null _row_ids and break row-tracking CDF (appendFrom parity)
-    val (staged, hwmLine) =
-      if (!RowTracking.enabled(snap0.metadata)) (stagedRaw, Nil)
-      else {
-        val (assigned, hwm) = RowTracking.assign(stagedRaw,
-          RowTracking.highWaterMark(snap0), snap0.version + 1)
-        (assigned, Seq(JsonLog.writeAction(SingleAction(
-          domainMetadata = Some(RowTracking.domainMetadataFor(hwm))))))
-      }
-    val removes = existing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
+    val (staged, domains) = assignRowIds(snap0, stagedRaw)
     // a replaced schema can INTRODUCE geo columns (e.g. a df read from
     // another geo table): the same dual-sided feature upgrade the
     // alterSchema path emits must ride this commit too, or every later
@@ -1177,27 +1166,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         Some(TableFeatures.upgraded(snap0.protocol,
           Seq(GeoTypes.FEATURE), Seq(GeoTypes.FEATURE)))
       else None
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val tail =
-      txn.map(t => JsonLog.writeAction(SingleAction(txn = Some(t)))).toSeq ++
-      hwmLine ++
-      protoLine ++
-      newMeta.map(m =>
-        JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      staged.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    val committed = commitActions(snap0.version + 1,
-      cv => commitInfoLine("WRITE", Map("mode" -> "Overwrite"),
-        ictAt(snap0, cv - 1)) +: tail,
-      retryable = false, txn.map(_.appId).toSeq)
-    // the CRC must carry the upgraded protocol too: its fast path
-    // serves P&M verbatim, and a stale protocol under a geo schema
-    // fails the gate on the very next read
-    maybeWriteChecksum(committed, staged.map(_.size), existing.map(_.size),
-      newMeta = newMeta, newProto = newProto)
-    maybeAutoCheckpoint(committed, newMeta.getOrElse(snap0.metadata))
-    committed
+    commit(Some(snap0), "WRITE", Map("mode" -> "Overwrite"),
+      Actions(protocol = newProto, metadata = newMeta, domains = domains,
+        txns = txn.toSeq,
+        removes = existing.map(tombstone(_, dataChange = true)),
+        adds = staged),
+      Strict)
   }
 
   /** DML predicates must be deterministic (delta-spark parity): the
@@ -1262,31 +1236,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (cdf) stageCdcFiles(full.filter(expr(predicateSql)), snap, "delete")
       else Nil
     if (cdf) full.unpersist()
-    val removes = candidates.map { a =>
-      // the tombstone MUST carry the candidate's DV descriptor: the
-      // replay dedup key is (path, dvUniqueId), so a DV-less remove
-      // would never shadow a DV-carrying add — its rows would resurrect
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("DELETE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed,
-      newAdds.map(_.size), candidates.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    val (newAddsRt, domains) = assignRowIds(snap, newAdds)
+    commit(Some(snap), "DELETE", Map("predicate" -> predicateSql),
+      Actions(domains = domains,
+        removes = candidates.map(tombstone(_, dataChange = true)),
+        adds = newAddsRt, cdc = cdcActions),
+      Reads(Some(predicateSql)))
   }
 
   /** Read specific add files with partition values injected. */
@@ -1315,16 +1270,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * baseRowId/defaultRowCommitVersion when the feature is enabled
     * (reference row_tracking.rs assignment). Fresh defaults; rows that
     * must keep their ids do so via the materialized columns staged into
-    * the files. Returns the annotated adds + the HWM domain line.
+    * the files. Returns the annotated adds + the advanced HWM domain.
     */
-  private def assignRowIds(snap: Snapshot, adds: Seq[AddFile],
-      v: Long): (Seq[AddFile], Seq[String]) =
+  private def assignRowIds(snap: Snapshot,
+      adds: Seq[AddFile]): (Seq[AddFile], Seq[DomainMetadata]) =
     if (!RowTracking.enabled(snap.metadata) || adds.isEmpty) (adds, Nil)
     else {
       val (assigned, hwm) = RowTracking.assign(adds,
-        RowTracking.highWaterMark(snap), v)
-      (assigned, Seq(JsonLog.writeAction(SingleAction(domainMetadata =
-        Some(RowTracking.domainMetadataFor(hwm))))))
+        RowTracking.highWaterMark(snap), snap.version + 1)
+      (assigned, Seq(RowTracking.domainMetadataFor(hwm)))
     }
 
   /** UPDATE SET ... WHERE ...: files containing matching rows are
@@ -1393,28 +1347,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       else stageCdcMulti(Seq(matched -> "update_preimage",
         applied -> "update_postimage"), snap)
     full.unpersist()
-    val removes = candidates.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail = rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("UPDATE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed, newAdds.map(_.size),
-      candidates.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    val (newAddsRt, domains) = assignRowIds(snap, newAdds)
+    commit(Some(snap), "UPDATE", Map("predicate" -> predicateSql),
+      Actions(domains = domains,
+        removes = candidates.map(tombstone(_, dataChange = true)),
+        adds = newAddsRt, cdc = cdcActions),
+      Reads(Some(predicateSql)))
   }
 
   /** ONE distributed pass per candidate file: build the new-deletion
@@ -1540,9 +1478,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .toMap
   }
 
-  /** The shared DV-swap commit tail: remove+add pairs swapping each
-    * file's deletion vector (fully-dead files remove without re-add),
-    * first-use protocol upgrade, checksum + auto-checkpoint. Used by
+  /** The shared DV-swap commit: remove+add pairs swapping each file's
+    * deletion vector (fully-dead files remove without re-add), plus the
+    * first-use protocol upgrade. Used by
     * predicate DELETE/UPDATE ([[deleteWhereDV]]) and by
     * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]], which
     * materializes tree-level equality deletes into the log.
@@ -1553,15 +1491,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       opParams: Map[String, String],
       readPredicate: Option[String]): Long = {
     val descs = dvSwapDescriptors(partialFiles, byPath)
-
-    def removeOf(a: AddFile): RemoveFile = RemoveFile(
-      a.path, Some(now()), dataChange = true,
-      extendedFileMetadata = Some(true),
-      partitionValues = Some(a.partitionValues), size = Some(a.size),
-      deletionVector = a.deletionVector)
-
     val removes = (gonePaths ++ partialFiles.map(_._1))
-      .map(p => removeOf(byPath(p)))
+      .map(p => tombstone(byPath(p), dataChange = true))
     // stats on a DV-carrying add describe the PHYSICAL file, so they
     // must be flagged tightBounds:false (protocol contract — external
     // readers may otherwise do metadata-only aggregates over dead rows)
@@ -1570,46 +1501,21 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       a.copy(deletionVector = Some(descs(p)), dataChange = true,
         stats = a.stats.map(StatsJson.markNonTight))
     }
-
-    // upgrade preserves existing + legacy-implied features
-    // (reference table_features upgrade path)
-    val needsUpgrade = snap.protocol.minReaderVersion < 3 ||
-      !snap.protocol.readerFeatures.exists(_.contains("deletionVectors"))
-    val protoLine =
-      if (needsUpgrade)
-        Seq(JsonLog.writeAction(SingleAction(protocol = Some(
-          TableFeatures.upgraded(snap.protocol,
-            Seq("deletionVectors"), Seq("deletionVectors"))))))
-      else Nil
-
-    val tail =
-      protoLine ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      newAdds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    // a commit carrying its own protocol upgrade can never rebase —
-    // winnerField("protocol") would be OUR line; keep those strict
-    val committed =
-      if (needsUpgrade)
-        commitActions(snap.version + 1,
-          cv => commitInfoLine(opName, opParams,
-            ictAt(snap, cv - 1)) +: tail, retryable = false, Nil)
-      else commitActions(snap.version + 1,
-        cv => commitInfoLine(opName, opParams,
-          ictAt(snap, cv - 1)) +: tail,
-        retryable = false, Nil,
-        Some(DeltaTable.ReadSet(snap, readPredicate,
-          (gonePaths ++ partialFiles.map(_._1))
-            .map(p => Storage.canonicalPathKey(byPath(p).path)).toSet)))
-    maybeWriteChecksum(committed,
-      newAdds.map(_.size),
-      (gonePaths ++ partialFiles.map(_._1)).map(p => byPath(p).size),
-      newProto = if (needsUpgrade)
-        Some(TableFeatures.upgraded(snap.protocol,
-          Seq("deletionVectors"), Seq("deletionVectors")))
-      else None)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    commit(Some(snap), opName, opParams,
+      Actions(protocol = dvUpgrade(snap), removes = removes, adds = newAdds),
+      Reads(readPredicate))
   }
+
+  /** The first-use deletionVectors protocol upgrade, None when the
+    * table already declares the feature (the upgrade preserves existing
+    * + legacy-implied features — reference table_features upgrade path).
+    */
+  private def dvUpgrade(snap: Snapshot): Option[Protocol] =
+    if (snap.protocol.minReaderVersion >= 3 &&
+        snap.protocol.readerFeatures.exists(_.contains("deletionVectors")))
+      None
+    else Some(TableFeatures.upgraded(snap.protocol,
+      Seq("deletionVectors"), Seq("deletionVectors")))
 
   /** UPDATE WHERE via deletion vectors (delta-spark's DV-based UPDATE;
     * reference transaction/update.rs — DV attach + new adds in one
@@ -1665,17 +1571,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     full.unpersist()
 
     // DV swap per matched file: fully-matched files drop entirely
-    val (gone, partialFiles) = matchedFiles.toSeq.partition {
-      case (_, _, matched, live) => matched == live
+    val partialFiles = matchedFiles.toSeq.filter {
+      case (_, _, matched, live) => matched != live
     }
     val descs = dvSwapDescriptors(partialFiles, byPath)
-    val removes = (gone.map(_._1) ++ partialFiles.map(_._1)).map { p =>
-      val a = byPath(p)
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
     val statsOf = statsForPaths(scan,
       partialFiles.map(p => byPath(p._1).path).toSet)
     val swapped = partialFiles.map { case (p, _, _, _) =>
@@ -1684,36 +1583,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         stats = statsOf.get(a.path).orElse(a.stats)
           .map(StatsJson.markNonTight))
     }
-
-    val needsUpgrade = snap.protocol.minReaderVersion < 3 ||
-      !snap.protocol.readerFeatures.exists(_.contains("deletionVectors"))
-    val proto =
-      if (needsUpgrade) Some(TableFeatures.upgraded(snap.protocol,
-        Seq("deletionVectors"), Seq("deletionVectors")))
-      else None
-    val (newAddsRt, rtLines) =
-      assignRowIds(snap, newAdds, snap.version + 1)
-    val tail =
-      proto.map(p =>
-        JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq ++
-      rtLines ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      (swapped ++ newAddsRt).map(a =>
-        JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-      cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
-    // a commit carrying its own protocol upgrade can never rebase
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("UPDATE", Map("predicate" -> predicateSql),
-        ictAt(snap, cv - 1)) +: tail,
-      retryable = false, Nil,
-      if (needsUpgrade) None
-      else Some(DeltaTable.ReadSet(snap, Some(predicateSql),
-        matchedAdds.map(a => Storage.canonicalPathKey(a.path)).toSet)))
-    maybeWriteChecksum(committed,
-      swapped.map(_.size) ++ newAdds.map(_.size),
-      matchedAdds.map(_.size), newProto = proto)
-    maybeAutoCheckpoint(committed, snap.metadata)
-    committed
+    val (newAddsRt, domains) = assignRowIds(snap, newAdds)
+    commit(Some(snap), "UPDATE", Map("predicate" -> predicateSql),
+      Actions(protocol = dvUpgrade(snap), domains = domains,
+        removes = matchedAdds.map(tombstone(_, dataChange = true)),
+        adds = swapped ++ newAddsRt, cdc = cdcActions),
+      Reads(Some(predicateSql)))
   }
 
   /** MERGE INTO (upsert): clauses evaluate in order per row, first
@@ -2013,40 +1888,20 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           (deletedRows.toSeq ++ bsDeleted).map(_ -> "delete") ++
           insertRaw.toSeq.map(_ -> "insert"), snap)
 
-      val removes = candidates.map { a =>
-        RemoveFile(a.path, Some(now()), dataChange = true,
-          extendedFileMetadata = Some(true),
-          partitionValues = Some(a.partitionValues), size = Some(a.size),
-          deletionVector = a.deletionVector)
-      }
       val idHwms = IdentityColumns.hwmFromStats(newAdds, snap, identityCols)
       val idMeta = if (idHwms.isEmpty) None
         else Some(IdentityColumns.advance(snap.metadata, idHwms))
-      val (newAddsRt, rtLines) =
-        assignRowIds(snap, newAdds, snap.version + 1)
-      val tail =
-        idMeta.map(m =>
-          JsonLog.writeAction(SingleAction(metaData = Some(m)))).toSeq ++
-        rtLines ++
-        removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-        newAddsRt.map(a => JsonLog.writeAction(SingleAction(add = Some(a)))) ++
-        cdcActions.map(c => JsonLog.writeAction(SingleAction(cdc = Some(c))))
+      val (newAddsRt, domains) = assignRowIds(snap, newAdds)
       // MERGE reads under a join condition, not a single-table
       // predicate — no stats proof possible, so any concurrent add is
-      // a conflict (predicateSql = None keeps the check conservative);
-      // identity-advancing merges also change metadata and stay strict
-      val committed = commitActions(snap.version + 1,
-        cv => commitInfoLine("MERGE", Map("predicate" -> condSql),
-          ictAt(snap, cv - 1)) +: tail,
-        retryable = false, Nil,
-        if (idMeta.isDefined) None
-        else Some(DeltaTable.ReadSet(snap, None,
-          candidates.map(a => Storage.canonicalPathKey(a.path)).toSet)))
+      // a conflict (predicate None keeps the check conservative)
+      val committed = commit(Some(snap), "MERGE", Map("predicate" -> condSql),
+        Actions(metadata = idMeta, domains = domains,
+          removes = candidates.map(tombstone(_, dataChange = true)),
+          adds = newAddsRt, cdc = cdcActions),
+        Reads(None))
       matchedTagged.unpersist()
       insertRaw.foreach(_.unpersist())
-      maybeWriteChecksum(committed, newAdds.map(_.size),
-        candidates.map(_.size), newMeta = idMeta)
-      maybeAutoCheckpoint(committed, idMeta.getOrElse(snap.metadata))
       committed
     } finally {
       src.unpersist()
@@ -2065,7 +1920,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   def alterSchema(newSchema: StructType): Long = {
     val snap = snapshot()
-    writerGate(snap, mutating = false)
     SchemaEvolution.validate(snap.schema, newSchema).foreach(msg =>
       throw new IllegalArgumentException(s"illegal schema evolution: $msg"))
     val schemaDiff = SchemaEvolution.diff(snap.schema, newSchema)
@@ -2113,20 +1967,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val newProto = if (featureAdds.isEmpty && writerOnlyAdds.isEmpty) None
       else Some(TableFeatures.upgraded(snap.protocol, featureAdds,
         featureAdds ++ writerOnlyAdds))
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", Map(
+    commit(Some(snap), "ALTER TABLE", Map(
         "operation" -> "CHANGE SCHEMA",
         "added" -> schemaDiff.added.map(_.name).mkString(","),
         "changed" -> schemaDiff.changed.map(_._1.name).mkString(",")),
-        ictFor(snap))) ++ protoLine ++ Seq(
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines, retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta),
-      newProto = newProto)
-    maybeAutoCheckpoint(committed, meta)
-    committed
+      Actions(protocol = newProto, metadata = Some(meta)), Strict)
   }
 
   /** ALTER TABLE ADD COLUMN (nullable — required for old files). */
@@ -2312,7 +2157,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   def renameColumn(path: Seq[String], newName: String): Long = {
     require(path.nonEmpty, "empty column path")
     val snap = snapshot()
-    writerGate(snap, mutating = false)
     require(ColumnMapping.mode(snap.metadata) != "none",
       "RENAME COLUMN requires column mapping (set " +
         s"'${ColumnMapping.MODE_KEY}' to 'name' or 'id' first)")
@@ -2367,7 +2211,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   def dropColumn(path: Seq[String]): Long = {
     require(path.nonEmpty, "empty column path")
     val snap = snapshot()
-    writerGate(snap, mutating = false)
     require(ColumnMapping.mode(snap.metadata) != "none",
       "DROP COLUMN requires column mapping (set " +
         s"'${ColumnMapping.MODE_KEY}' to 'name' or 'id' first)")
@@ -2484,22 +2327,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       schemaString = GeoTypes.toSchemaString(finalSchema),
       partitionColumns = partCols,
       configuration = config)
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", params, ictFor(snap)),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta))
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE", params,
+      Actions(metadata = Some(meta)), Strict)
   }
 
   /** ALTER TABLE SET TBLPROPERTIES (metadata-only commit). Enabling
-    * in-commit timestamps mid-log additionally records the enablement
-    * version + timestamp (reference history_manager — time travel needs
-    * the boundary: commits below it order by file mtime, commits at or
-    * above it by ICT) and stamps the enabling commit itself with an
-    * ICT, per protocol.
+    * in-commit timestamps mid-log also declares the feature; [[commit]]
+    * records the enablement version + timestamp (reference
+    * history_manager) and stamps the enabling commit with an ICT.
     */
   def setProperties(props: Map[String, String],
       operation: String = "SET TBLPROPERTIES"): Long = {
@@ -2508,16 +2343,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       c.get(DeltaTable.ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
     val enablingIct =
       ictOn(props) && !ictOn(snap.metadata.configuration)
-    val v = snap.version + 1
-    val ict =
-      if (enablingIct) Some(math.max(now(),
-        commitIct(snap.version).getOrElse(0L) + 1))
-      else ictFor(snap)
-    val enablementProps =
-      if (enablingIct) Map(
-        DeltaTable.ICT_ENABLEMENT_VERSION_KEY -> v.toString,
-        DeltaTable.ICT_ENABLEMENT_TIMESTAMP_KEY -> ict.get.toString)
-      else Map.empty[String, String]
     // enabling row tracking fixes the materialized column names at the
     // SAME commit (they must exist before any rewrite materializes ids)
     val enablingRt = props.get(RowTracking.ENABLED_KEY)
@@ -2532,8 +2357,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         RowTracking.freshMaterializedNames()
       else Map.empty[String, String]
     val meta = snap.metadata.copy(
-      configuration = snap.metadata.configuration ++ props ++
-        enablementProps ++ rtProps)
+      configuration = snap.metadata.configuration ++ props ++ rtProps)
     // `delta.feature.<name>=supported` declares a feature on ALTER just
     // as it does on CREATE (delta-spark's convention)
     val explicitFeatures = props.collect {
@@ -2567,17 +2391,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // every subsequent read at the snapshot gate
     FeatureRequirements.validateEnabled(newProto.getOrElse(snap.protocol),
       meta)
-    val protoLine = newProto.map(p =>
-      JsonLog.writeAction(SingleAction(protocol = Some(p)))).toSeq
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE", Map("operation" -> operation),
-        ict)) ++ protoLine ++ Seq(
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(v, lines, retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta),
-      newProto = newProto)
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE", Map("operation" -> operation),
+      Actions(protocol = newProto, metadata = Some(meta)), Strict)
   }
 
   /** ALTER TABLE UNSET TBLPROPERTIES: metadata-only commit removing
@@ -2608,16 +2423,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val meta = snap.metadata.copy(
       configuration = snap.metadata.configuration -- present)
     FeatureRequirements.validateEnabled(snap.protocol, meta)
-    val lines = Seq(
-      commitInfoLine("ALTER TABLE",
-        Map("operation" -> operation,
-          "properties" -> present.mkString(",")), ictFor(snap)),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta))))
-    val committed = commitActions(snap.version + 1, lines,
-      retryable = false)
-    maybeWriteChecksum(committed, Nil, Nil, newMeta = Some(meta))
-    maybeAutoCheckpoint(committed, meta)
-    committed
+    commit(Some(snap), "ALTER TABLE",
+      Map("operation" -> operation, "properties" -> present.mkString(",")),
+      Actions(metadata = Some(meta)), Strict)
   }
 
   /** ALTER TABLE ADD CONSTRAINT name CHECK (sql) — delta-spark
@@ -2956,11 +2764,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     if (!pre.protocol.readerFeatures.exists(_.contains("v2Checkpoint"))) {
       val up = TableFeatures.upgraded(pre.protocol,
         Seq("v2Checkpoint"), Seq("v2Checkpoint"))
-      val uv = commitActions(pre.version + 1, Seq(
-        commitInfoLine("UPGRADE PROTOCOL", Map.empty),
-        JsonLog.writeAction(SingleAction(protocol = Some(up)))),
-        retryable = false)
-      maybeWriteChecksum(uv, Nil, Nil, newProto = Some(up))
+      commit(Some(pre), "UPGRADE PROTOCOL", Map.empty,
+        Actions(protocol = Some(up)), Strict)
     }
     val snap = snapshot()
     val v = snap.version
@@ -3108,32 +2913,16 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .map(a => key(a) -> a).toMap
     val wanted = new DeltaScan(target, None).collectAddFiles()
       .map(a => key(a) -> a).toMap
-    val removes = (current.keySet -- wanted.keySet).toSeq.sorted.map { k =>
-      val a = current(k)
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
+    val removes = (current.keySet -- wanted.keySet).toSeq.sorted
+      .map(k => tombstone(current(k), dataChange = true))
     val adds = (wanted.keySet -- current.keySet).toSeq.sorted
       .map(k => wanted(k).copy(dataChange = true))
-    val metaLine =
+    val meta =
       if (target.metadata.schemaString == snap.metadata.schemaString &&
-          target.metadata.configuration == snap.metadata.configuration) Nil
-      else Seq(JsonLog.writeAction(SingleAction(metaData =
-        Some(target.metadata))))
-    val lines =
-      Seq(commitInfoLine("RESTORE", Map("version" -> version.toString),
-        ictFor(snap))) ++ metaLine ++
-      removes.map(r => JsonLog.writeAction(SingleAction(remove = Some(r)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    val committed = commitActions(snap.version + 1, lines, retryable = false)
-    maybeWriteChecksum(committed, adds.map(_.size),
-      removes.map(_.size.getOrElse(0L)),
-      newMeta = if (metaLine.nonEmpty) Some(target.metadata) else None)
-    maybeAutoCheckpoint(committed,
-      if (metaLine.nonEmpty) target.metadata else snap.metadata)
-    committed
+          target.metadata.configuration == snap.metadata.configuration) None
+      else Some(target.metadata)
+    commit(Some(snap), "RESTORE", Map("version" -> version.toString),
+      Actions(metadata = meta, removes = removes, adds = adds), Strict)
   }
 
   /** SHALLOW CLONE: a new table at `targetPath` whose version-0 commit
@@ -3175,30 +2964,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         a.path else srcUri + "/" + a.path
       a.copy(path = abs, deletionVector = dv, dataChange = true)
     }
-    val targetRoot = new Path(targetPath)
-    val tfs = Storage.fs(targetRoot, spark.sessionState.newHadoopConf())
-    val ts = System.currentTimeMillis()
-    val ictOn = snap.metadata.configuration
-      .get(DeltaTable.ICT_ENABLED_KEY).exists(_.equalsIgnoreCase("true"))
     val meta = snap.metadata.copy(id = UUID.randomUUID().toString,
-      createdTime = Some(ts))
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        ts, "CLONE",
+      createdTime = Some(now()))
+    new DeltaTable(spark, targetPath, None, None, correlationId)
+      .commit(None, "CLONE",
         Map("source" -> pathStr, "sourceVersion" -> snap.version.toString),
-        Some("graft-spark/0.1.0"),
-        inCommitTimestamp = if (ictOn) Some(ts) else None)))),
-      JsonLog.writeAction(SingleAction(protocol = Some(snap.protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      snap.domainMetadatas.filterNot(_.removed).map(d =>
-        JsonLog.writeAction(SingleAction(domainMetadata = Some(d)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    tfs.mkdirs(FileNames.logDir(targetRoot))
-    require(Storage.putIfAbsent(tfs,
-      FileNames.commitFile(FileNames.logDir(targetRoot), 0L),
-      lines.mkString("", "\n", "\n")),
-      s"clone target log already exists: $targetPath")
-    0L
+        Actions(protocol = Some(snap.protocol), metadata = Some(meta),
+          domains = snap.domainMetadatas.filterNot(_.removed), adds = adds),
+        Strict)
   }
 
   // ---------------- vacuum ----------------
@@ -3407,29 +3180,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (snap.smallState && !forceWide) fsckMissingDriver(snap, rootUri)
       else fsckMissingDistributed(snap, rootUri)
     if (dryRun || missing.isEmpty) return missing.map(_.path)
-    val removes = missing.map { a =>
-      RemoveFile(a.path, Some(now()), dataChange = true,
-        extendedFileMetadata = Some(true),
-        partitionValues = Some(a.partitionValues), size = Some(a.size),
-        deletionVector = a.deletionVector)
-    }
-    val committed = commitActions(snap.version + 1,
-      cv => commitInfoLine("FSCK",
-        Map("numRemovedFiles" -> missing.size.toString),
-        ictAt(snap, cv - 1)) +:
-        removes.map(r =>
-          JsonLog.writeAction(SingleAction(remove = Some(r)))),
-      retryable = false, Nil,
-      // maintenance conflict shape: a concurrent APPEND's new files
-      // exist by construction (never "missing"), so it commutes;
-      // remove/remove overlap (someone else tombstoned the same file)
-      // still conflicts
-      Some(DeltaTable.ReadSet(snap, None,
-        missing.map(a => Storage.canonicalPathKey(a.path)).toSet,
-        maintenance = true)))
-    maybeWriteChecksum(committed, Nil,
-      missing.map(_.size))
-    maybeAutoCheckpoint(committed, snap.metadata)
+    // maintenance conflict shape: a concurrent APPEND's new files exist
+    // by construction (never "missing"), so it commutes; remove/remove
+    // overlap (someone else tombstoned the same file) still conflicts
+    commit(Some(snap), "FSCK",
+      Map("numRemovedFiles" -> missing.size.toString),
+      Actions(removes = missing.map(tombstone(_, dataChange = true))),
+      Maintenance)
     missing.map(_.path)
   }
 
@@ -4008,6 +3765,38 @@ object DeltaTable {
   case class ReadSet(snap: Snapshot, predicateSql: Option[String],
       removedKeys: Set[String], maintenance: Boolean = false)
 
+  /** Everything a writer contributes to one commit, typed. The commit
+    * path derives the commitInfo line, the rebase policy, the `.crc`
+    * deltas and the post-commit hooks from it.
+    */
+  private[delta] final case class Actions(
+      protocol: Option[Protocol] = None,
+      metadata: Option[graft.delta.Metadata] = None,
+      domains: Seq[DomainMetadata] = Nil,
+      txns: Seq[SetTransaction] = Nil,
+      removes: Seq[RemoveFile] = Nil,
+      adds: Seq[AddFile] = Nil,
+      cdc: Seq[AddCDCFile] = Nil)
+
+  /** How a commit may move past a concurrent winner of its version. */
+  private[delta] sealed trait CommitMode
+  /** Retry at the next version past any winner that leaves the table
+    * definition and this commit's txn app ids alone (blind appends).
+    */
+  private[delta] case object Blind extends CommitMode
+  /** Rebase only past winners that partition pruning + stats skipping
+    * prove disjoint from `predicate` (None: no winner adds are
+    * disjoint) and that removed none of this commit's removes.
+    */
+  private[delta] final case class Reads(predicate: Option[String])
+      extends CommitMode
+  /** A dataChange=false rewrite of exactly its removes: rebase past any
+    * winner that removed none of them.
+    */
+  private[delta] case object Maintenance extends CommitMode
+  /** Never rebase. */
+  private[delta] case object Strict extends CommitMode
+
   val ICT_ENABLED_KEY = "delta.enableInCommitTimestamps"
 
   /** ADD COLUMN placement (FIRST / AFTER sibling / append). */
@@ -4239,39 +4028,18 @@ object DeltaTable {
     // validate_feature_requirements): a CREATE whose declared features
     // have unmet dependencies must fail here, not at first read
     FeatureRequirements.validateEnabled(protocol, meta)
-    val createTs = System.currentTimeMillis()
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        createTs, "CREATE TABLE",
-        Map("partitionBy" -> partitionColumns.mkString(",")),
-        Some("graft-spark/0.1.0"),
-        inCommitTimestamp = if (wantsIct) Some(createTs) else None,
-        correlationId = t.correlationId)))),
-      JsonLog.writeAction(SingleAction(protocol = Some(protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      (if (wantsRowTracking)
-        Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(
-          RowTracking.domainMetadataFor(
-            RowTracking.MISSING_HIGH_WATER_MARK)))))
-      else Nil) ++
-      (if (clusterBy.nonEmpty) {
-        // the domain records PHYSICAL column paths (clustering.rs)
-        val physPaths = clusterBy.map(c => Seq(ColumnMapping.physicalName(
-          finalSchema.fields.find(_.name == c).get)))
-        Seq(JsonLog.writeAction(SingleAction(domainMetadata = Some(
-          Clustering.domainFor(physPaths)))))
-      } else Nil)
-    val fs = Storage.fs(t.root, spark.sessionState.newHadoopConf())
-    fs.mkdirs(FileNames.logDir(t.root))
-    t.committer.commit(fs, FileNames.logDir(t.root), 0L,
-        lines.mkString("", "\n", "\n")) match {
-      case CommitResponse.Committed(_, _) => ()
-      case CommitResponse.Conflict(_) =>
-        throw new IllegalStateException(s"table already exists at $path")
-    }
-    Checksum.write(fs, FileNames.logDir(t.root), 0L,
-      Checksum.VersionChecksum(0L, 0L, protocol, meta,
-        Some(FileSizeHistogram.empty)))
+    val domains =
+      (if (wantsRowTracking) Seq(RowTracking.domainMetadataFor(
+        RowTracking.MISSING_HIGH_WATER_MARK)) else Nil) ++
+      // the domain records PHYSICAL column paths (clustering.rs)
+      (if (clusterBy.isEmpty) Nil
+       else Seq(Clustering.domainFor(clusterBy.map(c => Seq(
+         ColumnMapping.physicalName(
+           finalSchema.fields.find(_.name == c).get))))))
+    t.commit(None, "CREATE TABLE",
+      Map("partitionBy" -> partitionColumns.mkString(",")),
+      Actions(protocol = Some(protocol), metadata = Some(meta),
+        domains = domains), Strict)
     t
   }
 
@@ -4319,37 +4087,13 @@ object DeltaTable {
       dataFields.toIndexedSeq ++ partitionSchema.fields)
     val dataSchema = StructType(dataFields.toIndexedSeq)
 
-    def uriDecodeSeg(s: String): String =
-      try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
-      catch { case _: IllegalArgumentException => s }
-    def unescape(s: String): String = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 3 <= s.length) {
-          try {
-            b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-            i += 3
-          } catch { case _: NumberFormatException => b.append(c); i += 1 }
-        } else { b.append(c); i += 1 }
-      }
-      b.toString
-    }
-
     val statsByPath = ParquetFooterStats.collect(spark,
       files.map(_.getPath.toString).toSeq, dataSchema, conf)
     val partCols = partitionSchema.fieldNames.toSeq
     val adds = files.map { st =>
       val rel = st.getPath.toUri.getRawPath
         .stripPrefix(rootQ.toUri.getRawPath).stripPrefix("/")
-      val pv: Map[String, String] = rel.split('/').dropRight(1)
-        .map(uriDecodeSeg).filter(_.contains('='))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                else unescape(v))
-        }.toMap
+      val pv = PartitionValues.fromHivePath(rel)
       AddFile(
         path = rel,
         partitionValues = partCols.map(c => c -> pv.getOrElse(c, null))
@@ -4360,33 +4104,19 @@ object DeltaTable {
         stats = Some(statsByPath(st.getPath.toString)))
     }
 
-    val ts = System.currentTimeMillis()
     val meta = graft.delta.Metadata(
       id = UUID.randomUUID().toString,
       name = None, description = None, format = Format(),
       schemaString = schema.json,
       partitionColumns = partCols,
       configuration = Map.empty,
-      createdTime = Some(ts))
-    val protocol = Protocol(1, 2)
-    val lines = Seq(
-      JsonLog.writeAction(SingleAction(commitInfo = Some(CommitInfo(
-        ts, "CONVERT",
-        Map("numFiles" -> adds.size.toString,
-          "partitionBy" -> partCols.mkString(",")),
-        Some("graft-spark/0.1.0"))))),
-      JsonLog.writeAction(SingleAction(protocol = Some(protocol))),
-      JsonLog.writeAction(SingleAction(metaData = Some(meta)))) ++
-      adds.map(a => JsonLog.writeAction(SingleAction(add = Some(a))))
-    fs.mkdirs(FileNames.logDir(root))
-    require(Storage.putIfAbsent(fs,
-      FileNames.commitFile(FileNames.logDir(root), 0L),
-      lines.mkString("", "\n", "\n")),
-      s"concurrent CONVERT/CREATE at $path")
-    Checksum.write(fs, FileNames.logDir(root), 0L,
-      Checksum.VersionChecksum(adds.map(_.size).sum, adds.size.toLong,
-        protocol, meta,
-        Some(FileSizeHistogram.of(adds.map(_.size)))))
-    new DeltaTable(spark, path, None)
+      createdTime = Some(System.currentTimeMillis()))
+    val t = new DeltaTable(spark, path, None)
+    t.commit(None, "CONVERT",
+      Map("numFiles" -> adds.size.toString,
+        "partitionBy" -> partCols.mkString(",")),
+      Actions(protocol = Some(Protocol(1, 2)), metadata = Some(meta),
+        adds = adds.toSeq), Strict)
+    t
   }
 }

@@ -16,6 +16,37 @@ import org.apache.spark.sql.types._
   */
 object PartitionValues {
 
+  /** Partition values encoded in the `key=value` directory segments of
+    * a hive-style relative file path (the file name itself is
+    * skipped): each segment is URI-decoded ('+' stays literal), then
+    * hive-unescaped (%XX only); `__HIVE_DEFAULT_PARTITION__` is null.
+    */
+  def fromHivePath(relPath: String): Map[String, String] =
+    relPath.split('/').dropRight(1)
+      .map(s => try java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
+        catch { case _: IllegalArgumentException => s })
+      .filter(_.contains('='))
+      .map { seg =>
+        val Array(k, v) = seg.split("=", 2)
+        k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+              else unescapePathName(v))
+      }.toMap
+
+  private def unescapePathName(s: String): String = {
+    val b = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '%' && i + 3 <= s.length) {
+        try {
+          b.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
+          i += 3
+        } catch { case _: NumberFormatException => b.append(c); i += 1 }
+      } else { b.append(c); i += 1 }
+    }
+    b.toString
+  }
+
   private val tsFmt =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
 

@@ -193,4 +193,27 @@ class CheckpointV2Spec extends AnyFunSuite {
     t.checkpointV2(numSidecars = 0)
     assert(RowTracking.highWaterMark(t.snapshot()) == 99L)
   }
+
+  test("v2Checkpoint protocol upgrade commit carries a monotonic ICT") {
+    val dir = TestSpark.tmpDir("v2ict")
+    val a = Seq((1L, "a")).toDF("k", "s")
+    DeltaTable.create(spark, dir, a.schema,
+      configuration = Map(DeltaTable.ICT_ENABLED_KEY -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(a) // v1
+    t.checkpointV2() // upgrade commit at v2, checkpoint at v2
+    def ict(v: Long): Option[Long] = {
+      val src = scala.io.Source.fromFile(f"$dir/_delta_log/$v%020d.json")
+      try src.getLines().map(JsonLog.parseLine)
+        .flatMap(n => Option(n.get("commitInfo")))
+        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
+          .filterNot(_.isNull).map(_.asLong))
+        .toList.headOption
+      finally src.close()
+    }
+    assert(t.history().find(_._1 == 2L).map(_._3).contains("UPGRADE PROTOCOL"))
+    val up = ict(2L)
+    assert(up.isDefined, "upgrade commit on an ICT table carries no ICT")
+    assert(up.get > ict(1L).get)
+  }
 }

@@ -186,6 +186,36 @@ class ClusteringSpec extends AnyFunSuite {
     assert(t.toDF.count() == 6)
   }
 
+  /** Three single-row appends into partition value `p` of an
+    * auto-compacting table (threshold 3): the third must compact the
+    * partition to one file.
+    */
+  private def assertAutoCompacts(name: String, p: String,
+      extraConf: Map[String, String]): Unit = {
+    val dir = TestSpark.tmpDir(name)
+    val src0 = Seq((0L, p)).toDF("k", "p")
+    DeltaTable.create(spark, dir, src0.schema, Seq("p"),
+      configuration = Map(DeltaTable.AUTO_COMPACT_KEY -> "true") ++ extraConf)
+    spark.conf.set("spark.graft.autoCompact.minNumFiles", "3")
+    try {
+      val t = DeltaTable.forPath(spark, dir)
+      (1 to 3).foreach(i => t.append(Seq((i.toLong, p)).toDF("k", "p")))
+      val files = t.scan(None).collectAddFiles()
+      assert(files.size == 1, s"partition '$p' should auto-compact, " +
+        s"got ${files.size} files")
+      assert(t.toDF.filter($"p" === p).count() == 3)
+    } finally spark.conf.unset("spark.graft.autoCompact.minNumFiles")
+  }
+
+  test("auto-compact scopes column-mapped partitions by physical name") {
+    assertAutoCompacts("autocompact-cm", "a",
+      Map(ColumnMapping.MODE_KEY -> "name"))
+  }
+
+  test("auto-compact scopes a backslash partition value exactly") {
+    assertAutoCompacts("autocompact-bs", "a\\b", Map.empty)
+  }
+
   test("auto-compact is best-effort: a failure after the append " +
       "committed never fails the append") {
     val dir = TestSpark.tmpDir("autocompact-err")

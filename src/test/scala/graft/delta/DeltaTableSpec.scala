@@ -405,6 +405,11 @@ class DeltaTableSpec extends AnyFunSuite {
       None, None), h)
     // the 3-tuple history() surface is unchanged
     assert(t.history().sortBy(_._1).map(_._1) == Seq(0L, 1L, 2L, 3L))
+    // a shallow clone's version-0 commit carries the cloning handle's id
+    val cloneDir = TestSpark.tmpDir("corr-clone")
+    t.withCorrelationId("req-clone").cloneShallow(cloneDir)
+    assert(DeltaTable.forPath(spark, cloneDir).historyDetail().map(_._4) ==
+      Seq(Some("req-clone")))
 
     // built-as-latest INTENT (#2905): latest build vs explicit
     // time-travel, even to the current tip

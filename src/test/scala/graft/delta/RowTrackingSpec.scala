@@ -232,4 +232,43 @@ class RowTrackingSpec extends AnyFunSuite {
     // ids stay unique corpus-wide
     assert(s3.values.map(_._1).toSeq.distinct.size == 96)
   }
+
+  test("row-tracking DML never rebases its high-water mark past a " +
+      "concurrent disjoint append") {
+    val dir = TestSpark.tmpDir("rt-race")
+    val a = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    DeltaTable.create(spark, dir, a.schema, configuration = conf)
+    val other = DeltaTable.forPath(spark, dir)
+    other.append(a.coalesce(1)) // ids 0, 1 in one file
+    // the DELETE's first commit attempt loses its version to a
+    // stats-disjoint append (ids 2..4) landed through a second handle
+    val racing = new Committer {
+      private var raced = false
+      override def commit(fs: org.apache.hadoop.fs.FileSystem,
+          logDir: org.apache.hadoop.fs.Path, version: Long,
+          content: String): CommitResponse = {
+        if (!raced) {
+          raced = true
+          other.append(Seq((100L, "x"), (101L, "y"), (102L, "z"))
+            .toDF("k", "s").coalesce(1))
+        }
+        FileSystemCommitter.commit(fs, logDir, version, content)
+      }
+      override def isCatalogCommitter: Boolean = false
+      override def publish(fs: org.apache.hadoop.fs.FileSystem,
+          logDir: org.apache.hadoop.fs.Path,
+          commits: Seq[CatalogCommit]): Unit =
+        FileSystemCommitter.publish(fs, logDir, commits)
+    }
+    // the rewrite's fresh ids and high-water mark come from the stale
+    // snapshot: sliding past the append would move the mark backwards
+    intercept[ConcurrentWriteException] {
+      DeltaTable.forPath(spark, dir, racing).deleteWhere("k = 1")
+    }
+    other.append(Seq((200L, "w")).toDF("k", "s"))
+    val ids = other.scan(None).toDFWithRowIds
+      .select("_row_id").collect().map(_.getLong(0))
+    assert(ids.length == 6 && ids.distinct.length == 6,
+      s"duplicate row ids: ${ids.sorted.mkString(",")}")
+  }
 }

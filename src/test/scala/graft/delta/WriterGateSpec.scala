@@ -35,6 +35,9 @@ class WriterGateSpec extends AnyFunSuite {
       retryable = false)
     assert(t.toDF.count() == 1) // reads unaffected
     intercept[IllegalArgumentException] { t.append(src) }
+    intercept[IllegalArgumentException] {
+      t.setProperties(Map("foo" -> "bar"))
+    }
   }
 
   test("widening ALTER declares the typeWidening feature") {
