@@ -178,35 +178,13 @@ object Bench {
     // returned frame reads them lazily) — a session of sweeps used to
     // leave thousands of dirs / GBs behind, and the r12 forensics tie
     // exactly that write/cache churn to the 5M phantom class. Stale
-    // dirs (>1 h old, not a fixture base/lock/warehouse) are wiped at
-    // startup; each row's fresh dirs — tracked by the IN-JVM
+    // dirs (nothing inside touched for 1 h, not a fixture
+    // base/lock/warehouse) are wiped at startup; each row's fresh dirs — tracked by the IN-JVM
     // ScratchDirs registry, never a directory diff that could delete
     // a concurrent process's files — drop right after its timed run,
     // OUTSIDE the timed region.
     val tmpRoot = java.nio.file.Paths.get("/root/repo/target/tmp")
-    try {
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      def protectedName(n: String): Boolean =
-        n.contains("-base-") || n.endsWith(".lock") ||
-          n == "gd-warehouse" || n == "golden"
-      if (java.nio.file.Files.isDirectory(tmpRoot)) {
-        val s = java.nio.file.Files.list(tmpRoot)
-        try s.iterator().asScala
-          .filter(p => !protectedName(p.getFileName.toString))
-          .filter { p =>
-            try java.nio.file.Files.getLastModifiedTime(p)
-              .toMillis < cutoff
-            catch { case _: Throwable => false }
-          }
-          .foreach { p =>
-            try java.nio.file.Files.walk(p)
-              .sorted(java.util.Comparator.reverseOrder())
-              .forEach(q => java.nio.file.Files.deleteIfExists(q))
-            catch { case _: Throwable => () }
-          }
-        finally s.close()
-      }
-    } catch { case _: Throwable => () } // hygiene is best-effort
+    graft.queries.ScratchDirs.sweepStale(tmpRoot)
     def timeQuery(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -50,30 +50,7 @@ object Verify {
       }
       graft.queries.ScratchDirs.dropRegistered()
     }
-    try {
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      def protectedName(n: String): Boolean =
-        n.contains("-base-") || n.endsWith(".lock") ||
-          n == "gd-warehouse" || n == "golden"
-      if (Files.isDirectory(tmpRoot)) {
-        val s = Files.list(tmpRoot)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(p => !protectedName(p.getFileName.toString))
-            .filter { p =>
-              try Files.getLastModifiedTime(p).toMillis < cutoff
-              catch { case _: Throwable => false }
-            }
-            .foreach { p =>
-              try Files.walk(p)
-                .sorted(java.util.Comparator.reverseOrder())
-                .forEach(q => Files.deleteIfExists(q))
-              catch { case _: Throwable => () }
-            }
-        } finally s.close()
-      }
-    } catch { case _: Throwable => () }
+    graft.queries.ScratchDirs.sweepStale(tmpRoot)
     // one greppable summary: a CORRECTNESS row count below
     // `wrote` means the gap is downstream of this JVM
     System.err.println(s"[verify] wrote ${selected.size - failed.size}" +

@@ -1146,8 +1146,9 @@ object ContentTree {
     // JSON scan plus two shuffles, and the local relation broadcasts
     // into the merge join for free. Big windows/commits stay on the
     // distributed diff.
-    val winner = phase("winner")(
-      smallRangeWinner(spark, snap, prev.version)).getOrElse {
+    val smallWinner = phase("winner")(
+      smallRangeWinner(spark, snap, prev.version))
+    val winner = smallWinner.getOrElse {
       val diff = IncrementalScan.fileDiff(spark,
         snap.tableRoot.toString, prev.version, snap.version)
       diff
@@ -1272,18 +1273,20 @@ object ContentTree {
         if (!statsOk) None
         else {
           // Leaves holding at least one diffed location must rewrite;
-          // O(#leaves) driver rows. Shape matters at 5M entries: the
-          // diff side is tiny (it passed the smallRange/commit-window
-          // path) so BROADCAST it — a sort-merge fallback would
-          // shuffle every tree entry just to probe 20k keys — and
+          // O(#leaves) driver rows. Shape matters at 5M entries: a
+          // small-window diff is tiny (a driver-built local relation)
+          // so BROADCAST it — a sort-merge fallback would shuffle
+          // every tree entry just to probe 20k keys; a distributed
+          // diff has no such bound and is left to the planner — and
           // derive the leaf-dir string (2 regexes + a URI decode per
           // row) only for rows that SURVIVE the semi-join instead of
           // for all 5M (phase probe: 3.0 s → ~1 s on the 5M bench).
+          val diffLocs = winner.select(col("loc").as("location"))
           val affected = phase("reuseProbe")(leavesDF
             .select(col("location"),
               col("_metadata.file_path").as("__fp"))
-            .join(broadcast(winner.select(col("loc").as("location"))),
-              Seq("location"), "left_semi")
+            .join(if (smallWinner.isDefined) broadcast(diffLocs)
+              else diffLocs, Seq("location"), "left_semi")
             .select(Storage.decodeUriPathCol(
               regexp_replace(regexp_replace(col("__fp"),
                 Storage.URI_PREFIX_REGEX, ""),

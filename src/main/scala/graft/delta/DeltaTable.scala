@@ -18,7 +18,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val catalog: Option[CatalogClient] = None,
     committerOverride: Option[Committer] = None,
     val correlationId: Option[String] = None) {
-  import DeltaTable.{Actions, Blind, Maintenance, Reads, Strict}
+  import DeltaTable.{Actions, Blind, CheckpointLayout, ClassicLayout,
+    Maintenance, Reads, Strict, V2Layout}
   val root = new Path(pathStr)
 
   /** Handle whose commits carry an opaque caller-supplied correlation
@@ -2479,56 +2480,173 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   // ---------------- checkpoint ----------------
 
-  /** Write a classic single-file V1 checkpoint at the current version
-    * (or at `version`) + `_last_checkpoint` hint (reference
-    * kernel/src/checkpoint/mod.rs, action reconciliation in
-    * action_reconciliation/log_replay.rs).
+  /** Checkpoint the current version (or `version`): a classic V1
+    * checkpoint, split into multi-part files when the state is large,
+    * or a V2 checkpoint under `delta.checkpointPolicy=v2`. See
+    * [[writeCheckpoint]] for what every layout writes.
     */
   def checkpoint(version: Option[Long] = None): Long = {
     val snap = snapshot(version)
-    val v = snap.version
     // delta.checkpointPolicy=v2: every checkpoint this table writes is
     // V2-format (the policy is a table contract, not a per-call choice)
     if (TableProperties.checkpointPolicy(snap.metadata) == "v2") {
       require(version.forall(_ == snapshot().version),
         "checkpointPolicy=v2 checkpoints only the latest version")
-      return checkpointV2()
+      checkpointV2()
+    } else writeCheckpoint(snap, ClassicLayout(None))
+  }
+
+  /** Multi-part V1 checkpoint: the state is split across `numParts`
+    * files named `v.checkpoint.<part>.<parts>.parquet` (readers union
+    * all parts — the scale path for huge file sets).
+    */
+  def checkpointMultipart(numParts: Int): Long = {
+    require(numParts >= 1, "numParts must be positive")
+    writeCheckpoint(snapshot(), ClassicLayout(Some(numParts)))
+  }
+
+  /** V2 checkpoint (reference kernel/src/checkpoint/mod.rs V2 shape +
+    * actions/mod.rs:1251): file actions go to `_delta_log/_sidecars/`
+    * parquet files; the top-level `v.checkpoint.<uuid>.parquet` holds
+    * the non-file actions, `checkpointMetadata` and the sidecar refs.
+    * With `numSidecars = 0` the file actions are inlined in the
+    * top-level file.
+    */
+  def checkpointV2(numSidecars: Int = 2): Long = {
+    // V2 checkpoints require the v2Checkpoint table feature — upgrade
+    // the protocol (preserving implied legacy features) on first use
+    val pre = snapshot()
+    if (!pre.protocol.readerFeatures.exists(_.contains("v2Checkpoint"))) {
+      val up = TableFeatures.upgraded(pre.protocol,
+        Seq("v2Checkpoint"), Seq("v2Checkpoint"))
+      commit(Some(pre), "UPGRADE PROTOCOL", Map.empty,
+        Actions(protocol = Some(up)), Strict)
     }
-    val state = checkpointState(snap)
-    state.persist()
-    val size = state.count() // known before writing; no re-read after
-    // Route large states to protocol-standard V1 MULTIPART parts
-    // automatically: a single-file checkpoint caps every future
-    // replay's read parallelism at its row-group count (a 1M-add
-    // state is ~200 MB ⇒ 2 row groups ⇒ a 32-core replay running on
-    // 2). Parts of ~100k actions keep the checkpoint arm
-    // embarrassingly parallel at any scale.
-    if (size > 2L * CHECKPOINT_ACTIONS_PER_PART) {
-      val n = math.ceil(size.toDouble / CHECKPOINT_ACTIONS_PER_PART).toInt
-      writeClassicCheckpointParts(state, v, n, size)
-    } else {
-      val tmp = new Path(logDir, s".ckpt-tmp-${UUID.randomUUID()}")
-      state.coalesce(1).write.mode("overwrite")
-        .option("parquet.block.size", CHECKPOINT_ROW_GROUP_BYTES)
-        .parquet(tmp.toString)
-      val part = Storage.listFilesRecursive(fs, tmp)
-        .filter(_.getPath.getName.endsWith(".parquet")).head
-      val dest = FileNames.classicCheckpointFile(logDir, v)
-      if (fs.exists(dest)) fs.delete(dest, false)
-      fs.rename(part.getPath, dest)
-      fs.delete(tmp, true)
-      Storage.put(fs, new Path(logDir, FileNames.LAST_CHECKPOINT),
-        s"""{"version":$v,"size":$size}""")
-      Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
-        "checkpoint_write", 1L, part.getLen))
+    writeCheckpoint(snapshot(), V2Layout(numSidecars))
+  }
+
+  /** The one checkpoint writer (reference kernel/src/checkpoint/mod.rs,
+    * action reconciliation in action_reconciliation/log_replay.rs).
+    * Every layout checkpoints the same reconciled state:
+    *  - file actions: live adds plus the remove tombstones still inside
+    *    `delta.deletedFileRetentionDuration` (the files behind expired
+    *    ones are vacuum candidates no reader may rely on), in the
+    *    table's checkpoint stats shape;
+    *  - non-file actions: protocol, metadata, the txns still inside
+    *    `delta.setTransactionRetentionDuration`, and domain metadata
+    *    (e.g. the row-tracking high-water mark — post-checkpoint
+    *    snapshots replay only later commits, so dropping it would
+    *    reassign baseRowIds from 0).
+    * Then, once per checkpoint whatever the layout: the
+    * `_last_checkpoint` hint, one `checkpoint_write` I/O event, the
+    * `.crc` re-seed and expired-log cleanup.
+    */
+  private def writeCheckpoint(snap: Snapshot,
+      layout: CheckpointLayout): Long = {
+    import scala.jdk.CollectionConverters._
+    val v = snap.version
+    val isV2 = layout.isInstanceOf[V2Layout]
+    val tombstoneCutoff = now() - tombstoneRetentionMillis(snap.metadata)
+    val files = withCheckpointStatsShape(snap.latestActions
+      .filter(col("add").isNotNull || unexpiredTombstone(tombstoneCutoff))
+      .select(col("add"), col("remove")), snap)
+    files.persist()
+    val nFiles = files.count() // known before writing; no re-read after
+    // delta.setTransactionRetentionDuration: expired txn idempotency
+    // markers drop out at reconciliation (reference
+    // SetTransaction::is_expired, actions/mod.rs:1055-1068 — a None
+    // lastUpdated or no configured retention never expires)
+    val txnCutoff = TableProperties
+      .setTransactionRetentionMillis(snap.metadata).map(now() - _)
+    val nonFile: Seq[SingleAction] =
+      Seq(SingleAction(protocol = Some(snap.protocol)),
+        SingleAction(metaData = Some(snap.metadata))) ++
+      (if (isV2) Seq(SingleAction(checkpointMetadata =
+        Some(CheckpointMetadata(v)))) else Nil) ++
+      snap.setTransactions
+        .filterNot(t => txnCutoff.exists(c => t.lastUpdated.exists(_ <= c)))
+        .map(t => SingleAction(txn = Some(t))) ++
+      snap.domainMetadatas.map(d => SingleAction(domainMetadata = Some(d)))
+    // the layout's schema with the file actions' shaped add/remove
+    // types, so non-file rows and file rows union column for column
+    val schema = StructType(
+      (if (isV2) LogSchema.v2Checkpoint else LogSchema.checkpoint).fields
+        .map(f => if (files.columns.contains(f.name)) files.schema(f.name)
+          else f))
+    def rowsDF(actions: Seq[SingleAction]): DataFrame =
+      spark.createDataFrame(
+        actions.map(checkpointRow(_, schema.size)).asJava, schema)
+    def withFiles(df: DataFrame): DataFrame =
+      df.unionByName(files, allowMissingColumns = true)
+
+    val (written, hint) = layout match {
+      case ClassicLayout(requested) =>
+        val size = nonFile.size + nFiles
+        // Route large states to protocol-standard V1 MULTIPART parts
+        // automatically: a single-file checkpoint caps every future
+        // replay's read parallelism at its row-group count (a 1M-add
+        // state is ~200 MB ⇒ 2 row groups ⇒ a 32-core replay running
+        // on 2). Parts of ~100k actions keep the checkpoint arm
+        // embarrassingly parallel at any scale.
+        val parts = requested.orElse(
+          if (size <= 2L * CHECKPOINT_ACTIONS_PER_PART) None
+          else Some(math.ceil(size.toDouble / CHECKPOINT_ACTIONS_PER_PART)
+            .toInt))
+        val state = withFiles(rowsDF(nonFile))
+        parts match {
+          case None =>
+            val out = writeCheckpointFiles(state.coalesce(1), logDir)(
+              (_, _) => FileNames.classicCheckpointFile(logDir, v).getName)
+            (out, s"""{"version":$v,"size":$size}""")
+          case Some(n) =>
+            val out = writeCheckpointFiles(state.repartition(n), logDir)(
+              (i, k) => f"$v%020d.checkpoint.${i + 1}%010d.$k%010d.parquet")
+            (out, s"""{"version":$v,"size":$size,"parts":${out.size}}""")
+        }
+      case V2Layout(numSidecars) =>
+        val uuid = UUID.randomUUID().toString
+        val scOut =
+          if (numSidecars <= 0) Nil
+          else writeCheckpointFiles(files.repartition(numSidecars),
+            new Path(logDir, "_sidecars"))((i, _) => s"$uuid-$i.parquet")
+        val sidecars = scOut.map(st => Sidecar(st.getPath.getName,
+          st.getLen, st.getModificationTime))
+        val head =
+          nonFile ++ sidecars.map(sc => SingleAction(sidecar = Some(sc)))
+        val top = writeCheckpointFiles(
+          (if (sidecars.isEmpty) withFiles(rowsDF(head))
+           else rowsDF(head)).coalesce(1), logDir)(
+          (_, _) => f"$v%020d.checkpoint.$uuid.parquet").head
+        // Enriched hint (reference last_checkpoint_hint.rs #2777): embed
+        // the v2Checkpoint identity + sidecar refs + non-file actions so
+        // readers can skip opening the top-level checkpoint file
+        // entirely. Oversized lists are OMITTED whole (the read side
+        // would drop them anyway) — the hint stays bounded no matter
+        // the table.
+        def bounded(key: String, items: Seq[String]): String =
+          if (items.size > 30) ""
+          else items.mkString(s""""$key":[""", ",", "],")
+        val v2Obj = "{" +
+          bounded("sidecarFiles", sidecars.map(JsonLog.writeSidecar)) +
+          bounded("nonFileActions", nonFile.map(JsonLog.writeAction)) +
+          s""""path":"${top.getPath.getName}",""" +
+          s""""sizeInBytes":${top.getLen},""" +
+          s""""modificationTime":${top.getModificationTime}}"""
+        (top +: scOut,
+          s"""{"version":$v,"size":${nFiles + head.size},""" +
+            s""""sizeInBytes":${top.getLen},"v2Checkpoint":$v2Obj}""")
     }
-    // the state already holds every live add — re-seed the .crc chain
-    // with EXACT totals + file-size histogram (recovers a chain broken
-    // by a missing/histogram-less crc); one 95-row aggregate
+    Storage.put(fs, new Path(logDir, FileNames.LAST_CHECKPOINT), hint)
+    Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
+      "checkpoint_write", written.size.toLong, written.map(_.getLen).sum))
+
+    // the state holds every live add — re-seed the .crc chain with
+    // EXACT totals + file-size histogram (recovers a chain broken by a
+    // missing/histogram-less crc); one 95-row aggregate
     try {
       val binB = FileSizeHistogram.DefaultBinBoundaries
       val binOf = udf((s: Long) => FileSizeHistogram.empty.binOf(s))
-      val rows = state.filter(col("add").isNotNull)
+      val rows = files.filter(col("add").isNotNull)
         .select(col("add.size").as("sz"))
         .groupBy(binOf(col("sz")).as("bin"))
         .agg(count(lit(1)).as("n"), sum(col("sz")).as("bytes"))
@@ -2543,7 +2661,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         tb.sum, fc.sum, snap.protocol, snap.metadata,
         Some(FileSizeHistogram(binB, fc, tb))))
     } catch { case _: Exception => () }
-    state.unpersist()
+    files.unpersist()
     // log files the new checkpoint supersedes expire after the
     // retention window (delta's operational behavior on checkpoint;
     // best-effort — failures never fail the checkpoint). Catalog-managed
@@ -2558,6 +2676,58 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     v
   }
 
+  /** Write `df` as checkpoint parquet (small row groups keep every file
+    * split-friendly on the read side) into a temp dir under `dir`, then
+    * rename the part files, in name order, to `name(i, count)` in `dir`
+    * and drop the temp dir. An empty partition writes no file, so
+    * `count` is the number of files actually written. Returns the
+    * final files' statuses.
+    */
+  private def writeCheckpointFiles(df: DataFrame, dir: Path)(
+      name: (Int, Int) => String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val tmp = new Path(dir, s".ckpt-tmp-${UUID.randomUUID()}")
+    df.write.mode("overwrite")
+      .option("parquet.block.size", CHECKPOINT_ROW_GROUP_BYTES)
+      .parquet(tmp.toString)
+    val parts = Storage.listFilesRecursive(fs, tmp)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+    val out = parts.zipWithIndex.map { case (st, i) =>
+      val dest = new Path(dir, name(i, parts.size))
+      if (fs.exists(dest)) fs.delete(dest, false)
+      fs.rename(st.getPath, dest)
+      fs.getFileStatus(dest)
+    }
+    fs.delete(tmp, true)
+    out
+  }
+
+  /** One non-file checkpoint action as a row of the first `width`
+    * columns of [[LogSchema.v2Checkpoint]] (the classic schema is its
+    * 6-column prefix); add/remove stay null — file actions ride their
+    * own frame.
+    */
+  private def checkpointRow(a: SingleAction,
+      width: Int): org.apache.spark.sql.Row = {
+    import org.apache.spark.sql.Row
+    Row.fromSeq(Seq(
+      a.txn.map(t => Row(t.appId, t.version,
+        t.lastUpdated.map(Long.box).orNull)).orNull,
+      null, null,
+      a.metaData.map(m => Row(m.id, m.name.orNull, m.description.orNull,
+        Row(m.format.provider, m.format.options), m.schemaString,
+        m.partitionColumns, m.configuration,
+        m.createdTime.map(Long.box).orNull)).orNull,
+      a.protocol.map(p => Row(p.minReaderVersion, p.minWriterVersion,
+        p.readerFeatures.orNull, p.writerFeatures.orNull)).orNull,
+      a.domainMetadata.map(d =>
+        Row(d.domain, d.configuration, d.removed)).orNull,
+      a.sidecar.map(sc => Row(sc.path, sc.sizeInBytes,
+        sc.modificationTime, sc.tags.orNull)).orNull,
+      a.checkpointMetadata.map(c => Row(c.version, c.tags.orNull)).orNull)
+      .take(width))
+  }
+
   /** Delete log files strictly below `ckptVersion` whose modification
     * time fell past `delta.logRetentionDuration` (default 30 days) —
     * they are fully covered by the checkpoint, and keeping them forever
@@ -2570,7 +2740,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   private def cleanupExpiredLogs(ckptVersion: Long,
       m: graft.delta.Metadata): Unit = {
     val retention = m.configuration.get("delta.logRetentionDuration")
-      .flatMap(intervalMillis).getOrElse(30L * 86400000)
+      .flatMap(TableProperties.parseInterval)
+      .getOrElse(30L * 86400000)
     val cutoff = now() - retention
     val crcRe = raw"(\d{20})\.crc".r
     Storage.listSorted(fs, logDir).foreach { st =>
@@ -2609,59 +2780,20 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }
   }
 
-  /** Parse delta's `interval N (hours|days|weeks|...)` duration form. */
-  private def intervalMillis(s: String): Option[Long] =
-    TableProperties.parseInterval(s)
-
   /** `delta.deletedFileRetentionDuration` in millis (default 1 week). */
   private def tombstoneRetentionMillis(m: graft.delta.Metadata): Long =
     m.configuration.get("delta.deletedFileRetentionDuration")
-      .flatMap(intervalMillis).getOrElse(7L * 24 * 3600 * 1000)
+      .flatMap(TableProperties.parseInterval)
+      .getOrElse(7L * 24 * 3600 * 1000)
 
-  /** Reconciled checkpoint state: live adds + UNEXPIRED remove
-    * tombstones + P&M + txns (reference
-    * action_reconciliation/log_replay.rs — tombstones older than the
-    * retention window are dropped; the files they reference are vacuum
-    * candidates that no reader may rely on).
+  /** A remove tombstone still inside the retention window that ends at
+    * `cutoff`: checkpoints keep it and vacuum protects its files. A
+    * missing deletionTimestamp counts as 0 = already expired (reference
+    * action reconciliation; keeping such tombstones forever would grow
+    * checkpoints without bound on logs from engines omitting the field).
     */
-  private def checkpointState(snap: Snapshot): DataFrame = {
-    val cutoff = now() - tombstoneRetentionMillis(snap.metadata)
-    // a tombstone with no deletionTimestamp counts as 0 = expired
-    // (reference action reconciliation; keeping them forever would grow
-    // checkpoints without bound on logs from engines omitting the field)
-    val fileActions = snap.latestActions
-      .filter(col("add").isNotNull ||
-        coalesce(col("remove.deletionTimestamp"), lit(0L)) >= cutoff)
-      .select(
-        lit(null).cast(LogSchema.txn).as("txn"),
-        col("add"),
-        col("remove"),
-        lit(null).cast(LogSchema.metaData).as("metaData"),
-        lit(null).cast(LogSchema.protocol).as("protocol"),
-        lit(null).cast(LogSchema.domainMetadata).as("domainMetadata"))
-    import scala.jdk.CollectionConverters._
-    // delta.setTransactionRetentionDuration: expired txn idempotency
-    // markers drop out at reconciliation (reference
-    // SetTransaction::is_expired, actions/mod.rs:1055-1068 — a None
-    // lastUpdated or no configured retention never expires)
-    val txnCutoff = TableProperties
-      .setTransactionRetentionMillis(snap.metadata).map(now() - _)
-    val liveTxns = snap.setTransactions.filterNot(t =>
-      txnCutoff.exists(c => t.lastUpdated.exists(_ <= c)))
-    val pmRows: Seq[org.apache.spark.sql.Row] = Seq(
-      org.apache.spark.sql.Row(null, null, null, null,
-        protocolRow(snap.protocol), null),
-      org.apache.spark.sql.Row(null, null, null,
-        metadataRow(snap.metadata), null, null)) ++
-      liveTxns.map(t => org.apache.spark.sql.Row(
-        org.apache.spark.sql.Row(t.appId, t.version,
-          t.lastUpdated.map(Long.box).orNull), null, null, null, null, null)) ++
-      snap.domainMetadatas.map(d => org.apache.spark.sql.Row(
-        null, null, null, null, null,
-        org.apache.spark.sql.Row(d.domain, d.configuration, d.removed)))
-    val pmDF = spark.createDataFrame(pmRows.asJava, LogSchema.checkpoint)
-    withCheckpointStatsShape(pmDF.unionByName(fileActions), snap)
-  }
+  private def unexpiredTombstone(cutoff: Long): Column =
+    coalesce(col("remove.deletionTimestamp"), lit(0L)) >= cutoff
 
   /** Apply the table's checkpoint stats contract
     * (delta.checkpoint.writeStatsAsJson / writeStatsAsStruct): extend
@@ -2705,187 +2837,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       }
     if (asJson) withStruct
     else withStruct.withColumn("add", col("add").dropFields("stats"))
-  }
-
-  /** Multi-part V1 checkpoint: the state is split across `numParts`
-    * files named `v.checkpoint.<part>.<parts>.parquet` (readers union
-    * all parts — the scale path for huge file sets).
-    */
-  def checkpointMultipart(numParts: Int): Long = {
-    require(numParts >= 1, "numParts must be positive")
-    val snap = snapshot()
-    val v = snap.version
-    val state = checkpointState(snap)
-    state.persist()
-    val size = state.count()
-    writeClassicCheckpointParts(state, v, numParts, size)
-    state.unpersist()
-    v
-  }
-
-  /** Write a classic checkpoint as `numParts` V1 multipart files
-    * (`v.checkpoint.<i>.<n>.parquet`) and point `_last_checkpoint` at
-    * them. Small parquet row groups keep each part split-friendly on
-    * the read side.
-    */
-  private def writeClassicCheckpointParts(state: DataFrame, v: Long,
-      numParts: Int, size: Long): Unit = {
-    val tmp = new Path(logDir, s".ckpt-tmp-${UUID.randomUUID()}")
-    state.repartition(numParts).write.mode("overwrite")
-      .option("parquet.block.size", CHECKPOINT_ROW_GROUP_BYTES)
-      .parquet(tmp.toString)
-    val parts = Storage.listFilesRecursive(fs, tmp)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    parts.zipWithIndex.foreach { case (st, i) =>
-      val dest = new Path(logDir,
-        f"$v%020d.checkpoint.${i + 1}%010d.${parts.size}%010d.parquet")
-      if (fs.exists(dest)) fs.delete(dest, false)
-      fs.rename(st.getPath, dest)
-    }
-    fs.delete(tmp, true)
-    Storage.put(fs, new Path(logDir, FileNames.LAST_CHECKPOINT),
-      s"""{"version":$v,"size":$size,"parts":${parts.size}}""")
-    Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
-      "checkpoint_write", parts.size.toLong, parts.map(_.getLen).sum))
-  }
-
-  /** V2 checkpoint (reference kernel/src/checkpoint/mod.rs V2 shape +
-    * actions/mod.rs:1251): file actions go to `_delta_log/_sidecars/`
-    * parquet files; the top-level `v.checkpoint.<uuid>.parquet` holds
-    * P&M, txns, `checkpointMetadata` and the sidecar refs. With
-    * `numSidecars = 0` the file actions are inlined in the top-level
-    * file.
-    */
-  def checkpointV2(numSidecars: Int = 2): Long = {
-    // V2 checkpoints require the v2Checkpoint table feature — upgrade
-    // the protocol (preserving implied legacy features) on first use
-    val pre = snapshot()
-    if (!pre.protocol.readerFeatures.exists(_.contains("v2Checkpoint"))) {
-      val up = TableFeatures.upgraded(pre.protocol,
-        Seq("v2Checkpoint"), Seq("v2Checkpoint"))
-      commit(Some(pre), "UPGRADE PROTOCOL", Map.empty,
-        Actions(protocol = Some(up)), Strict)
-    }
-    val snap = snapshot()
-    val v = snap.version
-    val uuid = UUID.randomUUID().toString
-
-    val fileActions = snap.latestActions.select(col("add"), col("remove"))
-    fileActions.persist()
-    val nFiles = fileActions.count()
-    // stats contract (writeStatsAsJson/writeStatsAsStruct) applies to
-    // the file actions wherever they land — sidecars or inline
-    val shapedActions = withCheckpointStatsShape(fileActions, snap)
-
-    val sidecars: Seq[Sidecar] =
-      if (numSidecars <= 0) Nil
-      else {
-        val scDir = new Path(logDir, "_sidecars")
-        val tmp = new Path(scDir, s".sc-tmp-$uuid")
-        shapedActions.repartition(numSidecars).write
-          .mode("overwrite").parquet(tmp.toString)
-        val parts = Storage.listFilesRecursive(fs, tmp)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val out = parts.zipWithIndex.map { case (st, i) =>
-          val name = s"$uuid-$i.parquet"
-          val dest = new Path(scDir, name)
-          if (fs.exists(dest)) fs.delete(dest, false)
-          fs.rename(st.getPath, dest)
-          val fst = fs.getFileStatus(dest)
-          Sidecar(name, fst.getLen, fst.getModificationTime)
-        }
-        fs.delete(tmp, true)
-        out
-      }
-
-    // top-level: P&M + txns + checkpointMetadata + sidecar refs
-    // (+ file actions inline when there are no sidecars)
-    import scala.jdk.CollectionConverters._
-    def topRow(txn: org.apache.spark.sql.Row, add: org.apache.spark.sql.Row,
-        remove: org.apache.spark.sql.Row, meta: org.apache.spark.sql.Row,
-        proto: org.apache.spark.sql.Row, dm: org.apache.spark.sql.Row,
-        sc: org.apache.spark.sql.Row,
-        cm: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
-      org.apache.spark.sql.Row(txn, add, remove, meta, proto, dm, sc, cm)
-    val headRows: Seq[org.apache.spark.sql.Row] = Seq(
-      topRow(null, null, null, null, protocolRow(snap.protocol), null, null,
-        null),
-      topRow(null, null, null, metadataRow(snap.metadata), null, null, null,
-        null),
-      topRow(null, null, null, null, null, null, null,
-        org.apache.spark.sql.Row(v, null))) ++
-      snap.setTransactions.map(t => topRow(
-        org.apache.spark.sql.Row(t.appId, t.version,
-          t.lastUpdated.map(Long.box).orNull),
-        null, null, null, null, null, null, null)) ++
-      // domain metadata (e.g. the delta.rowTracking high-water mark) must
-      // survive a V2 checkpoint: post-checkpoint snapshots only replay
-      // later commits, so dropping it here would silently reassign
-      // baseRowIds from 0 on the next append
-      snap.domainMetadatas.map(d => topRow(null, null, null, null, null,
-        org.apache.spark.sql.Row(d.domain, d.configuration, d.removed),
-        null, null)) ++
-      sidecars.map(sc => topRow(null, null, null, null, null, null,
-        org.apache.spark.sql.Row(sc.path, sc.sizeInBytes,
-          sc.modificationTime, null), null))
-    val headDF = spark.createDataFrame(headRows.asJava, LogSchema.v2Checkpoint)
-    val topDF =
-      // allowMissingColumns: the head rows' all-null add column may
-      // lack the shaped stats_parsed field (or still carry stats when
-      // the shape dropped it) — nulls fill either direction
-      if (sidecars.nonEmpty) headDF
-      else headDF.unionByName(shapedActions.select(
-        lit(null).cast(LogSchema.txn).as("txn"),
-        col("add"), col("remove"),
-        lit(null).cast(LogSchema.metaData).as("metaData"),
-        lit(null).cast(LogSchema.protocol).as("protocol"),
-        lit(null).cast(LogSchema.domainMetadata).as("domainMetadata"),
-        lit(null).cast(LogSchema.sidecar).as("sidecar"),
-        lit(null).cast(LogSchema.checkpointMetadata).as("checkpointMetadata")),
-        allowMissingColumns = true)
-    val tmp = new Path(logDir, s".ckpt-tmp-$uuid")
-    topDF.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fileActions.unpersist()
-    val part = Storage.listFilesRecursive(fs, tmp)
-      .filter(_.getPath.getName.endsWith(".parquet")).head
-    val dest = new Path(logDir, f"$v%020d.checkpoint.$uuid.parquet")
-    if (fs.exists(dest)) fs.delete(dest, false)
-    fs.rename(part.getPath, dest)
-    fs.delete(tmp, true)
-    // Enriched hint (reference last_checkpoint_hint.rs #2777): embed
-    // the v2Checkpoint identity + sidecar refs + non-file actions so
-    // readers can skip opening the top-level checkpoint file entirely.
-    // Oversized lists are OMITTED whole (the read side would drop them
-    // anyway) — the hint stays bounded no matter the table.
-    val destSt = fs.getFileStatus(dest)
-    val scJson =
-      if (sidecars.size > 30) None
-      else Some(sidecars.map(JsonLog.writeSidecar).mkString(
-        "\"sidecarFiles\":[", ",", "],"))
-    val nfa = Seq(
-      s"""{"protocol":${JsonLog.writeProtocol(snap.protocol)}}""",
-      s"""{"metaData":${JsonLog.writeMetadata(snap.metadata)}}""",
-      s"""{"checkpointMetadata":{"version":$v}}""") ++
-      snap.setTransactions.map(t =>
-        s"""{"txn":${JsonLog.writeTxn(t)}}""") ++
-      snap.domainMetadatas.map(d =>
-        s"""{"domainMetadata":${JsonLog.writeDomainMetadata(d)}}""")
-    val nfaJson =
-      if (nfa.size > 30) None
-      else Some(nfa.mkString("\"nonFileActions\":[", ",", "],"))
-    val v2Obj =
-      s"""{${scJson.getOrElse("")}${nfaJson.getOrElse("")}""" +
-        s""""path":"${dest.getName}","sizeInBytes":${destSt.getLen},""" +
-        s""""modificationTime":${destSt.getModificationTime}}"""
-    Storage.put(fs, new Path(logDir, FileNames.LAST_CHECKPOINT),
-      s"""{"version":$v,"size":${nFiles + headRows.size},""" +
-        s""""sizeInBytes":${destSt.getLen},"v2Checkpoint":$v2Obj}""")
-    Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
-      "checkpoint_write", 1L + sidecars.size,
-      destSt.getLen + sidecars.map(_.sizeInBytes).sum))
-    v
   }
 
   /** RESTORE TABLE TO VERSION: one commit re-adding the target
@@ -3023,12 +2974,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }
 
     // recently removed files stay until their tombstones expire — and so
-    // do their DV files (CDF readers within retention resolve them);
-    // a missing deletionTimestamp counts as 0 = already expired
-    // (reference action reconciliation treats absent as 0)
+    // do their DV files (CDF readers within retention resolve them)
     val protectedTombstones: Set[String] = snap.latestActions
-      .filter(col("remove").isNotNull &&
-        coalesce(col("remove.deletionTimestamp"), lit(0L)) >= cutoff)
+      .filter(col("remove").isNotNull && unexpiredTombstone(cutoff))
       .select(col("remove.path"),
         col("remove.deletionVector.storageType"),
         col("remove.deletionVector.pathOrInlineDv")).collect()
@@ -3087,43 +3035,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       col("add.deletionVector.storageType").as("storageType"),
       col("add.deletionVector.pathOrInlineDv").as("pathOrInlineDv")))
     val protectedTombstones = artifactPaths(snap.latestActions
-      .filter(col("remove").isNotNull &&
-        coalesce(col("remove.deletionTimestamp"), lit(0L)) >= cutoff)
+      .filter(col("remove").isNotNull && unexpiredTombstone(cutoff))
       .select(col("remove.path").as("path"),
         col("remove.deletionVector.storageType").as("storageType"),
         col("remove.deletionVector.pathOrInlineDv")
           .as("pathOrInlineDv")))
     val keep = live.union(protectedTombstones).toDF("rel")
 
-    // the driver lists ONE level; tasks walk their subtrees with
-    // executor-local FS clients. `_delta_log` itself is never walked;
-    // any other hidden path still filters per-file, exactly as the
-    // driver arm does.
-    val top = Storage.fs(root, hconf).listStatus(root).toSeq
-    val (topDirs, topFiles) = top.partition(_.isDirectory)
-    val subdirs = topDirs.map(_.getPath)
-      .filterNot(_.getName == FileNames.LOG_DIR).map(_.toString)
+    // any hidden path still filters per-file, exactly as the driver
+    // arm does
     val bconf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(hconf))
-    val fromDirs =
-      if (subdirs.isEmpty)
-        spark.emptyDataset[(String, String, Long, Long)]
-      else spark.sparkContext
-        .parallelize(subdirs, math.min(subdirs.size, 256))
-        .mapPartitions { it =>
-          val conf = bconf.value.value
-          it.flatMap { d =>
-            val p = new Path(d)
-            Storage.listFilesRecursive(p.getFileSystem(conf), p)
-              .map(st => (st.getPath.toString,
-                st.getPath.toUri.getPath, st.getModificationTime,
-                st.getLen))
-          }
-        }.toDS()
-    val fromTop = topFiles.map(st => (st.getPath.toString,
-      st.getPath.toUri.getPath, st.getModificationTime, st.getLen))
-    val candidates = fromDirs
-      .union(spark.createDataset(fromTop))
+    val candidates = listTableDistributed(bconf)
       .map { case (abs, uriPath, mtime, len) =>
         (abs, uriPath.stripPrefix(rootUri).stripPrefix("/"), mtime,
           len) }
@@ -3154,6 +3077,35 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       }
     bconf.destroy()
     out
+  }
+
+  /** Every file under the table root outside `_delta_log`, listed
+    * wide for the distributed VACUUM and FSCK arms: the driver lists
+    * ONE level and tasks walk their subtrees with executor-local FS
+    * clients from `bconf`; `_delta_log` is never walked. Rows are
+    * (absolute path, URI path, modification time, length).
+    */
+  private def listTableDistributed(bconf: org.apache.spark.broadcast
+      .Broadcast[org.apache.spark.util.SerializableConfiguration])
+      : org.apache.spark.sql.Dataset[(String, String, Long, Long)] = {
+    import spark.implicits._
+    val (topDirs, topFiles) =
+      Storage.fs(root, hconf).listStatus(root).toSeq.partition(_.isDirectory)
+    val subdirs = topDirs.map(_.getPath)
+      .filterNot(_.getName == FileNames.LOG_DIR).map(_.toString)
+    val fromDirs =
+      if (subdirs.isEmpty) spark.emptyDataset[(String, String, Long, Long)]
+      else spark.sparkContext
+        .parallelize(subdirs, math.min(subdirs.size, 256))
+        .mapPartitions { it =>
+          val conf = bconf.value.value
+          it.flatMap { d =>
+            val p = new Path(d)
+            Storage.listFilesRecursive(p.getFileSystem(conf), p)
+              .map(DeltaTable.listingRow)
+          }
+        }.toDS()
+    fromDirs.union(spark.createDataset(topFiles.map(DeltaTable.listingRow)))
   }
 
   /** FSCK REPAIR TABLE (delta-spark parity): tombstone live add entries
@@ -3213,23 +3165,26 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (q == rootUri || q.startsWith(rootPrefix)) !present(q)
       else !pfs.exists(p)
     }
-    // a live add is broken when its DATA file is gone OR its
-    // deletion-vector FILE is gone (the bitmap is unrecoverable, and
-    // every scan of the file fails with the same FILE_NOT_EXIST this
-    // repair exists to clear) — both repair by tombstoning the add
-    adds.filter { a =>
-      gone(Storage.childPath(root, Storage.decodeUriPath(a.path))) ||
-        a.deletionVector.exists { d =>
-          DeletionVectors.relativePath(
-              d.storageType, d.pathOrInlineDv, rootUri) match {
-            case Some(rel) => gone(Storage.childPath(root, rel))
-            case None if d.storageType == "p" =>
-              gone(new Path(d.pathOrInlineDv)) // external absolute DV
-            case None => false // inline bytes never go missing
-          }
-        }
-    }
+    adds.filter(brokenAdd(_, rootUri)(gone))
   }
+
+  /** A live add is broken when its DATA file is gone OR its
+    * deletion-vector FILE is gone (the bitmap is unrecoverable, and
+    * every scan of the file fails with the same FILE_NOT_EXIST this
+    * repair exists to clear) — both repair by tombstoning the add.
+    */
+  private def brokenAdd(a: AddFile, rootUri: String)(
+      gone: Path => Boolean): Boolean =
+    gone(Storage.childPath(root, Storage.decodeUriPath(a.path))) ||
+      a.deletionVector.exists { d =>
+        DeletionVectors.relativePath(
+            d.storageType, d.pathOrInlineDv, rootUri) match {
+          case Some(rel) => gone(Storage.childPath(root, rel))
+          case None if d.storageType == "p" =>
+            gone(new Path(d.pathOrInlineDv)) // external absolute DV
+          case None => false // inline bytes never go missing
+        }
+      }
 
   /** The wide fsck arm — same missing-artifact semantics as
     * [[fsckMissingDriver]], O(#files) work distributed. Under-root
@@ -3245,29 +3200,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val rootPrefix = rootUri.stripSuffix("/") + "/"
     val scan = new DeltaScan(snap, None)
 
-    // distributed listing (vacuum's shape); `_delta_log` holds no data
-    // or DV artifacts, so it is never walked
-    val top = Storage.fs(root, hconf).listStatus(root).toSeq
-    val (topDirs, topFiles) = top.partition(_.isDirectory)
-    val subdirs = topDirs.map(_.getPath)
-      .filterNot(_.getName == FileNames.LOG_DIR).map(_.toString)
+    // `_delta_log` holds no data or DV artifacts
     val bconf = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(hconf))
-    val fromDirs =
-      if (subdirs.isEmpty) spark.emptyDataset[String]
-      else spark.sparkContext
-        .parallelize(subdirs, math.min(subdirs.size, 256))
-        .mapPartitions { it =>
-          val conf = bconf.value.value
-          it.flatMap { d =>
-            val p = new Path(d)
-            Storage.listFilesRecursive(p.getFileSystem(conf), p)
-              .map(_.getPath.toUri.getPath)
-          }
-        }.toDS()
-    val present = fromDirs
-      .union(spark.createDataset(topFiles.map(_.getPath.toUri.getPath)))
-      .toDF("uri")
+    val present = listTableDistributed(bconf).map(_._2).toDF("uri")
 
     val slim = scan.filesDF.select(col("add.path").as("path"),
       col("add.deletionVector.storageType").as("st"),
@@ -3308,19 +3244,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         !pdStripped.startsWith(rootPrefix))
     val absolutes = scan.filesDF.filter(absCond)
       .select(col("add.*")).collect().map(RowCodec.rowToAdd).toSeq
-    def goneExact(p: Path): Boolean = !Storage.fs(p, hconf).exists(p)
-    val absMissing = absolutes.filter { a =>
-      goneExact(Storage.childPath(root, Storage.decodeUriPath(a.path))) ||
-        a.deletionVector.exists { d =>
-          DeletionVectors.relativePath(
-              d.storageType, d.pathOrInlineDv, rootUri) match {
-            case Some(rel) => goneExact(Storage.childPath(root, rel))
-            case None if d.storageType == "p" =>
-              goneExact(new Path(d.pathOrInlineDv))
-            case None => false
-          }
-        }
-    }
+    val absMissing = absolutes.filter(
+      brokenAdd(_, rootUri)(p => !Storage.fs(p, hconf).exists(p)))
     bconf.destroy()
     (missingRel ++ absMissing).map(a => a.path -> a).toMap.values.toSeq
   }
@@ -3368,16 +3293,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       throw new IllegalStateException(s"compacted file already exists: $dest")
     hi
   }
-
-  private def protocolRow(p: Protocol): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row(p.minReaderVersion, p.minWriterVersion,
-      p.readerFeatures.orNull, p.writerFeatures.orNull)
-
-  private def metadataRow(m: graft.delta.Metadata): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row(m.id, m.name.orNull, m.description.orNull,
-      org.apache.spark.sql.Row(m.format.provider, m.format.options),
-      m.schemaString, m.partitionColumns, m.configuration,
-      m.createdTime.map(Long.box).orNull)
 
   /** The file-size distribution recorded in the version's `.crc`
     * checksum (reference crc/file_size_histogram.rs) — table layout
@@ -3796,6 +3711,27 @@ object DeltaTable {
   private[delta] case object Maintenance extends CommitMode
   /** Never rebase. */
   private[delta] case object Strict extends CommitMode
+
+  /** A [[DeltaTable.listTableDistributed]] row: (absolute path, URI
+    * path, modification time, length).
+    */
+  private def listingRow(st: org.apache.hadoop.fs.FileStatus)
+      : (String, String, Long, Long) = (st.getPath.toString,
+    st.getPath.toUri.getPath, st.getModificationTime, st.getLen)
+
+  /** How [[DeltaTable.writeCheckpoint]] lays out the reconciled state. */
+  private[delta] sealed trait CheckpointLayout
+  /** Classic V1: `parts` multi-part files, or (None) one
+    * `v.checkpoint.parquet` that splits into multi-part files past
+    * twice `CHECKPOINT_ACTIONS_PER_PART` actions.
+    */
+  private[delta] final case class ClassicLayout(parts: Option[Int])
+      extends CheckpointLayout
+  /** V2: file actions in `sidecars` sidecar files, or inline in the
+    * top-level file when 0.
+    */
+  private[delta] final case class V2Layout(sidecars: Int)
+      extends CheckpointLayout
 
   val ICT_ENABLED_KEY = "delta.enableInCommitTimestamps"
 

@@ -22,14 +22,51 @@ private[graft] object ScratchDirs {
   private[graft] def dropRegistered(): Unit = {
     var s = created.poll()
     while (s != null) {
-      try {
-        val p = java.nio.file.Paths.get(s)
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      } catch { case _: Throwable => () }
+      deleteTree(java.nio.file.Paths.get(s))
       s = created.poll()
     }
   }
+
+  /** Delete (recursively, best-effort) every dir directly under `root`
+    * whose NEWEST modification time anywhere in its tree is over an hour
+    * old — scratch left behind by earlier processes. A dir's own mtime
+    * changes only when its direct entries do, so a live process writing
+    * deep inside an old dir keeps it fresh here. Fixture bases, locks
+    * and the warehouses are never swept.
+    */
+  private[graft] def sweepStale(root: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val cutoff = System.currentTimeMillis() - 3600L * 1000
+    def protectedName(n: String): Boolean =
+      n.contains("-base-") || n.endsWith(".lock") ||
+        n == "gd-warehouse" || n == "golden"
+    // a walk that fails (a concurrent delete) counts as fresh
+    def newestMillis(p: java.nio.file.Path): Long =
+      try {
+        val w = Files.walk(p)
+        try w.iterator().asScala.map(q =>
+          try Files.getLastModifiedTime(q).toMillis
+          catch { case _: Throwable => Long.MaxValue }).max
+        finally w.close()
+      } catch { case _: Throwable => Long.MaxValue }
+    try {
+      if (Files.isDirectory(root)) {
+        val s = Files.list(root)
+        try s.iterator().asScala.toList
+          .filter(p => !protectedName(p.getFileName.toString))
+          .filter(p => newestMillis(p) < cutoff)
+          .foreach(deleteTree)
+        finally s.close()
+      }
+    } catch { case _: Throwable => () }
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    try {
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p)
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(q => java.nio.file.Files.deleteIfExists(q))
+    } catch { case _: Throwable => () }
 }

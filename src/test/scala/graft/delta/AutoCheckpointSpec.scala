@@ -87,6 +87,28 @@ class AutoCheckpointSpec extends AnyFunSuite {
     assert(!names2.contains(f"${2L}%020d.checkpoint.parquet"), names2)
     assert(names2.contains(f"${3L}%020d.checkpoint.parquet"), names2)
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 30)
+
+    // every checkpoint layout runs the same cleanup: a
+    // checkpointPolicy=v2 table and a multi-part checkpoint
+    Seq("v2", "multipart").foreach { layout =>
+      val d = TestSpark.tmpDir(s"logclean-$layout")
+      DeltaTable.create(spark, d, src(1, 1).schema,
+        configuration = Map(
+          "delta.logRetentionDuration" -> "interval 0 milliseconds") ++
+          (if (layout == "v2") Map(TableProperties.CHECKPOINT_POLICY -> "v2")
+           else Map.empty))
+      val tl = DeltaTable.forPath(spark, d)
+      tl.append(src(1, 10))   // v1
+      tl.append(src(11, 20))  // v2
+      Thread.sleep(20)
+      val cv =
+        if (layout == "v2") tl.checkpoint() else tl.checkpointMultipart(2)
+      val n = logNames(d)
+      assert(!n.contains(f"${0L}%020d.json"), s"$layout: $n")
+      assert(!n.contains(f"${1L}%020d.json"), s"$layout: $n")
+      assert(n.contains(f"$cv%020d.json"), s"$layout: $n")
+      assert(DeltaTable.forPath(spark, d).toDF.count() == 20, layout)
+    }
   }
 
   test("default retention deletes nothing; " +

@@ -122,53 +122,66 @@ class CheckpointV2Spec extends AnyFunSuite {
     intercept[Exception] { t.snapshot(Some(2L)) }
   }
 
+  /** Checkpoint `t` in `layout` ("classic" or "v2") and return the
+    * remove paths the checkpoint holds (V2: top-level file + sidecars).
+    */
+  private def checkpointRemoves(t: DeltaTable, layout: String): Seq[String] = {
+    val files = layout match {
+      case "classic" =>
+        t.checkpoint()
+        Seq(FileNames.classicCheckpointFile(FileNames.logDir(t.root),
+          t.snapshot().version).toString)
+      case "v2" =>
+        t.checkpointV2(numSidecars = 2)
+        val snap = t.snapshot()
+        snap.v2Info.get.topLevel.path.toString +: snap.v2Info.get.sidecarPaths
+    }
+    spark.read.schema(LogSchema.checkpoint).parquet(files: _*)
+      .filter(col("remove").isNotNull)
+      .select("remove.path").collect().map(_.getString(0)).toSeq
+  }
+
   test("checkpoint drops expired remove tombstones, keeps fresh ones") {
-    val dir = TestSpark.tmpDir("tomb")
-    val src = li
-    DeltaTable.create(spark, dir, src.schema,
-      configuration = Map(
-        "delta.deletedFileRetentionDuration" -> "interval 1 days"))
-    val t = DeltaTable.forPath(spark, dir)
-    t.append(src.filter($"l_quantity" < 4))
-    t.append(src.filter($"l_quantity" >= 4))
-    t.deleteWhere("l_quantity < 4") // fresh tombstones
-    // hand-craft an EXPIRED tombstone for a fictional path
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-        "ghost.parquet",
-        Some(System.currentTimeMillis() - 3L * 86400000),
-        dataChange = false))))),
-      retryable = false)
-    t.checkpoint()
-    val ckpt = spark.read.schema(LogSchema.checkpoint).parquet(
-      FileNames.classicCheckpointFile(
-        FileNames.logDir(new Path(dir)), t.snapshot().version).toString)
-    val removes = ckpt.filter(col("remove").isNotNull)
-      .select("remove.path").collect().map(_.getString(0))
-    assert(!removes.contains("ghost.parquet")) // expired -> dropped
-    assert(removes.nonEmpty)                   // fresh ones kept
-    assert(t.toDF.count() == src.filter($"l_quantity" >= 4).count())
+    Seq("classic", "v2").foreach { layout =>
+      val dir = TestSpark.tmpDir(s"tomb-$layout")
+      val src = li
+      DeltaTable.create(spark, dir, src.schema,
+        configuration = Map(
+          "delta.deletedFileRetentionDuration" -> "interval 1 days"))
+      val t = DeltaTable.forPath(spark, dir)
+      t.append(src.filter($"l_quantity" < 4))
+      t.append(src.filter($"l_quantity" >= 4))
+      t.deleteWhere("l_quantity < 4") // fresh tombstones
+      // hand-craft an EXPIRED tombstone for a fictional path
+      t.commitActions(t.snapshot().version + 1,
+        Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
+          "ghost.parquet",
+          Some(System.currentTimeMillis() - 3L * 86400000),
+          dataChange = false))))),
+        retryable = false)
+      val removes = checkpointRemoves(t, layout)
+      assert(!removes.contains("ghost.parquet"), layout) // expired -> dropped
+      assert(removes.nonEmpty, layout)                   // fresh ones kept
+      assert(t.toDF.count() == src.filter($"l_quantity" >= 4).count())
+    }
   }
 
   test("checkpoint treats a missing deletionTimestamp as already expired") {
-    val dir = TestSpark.tmpDir("tombnull")
-    val src = li
-    DeltaTable.create(spark, dir, src.schema) // default 1-week retention
-    val t = DeltaTable.forPath(spark, dir)
-    t.append(src)
-    // tombstone with NO deletionTimestamp (some engines omit the field);
-    // keeping it forever would grow checkpoints without bound
-    t.commitActions(t.snapshot().version + 1,
-      Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
-        "ghost-null-ts.parquet", None, dataChange = false))))),
-      retryable = false)
-    t.checkpoint()
-    val ckpt = spark.read.schema(LogSchema.checkpoint).parquet(
-      FileNames.classicCheckpointFile(
-        FileNames.logDir(new Path(dir)), t.snapshot().version).toString)
-    val removes = ckpt.filter(col("remove").isNotNull)
-      .select("remove.path").collect().map(_.getString(0))
-    assert(!removes.contains("ghost-null-ts.parquet"))
+    Seq("classic", "v2").foreach { layout =>
+      val dir = TestSpark.tmpDir(s"tombnull-$layout")
+      val src = li
+      DeltaTable.create(spark, dir, src.schema) // default 1-week retention
+      val t = DeltaTable.forPath(spark, dir)
+      t.append(src)
+      // tombstone with NO deletionTimestamp (some engines omit the
+      // field); keeping it forever would grow checkpoints without bound
+      t.commitActions(t.snapshot().version + 1,
+        Seq(JsonLog.writeAction(SingleAction(remove = Some(RemoveFile(
+          "ghost-null-ts.parquet", None, dataChange = false))))),
+        retryable = false)
+      assert(!checkpointRemoves(t, layout).contains("ghost-null-ts.parquet"),
+        layout)
+    }
   }
 
   test("v2 checkpoint preserves domain metadata (row-tracking HWM)") {

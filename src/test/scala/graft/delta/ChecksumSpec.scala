@@ -117,6 +117,15 @@ class ChecksumSpec extends AnyFunSuite {
     assert(reseeded.totalBytes.toSeq == expected.totalBytes.toSeq)
     // bin placement sanity: small files land in low bins
     assert(reseeded.fileCounts.take(3).sum == reseeded.totalFiles)
+
+    // a V2 checkpoint re-seeds too (its protocol-upgrade commit finds
+    // no .crc to chain from)
+    fs.delete(Checksum.path(logDir, t.snapshot().version), false)
+    t.checkpointV2()
+    val v2Reseeded = t.fileSizeHistogram()
+    assert(v2Reseeded.isDefined, "V2 checkpoint did not re-seed the .crc")
+    assert(v2Reseeded.get.fileCounts.toSeq == expected.fileCounts.toSeq)
+    assert(v2Reseeded.get.totalBytes.toSeq == expected.totalBytes.toSeq)
   }
 
   test("histogram bin boundaries and saturation semantics") {

@@ -486,6 +486,73 @@ class ContentTreeSpec extends AnyFunSuite {
       t.toDF.orderBy("k").collect().toSeq)
   } }
 
+  test("updateRoot broadcasts the diff into the reuse probe only for a " +
+      "small commit window") { withReuseProbe {
+    // a session of its own: auto-broadcast off, so a broadcast join in
+    // the probe can only come from updateRoot's hint
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    s2.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = {
+          val plan = qe.executedPlan.toString
+          if (plan.contains("LeftSemi") && plan.contains("file_path"))
+            probes.add(plan)
+        }
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      })
+    // listener delivery is asynchronous: wait for the probe's plan
+    def probePlan(update: => Unit): String = {
+      probes.clear()
+      update
+      val deadline = System.currentTimeMillis() + 30000
+      while (probes.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(!probes.isEmpty, "no reuse-probe plan captured")
+      probes.peek()
+    }
+
+    val dir = TestSpark.tmpDir("amt-bcast")
+    val src = s2.range(1, 3001).selectExpr("id AS k", "concat('v', id) AS s")
+    def more(n: Int, shift: Long) =
+      src.limit(n).withColumn("k", col("k") + shift)
+    DeltaTable.create(s2, dir, src.schema)
+    val t = DeltaTable.forPath(s2, dir)
+    def broadcasts(plan: String) =
+      Seq("BroadcastHashJoin", "BroadcastExchange").exists(plan.contains)
+    // each window rewrites a v1 file, so the probe's semi-join matches
+    t.append(src.repartition(2))                           // v1
+    val tree1 = ContentTree.writeRoot(t.snapshot())
+    t.deleteWhere("k <= 5")                                // v2
+    t.append(more(10, 10000L))                             // v3
+    var tree3: graft.delta.AdaptiveMetadata.ContentRoot = null
+    val small = probePlan {
+      tree3 = ContentTree.updateRoot(t.snapshot(), tree1) }
+    assert(broadcasts(small), s"a 2-commit diff was not broadcast:\n$small")
+
+    t.deleteWhere("k <= 10")                               // v4
+    (5 to 13).foreach(i => t.append(more(5, i * 10000L)))  // v5..v13
+    val snap = t.snapshot()
+    assert(snap.version - tree3.version > 8)
+    var tree13: graft.delta.AdaptiveMetadata.ContentRoot = null
+    val plan = probePlan { tree13 = ContentTree.updateRoot(snap, tree3) }
+    assert(!broadcasts(plan),
+      s"the distributed diff of a 10-commit window was broadcast:\n$plan")
+    // and the maintained tree still reads back to the exact table
+    val rootUri = Storage.fs(snap.tableRoot,
+        s2.sessionState.newHadoopConf())
+      .makeQualified(snap.tableRoot).toUri.getPath
+    val adds = ContentTree.addFileIterator(s2,
+      tree13.resolve(dir), dir, rootUri).toSeq
+    assert(new DeltaScan(snap, None).assemble(adds, keepMeta = false)
+      .count() == t.toDF.count())
+  } }
+
   test("TrackingInfo delta bitmaps: Modified entries carry " +
       "deletedPositions equal to the DV diff of the maintained range") {
     val dir = TestSpark.tmpDir("amt-bits")

@@ -176,29 +176,46 @@ class TablePropertiesSpec extends AnyFunSuite {
   }
 
   test("setTransactionRetentionDuration expires txn markers at checkpoint") {
-    val dir = TestSpark.tmpDir("txnret")
-    val df = src(10)
-    DeltaTable.create(spark, dir, df.schema, configuration = Map(
-      TableProperties.SET_TRANSACTION_RETENTION -> "interval 1 hours"))
-    val t = DeltaTable.forPath(spark, dir)
-    t.append(df)
-    val v = t.snapshot().version
-    // one stale marker (lastUpdated two hours ago), one fresh, one
-    // with no timestamp (never expires — reference is_expired contract)
-    val now = System.currentTimeMillis()
-    t.commitActions(v + 1, Seq(
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("stale-app", 3L, Some(now - 7200000L))))),
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("fresh-app", 4L, Some(now))))),
-      JsonLog.writeAction(SingleAction(txn = Some(
-        SetTransaction("timeless-app", 5L, None))))),
-      retryable = false)
-    t.checkpoint()
-    val apps = DeltaTable.forPath(spark, dir).snapshot()
-      .setTransactions.map(_.appId).toSet
-    assert(!apps.contains("stale-app"), s"stale txn survived: $apps")
-    assert(apps.contains("fresh-app") && apps.contains("timeless-app"))
+    Seq("classic", "v2").foreach { layout =>
+      val dir = TestSpark.tmpDir(s"txnret-$layout")
+      val df = src(10)
+      DeltaTable.create(spark, dir, df.schema, configuration = Map(
+        TableProperties.SET_TRANSACTION_RETENTION -> "interval 1 hours"))
+      val t = DeltaTable.forPath(spark, dir)
+      t.append(df)
+      val v = t.snapshot().version
+      // one stale marker (lastUpdated two hours ago), one fresh, one
+      // with no timestamp (never expires — reference is_expired contract)
+      val now = System.currentTimeMillis()
+      t.commitActions(v + 1, Seq(
+        JsonLog.writeAction(SingleAction(txn = Some(
+          SetTransaction("stale-app", 3L, Some(now - 7200000L))))),
+        JsonLog.writeAction(SingleAction(txn = Some(
+          SetTransaction("fresh-app", 4L, Some(now))))),
+        JsonLog.writeAction(SingleAction(txn = Some(
+          SetTransaction("timeless-app", 5L, None))))),
+        retryable = false)
+      if (layout == "classic") t.checkpoint() else t.checkpointV2()
+      val snap = DeltaTable.forPath(spark, dir).snapshot()
+      val apps = snap.setTransactions.map(_.appId).toSet
+      assert(!apps.contains("stale-app"), s"$layout: stale txn survived: $apps")
+      assert(apps.contains("fresh-app") && apps.contains("timeless-app"))
+      if (layout == "v2") {
+        // the top-level file's rows and the hint's non-file actions
+        // carry the same reconciled txns
+        val rowApps = spark.read.schema(LogSchema.checkpoint)
+          .parquet(snap.v2Info.get.topLevel.path.toString)
+          .filter(col("txn").isNotNull).select("txn.appId")
+          .collect().map(_.getString(0)).toSet
+        val hint = LogSegment.readLastCheckpointHint(
+          Storage.fs(new Path(dir), spark.sessionState.newHadoopConf()),
+          FileNames.logDir(new Path(dir)))
+        val hintApps = hint.get.v2Checkpoint.get.nonFileActions.get.txns
+          .map(_.appId).toSet
+        assert(rowApps == Set("fresh-app", "timeless-app"), rowApps)
+        assert(hintApps == Set("fresh-app", "timeless-app"), hintApps)
+      }
+    }
   }
 
   test("Serializable isolation refuses to rebase past a data removal") {
