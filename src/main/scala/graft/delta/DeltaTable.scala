@@ -948,23 +948,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       } ++ passthrough.map(ColumnMapping.qcol): _*)
   }
 
-  /** Stage CDF `_change_data` files for `df` (logical table columns):
-    * written with physical names + a physical `_change_type` column,
-    * partitioned like the table. A commit carrying cdc actions is read
-    * ONLY through them (reference table_changes/log_replay.rs
-    * classification), which is what makes partial file rewrites
-    * CDF-correct.
-    */
-  private def stageCdcFiles(df: DataFrame, snap: Snapshot,
-      changeType: String): Seq[AddCDCFile] =
-    stageCdcMulti(Seq(df -> changeType), snap)
-
-  /** Stage several change-typed row sets as ONE `_change_data` write
+  /** Stage CDF `_change_data` files for change-typed row sets (logical
+    * table columns), written with physical names + a physical
+    * `_change_type` column, partitioned like the table, as ONE write
     * job: each branch carries its `_change_type` literal through a
     * unionByName, so an UPDATE's pre+post images (or a MERGE's four
     * image kinds) cost one Spark job instead of one per kind. cdc
     * files legally mix change types — `_change_type` is a physical
-    * data column, never per-file metadata.
+    * data column, never per-file metadata. A commit carrying cdc
+    * actions is read ONLY through them (reference
+    * table_changes/log_replay.rs classification), which is what makes
+    * partial file rewrites CDF-correct.
     */
   private def stageCdcMulti(parts: Seq[(DataFrame, String)],
       snap: Snapshot): Seq[AddCDCFile] = {
@@ -1201,48 +1195,143 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }
   }
 
-  /** DELETE WHERE: files whose rows all survive are untouched; files with
-    * any matching row are rewritten without the matching rows
-    * (remove+add pairs — reference transaction/update.rs:188-812 file-
-    * granular path; DV-based row-granular delete is the upgrade path).
+  /** DELETE WHERE by rewrite: each file holding a matching row is
+    * rewritten without those rows (remove+add pairs — reference
+    * transaction/update.rs:188 file-granular path); every other file
+    * stays, and a call matching no row commits nothing.
     */
-  def deleteWhere(predicateSql: String): Long = {
+  def deleteWhere(predicateSql: String): Long =
+    dml(predicateSql, None, _ => false)
+
+  /** UPDATE SET ... WHERE ... by rewrite: each file holding a matching
+    * row is rewritten with the assignments applied (reference
+    * transaction/update.rs file-granular path). With CDF enabled the
+    * commit stages update_preimage / update_postimage `_change_data`
+    * rows, so the feed reads row-level updates rather than delete-all +
+    * insert-all.
+    */
+  def updateWhere(predicateSql: String, set: Map[String, String]): Long =
+    dml(predicateSql, Some(set), _ => false)
+
+  /** DELETE WHERE via deletion vectors (reference
+    * transaction/update.rs:275-812): no data rewrite — matching row
+    * indexes are merged into each file's bitmap, committed as
+    * remove+add pairs that swap the file's DV. Upgrades the protocol to
+    * table features on first use.
+    */
+  def deleteWhereDV(predicateSql: String): Long =
+    dml(predicateSql, None, _ => true)
+
+  /** UPDATE WHERE via deletion vectors (delta-spark's DV-based UPDATE;
+    * reference transaction/update.rs — DV attach + new adds in one
+    * commit): matching rows are DV-marked in their files and ONLY the
+    * updated copies are written as new files. Write amplification =
+    * the updated rows, not the whole matched files — the difference
+    * between rewriting kilobytes and rewriting terabytes when an
+    * UPDATE touches 0.1% of a 100 TB table. Untouched rows never move,
+    * so their row ids and file-level stats stay put; the DV-swapped
+    * add keeps its baseRowId and gets tightBounds:false stats.
+    * Upgrades the protocol to deletionVectors on first use.
+    */
+  def updateWhereDV(predicateSql: String,
+      set: Map[String, String]): Long =
+    dml(predicateSql, Some(set), _ => true)
+
+  /** SQL DELETE (`set` None) and UPDATE: `delta.enableDeletionVectors`
+    * routes them through the DV arm, a rewrite otherwise (delta-spark's
+    * dispatch) — decided on the snapshot the DML itself reads, so the
+    * choice and the rows can never come from different versions under
+    * a concurrent ALTER.
+    */
+  private[graft] def sqlDml(predicateSql: String,
+      set: Option[Map[String, String]]): Long =
+    dml(predicateSql, set, s =>
+      FeatureRequirements.isEnabled(s.protocol, s.metadata, "deletionVectors"))
+
+  /** The one predicate DELETE/UPDATE routine (DELETE is UPDATE with no
+    * assignments, `set` None), in both arms:
+    *  - one match pass ([[dvMatchPerFile]]) over the slim stats-skipped
+    *    candidates names the files holding a matching row; a call that
+    *    matches none commits nothing and returns the current version;
+    *  - the rewrite arm re-stages the matched files as their surviving
+    *    rows plus the assigned copies;
+    *  - the DV arm DV-marks partly matched files, drops fully matched
+    *    ones, and writes only the assigned copies.
+    * Both tombstone exactly the matched files. The change feed stages
+    * whenever the arm writes data files; a DV DELETE writes none (its
+    * feed derives from the DV swap).
+    */
+  private def dml(predicateSql: String, set: Option[Map[String, String]],
+      useDv: Snapshot => Boolean): Long = {
     val snap = snapshot()
+    val dv = useDv(snap)
+    val op = if (set.isEmpty) "DELETE" else "UPDATE"
     writerGate(snap, mutating = true)
-    requireDeterministicPredicate(snap, predicateSql, "DELETE")
+    requireDeterministicPredicate(snap, predicateSql, op)
+    set.foreach { s =>
+      require(s.nonEmpty, "UPDATE requires at least one assignment")
+      s.keys.foreach(c => require(snap.schema.fieldNames.contains(c),
+        s"no such column '$c'"))
+      require(s.keys.toSet.intersect(snap.partitionColumns.toSet).isEmpty,
+        "updating a partition column is not supported")
+    }
     val scan = new DeltaScan(snap, Some(predicateSql))
-    // slim: tombstones and the rewrite read need path/pv/size/DV —
-    // never the stats JSON (the DV delete paths DO need it: their
-    // re-adds preserve the original stats)
+    // slim: the match pass, the rewrite read and the tombstones need
+    // path/pv/size/DV only; the DV re-adds fetch their stats by reference
     val candidates = scan.collectAddFiles(slim = true)
     if (candidates.isEmpty) return snap.version
+    val matchedFiles =
+      dvMatchPerFile(scan, candidates, predicateSql).filter(_._3 > 0).toSeq
+    if (matchedFiles.isEmpty) return snap.version
+    val byPath = keyedByPath(candidates).toMap
+    val matchedAdds = matchedFiles.map(f => byPath(f._1))
 
-    // one read of the candidate files feeds both the survivor rewrite
-    // and the CDF delete staging; survivors keep their row ids through
-    // the materialized columns on row-tracking tables
-    val (full, rtCols) = readFilesForRewrite(snap, candidates)
-    val cdf = TableChanges.cdfEnabled(snap.metadata)
-    if (cdf) full.persist()
-    // survivors: NOT(cond) OR cond IS NULL  (DELETE's 3VL contract)
-    val survivors = full.filter(
-      not(coalesce(expr(predicateSql), lit(false))))
-    // no isEmpty pre-check: that is a full extra read of the candidate
-    // files per DELETE; stageFiles' zero-row drop already returns Nil
-    // for an all-deleted rewrite
-    val newAdds = stageFiles(survivors, snap, rtCols)
-    // CDF: a rewrite commit without cdc actions would read as
-    // delete-all + insert-survivors; stage the actually-deleted rows as
-    // _change_data instead
-    val cdcActions =
-      if (cdf) stageCdcFiles(full.filter(expr(predicateSql)), snap, "delete")
-      else Nil
-    if (cdf) full.unpersist()
+    val (newAdds, cdcActions) =
+      if (dv && set.isEmpty) (Nil, Nil)
+      else {
+        // row-tracking tables: survivors keep their row ids through the
+        // materialized columns; updated rows keep the id but take the
+        // new add's default commit version
+        val (full, rtCols) = readFilesForRewrite(snap, matchedAdds)
+        val cdf = TableChanges.cdfEnabled(snap.metadata)
+        val cached = cdf || set.isDefined
+        if (cached) full.persist()
+        val cond = coalesce(expr(predicateSql), lit(false))
+        val matched = full.filter(cond)
+        val applied = set.map(s =>
+          assignUpdates(matched, snap, Seq(None -> s), rtCols))
+        // survivors: NOT(cond) OR cond IS NULL (DELETE's 3VL contract);
+        // stageFiles drops an all-deleted rewrite's zero rows
+        val survivors = if (dv) None else Some(full.filter(not(cond)))
+        val staged = stageFiles(
+          (survivors ++ applied).reduce(_.unionByName(_)), snap, rtCols)
+        val cdc =
+          if (!cdf) Nil
+          else stageCdcMulti(applied.fold(Seq(matched -> "delete"))(a =>
+            Seq(matched -> "update_preimage", a -> "update_postimage")), snap)
+        if (cached) full.unpersist()
+        (staged, cdc)
+      }
+    val swapped =
+      if (!dv) Nil
+      else dvSwapAdds(scan, matchedFiles.filter(f => f._3 != f._4), byPath)
     val (newAddsRt, domains) = assignRowIds(snap, newAdds)
-    commit(Some(snap), "DELETE", Map("predicate" -> predicateSql),
-      Actions(domains = domains,
-        removes = candidates.map(tombstone(_, dataChange = true)),
-        adds = newAddsRt, cdc = cdcActions),
+    commit(Some(snap), op, Map("predicate" -> predicateSql),
+      Actions(protocol = if (dv) dvUpgrade(snap) else None, domains = domains,
+        removes = matchedAdds.map(tombstone(_, dataChange = true)),
+        adds = swapped ++ newAddsRt, cdc = cdcActions),
       Reads(Some(predicateSql)))
+  }
+
+  /** Each add keyed by the qualified, URI-decoded path its rows report
+    * as `__path` — the key joining per-file match results back to the
+    * adds, in input order.
+    */
+  private[graft] def keyedByPath(
+      adds: Seq[AddFile]): Seq[(String, AddFile)] = {
+    val qfs = fs
+    adds.map(a => qfs.makeQualified(Storage.childPath(root,
+      Storage.decodeUriPath(a.path))).toUri.getPath -> a)
   }
 
   /** Read specific add files with partition values injected. */
@@ -1282,87 +1371,48 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       (assigned, Seq(RowTracking.domainMetadataFor(hwm)))
     }
 
-  /** UPDATE SET ... WHERE ...: files containing matching rows are
-    * rewritten with the assignments applied (reference
-    * transaction/update.rs file-granular path); untouched files stay.
-    * With CDF enabled the commit stages update_preimage /
-    * update_postimage `_change_data` rows, so the feed reads row-level
-    * updates rather than delete-all + insert-all.
+  /** The post-assignment row frame shared by UPDATE and MERGE: each
+    * column takes the assignment of the clause whose tag holds (tags
+    * are exclusive; None is unconditional — UPDATE is the single
+    * untagged clause), cast to the column type; generated columns not
+    * explicitly assigned are recomputed from the post-assignment row
+    * (stored values are stale once a base column changes); row-tracking
+    * columns keep the id with a nulled commit version, so updated rows
+    * take the new add's default version. `qual` prefixes current-value
+    * references (`t.` inside MERGE's join).
     */
-  /** The post-assignment row frame shared by the UPDATE paths: clause
-    * assignments applied (cast to the column type), generated columns
-    * recomputed from the post-assignment row (explicit assignments
-    * win), row-tracking columns materialized with a nulled commit
-    * version so updated rows keep their id but take the new add's
-    * default version.
-    */
-  private def applyUpdateAssignments(matched: DataFrame, snap: Snapshot,
-      set: Map[String, String], rtCols: Seq[String]): DataFrame = {
+  private def assignUpdates(rows: DataFrame, snap: Snapshot,
+      clauses: Seq[(Option[Column], Map[String, String])],
+      rtCols: Seq[String], qual: String = ""): DataFrame = {
+    def cur(name: String): Column = col(qual + ColumnMapping.quoted(name))
     val rtUpdated: Seq[Column] = rtCols match {
-      case Seq(idCol, vCol) => Seq(ColumnMapping.qcol(idCol),
-        lit(null).cast("long").as(vCol))
+      case Seq(idCol, vCol) =>
+        Seq(cur(idCol).as(idCol), lit(null).cast("long").as(vCol))
       case _ => Nil
     }
-    val rtKeep: Seq[Column] = rtCols.map(ColumnMapping.qcol)
-    val assigned = matched.select(snap.schema.fields.map { f =>
-      set.get(f.name)
-        .map(e => expr(e).cast(f.dataType).as(f.name, f.metadata))
-        .getOrElse(ColumnMapping.qcol(f.name))
-    }.toIndexedSeq ++ rtUpdated: _*)
-    val regen = WriteValidation.generated(snap) -- set.keys
+    val assigned = rows.select(snap.schema.fields.toIndexedSeq.map { f =>
+      clauses.foldLeft(cur(f.name)) { case (v, (tag, set)) =>
+        set.get(f.name).fold(v) { e =>
+          val x = expr(e).cast(f.dataType)
+          tag.fold(x)(when(_, x).otherwise(v))
+        }
+      }.as(f.name, f.metadata)
+    } ++ rtUpdated: _*)
+    val regen = WriteValidation.generated(snap) -- clauses.flatMap(_._2.keys)
     if (regen.isEmpty) assigned
-    else assigned.select(snap.schema.fields.map { f =>
+    else assigned.select(snap.schema.fields.toIndexedSeq.map { f =>
       regen.get(f.name)
         .map(e => expr(e).cast(f.dataType).as(f.name, f.metadata))
         .getOrElse(ColumnMapping.qcol(f.name))
-    }.toIndexedSeq ++ rtKeep: _*)
-  }
-
-  def updateWhere(predicateSql: String, set: Map[String, String]): Long = {
-    val snap = snapshot()
-    writerGate(snap, mutating = true)
-    requireDeterministicPredicate(snap, predicateSql, "UPDATE")
-    require(set.nonEmpty, "UPDATE requires at least one assignment")
-    set.keys.foreach(c => require(snap.schema.fieldNames.contains(c),
-      s"no such column '$c'"))
-    require(set.keys.toSet.intersect(snap.partitionColumns.toSet).isEmpty,
-      "updating a partition column is not supported")
-    val scan = new DeltaScan(snap, Some(predicateSql))
-    val candidates = scan.collectAddFiles(slim = true) // see DELETE
-    if (candidates.isEmpty) return snap.version
-
-    // row-tracking tables: updated rows KEEP their row id but take the
-    // NEW commit version — materialize the id, null the version so the
-    // read falls back to the new add's default (survivors keep both)
-    val (full, rtCols) = readFilesForRewrite(snap, candidates)
-    val cdf = TableChanges.cdfEnabled(snap.metadata)
-    full.persist()
-    val matched = full.filter(coalesce(expr(predicateSql), lit(false)))
-    val applied = applyUpdateAssignments(matched, snap, set, rtCols)
-    val survivors = full.filter(
-      not(coalesce(expr(predicateSql), lit(false))))
-    val newAdds =
-      stageFiles(survivors.unionByName(applied), snap, rtCols)
-    val cdcActions =
-      if (!cdf) Nil
-      else stageCdcMulti(Seq(matched -> "update_preimage",
-        applied -> "update_postimage"), snap)
-    full.unpersist()
-    val (newAddsRt, domains) = assignRowIds(snap, newAdds)
-    commit(Some(snap), "UPDATE", Map("predicate" -> predicateSql),
-      Actions(domains = domains,
-        removes = candidates.map(tombstone(_, dataChange = true)),
-        adds = newAddsRt, cdc = cdcActions),
-      Reads(Some(predicateSql)))
+    } ++ rtCols.map(ColumnMapping.qcol): _*)
   }
 
   /** ONE distributed pass per candidate file: build the new-deletion
     * bitmap ON THE EXECUTORS (groupByKey + mapGroups — compressed
     * bitmap bytes travel to the driver, never row-index lists; a
     * 1B-row DELETE funnels kilobytes, not gigabytes) and count
-    * matched/live rows for the fully-deleted-file check. Shared by
-    * deleteWhereDV and updateWhereDV — the two must never drift on
-    * what "matched" means.
+    * matched/live rows for the fully-deleted-file check. The one
+    * definition of "matched" for every predicate DELETE/UPDATE arm.
     */
   private def dvMatchPerFile(scan: DeltaScan, candidates: Seq[AddFile],
       predicateSql: String): Array[(String, Array[Byte], Long, Long)] = {
@@ -1384,15 +1434,19 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       }.collect()
   }
 
-  /** Merge each partially-matched file's new bitmap with its existing
-    * DV at BITMAP level (assemble already excluded old-DV rows, so
-    * cardinalities simply add), then route small bitmaps inline into
-    * the log line and pack larger ones into one deletion_vector file.
+  /** The DV-swap re-adds, built once for every DV writer: each partly
+    * matched file's new bitmap merges with its existing DV at BITMAP
+    * level (assemble already excluded old-DV rows, so cardinalities
+    * simply add); small bitmaps inline into the log line and larger ones
+    * pack into one deletion_vector file. The re-add keeps the file's
+    * original stats — fetched by reference when the collect was slim —
+    * flagged tightBounds:false: stats on a DV-carrying add describe the
+    * PHYSICAL file (protocol contract — external readers may otherwise
+    * do metadata-only aggregates over dead rows).
     */
-  private def dvSwapDescriptors(
+  private def dvSwapAdds(scan: DeltaScan,
       partialFiles: Seq[(String, Array[Byte], Long, Long)],
-      byPath: Map[String, AddFile])
-      : Map[String, DeletionVectorDescriptor] = {
+      byPath: Map[String, AddFile]): Seq[AddFile] = {
     val conf = hconf
     val merged: Seq[(String, Array[Byte], Long)] = partialFiles.map {
       case (p, bytes, matched, _) =>
@@ -1408,52 +1462,19 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       case (_, bytes, _) =>
         bytes.length + 4 <= DeletionVectors.INLINE_MAX_BYTES
     }
-    inlineSized.map { case (p, bytes, card) =>
+    val descs = inlineSized.map { case (p, bytes, card) =>
       p -> DeletionVectors.inlineDescriptor(bytes, card)
     }.toMap ++
       (if (fileSized.isEmpty) Map.empty[String, DeletionVectorDescriptor]
        else DeletionVectors.writeBitmaps(fileSized, root, conf))
-  }
-
-  /** DELETE WHERE via deletion vectors (reference
-    * transaction/update.rs:275-812): no data rewrite — matching row
-    * indexes are merged into each file's bitmap, committed as
-    * remove+add pairs that swap the file's DV. Upgrades the protocol to
-    * table features on first use.
-    */
-  def deleteWhereDV(predicateSql: String): Long = {
-    val snap = snapshot()
-    writerGate(snap, mutating = true)
-    requireDeterministicPredicate(snap, predicateSql, "DELETE")
-    val scan = new DeltaScan(snap, Some(predicateSql))
-    // slim: the DV match and the removes need path/pv/size/DV only;
-    // stats come back BY REFERENCE below for just the swapped files
-    val candidates = scan.collectAddFiles(slim = true)
-    if (candidates.isEmpty) return snap.version
-
-    val perFile = dvMatchPerFile(scan, candidates, predicateSql)
-    val matchedFiles = perFile.filter(_._3 > 0)
-    if (matchedFiles.isEmpty) return snap.version
-
-    val byPath = candidates.map { a =>
-      fs.makeQualified(
-        Storage.childPath(root, Storage.decodeUriPath(a.path)))
-        .toUri.getPath -> a
-    }.toMap
-
-    val (gone, partialFiles) = matchedFiles.toSeq.partition {
-      case (_, _, matched, live) => matched == live
+    val statsOf = statsForPaths(scan, partialFiles.map(p => byPath(p._1))
+      .filter(_.stats.isEmpty).map(_.path).toSet)
+    partialFiles.map { case (p, _, _, _) =>
+      val a = byPath(p)
+      a.copy(deletionVector = Some(descs(p)), dataChange = true,
+        stats = a.stats.orElse(statsOf.get(a.path))
+          .map(StatsJson.markNonTight))
     }
-    // only the partially-matched files re-enter the log (with their
-    // original stats marked non-tight) — fetch exactly their stats
-    val statsOf = statsForPaths(scan,
-      partialFiles.map(p => byPath(p._1).path).toSet)
-    val byPathStats = byPath.map { case (k, a) =>
-      k -> a.copy(stats = statsOf.get(a.path).orElse(a.stats))
-    }
-    commitDvSwaps(snap, gone.map(_._1), partialFiles, byPathStats,
-      "DELETE", Map("predicate" -> predicateSql),
-      readPredicate = Some(predicateSql))
   }
 
   /** Original stats JSON for the named add paths, fetched in ONE
@@ -1479,33 +1500,24 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       .toMap
   }
 
-  /** The shared DV-swap commit: remove+add pairs swapping each file's
+  /** A DV-swap-only commit: remove+add pairs swapping each file's
     * deletion vector (fully-dead files remove without re-add), plus the
-    * first-use protocol upgrade. Used by
-    * predicate DELETE/UPDATE ([[deleteWhereDV]]) and by
-    * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]], which
+    * first-use protocol upgrade — how
+    * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]]
     * materializes tree-level equality deletes into the log.
     */
-  private[graft] def commitDvSwaps(snap: Snapshot, gonePaths: Seq[String],
+  private[graft] def commitDvSwaps(snap: Snapshot, scan: DeltaScan,
+      gonePaths: Seq[String],
       partialFiles: Seq[(String, Array[Byte], Long, Long)],
       byPath: Map[String, AddFile], opName: String,
       opParams: Map[String, String],
-      readPredicate: Option[String]): Long = {
-    val descs = dvSwapDescriptors(partialFiles, byPath)
-    val removes = (gonePaths ++ partialFiles.map(_._1))
-      .map(p => tombstone(byPath(p), dataChange = true))
-    // stats on a DV-carrying add describe the PHYSICAL file, so they
-    // must be flagged tightBounds:false (protocol contract — external
-    // readers may otherwise do metadata-only aggregates over dead rows)
-    val newAdds = partialFiles.map { case (p, _, _, _) =>
-      val a = byPath(p)
-      a.copy(deletionVector = Some(descs(p)), dataChange = true,
-        stats = a.stats.map(StatsJson.markNonTight))
-    }
+      readPredicate: Option[String]): Long =
     commit(Some(snap), opName, opParams,
-      Actions(protocol = dvUpgrade(snap), removes = removes, adds = newAdds),
+      Actions(protocol = dvUpgrade(snap),
+        removes = (gonePaths ++ partialFiles.map(_._1))
+          .map(p => tombstone(byPath(p), dataChange = true)),
+        adds = dvSwapAdds(scan, partialFiles, byPath)),
       Reads(readPredicate))
-  }
 
   /** The first-use deletionVectors protocol upgrade, None when the
     * table already declares the feature (the upgrade preserves existing
@@ -1517,80 +1529,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       None
     else Some(TableFeatures.upgraded(snap.protocol,
       Seq("deletionVectors"), Seq("deletionVectors")))
-
-  /** UPDATE WHERE via deletion vectors (delta-spark's DV-based UPDATE;
-    * reference transaction/update.rs — DV attach + new adds in one
-    * commit): matching rows are DV-marked in their files and ONLY the
-    * updated copies are written as new files. Write amplification =
-    * the updated rows, not the whole candidate files — the difference
-    * between rewriting kilobytes and rewriting terabytes when an
-    * UPDATE touches 0.1% of a 100 TB table. Untouched rows never move,
-    * so their row ids and file-level stats stay put; the DV-swapped
-    * add keeps its baseRowId and gets tightBounds:false stats.
-    * Upgrades the protocol to deletionVectors on first use.
-    */
-  def updateWhereDV(predicateSql: String,
-      set: Map[String, String]): Long = {
-    val snap = snapshot()
-    writerGate(snap, mutating = true)
-    requireDeterministicPredicate(snap, predicateSql, "UPDATE")
-    require(set.nonEmpty, "UPDATE requires at least one assignment")
-    set.keys.foreach(c => require(snap.schema.fieldNames.contains(c),
-      s"no such column '$c'"))
-    require(set.keys.toSet.intersect(snap.partitionColumns.toSet).isEmpty,
-      "updating a partition column is not supported")
-    val scan = new DeltaScan(snap, Some(predicateSql))
-    // slim collect + stats by reference for the swapped files (see
-    // deleteWhereDV): the rewrite stages FRESH stats for the updated
-    // copies, so only the DV-swap re-adds need the originals
-    val candidates = scan.collectAddFiles(slim = true)
-    if (candidates.isEmpty) return snap.version
-
-    // per-file deletion bitmaps for the matching rows — executor-built,
-    // compressed bytes to the driver (shared pass with deleteWhereDV)
-    val perFile = dvMatchPerFile(scan, candidates, predicateSql)
-    val matchedFiles = perFile.filter(_._3 > 0)
-    if (matchedFiles.isEmpty) return snap.version
-    val byPath = candidates.map { a =>
-      fs.makeQualified(
-        Storage.childPath(root, Storage.decodeUriPath(a.path)))
-        .toUri.getPath -> a
-    }.toMap
-    val matchedAdds = matchedFiles.map(f => byPath(f._1)).toSeq
-
-    // the UPDATED row copies (only these are written)
-    val (full, rtCols) = readFilesForRewrite(snap, matchedAdds)
-    val cdf = TableChanges.cdfEnabled(snap.metadata)
-    full.persist()
-    val matched = full.filter(coalesce(expr(predicateSql), lit(false)))
-    val applied = applyUpdateAssignments(matched, snap, set, rtCols)
-    val newAdds = stageFiles(applied, snap, rtCols)
-    val cdcActions =
-      if (!cdf) Nil
-      else stageCdcMulti(Seq(matched -> "update_preimage",
-        applied -> "update_postimage"), snap)
-    full.unpersist()
-
-    // DV swap per matched file: fully-matched files drop entirely
-    val partialFiles = matchedFiles.toSeq.filter {
-      case (_, _, matched, live) => matched != live
-    }
-    val descs = dvSwapDescriptors(partialFiles, byPath)
-    val statsOf = statsForPaths(scan,
-      partialFiles.map(p => byPath(p._1).path).toSet)
-    val swapped = partialFiles.map { case (p, _, _, _) =>
-      val a = byPath(p)
-      a.copy(deletionVector = Some(descs(p)), dataChange = true,
-        stats = statsOf.get(a.path).orElse(a.stats)
-          .map(StatsJson.markNonTight))
-    }
-    val (newAddsRt, domains) = assignRowIds(snap, newAdds)
-    commit(Some(snap), "UPDATE", Map("predicate" -> predicateSql),
-      Actions(protocol = dvUpgrade(snap), domains = domains,
-        removes = matchedAdds.map(tombstone(_, dataChange = true)),
-        adds = swapped ++ newAddsRt, cdc = cdcActions),
-      Reads(Some(predicateSql)))
-  }
 
   /** MERGE INTO (upsert): clauses evaluate in order per row, first
     * whose condition holds wins (Delta MERGE contract; the kernel
@@ -1692,9 +1630,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           val touched = withMeta.alias("t").join(src, cond, "inner")
             .select(col("__path")).distinct()
             .collect().map(_.getString(0)).toSet
-          allAdds.filter(a => touched(fs.makeQualified(
-            Storage.childPath(root, Storage.decodeUriPath(a.path)))
-            .toUri.getPath))
+          keyedByPath(allAdds).collect { case (k, a) if touched(k) => a }
         }
 
       val cdf = TableChanges.cdfEnabled(snap.metadata)
@@ -1705,36 +1641,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       fullId = fullRead
         .withColumn("_tid", monotonically_increasing_id()).persist()
       val tgt = fullId.alias("t")
-      def tcol(f: StructField): Column =
-        col("t." + ColumnMapping.quoted(f.name))
-      val rtPre: Seq[Column] =
-        rtCols.map(c => col("t." + ColumnMapping.quoted(c)).as(c))
-      val rtUpdated: Seq[Column] = rtCols match {
-        case Seq(idCol, vCol) =>
-          Seq(col("t." + ColumnMapping.quoted(idCol)).as(idCol),
-            lit(null).cast("long").as(vCol))
-        case _ => Nil
-      }
+      def tcol(name: String): Column = col("t." + ColumnMapping.quoted(name))
       val preCols = snap.schema.fields.toIndexedSeq
-        .map(f => tcol(f).as(f.name, f.metadata)) ++ rtPre
+        .map(f => tcol(f.name).as(f.name, f.metadata)) ++
+        rtCols.map(c => tcol(c).as(c))
 
-      // -- matched rows, tagged with the first applicable clause
-      val matchedTagged: DataFrame = {
-        var action: Column = lit("keep")
-        matchedClauses.zipWithIndex.reverse.foreach { case (c, i) =>
-          val cc = c match {
-            case MatchedUpdate(cnd, _) => cnd
-            case MatchedDelete(cnd) => cnd
-            case _ => None
-          }
-          action = when(cc.map(expr).getOrElse(lit(true)), lit(s"a$i"))
-            .otherwise(action)
-        }
-        // persisted: the dup check, update pre/post, delete and keep
-        // row sets plus their CDF stagings all derive from this one
-        // join — without caching each job re-executes it
-        tgt.join(src, cond, "inner").withColumn("_action", action).persist()
-      }
+      // -- matched rows, tagged with the first applicable clause.
+      //    Persisted: the dup check, update pre/post, delete and keep
+      //    row sets plus their CDF stagings all derive from this one
+      //    join — without caching each job re-executes it
+      val matchedTagged = tgt.join(src, cond, "inner")
+        .withColumn("_action", clauseTag(matchedClauses, "a", "keep"))
+        .persist()
       if (matchedClauses.nonEmpty && candidates.nonEmpty) {
         val dup = matchedTagged.groupBy(col("_tid")).count()
           .filter(col("count") > 1).limit(1).count()
@@ -1746,36 +1664,16 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val deleteTags = matchedClauses.zipWithIndex.collect {
         case (_: MatchedDelete, i) => s"a$i" }
 
-      def setOf(c: MergeClause): Map[String, String] = c match {
-        case MatchedUpdate(_, set) => set
-        case NotMatchedBySourceUpdate(_, set) => set
-        case _ => Map.empty
-      }
-      // post-update rows: per-column clause cascade, then recompute
-      // generated columns not explicitly assigned (stored values are
-      // stale once a base column changes — same contract as UPDATE)
+      // post-update rows: the clause whose tag the row carries assigns
       def updateCascade(rows: DataFrame, cls: Seq[MergeClause],
-          prefix: String): DataFrame = {
-        val postCols = snap.schema.fields.toIndexedSeq.map { f =>
-          var v: Column = tcol(f)
-          cls.zipWithIndex.foreach { case (c, i) =>
-            setOf(c).get(f.name).foreach { e =>
-              v = when(col("_action") === s"$prefix$i",
-                expr(e).cast(f.dataType)).otherwise(v)
-            }
-          }
-          v.as(f.name, f.metadata)
-        }
-        val assigned = rows.select(postCols ++ rtUpdated: _*)
-        val regen = WriteValidation.generated(snap) --
-          cls.flatMap(setOf(_).keys)
-        if (regen.isEmpty) assigned
-        else assigned.select(snap.schema.fields.toIndexedSeq.map { f =>
-          regen.get(f.name)
-            .map(e => expr(e).cast(f.dataType).as(f.name, f.metadata))
-            .getOrElse(ColumnMapping.qcol(f.name))
-        } ++ rtCols.map(ColumnMapping.qcol): _*)
-      }
+          prefix: String): DataFrame =
+        assignUpdates(rows, snap, cls.zipWithIndex.map { case (c, i) =>
+          Some(col("_action") === s"$prefix$i") -> (c match {
+            case MatchedUpdate(_, set) => set
+            case NotMatchedBySourceUpdate(_, set) => set
+            case _ => Map.empty[String, String]
+          })
+        }, rtCols, qual = "t.")
       val updatedPre =
         if (updateTags.isEmpty) None
         else Some(matchedTagged.filter(col("_action").isin(updateTags: _*)))
@@ -1795,17 +1693,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         if (bySourceClauses.isEmpty)
           (unmatchedTgt.select(preCols: _*), None, None, None)
         else {
-          var action: Column = lit("keep")
-          bySourceClauses.zipWithIndex.reverse.foreach { case (c, i) =>
-            val cc = c match {
-              case NotMatchedBySourceUpdate(cnd, _) => cnd
-              case NotMatchedBySourceDelete(cnd) => cnd
-              case _ => None
-            }
-            action = when(cc.map(expr).getOrElse(lit(true)), lit(s"b$i"))
-              .otherwise(action)
-          }
-          val tagged = unmatchedTgt.withColumn("_action", action).persist()
+          val tagged = unmatchedTgt
+            .withColumn("_action", clauseTag(bySourceClauses, "b", "keep"))
+            .persist()
           bsTagged = tagged
           val updTags = bySourceClauses.zipWithIndex.collect {
             case (_: NotMatchedBySourceUpdate, i) => s"b$i" }
@@ -1841,12 +1731,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           val unmatched =
             if (allAdds.isEmpty) src
             else src.join(antiTarget, cond, "left_anti")
-          var action: Column = lit("skip")
-          insertClauses.zipWithIndex.reverse.foreach { case (c, i) =>
-            action = when(c.condition.map(expr).getOrElse(lit(true)),
-              lit(s"i$i")).otherwise(action)
-          }
-          val tagged = unmatched.withColumn("_action", action)
+          val tagged = unmatched
+            .withColumn("_action", clauseTag(insertClauses, "i", "skip"))
             .filter(col("_action") =!= "skip")
           val supplied = insertClauses.flatMap(_.values.keys).toSet
           val outFields = snap.schema.fields.toIndexedSeq.filter { f =>
@@ -1910,6 +1796,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       if (bsTagged != null) bsTagged.unpersist()
     }
   }
+
+  /** MERGE's first-match-wins clause tag: `prefix + i` for the first
+    * clause whose condition holds (an absent condition always holds),
+    * `otherwise` when none does.
+    */
+  private def clauseTag(clauses: Seq[MergeClause], prefix: String,
+      otherwise: String): Column =
+    clauses.zipWithIndex.foldRight(lit(otherwise)) { case ((c, i), rest) =>
+      when(c.condition.map(expr).getOrElse(lit(true)), lit(s"$prefix$i"))
+        .otherwise(rest)
+    }
 
   // ---------------- ALTER TABLE ----------------
 
@@ -3352,7 +3249,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         .collect { case (c: FileNames.CommitFile, st) => (c, st) }
         .sortBy(_._1.version).toIndexedSeq
     if (commits.isEmpty)
-      throw new IllegalStateException(s"no delta log found at $pathStr")
+      throw new TableNotFoundException(pathStr)
     private val tsCache = scala.collection.mutable.HashMap.empty[Int, Long]
     def tsOf(i: Int): Long = tsCache.getOrElseUpdate(i, {
       val (c, st) = commits(i)

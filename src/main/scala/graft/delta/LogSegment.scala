@@ -4,6 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import FileNames._
 
+/** No Delta table at `tablePath`: its `_delta_log` is missing or holds
+  * no log entries. An `IllegalStateException`, so callers that treat
+  * any unbuildable segment alike keep doing so.
+  */
+class TableNotFoundException(val tablePath: String)
+    extends IllegalStateException(
+      s"table not found: no delta log entries under $tablePath/_delta_log")
+
 /** The contiguous slice of `_delta_log` backing a snapshot at `version`:
   * the newest complete checkpoint at or below the target plus every
   * commit after it, with contiguous commit runs replaced by compacted
@@ -244,7 +252,7 @@ object LogSegment {
   private def assemble(logDir: Path, listed: Seq[LogFile],
       targetVersion: Option[Long]): LogSegment = {
     if (listed.isEmpty)
-      throw new IllegalStateException("no delta log entries in listing")
+      throw new TableNotFoundException(logDir.getParent.toString)
 
     val inRange: LogFile => Boolean = lf =>
       targetVersion.forall(lf.version <= _)

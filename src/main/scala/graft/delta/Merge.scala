@@ -10,7 +10,10 @@ package graft.delta
   * aliased relations `t` (target) and `s` (source), e.g.
   * `"t.k = s.k"`, `Map("v" -> "s.v + t.v")`.
   */
-sealed trait MergeClause
+sealed trait MergeClause {
+  /** The clause's extra condition; None always holds. */
+  def condition: Option[String]
+}
 
 object MergeClause {
 

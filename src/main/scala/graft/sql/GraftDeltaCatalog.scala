@@ -410,16 +410,7 @@ class GraftSqlTable(spark: SparkSession, val location: String,
           throw new UnsupportedOperationException(
             s"cannot translate DELETE predicate $f exactly")))
         .map(s => s"($s)").mkString(" AND ")
-    val t = DeltaTable.forPath(spark, location)
-    // delta.enableDeletionVectors routes SQL DELETE through the DV
-    // swap instead of a file rewrite (delta-spark's dispatch). One
-    // snapshot load decides: two loads could mix protocol/metadata
-    // from different versions under a concurrent ALTER
-    val s0 = t.snapshot()
-    if (graft.delta.FeatureRequirements.isEnabled(
-        s0.protocol, s0.metadata, "deletionVectors"))
-      t.deleteWhereDV(sql)
-    else t.deleteWhere(sql)
+    DeltaTable.forPath(spark, location).sqlDml(sql, None)
   }
 
   private lazy val snap: Snapshot =

@@ -213,17 +213,7 @@ class GraftDmlRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 case class GraftUpdateCommand(location: String, conditionSql: String,
     set: Map[String, String]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val t = DeltaTable.forPath(spark, location)
-    // delta.enableDeletionVectors routes SQL UPDATE through the DV
-    // path — matched rows DV-mark, only updated copies write
-    // (delta-spark's dispatch). One snapshot load decides: two loads
-    // could mix protocol/metadata from different versions under a
-    // concurrent ALTER
-    val s0 = t.snapshot()
-    if (graft.delta.FeatureRequirements.isEnabled(
-        s0.protocol, s0.metadata, "deletionVectors"))
-      t.updateWhereDV(conditionSql, set)
-    else t.updateWhere(conditionSql, set)
+    DeltaTable.forPath(spark, location).sqlDml(conditionSql, Some(set))
     Nil
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
@@ -19,10 +19,30 @@ object TestSpark {
     s
   }
 
-  /** Fresh temp dir under target/ (keeps everything inside the repo). */
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  // the dirs this JVM created go when it exits: nothing reads a test's
+  // scratch after its suite finished
+  sys.addShutdownHook {
+    import scala.jdk.CollectionConverters._
+    created.asScala.foreach { d =>
+      try {
+        val w = Files.walk(d)
+        try w.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally w.close()
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  /** Fresh temp dir under target/ (keeps everything inside the repo),
+    * deleted when the test JVM exits.
+    */
   def tmpDir(prefix: String): String = {
     val base = Paths.get("target", "tmp")
     Files.createDirectories(base)
-    Files.createTempDirectory(base, prefix).toString
+    val d = Files.createTempDirectory(base, prefix)
+    created.add(d)
+    d.toString
   }
 }

@@ -130,6 +130,16 @@ class DeltaTableSpec extends AnyFunSuite {
     assert(ops.contains("DELETE"))
   }
 
+  test("a path with no delta log raises a typed table-not-found error") {
+    val dir = TestSpark.tmpDir("nolog")
+    Seq(s"$dir/missing", dir).foreach { p =>
+      val e = intercept[TableNotFoundException] {
+        DeltaTable.forPath(spark, p).snapshot()
+      }
+      assert(e.tablePath == p && e.getMessage.contains(p))
+    }
+  }
+
   test("checkpoint + post-checkpoint commits + _last_checkpoint") {
     val dir = TestSpark.tmpDir("ckpt")
     val src = li.filter($"l_quantity" < 8)

@@ -22,23 +22,7 @@ import graft.TestSpark
 class GoldenTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val archiveDir = "/root/reference/kernel/tests/golden_data"
-
-  private def fixture(name: String): java.nio.file.Path = {
-    val destRoot = java.nio.file.Paths.get("target", "tmp", "golden")
-    java.nio.file.Files.createDirectories(destRoot)
-    val table = destRoot.resolve(name)
-    if (!java.nio.file.Files.exists(table)) {
-      require(TarZst.extract(s"$archiveDir/$name.tar.zst",
-        destRoot.toString), s"failed to extract $name")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(table).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(".") &&
-          p.getFileName.toString.endsWith(".crc"))
-        .foreach(java.nio.file.Files.delete)
-    }
-    table
-  }
+  private def fixture(name: String) = ReferenceCorpus.golden(name)
 
   /** Canonical row multiset: name-sorted columns, maps canonicalized
     * to key-sorted entry arrays (map entry order is not meaningful),

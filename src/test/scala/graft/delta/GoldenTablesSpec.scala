@@ -21,23 +21,7 @@ import graft.TestSpark
 class GoldenTablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val archiveDir = "/root/reference/kernel/tests/golden_data"
-
-  private def fixture(name: String): java.nio.file.Path = {
-    val destRoot = java.nio.file.Paths.get("target", "tmp", "golden")
-    java.nio.file.Files.createDirectories(destRoot)
-    val root = destRoot.resolve(name)
-    if (!java.nio.file.Files.exists(root)) {
-      require(TarZst.extract(s"$archiveDir/$name.tar.zst",
-        destRoot.toString), s"failed to extract $name")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(".") &&
-          p.getFileName.toString.endsWith(".crc"))
-        .foreach(java.nio.file.Files.delete)
-    }
-    root
-  }
+  private def fixture(name: String) = ReferenceCorpus.golden(name)
 
   /** Canonical sorted row renderings: cast to the expected schema
     * (nullability/precision normalization), sort map entries, render

@@ -17,27 +17,9 @@ class InteropArchiveSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val archiveDir = "/root/reference/kernel/tests/data"
-
   /** Extract (once) and return the table path. */
-  private def fixture(name: String): String = {
-    val destRoot = java.nio.file.Paths.get("target", "tmp", "fixtures")
-    java.nio.file.Files.createDirectories(destRoot)
-    val table = destRoot.resolve(name)
-    if (!java.nio.file.Files.exists(table)) {
-      require(TarZst.extract(s"$archiveDir/$name.tar.zst",
-        destRoot.toString), s"failed to extract $name")
-      // some archives ship stale Hadoop-local `.name.crc` companion
-      // files; LocalFileSystem would fail checksum verification on them
-      // (they are filesystem artifacts, not Delta data)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(table).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(".") &&
-          p.getFileName.toString.endsWith(".crc"))
-        .foreach(java.nio.file.Files.delete)
-    }
-    table.toString
-  }
+  private def fixture(name: String): String =
+    ReferenceCorpus.dataArchive(name).toString
 
   test("unshredded-variant: the reference's variant fixture decodes " +
       "across all nesting shapes") {

@@ -17,7 +17,7 @@ class InteropSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val base = "/root/reference/kernel/tests/data"
+  private def base: String = ReferenceCorpus.dataDir
 
   test("table-with-dv-small: 10 rows, 2 soft-deleted by a real DV") {
     val t = DeltaTable.forPath(spark, s"$base/table-with-dv-small")
@@ -297,14 +297,8 @@ class InteropSpec extends AnyFunSuite {
       "bench table replays to exactly 300k live adds") {
     // the table the reference's Criterion metadata_bench drives
     // (kernel/benches/metadata_bench.rs:33-50); log-only fixture
-    val destRoot = java.nio.file.Paths.get("target", "tmp", "fixtures")
-    java.nio.file.Files.createDirectories(destRoot)
-    val table = destRoot.resolve("300k-add-files-100-col-partitioned")
-    if (!java.nio.file.Files.exists(table)) {
-      require(TarZst.extract(
-        s"$base/300k-add-files-100-col-partitioned.tar.zst",
-        destRoot.toString))
-    }
+    val table =
+      ReferenceCorpus.dataArchive("300k-add-files-100-col-partitioned")
     val snap = Snapshot.forTable(spark, table.toString)
     assert(snap.schema.fields.length >= 100)
     assert(snap.allAdds.count() == 300000L)
@@ -344,9 +338,8 @@ class InteropSpec extends AnyFunSuite {
     // remove after a delete) key by the PHYSICAL column name.
     Seq("none", "id", "name").foreach { mode =>
       val srcDir = java.nio.file.Paths.get(s"$base/partition_cm/$mode")
-      val destRoot = java.nio.file.Paths.get("target", "tmp", "fixtures",
-        s"partition_cm-$mode-${java.util.UUID.randomUUID().toString.take(8)}")
-      java.nio.file.Files.createDirectories(destRoot)
+      val destRoot = java.nio.file.Paths.get(
+        TestSpark.tmpDir(s"partition_cm-$mode"))
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(srcDir).iterator().asScala.foreach { p =>
         val dest = destRoot.resolve(srcDir.relativize(p))

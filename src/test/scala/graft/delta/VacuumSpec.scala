@@ -238,7 +238,9 @@ class VacuumSpec extends AnyFunSuite {
   test("fsckRepair: an absolute-URI add in a SIBLING directory whose " +
       "name extends the table root is probed directly — never judged " +
       "missing by the root-only listing") {
-    val dir = TestSpark.tmpDir("fsckroot")
+    // the table sits one level down so its sibling shares the drained
+    // scratch dir
+    val dir = TestSpark.tmpDir("fsckroot") + "/t"
     val src = (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "s")
     DeltaTable.create(spark, dir, src.schema)
     val t = DeltaTable.forPath(spark, dir)
