@@ -218,8 +218,27 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
     * pre-escape.
     */
   private def normalizedMetaPath: Column =
-    Storage.decodeUriPathCol(regexp_replace(col("_metadata.file_path"),
-      "^[a-zA-Z][a-zA-Z0-9+.\\-]*:(//[^/]*)?", ""))
+    normalizedPath(col("_metadata.file_path"))
+
+  private def normalizedPath(uri: Column): Column =
+    Storage.decodeUriPathCol(regexp_replace(uri, Storage.URI_PREFIX_REGEX, ""))
+
+  /** (matched rows, live rows) of each file among `adds` holding a row
+    * where `cond` holds, keyed as `__path` keys it. The key derives once
+    * per file, after the aggregate: derived per row, as `__path` is, it
+    * costs ~5× the predicate scan itself. `input_file_name` is read in
+    * the scan stage, before any exchange.
+    */
+  private[graft] def matchCounts(adds: Seq[AddFile],
+      cond: Column): Map[String, (Long, Long)] =
+    assemble(adds, keepMeta = false)
+      .select(input_file_name().as("__file"), cond.cast("long").as("__m"))
+      .groupBy(col("__file"))
+      .agg(sum(col("__m")).as("__m"), count(lit(1)).as("__n"))
+      .filter(col("__m") > 0)
+      .select(normalizedPath(col("__file")), col("__m"), col("__n"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
 
   private def decodePath(p: String): String = Storage.decodeUriPath(p)
 

@@ -1250,11 +1250,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   /** The one predicate DELETE/UPDATE routine (DELETE is UPDATE with no
     * assignments, `set` None), in both arms:
-    *  - one match pass ([[dvMatchPerFile]]) over the slim stats-skipped
-    *    candidates names the files holding a matching row; a call that
+    *  - one match pass over the slim stats-skipped candidates names the
+    *    files holding a matching row (`DeltaScan.matchCounts`; the DV
+    *    arm's [[dvMatchPerFile]] also builds their bitmaps); a call that
     *    matches none commits nothing and returns the current version;
     *  - the rewrite arm re-stages the matched files as their surviving
-    *    rows plus the assigned copies;
+    *    rows plus the assigned copies; a DELETE without a change feed
+    *    drops fully matched files unread;
     *  - the DV arm DV-marks partly matched files, drops fully matched
     *    ones, and writes only the assigned copies.
     * Both tombstone exactly the matched files. The change feed stages
@@ -1280,23 +1282,33 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // path/pv/size/DV only; the DV re-adds fetch their stats by reference
     val candidates = scan.collectAddFiles(slim = true)
     if (candidates.isEmpty) return snap.version
-    val matchedFiles =
-      dvMatchPerFile(scan, candidates, predicateSql).filter(_._3 > 0).toSeq
-    if (matchedFiles.isEmpty) return snap.version
-    val byPath = keyedByPath(candidates).toMap
-    val matchedAdds = matchedFiles.map(f => byPath(f._1))
+    val cond = coalesce(expr(predicateSql), lit(false))
+    val dvFiles =
+      if (dv) dvMatchPerFile(scan, candidates, predicateSql) else Nil
+    val counts =
+      if (dv) dvFiles.map(f => f._1 -> (f._3, f._4)).toMap
+      else scan.matchCounts(candidates, cond)
+    val byPath = keyedByPath(candidates)
+    val matchedAdds = byPath.collect { case (k, a) if counts.contains(k) => a }
+    if (matchedAdds.isEmpty) return snap.version
+    val cdf = TableChanges.cdfEnabled(snap.metadata)
+    // a DELETE's fully matched files leave no survivors: only the
+    // rewrite arm's change feed reads them
+    val readAdds =
+      if (set.isEmpty && dv) Nil
+      else if (set.isEmpty && !cdf) byPath.collect {
+        case (k, a) if counts.get(k).exists { case (m, n) => m < n } => a }
+      else matchedAdds
 
     val (newAdds, cdcActions) =
-      if (dv && set.isEmpty) (Nil, Nil)
+      if (readAdds.isEmpty) (Nil, Nil)
       else {
         // row-tracking tables: survivors keep their row ids through the
         // materialized columns; updated rows keep the id but take the
         // new add's default commit version
-        val (full, rtCols) = readFilesForRewrite(snap, matchedAdds)
-        val cdf = TableChanges.cdfEnabled(snap.metadata)
+        val (full, rtCols) = readFilesForRewrite(snap, readAdds)
         val cached = cdf || set.isDefined
         if (cached) full.persist()
-        val cond = coalesce(expr(predicateSql), lit(false))
         val matched = full.filter(cond)
         val applied = set.map(s =>
           assignUpdates(matched, snap, Seq(None -> s), rtCols))
@@ -1312,9 +1324,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         if (cached) full.unpersist()
         (staged, cdc)
       }
-    val swapped =
-      if (!dv) Nil
-      else dvSwapAdds(scan, matchedFiles.filter(f => f._3 != f._4), byPath)
+    // the re-adds keep their original stats, fetched by reference as
+    // the candidate collect was slim
+    val partial = dvFiles.filter(f => f._3 != f._4)
+    val byKey = byPath.toMap
+    val swapped = dvSwapAdds(partial, byKey,
+      statsForPaths(scan, partial.map(f => byKey(f._1).path).toSet))
     val (newAddsRt, domains) = assignRowIds(snap, newAdds)
     commit(Some(snap), op, Map("predicate" -> predicateSql),
       Actions(protocol = if (dv) dvUpgrade(snap) else None, domains = domains,
@@ -1411,11 +1426,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * bitmap ON THE EXECUTORS (groupByKey + mapGroups — compressed
     * bitmap bytes travel to the driver, never row-index lists; a
     * 1B-row DELETE funnels kilobytes, not gigabytes) and count
-    * matched/live rows for the fully-deleted-file check. The one
-    * definition of "matched" for every predicate DELETE/UPDATE arm.
+    * matched/live rows for the fully-deleted-file check. Returns the
+    * files holding a matching row: the DV arm's match pass.
     */
   private def dvMatchPerFile(scan: DeltaScan, candidates: Seq[AddFile],
-      predicateSql: String): Array[(String, Array[Byte], Long, Long)] = {
+      predicateSql: String): Seq[(String, Array[Byte], Long, Long)] = {
     val withMeta = scan.assemble(candidates, keepMeta = true)
     import spark.implicits._
     withMeta.select(col("__path"), col("__ridx"),
@@ -1431,7 +1446,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           if (m) { matched += 1; rb.addLong(ridx) }
         }
         (path, DeletionVectors.bitmapBytes(rb), matched, live)
-      }.collect()
+      }.filter(_._3 > 0).collect().toSeq
   }
 
   /** The DV-swap re-adds, built once for every DV writer: each partly
@@ -1439,14 +1454,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * level (assemble already excluded old-DV rows, so cardinalities
     * simply add); small bitmaps inline into the log line and larger ones
     * pack into one deletion_vector file. The re-add keeps the file's
-    * original stats — fetched by reference when the collect was slim —
-    * flagged tightBounds:false: stats on a DV-carrying add describe the
+    * original stats (`statsOf` by add path, else the add's own) flagged
+    * tightBounds:false: stats on a DV-carrying add describe the
     * PHYSICAL file (protocol contract — external readers may otherwise
     * do metadata-only aggregates over dead rows).
     */
-  private def dvSwapAdds(scan: DeltaScan,
+  private def dvSwapAdds(
       partialFiles: Seq[(String, Array[Byte], Long, Long)],
-      byPath: Map[String, AddFile]): Seq[AddFile] = {
+      byPath: Map[String, AddFile],
+      statsOf: Map[String, String]): Seq[AddFile] = {
     val conf = hconf
     val merged: Seq[(String, Array[Byte], Long)] = partialFiles.map {
       case (p, bytes, matched, _) =>
@@ -1467,12 +1483,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }.toMap ++
       (if (fileSized.isEmpty) Map.empty[String, DeletionVectorDescriptor]
        else DeletionVectors.writeBitmaps(fileSized, root, conf))
-    val statsOf = statsForPaths(scan, partialFiles.map(p => byPath(p._1))
-      .filter(_.stats.isEmpty).map(_.path).toSet)
     partialFiles.map { case (p, _, _, _) =>
       val a = byPath(p)
       a.copy(deletionVector = Some(descs(p)), dataChange = true,
-        stats = a.stats.orElse(statsOf.get(a.path))
+        stats = statsOf.get(a.path).orElse(a.stats)
           .map(StatsJson.markNonTight))
     }
   }
@@ -1506,8 +1520,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]]
     * materializes tree-level equality deletes into the log.
     */
-  private[graft] def commitDvSwaps(snap: Snapshot, scan: DeltaScan,
-      gonePaths: Seq[String],
+  private[graft] def commitDvSwaps(snap: Snapshot, gonePaths: Seq[String],
       partialFiles: Seq[(String, Array[Byte], Long, Long)],
       byPath: Map[String, AddFile], opName: String,
       opParams: Map[String, String],
@@ -1516,7 +1529,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       Actions(protocol = dvUpgrade(snap),
         removes = (gonePaths ++ partialFiles.map(_._1))
           .map(p => tombstone(byPath(p), dataChange = true)),
-        adds = dvSwapAdds(scan, partialFiles, byPath)),
+        adds = dvSwapAdds(partialFiles, byPath, Map.empty)),
       Reads(readPredicate))
 
   /** The first-use deletionVectors protocol upgrade, None when the
@@ -1570,12 +1583,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     if (schemaEvolution) {
       val cur = snapshot().schema
       val have = cur.fieldNames.toSet
-      val assignedNew = clauses.flatMap {
-        case MatchedUpdate(_, set) => set.keys
-        case NotMatchedBySourceUpdate(_, set) => set.keys
-        case NotMatchedInsert(_, values) => values.keys
-        case _ => Nil
-      }.distinct.filterNot(have)
+      val assignedNew =
+        clauses.flatMap(_.assignments.keys).distinct.filterNot(have)
       if (assignedNew.nonEmpty) {
         val srcByName = source.schema.fields.map(f => f.name -> f).toMap
         val added = assignedNew.map(n => srcByName.getOrElse(n,
@@ -1598,16 +1607,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       case _: NotMatchedBySourceUpdate | _: NotMatchedBySourceDelete => true
       case _ => false
     }
-    val fieldNames = snap.schema.fieldNames.toSet
-    clauses.foreach {
-      case MatchedUpdate(_, set) => set.keys.foreach(c => require(
-        fieldNames.contains(c), s"no such column '$c'"))
-      case NotMatchedBySourceUpdate(_, set) => set.keys.foreach(c =>
-        require(fieldNames.contains(c), s"no such column '$c'"))
-      case NotMatchedInsert(_, values) => values.keys.foreach(c => require(
-        fieldNames.contains(c), s"no such column '$c'"))
-      case _ => ()
-    }
+    clauses.flatMap(_.assignments.keys).foreach(c => require(
+      snap.schema.fieldNames.contains(c), s"no such column '$c'"))
 
     val scan = new DeltaScan(snap, None)
     // slim: MERGE tombstones + rewrites need no stats JSON (see DELETE)
@@ -1668,11 +1669,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       def updateCascade(rows: DataFrame, cls: Seq[MergeClause],
           prefix: String): DataFrame =
         assignUpdates(rows, snap, cls.zipWithIndex.map { case (c, i) =>
-          Some(col("_action") === s"$prefix$i") -> (c match {
-            case MatchedUpdate(_, set) => set
-            case NotMatchedBySourceUpdate(_, set) => set
-            case _ => Map.empty[String, String]
-          })
+          Some(col("_action") === s"$prefix$i") -> c.assignments
         }, rtCols, qual = "t.")
       val updatedPre =
         if (updateTags.isEmpty) None

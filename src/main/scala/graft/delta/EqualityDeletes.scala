@@ -447,8 +447,8 @@ object EqualityDeletes {
     // commit identity comes from the LOG's own adds — path encoding,
     // stats and DV descriptors must match the log's current lines, not
     // the tree's re-derived (URI-decoded, statless) view of them
-    val scan = snap.scanBuilder().build()
-    val byPath = t.keyedByPath(scan.collectAddFiles()).toMap
+    val byPath =
+      t.keyedByPath(snap.scanBuilder().build().collectAddFiles()).toMap
     require(perFile.forall(p => byPath.contains(p._1)),
       "tree is stale against the snapshot — advance or rebuild it " +
         "before materializing its equality deletes")
@@ -458,7 +458,7 @@ object EqualityDeletes {
     val (gone, partial) = matchedFiles.partition {
       case (_, _, matched, live) => matched == live
     }
-    val committed = t.commitDvSwaps(snap, scan, gone.map(_._1), partial,
+    val committed = t.commitDvSwaps(snap, gone.map(_._1), partial,
       byPath, "DELETE",
       Map("mode" -> "equality-delete-materialization",
         "deleteFiles" -> deletes.size.toString),

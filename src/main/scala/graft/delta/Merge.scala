@@ -13,6 +13,16 @@ package graft.delta
 sealed trait MergeClause {
   /** The clause's extra condition; None always holds. */
   def condition: Option[String]
+
+  /** Column -> expression: an UPDATE's SET, an INSERT's values, empty
+    * for a DELETE.
+    */
+  def assignments: Map[String, String] = this match {
+    case MergeClause.MatchedUpdate(_, set) => set
+    case MergeClause.NotMatchedBySourceUpdate(_, set) => set
+    case MergeClause.NotMatchedInsert(_, values) => values
+    case _ => Map.empty
+  }
 }
 
 object MergeClause {

@@ -92,4 +92,27 @@ class DmlSpec extends AnyFunSuite {
       assert(t.toDF.count() == (if (name.startsWith("delete")) 199 else 200))
     }
   }
+
+  test("a rewrite DELETE rewrites only the partly matched file and " +
+      "drops a fully matched one unread") {
+    val dir = TestSpark.tmpDir("dml-reads")
+    val t = DeltaTable.create(spark, dir, spark.range(1).schema)
+    (0 until 4).foreach(i =>
+      t.append(spark.range(i * 50, i * 50 + 50).toDF.coalesce(1)))
+    val r = new InMemoryReporter
+    val prev = Metrics.reporter
+    Metrics.reporter = r
+    val v = try t.deleteWhere("id < 50 OR id % 1000 = 177")
+      finally Metrics.reporter = prev
+    // stats cannot skip the modulo arm: the match pass reads all four
+    // files; ids 0-49 match in full, 150-199 hold 177, the rest none,
+    // so the rewrite reads one file
+    val reads = r.events.collect {
+      case e: MetricEvent.IoBytes if e.phase == "data_scan" => e.files }
+    assert(reads == Seq(4L, 1L))
+    val actions = logActions(dir, v)
+    assert(actions.count(_._1 == "remove") == 2)
+    assert(actions.count(_._1 == "add") == 1)
+    assert(t.toDF.count() == 149)
+  }
 }
