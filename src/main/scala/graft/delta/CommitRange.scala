@@ -105,7 +105,7 @@ object CommitRange {
     val fs = Storage.fs(root, spark.sessionState.newHadoopConf())
     val logDir = FileNames.logDir(root)
     val all = Storage.listSorted(fs, logDir)
-      .flatMap(st => FileNames.parse(st.getPath)
+      .flatMap(st => FileNames.parse(st)
         .map(f => (f, st.getModificationTime)))
       .collect { case (c: FileNames.CommitFile, ts) => (c, ts) }
       .sortBy(_._1.version)

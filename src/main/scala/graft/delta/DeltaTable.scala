@@ -2639,11 +2639,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val cutoff = now() - retention
     val crcRe = raw"(\d{20})\.crc".r
     Storage.listSorted(fs, logDir).foreach { st =>
-      val deletable = FileNames.parse(st.getPath) match {
-        case Some(FileNames.CommitFile(ver, _)) => ver < ckptVersion
-        case Some(FileNames.CheckpointFile(ver, _, _, _, _)) =>
+      val deletable = FileNames.parse(st) match {
+        case Some(FileNames.CommitFile(ver, _, _)) => ver < ckptVersion
+        case Some(FileNames.CheckpointFile(ver, _, _, _, _, _)) =>
           ver < ckptVersion
-        case Some(FileNames.CompactedFile(_, hi, _)) => hi < ckptVersion
+        case Some(FileNames.CompactedFile(_, hi, _, _)) => hi < ckptVersion
         case None => st.getPath.getName match {
           case crcRe(ver) => ver.toLong < ckptVersion
           case _ => false
@@ -2745,8 +2745,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     if (version == snap.version) return snap.version
     writerGate(snap, mutating = true)
     val target = snapshot(Some(version))
-    def key(a: AddFile) = Storage.canonicalPathKey(a.path) + "@" +
-      a.deletionVector.map(_.uniqueId).getOrElse("")
+    def key(a: AddFile) = Snapshot.fileKey(a.path, a.deletionVector)
     // current files only become TOMBSTONES — slim; the target's adds
     // re-enter the log verbatim, so only THAT side carries stats.
     // Contract reason the wanted side stays FULL (audited r13): every
@@ -3173,10 +3172,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         } else if (has("add") || has("remove")) {
           val side = if (has("add")) "add" else "remove"
           val a = n.get(side)
-          val dvId = Option(a.get("deletionVector")).filterNot(_.isNull)
-            .map(RowCodec.jsonToDv).map(_.uniqueId).getOrElse("")
-          val key = Storage.canonicalPathKey(a.get("path").asText) +
-            "@" + dvId
+          val key = Snapshot.fileKey(a.get("path").asText,
+            Option(a.get("deletionVector")).filterNot(_.isNull)
+              .map(RowCodec.jsonToDv))
           if (seen.add(key)) fileLines += line
         }
       }
@@ -3210,8 +3208,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   def historyDetail(): Seq[(Long, Long, String, Option[String])] = {
     Storage.listSorted(fs, logDir).flatMap { st =>
-      FileNames.parse(st.getPath) match {
-        case Some(FileNames.CommitFile(v, p)) =>
+      FileNames.parse(st) match {
+        case Some(FileNames.CommitFile(v, p, _)) =>
           val op = Storage.readLines(fs, p).iterator
             .map(JsonLog.parseLine)
             .collectFirst {
@@ -3242,7 +3240,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val commits: IndexedSeq[(FileNames.CommitFile,
         org.apache.hadoop.fs.FileStatus)] =
       Storage.listSorted(fs, logDir)
-        .flatMap(st => FileNames.parse(st.getPath).map(f => (f, st)))
+        .flatMap(st => FileNames.parse(st).map(f => (f, st)))
         .collect { case (c: FileNames.CommitFile, st) => (c, st) }
         .sortBy(_._1.version).toIndexedSeq
     if (commits.isEmpty)
@@ -3405,9 +3403,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   def earliestRecreatableVersion(): Long = {
     val entries = Storage.listSorted(fs, logDir)
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
     if (entries.exists {
-      case FileNames.CommitFile(0L, _) => true
+      case FileNames.CommitFile(0L, _, _) => true
       case _ => false
     }) return 0L
     // a version may hold parts from SEVERAL checkpoint attempts (a
@@ -3678,7 +3676,7 @@ object DeltaTable {
     val p = FileNames.logDir(new Path(path))
     val fs = Storage.fs(p, spark.sessionState.newHadoopConf())
     fs.exists(p) && Storage.listSorted(fs, p)
-      .exists(st => FileNames.parse(st.getPath).isDefined)
+      .exists(st => FileNames.parse(st).isDefined)
   }
 
   /** CREATE TABLE: commit 0 with protocol + metadata (reference

@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** `_delta_log` file-name scheme (reference:
   * kernel/src/log_segment_files/mod.rs, kernel/src/path.rs).
@@ -37,21 +37,32 @@ object FileNames {
   def classicCheckpointFile(logDir: Path, version: Long): Path =
     new Path(logDir, f"$version%020d.checkpoint.parquet")
 
-  sealed trait LogFile { def version: Long; def path: Path }
-  case class CommitFile(version: Long, path: Path) extends LogFile
+  /** A log file as listed: `length` is the listing's byte count, so
+    * size gates never stat a file the listing already returned.
+    */
+  sealed trait LogFile { def version: Long; def path: Path; def length: Long }
+  case class CommitFile(version: Long, path: Path, length: Long)
+    extends LogFile
   /** part/numParts for multi-part V1; (1,1) for classic. */
   case class CheckpointFile(version: Long, path: Path, part: Int,
-      numParts: Int, isV2: Boolean) extends LogFile
-  case class CompactedFile(version: Long, endVersion: Long, path: Path)
-    extends LogFile
+      numParts: Int, isV2: Boolean, length: Long) extends LogFile
+  case class CompactedFile(version: Long, endVersion: Long, path: Path,
+      length: Long) extends LogFile
 
-  def parse(p: Path): Option[LogFile] = p.getName match {
-    case commitRe(v) => Some(CommitFile(v.toLong, p))
-    case classicCkptRe(v) => Some(CheckpointFile(v.toLong, p, 1, 1, false))
-    case multiCkptRe(v, part, n) =>
-      Some(CheckpointFile(v.toLong, p, part.toInt, n.toInt, false))
-    case v2CkptRe(v, _, _) => Some(CheckpointFile(v.toLong, p, 1, 1, true))
-    case compactedRe(lo, hi) => Some(CompactedFile(lo.toLong, hi.toLong, p))
-    case _ => None
+  def parse(st: FileStatus): Option[LogFile] = {
+    val p = st.getPath
+    val len = st.getLen
+    p.getName match {
+      case commitRe(v) => Some(CommitFile(v.toLong, p, len))
+      case classicCkptRe(v) =>
+        Some(CheckpointFile(v.toLong, p, 1, 1, false, len))
+      case multiCkptRe(v, part, n) =>
+        Some(CheckpointFile(v.toLong, p, part.toInt, n.toInt, false, len))
+      case v2CkptRe(v, _, _) =>
+        Some(CheckpointFile(v.toLong, p, 1, 1, true, len))
+      case compactedRe(lo, hi) =>
+        Some(CompactedFile(lo.toLong, hi.toLong, p, len))
+      case _ => None
+    }
   }
 }

@@ -24,7 +24,7 @@ object IncrementalScan {
     val fs = Storage.fs(root, spark.sessionState.newHadoopConf())
     val logDir = FileNames.logDir(root)
     val commits = Storage.listSorted(fs, logDir)
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
       .collect { case c: FileNames.CommitFile
           if c.version > base && c.version <= target => c }
     require(commits.map(_.version).sorted == (base + 1 to target),
@@ -33,21 +33,12 @@ object IncrementalScan {
       return spark.emptyDataFrame
     }
 
-    def keyExpr(side: String) = {
-      val dv = col(s"$side.deletionVector")
-      concat(col(s"$side.path"), lit("@"),
-        when(dv.isNull, lit("")).otherwise(concat(
-          dv.getField("storageType"), dv.getField("pathOrInlineDv"),
-          coalesce(dv.getField("offset").cast("string"), lit("")))))
-    }
-
     spark.read.schema(LogSchema.full).json(commits.map(_.path.toString): _*)
       .withColumn("version",
         regexp_extract(col("_metadata.file_path"), raw"(\d{20})\.json", 1)
           .cast("long"))
       .filter(col("add").isNotNull || col("remove").isNotNull)
-      .withColumn("key",
-        when(col("add").isNotNull, keyExpr("add")).otherwise(keyExpr("remove")))
+      .withColumn("key", Snapshot.fileKeyExpr)
       .groupBy(col("key"))
       .agg(max_by(struct(col("add"), col("remove")), col("version")).as("a"),
         max(col("version")).as("version"))

@@ -150,16 +150,9 @@ object LogSegment {
                   proto = Some(JsonLog.parseProtocol(el.get("protocol")))
                 case "metaData" =>
                   meta = Some(JsonLog.parseMetadata(el.get("metaData")))
-                case "txn" =>
-                  val t = el.get("txn")
-                  txns += SetTransaction(t.get("appId").asText,
-                    t.get("version").asLong,
-                    opt(t, "lastUpdated").map(_.asLong))
+                case "txn" => txns += RowCodec.jsonToTxn(el.get("txn"))
                 case "domainMetadata" =>
-                  val d = el.get("domainMetadata")
-                  dms += DomainMetadata(d.get("domain").asText,
-                    d.get("configuration").asText,
-                    opt(d, "removed").exists(_.asBoolean))
+                  dms += RowCodec.jsonToDomain(el.get("domainMetadata"))
                 case "checkpointMetadata" =>
                   cmv = Some(el.get("checkpointMetadata")
                     .get("version").asLong)
@@ -206,8 +199,9 @@ object LogSegment {
     // a byte-identical copy of the ratified one, so preferring the
     // catalog's copy is always safe and covers the not-yet-published
     // suffix.
-    val tailFiles: Seq[LogFile] =
-      logTail.map(c => CommitFile(c.version, c.location))
+    // a catalog commit carries no length: stat it once, here
+    val tailFiles: Seq[LogFile] = logTail.map(c =>
+      CommitFile(c.version, c.location, fs.getFileStatus(c.location).getLen))
     val tailVersions = logTail.map(_.version).toSet
     def merge(listed: Seq[LogFile]): Seq[LogFile] =
       listed.filterNot {
@@ -225,8 +219,8 @@ object LogSegment {
     // 0-byte part makes a multipart attempt incomplete, so the
     // existing completeness rule already rejects it.
     def parseListed(st: org.apache.hadoop.fs.FileStatus): Option[LogFile] =
-      FileNames.parse(st.getPath).filter {
-        case _: CheckpointFile | _: CompactedFile => st.getLen > 0
+      FileNames.parse(st).filter {
+        case f @ (_: CheckpointFile | _: CompactedFile) => f.length > 0
         case _ => true
       }
     val hintOpt = readLastCheckpointHint(fs, logDir)

@@ -60,6 +60,27 @@ object RowCodec {
     defaultRowCommitVersion = opt[Long](r, "defaultRowCommitVersion"),
     clusteringProvider = opt[String](r, "clusteringProvider"))
 
+  def rowToRemove(r: Row): RemoveFile = RemoveFile(
+    path = r.getAs[String]("path"),
+    deletionTimestamp = opt[Long](r, "deletionTimestamp"),
+    dataChange = opt[Boolean](r, "dataChange").getOrElse(true),
+    extendedFileMetadata = opt[Boolean](r, "extendedFileMetadata"),
+    partitionValues = opt[Map[String, String]](r, "partitionValues"),
+    size = opt[Long](r, "size"),
+    stats = opt[String](r, "stats"),
+    tags = opt[Map[String, String]](r, "tags"),
+    deletionVector = opt[Row](r, "deletionVector").map(rowToDv),
+    baseRowId = opt[Long](r, "baseRowId"),
+    defaultRowCommitVersion = opt[Long](r, "defaultRowCommitVersion"))
+
+  def rowToTxn(r: Row): SetTransaction = SetTransaction(
+    r.getAs[String]("appId"), r.getAs[Long]("version"),
+    opt[Long](r, "lastUpdated"))
+
+  def rowToDomain(r: Row): DomainMetadata = DomainMetadata(
+    r.getAs[String]("domain"), r.getAs[String]("configuration"),
+    r.getAs[Boolean]("removed"))
+
   def rowToMetadata(r: Row): Metadata = Metadata(
     id = r.getAs[String]("id"),
     name = opt[String](r, "name"),
@@ -121,6 +142,13 @@ object RowCodec {
       .map(strMap).getOrElse(Map.empty),
     size = n.get("size").asLong,
     dataChange = optBool(n, "dataChange").getOrElse(false))
+
+  def jsonToTxn(n: JsonNode): SetTransaction = SetTransaction(
+    n.get("appId").asText, n.get("version").asLong, optLong(n, "lastUpdated"))
+
+  def jsonToDomain(n: JsonNode): DomainMetadata = DomainMetadata(
+    n.get("domain").asText, optText(n, "configuration").getOrElse(""),
+    optBool(n, "removed").getOrElse(false))
 
   def jsonToRemove(n: JsonNode): RemoveFile = RemoveFile(
     path = n.get("path").asText,

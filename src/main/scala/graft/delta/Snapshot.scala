@@ -1,19 +1,22 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
-
 /** Immutable table state at a version (reference:
   * kernel/src/snapshot/mod.rs:74-146). Protocol + Metadata come from a
-  * newest-first replay (log_segment/protocol_metadata_replay.rs); the
-  * live file set comes from the distributed log-replay query
-  * (scan/scan_plan.rs:51-133) with a driver fast path for small logs
-  * (mirroring the kernel's iterator-mode log replay,
-  * scan/log_replay.rs:155-434).
+  * newest-first replay (log_segment/protocol_metadata_replay.rs). The
+  * live file set, app txns and domain metadata come from ONE driver pass
+  * when the segment is driver-small ([[smallState]], mirroring the
+  * kernel's iterator-mode log replay, scan/log_replay.rs:155-434), and
+  * from the distributed log-replay query otherwise
+  * (scan/scan_plan.rs:51-133).
   */
 class Snapshot(
     val spark: SparkSession,
@@ -76,39 +79,24 @@ class Snapshot(
   }
   private lazy val ckptPaths: Seq[String] = ckptData._1
 
-  /** Small classic checkpoints (total bytes under the driver-replay
-    * cap, plain JSON stats): every checkpoint row collected ONCE and
-    * shared by [[latestActions]]'s checkpoint arm, [[setTransactions]]
-    * and [[domainMetadatas]] — one scan job per snapshot instead of
-    * one per member, the post-checkpoint analog of [[smallLog]]
-    * (reference keeps an iterator mode for exactly this size class,
-    * log_replay/mod.rs). Large, V2/sidecar, JSON-actions and
-    * struct-stats checkpoints keep their distributed or specialized
-    * reads — at 100 TB the checkpoint is the big side and must never
-    * be funneled through the driver.
-    */
-  private[delta] lazy val ckptRowsSmall: Option[Seq[Row]] =
-    if (segment.checkpointParts.isEmpty || v2Info.nonEmpty ||
-        ckptData._2 || ckptHasStructStats) None
-    else {
-      val bytes = segment.checkpointParts
-        .map(p => fsys.getFileStatus(p.path).getLen).sum
-      if (bytes >= DRIVER_REPLAY_MAX_BYTES) None
-      else Some(spark.read.schema(LogSchema.checkpoint)
-        .parquet(ckptPaths: _*).collect().toSeq)
-    }
-
   /** Every metadata arm of this snapshot is driver-small: commit bytes
-    * under the replay cap AND (when a checkpoint exists) the checkpoint
-    * small enough that [[ckptRowsSmall]] collected it. Scans use this
-    * to hand the slim file list over in ONE collect instead of the
-    * streamed per-partition fetch (whose fixed ~8 jobs exist for the
-    * 5M-add envelope, not a 15-file table).
+    * under the replay cap and, when a checkpoint exists, a classic
+    * parquet checkpoint with plain JSON stats under the cap too (byte
+    * counts come from the segment's listing). Then ONE driver pass,
+    * [[replayed]], serves the file actions, app txns and domain
+    * metadata, and [[latestActions]] is a local relation whose filters
+    * and projections Spark's optimizer evaluates on the driver
+    * (`ConvertToLocalRelation`): no Spark job from open to pruned file
+    * list (reference iterator mode, log_replay/mod.rs). Above the cap,
+    * and for V2/sidecar, JSON-actions and struct-stats checkpoints, the
+    * distributed reads do the work: at 100 TB the checkpoint is the big
+    * side and must never be funneled through the driver.
     */
   private[delta] lazy val smallState: Boolean =
-    smallLog || (ckptRowsSmall.nonEmpty &&
-      segment.deltas.map(c => fsys.getFileStatus(c.path).getLen).sum <
-        DRIVER_REPLAY_MAX_BYTES)
+    segment.deltas.map(_.length).sum < DRIVER_REPLAY_MAX_BYTES &&
+      (segment.checkpointParts.isEmpty ||
+        (segment.checkpointParts.map(_.length).sum <
+          DRIVER_REPLAY_MAX_BYTES && v2Info.isEmpty && !ckptHasStructStats))
 
   /** The table-typed `stats_parsed` struct struct-stats checkpoints
     * carry instead of stats JSON.
@@ -169,10 +157,7 @@ class Snapshot(
     try {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(ckptPaths.head), fsys.getConf))
-      val s = try r.getFooter.getFileMetaData.getSchema finally r.close()
+      val s = Snapshot.footerSchema(new Path(ckptPaths.head), fsys.getConf)
       val sp = if (!s.containsField("add")) None
         else s.getType(Seq("add"): _*) match {
           case g: org.apache.parquet.schema.GroupType
@@ -255,31 +240,6 @@ class Snapshot(
       regexp_extract(col("_metadata.file_path"), raw"(\d{20})\.json", 1))
       .cast("long")
 
-  /** DV-aware dedup key (reference log_replay/deduplicator.rs:153
-    * FileActionKey{path, dv_unique_id}); the path CANONICALIZES first
-    * so a remove naming `file:/p` shadows an add naming `/p`.
-    */
-  private def keyExpr(side: String): Column = {
-    val dv = col(s"$side.deletionVector")
-    concat(
-      regexp_replace(col(s"$side.path"),
-        Storage.URI_PREFIX_REGEX, ""), lit("@"),
-      when(dv.isNull, lit("")).otherwise(concat(
-        dv.getField("storageType"), dv.getField("pathOrInlineDv"),
-        coalesce(dv.getField("offset").cast("string"), lit("")))))
-  }
-
-  /** Whether the segment is small enough to replay on the driver: no
-    * checkpoint parts and commit bytes under the cap. Metadata-sized
-    * logs pay JSON-scan planning + a shuffle in the distributed plan —
-    * pure overhead at this size (reference keeps an iterator mode for
-    * exactly this, log_replay/mod.rs).
-    */
-  private[delta] lazy val smallLog: Boolean =
-    segment.checkpointParts.isEmpty &&
-      segment.deltas.map(c => fsys.getFileStatus(c.path).getLen).sum <
-        DRIVER_REPLAY_MAX_BYTES
-
   private lazy val latestActionsSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("key",
       org.apache.spark.sql.types.StringType),
@@ -288,31 +248,17 @@ class Snapshot(
     org.apache.spark.sql.types.StructField("version",
       org.apache.spark.sql.types.LongType)))
 
-  /** Driver-side mirror of [[keyExpr]]. */
-  private def driverKey(path: String,
-      dv: Option[DeletionVectorDescriptor]): String =
-    Storage.canonicalPathKey(path) + "@" + dv.map(d =>
-      d.storageType + d.pathOrInlineDv +
-        d.offset.map(_.toString).getOrElse("")).getOrElse("")
-
   /** Latest file action per (path, dvId): columns
-    * (key, add, remove, version). Small-log fast path replays on the
-    * driver and lifts the result into a local relation; otherwise
-    * distributed log replay — the groupBy shuffles only the commit arm
-    * (small); the checkpoint arm joins against a broadcast of the
-    * commit keys (reference scan_plan.rs anti-join shape; SURVEY.md
-    * §2.2).
+    * (key, add, remove, version). Driver-small state is a local relation
+    * over [[replayed]]; otherwise distributed log replay — the groupBy
+    * shuffles only the commit arm (small); the checkpoint arm joins
+    * against a broadcast of the commit keys (reference scan_plan.rs
+    * anti-join shape; SURVEY.md §2.2).
     */
-  lazy val latestActions: DataFrame = if (smallLog) {
-    val rows = driverReplayActions().map { case (a, r, v) =>
-      val key = a.map(x => driverKey(x.path, x.deletionVector))
-        .orElse(r.map(x => driverKey(x.path, x.deletionVector))).get
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](key, a.map(RowCodec.addToRow).orNull,
-          r.map(RowCodec.removeToRow).orNull, v),
-        latestActionsSchema): Row
-    }
-    spark.createDataFrame(rows.asJava, latestActionsSchema)
+  lazy val latestActions: DataFrame = if (smallState) {
+    localRelation(latestActionsSchema, replayed.files.map(f => Row(f.key,
+      f.add.map(RowCodec.addToRow).orNull,
+      f.remove.map(RowCodec.removeToRow).orNull, f.version)))
   } else {
     val commitArm: Option[DataFrame] =
       if (commitPaths.isEmpty) None
@@ -320,9 +266,7 @@ class Snapshot(
         val raw = spark.read.schema(LogSchema.full).json(commitPaths: _*)
           .withColumn("version", versionFromFileName)
           .filter(col("add").isNotNull || col("remove").isNotNull)
-          .withColumn("key",
-            when(col("add").isNotNull, keyExpr("add"))
-              .otherwise(keyExpr("remove")))
+          .withColumn("key", Snapshot.fileKeyExpr)
         raw.groupBy(col("key"))
           .agg(
             max_by(struct(col("add"), col("remove")), col("version")).as("a"),
@@ -343,22 +287,11 @@ class Snapshot(
         // dropFields over a table-width struct codegens O(columns²)
         // and most checkpoints carry plain JSON stats.
         val hasStructStats = !ckptData._2 && ckptHasStructStats
-        // small checkpoints come off the shared driver collect as a
-        // local relation — no second parquet scan (hasStructStats is
-        // false by ckptRowsSmall's construction, so the plain branch
-        // below is the one that applies)
-        val base0 = ckptRowsSmall match {
-          case Some(rows) =>
-            spark.createDataFrame(rows.asJava, LogSchema.checkpoint)
-          case None =>
-            val readSchema =
-              if (hasStructStats) ckptReadSchema else LogSchema.checkpoint
-            val reader = spark.read.schema(readSchema)
-            if (ckptData._2) reader.json(ckptPaths: _*)
-            else reader.parquet(ckptPaths: _*)
-        }
-        val base =
-          base0.filter(col("add").isNotNull || col("remove").isNotNull)
+        val reader = spark.read.schema(
+          if (hasStructStats) ckptReadSchema else LogSchema.checkpoint)
+        val base = (if (ckptData._2) reader.json(ckptPaths: _*)
+          else reader.parquet(ckptPaths: _*))
+          .filter(col("add").isNotNull || col("remove").isNotNull)
         val normalized =
           if (!hasStructStats) base
           else applyCkptCompatCasts(base)
@@ -367,9 +300,7 @@ class Snapshot(
               coalesce(col("add.stats"), to_json(col("add.stats_parsed"))))
               .dropFields("stats_parsed")))
         normalized
-          .withColumn("key",
-            when(col("add").isNotNull, keyExpr("add"))
-              .otherwise(keyExpr("remove")))
+          .withColumn("key", Snapshot.fileKeyExpr)
           .withColumn("version", lit(segment.checkpointVersion.get))
           .select(col("key"), col("add"), col("remove"), col("version"))
       }
@@ -387,156 +318,136 @@ class Snapshot(
     }
   }
 
-  /** Live adds: DataFrame with one `add` struct column + `version`.
-    * Small-log fast path does the HashSet dedup on the driver
-    * (reference iterator mode) and lifts the result into a DataFrame.
+  /** Live adds: DataFrame with one `add` struct column + `version`. */
+  lazy val allAdds: DataFrame =
+    if (smallState) localRelation(addsSchema, replayed.files.flatMap(f =>
+      f.add.map(a => Row(RowCodec.addToRow(a), f.version))))
+    else latestActions.filter(col("add").isNotNull)
+      .select(col("add"), col("version"))
+
+  /** A local relation over driver rows: Spark's optimizer evaluates the
+    * filters and projections over it on the driver
+    * (`ConvertToLocalRelation`), so collecting runs no job. The rows
+    * convert interpretively, without the serializer codegen
+    * `createDataFrame` pays per call.
     */
-  lazy val allAdds: DataFrame = {
-    if (smallLog) {
-      val rows = driverReplayActions().collect { case (Some(a), _, v) =>
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](RowCodec.addToRow(a), v), addsSchema): Row
-      }
-      spark.createDataFrame(rows.asJava, addsSchema)
-    } else {
-      latestActions.filter(col("add").isNotNull)
-        .select(col("add"), col("version"))
-    }
-  }
+  private def localRelation(schema: StructType, rows: Seq[Row]): DataFrame =
+    org.apache.spark.sql.classic.GraftShims.ofRows(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+        .fromExternalRows(org.apache.spark.sql.catalyst.types.DataTypeUtils
+          .toAttributes(schema), rows))
 
   private[delta] lazy val addsSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("add", LogSchema.add),
     org.apache.spark.sql.types.StructField("version",
       org.apache.spark.sql.types.LongType)))
 
-  /** Newest-first driver replay with first-seen-key-wins (mirrors
-    * FileActionDeduplicator, log_replay/mod.rs:32-116) — keeps the
-    * winning action of BOTH kinds so checkpoint reconciliation sees
-    * the tombstones too.
+  /** One newest-first driver pass over the segment, first seen wins
+    * (mirrors FileActionDeduplicator, log_replay/mod.rs:32-116): every
+    * commit file once, then the checkpoint. It keeps the winning action
+    * of BOTH kinds per file key (so checkpoint reconciliation sees the
+    * tombstones too), the latest txn per app id and the latest domain
+    * metadata per domain (removals included, so a newer removal shadows
+    * an older checkpoint row). File actions are kept only for
+    * driver-small state, whose checkpoint is read in-process; above the
+    * cap only txn and domain lines are parsed, and the checkpoint's come
+    * from its V2 manifest or one Spark read.
     */
-  private def driverReplayActions()
-      : Seq[(Option[AddFile], Option[RemoveFile], Long)] = {
+  private lazy val replayed: Snapshot.DriverState = {
+    val keepFiles = smallState
     val seen = scala.collection.mutable.HashSet.empty[String]
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Option[AddFile], Option[RemoveFile], Long)]
+    val files = Seq.newBuilder[Snapshot.FileAction]
+    val txns = scala.collection.mutable.LinkedHashMap
+      .empty[String, SetTransaction]
+    val domains = scala.collection.mutable.LinkedHashMap
+      .empty[String, DomainMetadata]
+    def file(a: Option[AddFile], r: Option[RemoveFile], v: Long): Unit = {
+      val key = a.map(x => Snapshot.fileKey(x.path, x.deletionVector))
+        .getOrElse(Snapshot.fileKey(r.get.path, r.get.deletionVector))
+      if (seen.add(key)) files += Snapshot.FileAction(key, a, r, v)
+    }
+    def txn(t: SetTransaction): Unit =
+      if (!txns.contains(t.appId)) txns(t.appId) = t
+    def domain(d: DomainMetadata): Unit =
+      if (!domains.contains(d.domain)) domains(d.domain) = d
+    val fs = fsys
     segment.deltas.sortBy(f => -LogSegment.endVersion(f)).foreach { c =>
-      Storage.readLines(fsys, c.path).foreach { line =>
-        if (line.nonEmpty) {
+      val v = LogSegment.endVersion(c)
+      Storage.readLines(fs, c.path).foreach { line =>
+        if (line.nonEmpty && (keepFiles || line.contains("\"txn\"") ||
+            line.contains("\"domainMetadata\""))) {
           val n = JsonLog.parseLine(line)
-          val addN = n.get("add"); val remN = n.get("remove")
-          if (addN != null && !addN.isNull) {
-            val a = RowCodec.jsonToAdd(addN)
-            val key = Storage.canonicalPathKey(a.path) + "@" +
-              a.deletionVector.map(_.uniqueId).getOrElse("")
-            if (seen.add(key))
-              out += ((Some(a), None, LogSegment.endVersion(c)))
-          } else if (remN != null && !remN.isNull) {
-            val r = RowCodec.jsonToRemove(remN)
-            val key = Storage.canonicalPathKey(r.path) + "@" +
-              r.deletionVector.map(_.uniqueId).getOrElse("")
-            if (seen.add(key))
-              out += ((None, Some(r), LogSegment.endVersion(c)))
+          def field(name: String) = Option(n.get(name)).filterNot(_.isNull)
+          field("txn").foreach(t => txn(RowCodec.jsonToTxn(t)))
+          field("domainMetadata")
+            .foreach(d => domain(RowCodec.jsonToDomain(d)))
+          if (keepFiles) field("add") match {
+            case Some(a) => file(Some(RowCodec.jsonToAdd(a)), None, v)
+            case None => field("remove").foreach(r =>
+              file(None, Some(RowCodec.jsonToRemove(r)), v))
           }
         }
       }
     }
-    out.toSeq
+    segment.checkpointVersion.foreach { v =>
+      def struct(r: Row, name: String): Option[Row] = {
+        val i = r.fieldIndex(name)
+        if (r.isNullAt(i)) None else Some(r.getStruct(i))
+      }
+      def txnAndDomain(r: Row): Unit = {
+        struct(r, "txn").foreach(t => txn(RowCodec.rowToTxn(t)))
+        struct(r, "domainMetadata")
+          .foreach(d => domain(RowCodec.rowToDomain(d)))
+      }
+      if (keepFiles) localCheckpointRows().foreach { r =>
+        struct(r, "add") match {
+          case Some(a) => file(Some(RowCodec.rowToAdd(a)), None, v)
+          case None => struct(r, "remove").foreach(x =>
+            file(None, Some(RowCodec.rowToRemove(x)), v))
+        }
+        txnAndDomain(r)
+      }
+      else v2Info match {
+        case Some(info) =>
+          info.txns.foreach(txn); info.domainMetadatas.foreach(domain)
+        case None => spark.read.schema(LogSchema.checkpoint)
+          .parquet(ckptPaths: _*)
+          .filter(col("txn").isNotNull || col("domainMetadata").isNotNull)
+          .select("txn", "domainMetadata").collect().foreach(txnAndDomain)
+      }
+    }
+    Snapshot.DriverState(files.result(), txns.values.toSeq,
+      domains.values.toSeq)
+  }
+
+  /** The driver-small classic checkpoint's file, txn and domain rows,
+    * read on the driver through Spark's own parquet reader: the schema
+    * handling of `spark.read.schema(..).parquet`, without a job.
+    */
+  private def localCheckpointRows(): Iterator[Row] = {
+    val schema = StructType(LogSchema.checkpoint.fields.filter(f =>
+      Set("txn", "add", "remove", "domainMetadata")(f.name)))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hconf)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    segment.checkpointParts.iterator.flatMap(p =>
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(p.path),
+        0L, p.length, Array.empty, 0L, p.length, Map.empty)))
+      .map(r => toRow(r).asInstanceOf[Row])
   }
 
   /** Latest SetTransaction per appId (reference
-    * actions/set_transaction.rs).
+    * actions/set_transaction.rs), from [[replayed]].
     */
-  lazy val setTransactions: Seq[SetTransaction] = {
-    val fromCommits = segment.deltas
-      .sortBy(f => -LogSegment.endVersion(f)).flatMap { c =>
-      Storage.readLines(fsys, c.path).flatMap { line =>
-        val n = JsonLog.parseLine(line)
-        Option(n.get("txn")).filterNot(_.isNull).map { t =>
-          SetTransaction(t.get("appId").asText, t.get("version").asLong,
-            Option(t.get("lastUpdated")).filterNot(_.isNull).map(_.asLong))
-        }
-      }
-    }
-    val fromCkpt: Seq[SetTransaction] = v2Info match {
-      case Some(info) => info.txns
-      case None =>
-        if (ckptPaths.isEmpty) Nil
-        else ckptRowsSmall match {
-          case Some(rows) => rows.flatMap { row =>
-            val i = row.fieldIndex("txn")
-            if (row.isNullAt(i)) None
-            else {
-              val r = row.getStruct(i)
-              Some(SetTransaction(r.getAs[String]("appId"),
-                r.getAs[Long]("version"),
-                if (r.isNullAt(r.fieldIndex("lastUpdated"))) None
-                else Some(r.getAs[Long]("lastUpdated"))))
-            }
-          }
-          case None => spark.read.schema(LogSchema.checkpoint)
-            .parquet(ckptPaths: _*)
-            .filter(col("txn").isNotNull).select("txn.*").collect().toSeq
-            .map(r => SetTransaction(r.getAs[String]("appId"),
-              r.getAs[Long]("version"),
-              if (r.isNullAt(r.fieldIndex("lastUpdated"))) None
-              else Some(r.getAs[Long]("lastUpdated"))))
-        }
-    }
-    (fromCommits ++ fromCkpt).groupBy(_.appId)
-      .map(_._2.head).toSeq // commits are newest-first, checkpoint last
-  }
+  lazy val setTransactions: Seq[SetTransaction] = replayed.txns
 
-  /** Latest domain metadata per domain (newest-first replay over the
-    * deltas, checkpoint fallback; reference actions/mod.rs:1326,
-    * snapshot domain-metadata resolution). Removed domains are dropped.
+  /** Latest domain metadata per domain (reference actions/mod.rs:1326,
+    * snapshot domain-metadata resolution), from [[replayed]]. Removed
+    * domains are dropped.
     */
-  lazy val domainMetadatas: Seq[DomainMetadata] = {
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, DomainMetadata]
-    segment.deltas.sortBy(f => -LogSegment.endVersion(f)).foreach { c =>
-      Storage.readLines(fsys, c.path).foreach { line =>
-        if (line.contains("\"domainMetadata\"")) {
-          val n = JsonLog.parseLine(line)
-          val d = n.get("domainMetadata")
-          if (d != null && !d.isNull) {
-            val domain = d.get("domain").asText
-            if (!seen.contains(domain))
-              seen(domain) = DomainMetadata(domain,
-                Option(d.get("configuration")).filterNot(_.isNull)
-                  .map(_.asText).getOrElse(""),
-                Option(d.get("removed")).filterNot(_.isNull)
-                  .exists(_.asBoolean))
-          }
-        }
-      }
-    }
-    val fromCkpt: Seq[DomainMetadata] = v2Info match {
-      case Some(info) => info.domainMetadatas // V2: top-level rows
-      case None =>
-        if (segment.checkpointParts.isEmpty) Nil
-        else ckptRowsSmall match {
-          case Some(rows) => rows.flatMap { row =>
-            val i = row.fieldIndex("domainMetadata")
-            if (row.isNullAt(i)) None
-            else {
-              val r = row.getStruct(i)
-              Some(DomainMetadata(r.getAs[String]("domain"),
-                r.getAs[String]("configuration"),
-                r.getAs[Boolean]("removed")))
-            }
-          }
-          case None => spark.read.schema(LogSchema.checkpoint)
-            .parquet(segment.checkpointParts.map(_.path.toString): _*)
-            .filter(col("domainMetadata").isNotNull)
-            .select("domainMetadata.*").collect().toSeq
-            .map(r => DomainMetadata(r.getAs[String]("domain"),
-              r.getAs[String]("configuration"),
-              r.getAs[Boolean]("removed")))
-        }
-    }
-    fromCkpt.foreach(d =>
-      if (!seen.contains(d.domain)) seen(d.domain) = d)
-    seen.values.filterNot(_.removed).toSeq
-  }
+  lazy val domainMetadatas: Seq[DomainMetadata] =
+    replayed.domains.filterNot(_.removed)
 
   /** Configuration string of one domain, if present and not removed. */
   def domainMetadata(domain: String): Option[String] =
@@ -549,6 +460,42 @@ class Snapshot(
 }
 
 object Snapshot {
+
+  /** The winning file action of one dedup key and the version it came
+    * from; exactly one of `add` and `remove` is set.
+    */
+  private[delta] case class FileAction(key: String, add: Option[AddFile],
+      remove: Option[RemoveFile], version: Long)
+
+  private case class DriverState(files: Seq[FileAction],
+      txns: Seq[SetTransaction], domains: Seq[DomainMetadata])
+
+  /** Dedup key of a file action (reference log_replay/deduplicator.rs:153
+    * FileActionKey{path, dv_unique_id}): the canonical path, so a remove
+    * naming `file:/p` shadows an add naming `/p`, then '@' and the DV's
+    * uniqueId. The uniqueId's own '@' before the offset keeps apart keys
+    * that plain concatenation merges: DV `/x/dv.bin1` at offset 2 and
+    * `/x/dv.bin` at offset 12.
+    */
+  private[delta] def fileKey(path: String,
+      dv: Option[DeletionVectorDescriptor]): String =
+    Storage.canonicalPathKey(path) + "@" + dv.map(_.uniqueId).getOrElse("")
+
+  /** [[fileKey]] of a log row's `add`, or of its `remove` when `add` is
+    * null, as a column.
+    */
+  private[delta] def fileKeyExpr: Column = {
+    def key(side: String) = {
+      val dv = col(s"$side.deletionVector")
+      concat(
+        regexp_replace(col(s"$side.path"), Storage.URI_PREFIX_REGEX, ""),
+        lit("@"), when(dv.isNull, lit("")).otherwise(concat(
+          dv.getField("storageType"), dv.getField("pathOrInlineDv"),
+          coalesce(concat(lit("@"), dv.getField("offset").cast("string")),
+            lit("")))))
+    }
+    when(col("add").isNotNull, key("add")).otherwise(key("remove"))
+  }
 
   /** V2 checkpoint top-level content (reference
     * checkpoint/checkpoint_shape.rs, actions/mod.rs:1251 Sidecar): P&M,
@@ -563,6 +510,20 @@ object Snapshot {
       domainMetadatas: Seq[DomainMetadata],
       sidecarPaths: Seq[String])
 
+  /** A parquet file's footer schema, decoded without the row-group
+    * metadata: a schema peek at about a tenth of a full footer open.
+    */
+  private def footerSchema(path: Path,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.schema.MessageType = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path)
+        .withMetadataFilter(org.apache.parquet.format.converter
+          .ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
+
   /** Does a classic-named single-part checkpoint carry V2 content?
     * One column-pruned scan for a checkpointMetadata row — cheap even
     * against a million-add classic checkpoint.
@@ -574,14 +535,10 @@ object Snapshot {
     // read answers that without launching a Spark job (the common case:
     // every V1 classic checkpoint, including our own)
     if (!top.path.getName.endsWith(".json")) {
-      val hasColumn = try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(top.path, spark.sessionState.newHadoopConf())
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getFooter.getFileMetaData.getSchema
-          .containsField("checkpointMetadata")
-        finally reader.close()
-      } catch { case _: Exception => true } // unreadable footer → probe
+      val hasColumn = try footerSchema(top.path,
+          spark.sessionState.newHadoopConf())
+        .containsField("checkpointMetadata")
+      catch { case _: Exception => true } // unreadable footer → probe
       if (!hasColumn) return false
     }
     val probeSchema = StructType(Seq(org.apache.spark.sql.types.StructField(
@@ -644,16 +601,9 @@ object Snapshot {
     rows.foreach { r =>
       field(r, "protocol").foreach(p => proto = Some(RowCodec.rowToProtocol(p)))
       field(r, "metaData").foreach(m => meta = Some(RowCodec.rowToMetadata(m)))
-      field(r, "txn").foreach { t =>
-        txns += SetTransaction(t.getAs[String]("appId"),
-          t.getAs[Long]("version"),
-          if (t.isNullAt(t.fieldIndex("lastUpdated"))) None
-          else Some(t.getAs[Long]("lastUpdated")))
-      }
-      field(r, "domainMetadata").foreach { d =>
-        dms += DomainMetadata(d.getAs[String]("domain"),
-          d.getAs[String]("configuration"), d.getAs[Boolean]("removed"))
-      }
+      field(r, "txn").foreach(t => txns += RowCodec.rowToTxn(t))
+      field(r, "domainMetadata")
+        .foreach(d => dms += RowCodec.rowToDomain(d))
       field(r, "sidecar").foreach { sc =>
         sidecars += new Path(new Path(logDir, "_sidecars"),
           sc.getAs[String]("path")).toString
@@ -733,16 +683,9 @@ object Snapshot {
     Metrics.report(MetricEvent.LogSegmentLoadSuccess(opId,
       Metrics.now() - t0, segment.version, segment.deltas.size,
       segment.checkpointParts.size))
-    // byte accounting costs one status call per segment file — only
-    // worth paying while someone is listening
-    if (Metrics.reporter ne NoOpReporter) {
-      def len(p: Path): Long =
-        try fs.getFileStatus(p).getLen catch { case _: Exception => 0L }
-      val segFiles = segment.deltas.map(_.path) ++
-        segment.checkpointParts.map(_.path)
-      Metrics.report(MetricEvent.IoBytes(opId, "log_segment",
-        segFiles.size.toLong, segFiles.map(len).sum))
-    }
+    val segFiles = segment.deltas ++ segment.checkpointParts
+    Metrics.report(MetricEvent.IoBytes(opId, "log_segment",
+      segFiles.size.toLong, segFiles.map(_.length).sum))
 
     // CRC fast path (reference crc/mod.rs): a valid checksum at the
     // snapshot version supplies P&M without any replay
@@ -823,7 +766,7 @@ object Snapshot {
     val logDir = prev.segment.logDir
     val newCommits = Storage.listSortedFrom(fs, logDir,
         f"${prev.version + 1}%020d")
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
       .collect { case c: FileNames.CommitFile if c.version > prev.version => c }
       .sortBy(_.version)
     if (newCommits.isEmpty) return prev

@@ -146,7 +146,7 @@ object TableChanges {
     val fs = Storage.fs(root, conf)
     val logDir = FileNames.logDir(root)
     val commitFiles = Storage.listSorted(fs, logDir)
-      .flatMap(st => FileNames.parse(st.getPath).map(f => (f, st)))
+      .flatMap(st => FileNames.parse(st).map(f => (f, st)))
       .collect { case (c: FileNames.CommitFile, st)
           if c.version >= startVersion && c.version <= end => (c, st) }
       .sortBy(_._1.version)

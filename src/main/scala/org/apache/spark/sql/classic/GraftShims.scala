@@ -2,11 +2,11 @@ package org.apache.spark.sql.classic
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Narrow bridge into `private[sql]` Spark internals the DML extension
-  * needs (the standard connector pattern — a connector that rewrites
-  * UPDATE/MERGE must turn an analyzed source plan back into a
-  * DataFrame, and `Dataset.ofRows` is the only door). Nothing else
-  * crosses this boundary.
+/** Narrow bridge into `private[sql]` Spark internals (the standard
+  * connector pattern): the DML extension turns an analyzed source plan
+  * back into a DataFrame, and driver-small snapshot replay wraps its
+  * local relation in one — `Dataset.ofRows` is the only door. Nothing
+  * else crosses this boundary.
   */
 object GraftShims {
   def ofRows(spark: org.apache.spark.sql.SparkSession,

@@ -24,7 +24,7 @@ class CatalogManagedSpec extends AnyFunSuite {
 
   private def publishedCommits(dir: String): Seq[Long] =
     Storage.listSorted(fs(dir), FileNames.logDir(new Path(dir)))
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
       .collect { case c: FileNames.CommitFile => c.version }
 
   private def stagedCommits(dir: String): Seq[String] =

@@ -216,7 +216,7 @@ class ConcurrencyStressSpec extends AnyFunSuite {
     // 100 commits total, versions contiguous from 1, each file holds
     // ONE complete line (the atomic publish never exposes partials)
     val files = Storage.listSorted(fs, logDir)
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
       .collect { case c: FileNames.CommitFile => c }
     assert(files.map(_.version) == (1L to 100L),
       s"non-contiguous versions: ${files.map(_.version)}")

@@ -116,7 +116,7 @@ class DmlFuzzSpec extends AnyFunSuite {
     /** Can version `v` still be assembled from what's on disk? */
     def constructible(v: Long): Boolean = {
       val files = Storage.listSorted(fsys, logDir)
-        .flatMap(st => FileNames.parse(st.getPath))
+        .flatMap(st => FileNames.parse(st))
       val commits = files.collect {
         case c: FileNames.CommitFile => c.version }.toSet
       val ckpts = files.collect {
@@ -264,8 +264,8 @@ class DmlFuzzSpec extends AnyFunSuite {
       assert(got == model.sorted.toSeq,
         s"$context diverged at version $version: " +
           s"got ${got.take(5)}... model ${model.sorted.take(5)}...")
-      // dualRead: a FRESH handle read through the driver-small fast
-      // paths (smallLog / ckptRowsSmall / one-collect handoff) and one
+      // dualRead: a FRESH handle read through the driver-small replay
+      // (one driver pass, local-relation file list) and one
       // through the forced-distributed replay must both match the
       // model after EVERY random step — the equivalence property for
       // the small-state machinery under arbitrary DML + checkpoints

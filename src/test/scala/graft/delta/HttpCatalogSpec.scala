@@ -24,7 +24,7 @@ class HttpCatalogSpec extends AnyFunSuite {
 
   private def publishedCommits(dir: String): Seq[Long] =
     Storage.listSorted(fs(dir), FileNames.logDir(new Path(dir)))
-      .flatMap(st => FileNames.parse(st.getPath))
+      .flatMap(st => FileNames.parse(st))
       .collect { case c: FileNames.CommitFile => c.version }
 
   private def withServer(catDir: String, credTtlMs: Long = 3600L * 1000)

@@ -88,7 +88,7 @@ class LastCheckpointHintSpec extends AnyFunSuite {
     import LogSegment.{LastCheckpointHint, LastCheckpointV2}
     val sel = Seq(FileNames.CheckpointFile(7L,
       new Path("/t/_delta_log/00000000000000000007.checkpoint.abc.parquet"),
-      1, 1, isV2 = true))
+      1, 1, isV2 = true, length = 1L))
     def hint(p: String, v: Long = 7L) = LastCheckpointHint(v, None, None,
       v2Checkpoint = Some(LastCheckpointV2(p, None, None, None, None)))
     assert(hint("00000000000000000007.checkpoint.abc.parquet")
@@ -118,11 +118,11 @@ class LastCheckpointHintSpec extends AnyFunSuite {
     // attempt to read it
     fs.listStatus(logDir).filter(_.getPath.getName.endsWith(".crc"))
       .foreach(st => fs.delete(st.getPath, false))
-    val top = fs.listStatus(logDir).map(_.getPath)
-      .find(p => FileNames.parse(p).exists {
+    val top = fs.listStatus(logDir)
+      .find(st => FileNames.parse(st).exists {
         case c: FileNames.CheckpointFile => c.isV2
         case _ => false
-      }).get
+      }).get.getPath
     Storage.put(fs, top, "not a parquet file")
 
     val snap = Snapshot.forTable(spark, dir)

@@ -151,14 +151,66 @@ class LogReplayFuzzSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> (!r.isNullAt(1), r.getLong(2)))
         .toMap
 
-    val driver = actionsKeyed()            // small log → driver path
+    def parity(): Unit = {
+      val driver = actionsKeyed()          // small log → driver path
+      spark.conf.set("graft.replay.driverMaxBytes", "0")
+      try {
+        val dist = actionsKeyed()          // forced distributed path
+        assert(driver == dist,
+          s"paths diverged: driver=${driver.size} dist=${dist.size}")
+        assert(driver.nonEmpty && driver.exists(!_._2._1),
+          "expected at least one winning tombstone in the parity log")
+      } finally spark.conf.unset("graft.replay.driverMaxBytes")
+    }
+    parity()
+    // checkpoint plus tail: the checkpoint's adds and tombstones meet
+    // newer commits that shadow some of them
+    t.checkpoint()
+    t.append((401L to 450L).map(k => (k, s"v$k")).toDF("k", "s"))
+    t.deleteWhereDV("k >= 305 AND k <= 310")
+    t.deleteWhere("k >= 1 AND k <= 5")
+    assert(t.snapshot().segment.checkpointParts.nonEmpty)
+    parity()
+  }
+
+  test("a remove whose DV only concatenates to a live add's key does " +
+      "not shadow the add, on either replay path") {
+    // add: DV `/x/dv.bin1` at offset 2; a newer remove: DV `/x/dv.bin`
+    // at offset 12. Concatenated without a separator both read
+    // `p/x/dv.bin12`; as FileActionKey{path, dvUniqueId} they differ.
+    val dir = TestSpark.tmpDir("dvkey")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = Storage.fs(root, spark.sessionState.newHadoopConf())
+    val logDir = FileNames.logDir(root)
+    def dv(path: String, offset: Int) =
+      s"""{"storageType":"p","pathOrInlineDv":"$path","offset":$offset,""" +
+        """"sizeInBytes":10,"cardinality":1}"""
+    val schemaString = Seq((0L, "x")).toDF("k", "s").schema.json
+      .replace("\"", "\\\"")
+    Seq(
+      Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+          """"readerFeatures":["deletionVectors"],""" +
+          """"writerFeatures":["deletionVectors"]}}""",
+        s"""{"metaData":{"id":"dvkey","format":{"provider":"parquet",""" +
+          s""""options":{}},"schemaString":"$schemaString",""" +
+          """"partitionColumns":[],"configuration":{},"createdTime":0}}"""),
+      Seq("""{"add":{"path":"f1.parquet","partitionValues":{},"size":10,""" +
+        """"modificationTime":0,"dataChange":true,"deletionVector":""" +
+        dv("/x/dv.bin1", 2) + "}}"),
+      Seq("""{"remove":{"path":"f1.parquet","deletionTimestamp":1,""" +
+        """"dataChange":true,"deletionVector":""" + dv("/x/dv.bin", 12) +
+        "}}")
+    ).zipWithIndex.foreach { case (lines, v) =>
+      Storage.put(fs, FileNames.commitFile(logDir, v.toLong),
+        lines.mkString("", "\n", "\n"))
+    }
+    def kept(): Seq[(String, Option[String])] =
+      Snapshot.forTable(spark, dir).scanBuilder().build().collectAddFiles()
+        .map(a => (a.path, a.deletionVector.map(_.uniqueId)))
+    val want = Seq(("f1.parquet", Some("p/x/dv.bin1@2")))
+    assert(kept() == want, "driver replay")
     spark.conf.set("graft.replay.driverMaxBytes", "0")
-    try {
-      val dist = actionsKeyed()            // forced distributed path
-      assert(driver == dist,
-        s"paths diverged: driver=${driver.size} dist=${dist.size}")
-      assert(driver.nonEmpty && driver.exists(!_._2._1),
-        "expected at least one winning tombstone in the parity log")
-    } finally spark.conf.unset("graft.replay.driverMaxBytes")
+    try assert(kept() == want, "distributed replay")
+    finally spark.conf.unset("graft.replay.driverMaxBytes")
   }
 }

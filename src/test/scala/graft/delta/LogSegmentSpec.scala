@@ -35,6 +35,38 @@ class LogSegmentSpec extends AnyFunSuite {
     assert(snap.toDF.count() == src.count() * 3)
   }
 
+  test("segment files carry their listed lengths, a catalog tail's too") {
+    val dir = TestSpark.tmpDir("seglen")
+    val src = li
+    DeltaTable.create(spark, dir, src.schema)
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(src)
+    t.checkpoint()
+    t.append(src.limit(50))
+    t.append(src.limit(7))
+    val fs = Storage.fs(new Path(dir), spark.sessionState.newHadoopConf())
+    val logDir = FileNames.logDir(new Path(dir))
+    def assertOnDisk(seg: LogSegment): Unit =
+      (seg.deltas ++ seg.checkpointParts).foreach { f =>
+        assert(f.length > 0 && f.length == fs.getFileStatus(f.path).getLen,
+          f.path.toString)
+      }
+    val listed = LogSegment.forVersion(fs, logDir)
+    assert(listed.deltas.size == 2 && listed.checkpointParts.size == 1)
+    assertOnDisk(listed)
+    // the catalog's ratified copy of v3, one byte longer than the
+    // published commit it supersedes
+    val staged = FileNames.stagedCommitFile(logDir, 3L, "tail")
+    Storage.put(fs, staged,
+      Storage.readLines(fs, FileNames.commitFile(logDir, 3L))
+        .mkString("", "\n", "\n\n"))
+    val tailed = LogSegment.forVersion(fs, logDir, None,
+      Seq(CatalogCommit(3L, staged)))
+    assert(tailed.deltas.last.path == staged)
+    assert(tailed.deltas.last.length != listed.deltas.last.length)
+    assertOnDisk(tailed)
+  }
+
   test("corrupt or stale hint falls back to the full listing") {
     val dir = TestSpark.tmpDir("hint-bad")
     val src = li

@@ -110,8 +110,12 @@ class PlanQualitySpec extends AnyFunSuite {
     t.append(src.filter($"l_quantity" < 3))
     t.checkpoint()
     t.append(src.filter($"l_quantity" >= 3))
-    val plan = t.snapshot().latestActions
+    // a log this small replays on the driver; the plan under test is
+    // the distributed one
+    spark.conf.set("graft.replay.driverMaxBytes", "0")
+    val plan = try t.snapshot().latestActions
       .queryExecution.executedPlan.toString
+    finally spark.conf.unset("graft.replay.driverMaxBytes")
     assert(plan.contains("BroadcastHashJoin"), plan.take(600))
     assert(!plan.contains("BroadcastNestedLoop"), plan.take(600))
   }

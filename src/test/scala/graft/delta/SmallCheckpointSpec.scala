@@ -1,15 +1,17 @@
 package graft.delta
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The small-checkpoint driver collect (Snapshot.ckptRowsSmall): one
-  * scan of a small classic checkpoint feeds latestActions' checkpoint
-  * arm, setTransactions and domainMetadatas. These pins hold it
-  * EQUIVALENT to the distributed path (forced via
-  * graft.replay.driverMaxBytes=0) on a table exercising all three
-  * consumers at once.
+/** The driver-small replay (Snapshot.smallState): one driver pass over
+  * the commits and an in-process read of a small classic checkpoint
+  * feeds latestActions, the file listing, setTransactions and
+  * domainMetadatas. These pins hold it EQUIVALENT to the distributed
+  * path (forced via graft.replay.driverMaxBytes=0), and hold it free of
+  * Spark jobs.
   */
 class SmallCheckpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -54,6 +56,82 @@ class SmallCheckpointSpec extends AnyFunSuite {
       Map("appA" -> ((3L, None)), "appB" -> ((7L, Some(99L)))))
     assert(txnsFast == txnsDist)
     assert(domsFast.contains(Clustering.DOMAIN) && domsFast == domsDist)
+  }
+
+  test("driver-small open, file listing, txns and domain metadata of a " +
+      "checkpointed table launch no Spark job") {
+    val dir = build()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val snap = Snapshot.forTable(spark, dir)
+      val all = snap.scanBuilder().build().collectAddFiles(slim = true)
+      val pruned = snap.scanBuilder().withPredicate("k > 95").build()
+        .collectAddFiles(slim = true)
+      val txns = snap.setTransactions
+      val doms = snap.domainMetadatas
+      TestListenerBus.drain(sc)
+      assert(snap.segment.checkpointParts.nonEmpty && snap.smallState)
+      assert(pruned.nonEmpty && pruned.size < all.size)
+      assert(txns.size == 2 && doms.exists(_.domain == Clustering.DOMAIN))
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("driver and distributed replay keep the same files: no, classic " +
+      "and multi-part checkpoint; partition and stats predicates; DVs " +
+      "on a column-mapped table") {
+    val dir = TestSpark.tmpDir("smallparity")
+    def rows(lo: Int, hi: Int) = (lo to hi)
+      .map(i => (i.toLong, Seq("a", "b", "c")(i % 3), s"v$i"))
+      .toDF("k", "p", "s")
+    DeltaTable.create(spark, dir, rows(1, 1).schema, Seq("p"),
+      Map(ColumnMapping.MODE_KEY -> "name",
+        "delta.enableDeletionVectors" -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    val preds = Seq(None, Some("p = 'b'"), Some("k >= 31 AND k <= 40"))
+    def kept(): Seq[Set[(String, Option[String])]] = {
+      val snap = Snapshot.forTable(spark, dir)
+      val small = snap.smallState
+      assert(small == spark.conf.getOption("graft.replay.driverMaxBytes")
+        .isEmpty)
+      preds.map { p =>
+        val b = snap.scanBuilder()
+        p.foreach(b.withPredicate)
+        b.build().collectAddFiles(slim = true)
+          .map(a => (a.path, a.deletionVector.map(_.uniqueId))).toSet
+      }
+    }
+    def check(parts: Int): Unit = {
+      assert(t.snapshot().segment.checkpointParts.size == parts)
+      val driver = kept()
+      spark.conf.set("graft.replay.driverMaxBytes", "0")
+      val dist = try kept()
+        finally spark.conf.unset("graft.replay.driverMaxBytes")
+      assert(driver == dist, s"$parts checkpoint parts")
+      val Seq(all, part, stats) = driver
+      assert(all.exists(_._2.nonEmpty), "no file carries a DV")
+      assert(part.nonEmpty && part.size < all.size)
+      assert(stats.nonEmpty && stats.size < all.size)
+    }
+    t.append(rows(1, 30))
+    t.append(rows(31, 60))
+    t.deleteWhereDV("k % 10 = 3")
+    check(0)
+    t.checkpoint()
+    t.append(rows(61, 90))
+    t.deleteWhereDV("k = 35 OR k = 65")
+    check(1)
+    t.checkpointMultipart(2)
+    t.append(rows(91, 120))
+    t.deleteWhereDV("k = 36 OR k = 95")
+    check(2)
   }
 
   test("OPTIMIZE's layout-input cache never lingers past the rewrite") {
