@@ -32,9 +32,15 @@ object Clustering {
         .mkString(",")}]}""",
       removed = false)
 
-  /** Physical clustering column paths from the snapshot's domain. */
+  /** Physical clustering column paths from the snapshot's domain. A
+    * table whose protocol lacks the clustering writer feature has none
+    * (every writer of the domain adds the feature), so its domains are
+    * never read — on the driver-small path that read is a whole replay
+    * pass, checkpoint included, on every append.
+    */
   def physicalColumns(snap: Snapshot): Seq[Seq[String]] =
-    snap.domainMetadata(DOMAIN).toSeq.flatMap { cfg =>
+    if (!TableFeatures.supportsWriterFeature(snap.protocol, FEATURE)) Nil
+    else snap.domainMetadata(DOMAIN).toSeq.flatMap { cfg =>
       import scala.jdk.CollectionConverters._
       JsonLog.parseLine(cfg).path("clusteringColumns").elements().asScala
         .map(_.elements().asScala.map(_.asText).toSeq).toSeq

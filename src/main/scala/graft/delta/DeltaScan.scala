@@ -1,11 +1,11 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericRowWithSchema}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 
 import scala.jdk.CollectionConverters._
 
@@ -26,6 +26,14 @@ class ScanBuilder(snapshot: Snapshot) {
 
   def build(): DeltaScan = new DeltaScan(snapshot, predicateSql)
 }
+
+/** One file's result of [[DeltaScan.matchPerFile]]: its
+  * [[GraftFileIndex.fileKey]], matched and live row counts, and the
+  * matched row indexes as portable roaring-bitmap bytes (null unless
+  * asked for).
+  */
+private[graft] case class FileMatch(key: String, matched: Long,
+    live: Long, bitmap: Array[Byte])
 
 class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
   private val spark = snapshot.spark
@@ -210,38 +218,6 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
     out
   }
 
-  /** URI path (no scheme/authority) of `_metadata.file_path` — the join
-    * key tying rows back to their add action. `_metadata.file_path` is
-    * URI-encoded (space → %20, literal %% → %25) while the driver-side
-    * keys use decoded `Path.toUri.getPath`, so decode here; a literal '+'
-    * is legal in a URI path and must NOT decode to a space, hence the
-    * pre-escape.
-    */
-  private def normalizedMetaPath: Column =
-    normalizedPath(col("_metadata.file_path"))
-
-  private def normalizedPath(uri: Column): Column =
-    Storage.decodeUriPathCol(regexp_replace(uri, Storage.URI_PREFIX_REGEX, ""))
-
-  /** (matched rows, live rows) of each file among `adds` holding a row
-    * where `cond` holds, keyed as `__path` keys it. The key derives once
-    * per file, after the aggregate: derived per row, as `__path` is, it
-    * costs ~5× the predicate scan itself. `input_file_name` is read in
-    * the scan stage, before any exchange.
-    */
-  private[graft] def matchCounts(adds: Seq[AddFile],
-      cond: Column): Map[String, (Long, Long)] =
-    assemble(adds, keepMeta = false)
-      .select(input_file_name().as("__file"), cond.cast("long").as("__m"))
-      .groupBy(col("__file"))
-      .agg(sum(col("__m")).as("__m"), count(lit(1)).as("__n"))
-      .filter(col("__m") > 0)
-      .select(normalizedPath(col("__file")), col("__m"), col("__n"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-
-  private def decodePath(p: String): String = Storage.decodeUriPath(p)
-
   /** Stream the surviving SLIM adds to the driver one partition at a
     * time (`toLocalIterator`): the metadata query stays distributed and
     * the driver never holds a collected `Row` array plus a decoded
@@ -357,17 +333,13 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
       Seq(StructField(idCol, LongType), StructField(vCol, LongType))
     }
     val withMeta = assemble(adds, keepMeta = true, extraPhys)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = Storage.fs(snapshot.tableRoot, conf)
+    val fileKey = GraftFileIndex.fileKeyOf(spark, snapshot.tableRoot)
     val rtSchema = StructType(Seq(
       StructField("__path", StringType),
       StructField("__base", LongType),
       StructField("__dcv", LongType)))
     val rtRows: Seq[Row] = adds.map { a =>
-      val abs = fs.makeQualified(
-        Storage.childPath(snapshot.tableRoot, decodePath(a.path)))
-        .toUri.getPath
-      new GenericRowWithSchema(Array[Any](abs,
+      new GenericRowWithSchema(Array[Any](fileKey(a),
         a.baseRowId.map(Long.box).orNull,
         a.defaultRowCommitVersion.map(Long.box).orNull), rtSchema): Row
     }
@@ -388,8 +360,10 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
   }
 
   /** Assemble the logical rows of `adds`. With keepMeta=true the output
-    * also carries `__path` (normalized file path) and `__ridx`
-    * (row index within the file) — used by DV writes. `extraPhysical`
+    * also carries `__path` (the row's `_metadata.file_path`, verbatim:
+    * the [[GraftFileIndex.fileKey]] of its file, so driver-side lookups
+    * key through `fileKey` and no row re-derives it) and `__ridx` (row
+    * index within the file) — used by DV writes. `extraPhysical`
     * columns are read verbatim from the files and appended to the
     * output (e.g. the physical `_change_type` column of CDF
     * `_change_data` files).
@@ -495,7 +469,7 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
       .select(dataProjection ++
         constCols.map(c => col(quoteName(c))) ++
         extraPhysical.map(f => ColumnMapping.qcol(f.name)) ++
-        Seq(normalizedMetaPath.as("__path"),
+        Seq(col("_metadata.file_path").as("__path"),
           col("_metadata.row_index").as("__ridx")): _*)
 
     // DV row filtering (reference scan/mod.rs:1337-1399): per-file
@@ -533,6 +507,74 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
 }
 
 object DeltaScan {
+
+  /** The per-file match aggregate every predicate-DML path shares (both
+    * DELETE/UPDATE arms, equality-delete materialization): over `rows`,
+    * a `keepMeta` assemble, each file holding a row where `matched`
+    * holds, with its matched and live row counts and — only when
+    * `bitmaps` — the portable roaring bitmap of its matched row
+    * indexes, built on the executors (row positions never reach the
+    * driver; a file ships kilobytes of compressed bitmap). Grouped by
+    * `__path` with partial aggregation, so a task emits one row per
+    * file it read. Keys are [[GraftFileIndex.fileKey]]s.
+    */
+  private[graft] def matchPerFile(rows: DataFrame, matched: Column,
+      bitmaps: Boolean): Seq[FileMatch] = {
+    val perFile = rows.groupBy(col("__path"))
+    if (bitmaps)
+      perFile.agg(udaf(MatchBitmap, Encoders.tuple(Encoders.scalaLong,
+          Encoders.scalaBoolean))(col("__ridx"), matched).as("__agg"))
+        .filter(col("__agg._1") > 0)
+        .select(col("__path"), col("__agg._1"), col("__agg._2"),
+          col("__agg._3"))
+        .collect().toSeq
+        .map(r => FileMatch(r.getString(0), r.getLong(1), r.getLong(2),
+          r.getAs[Array[Byte]](3)))
+    else
+      perFile.agg(sum(matched.cast("long")).as("__m"),
+          count(lit(1)).as("__n"))
+        .filter(col("__m") > 0)
+        .collect().toSeq
+        .map(r => FileMatch(r.getString(0), r.getLong(1), r.getLong(2),
+          null))
+  }
+
+  /** Executor side of [[matchPerFile]]'s bitmap arm: (row index,
+    * matched) in, (matched, live, bitmap bytes) out. The buffer stays a
+    * live bitmap through partial aggregation and serializes only at the
+    * exchange.
+    */
+  private object MatchBitmap extends Aggregator[(Long, Boolean),
+      MatchBuffer, (Long, Long, Array[Byte])] {
+    def zero: MatchBuffer = new MatchBuffer
+    def reduce(b: MatchBuffer, in: (Long, Boolean)): MatchBuffer = {
+      b.live += 1
+      if (in._2) { b.matched += 1; b.rows.addLong(in._1) }
+      b
+    }
+    def merge(x: MatchBuffer, y: MatchBuffer): MatchBuffer = {
+      x.live += y.live
+      x.matched += y.matched
+      x.rows.or(y.rows)
+      x
+    }
+    def finish(b: MatchBuffer): (Long, Long, Array[Byte]) =
+      (b.matched, b.live, DeletionVectors.bitmapBytes(b.rows))
+    def bufferEncoder: Encoder[MatchBuffer] =
+      Encoders.javaSerialization[MatchBuffer]
+    def outputEncoder: Encoder[(Long, Long, Array[Byte])] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.BINARY)
+  }
+
+  /** [[MatchBitmap]]'s buffer (public: Spark's encoders reject
+    * non-public classes).
+    */
+  final class MatchBuffer extends Serializable {
+    var matched = 0L
+    var live = 0L
+    val rows = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+  }
 
   /** Harvest executor-attributed phase times from an executed plan's
     * SQL metrics (reference ScanMetadataCompleted's per-phase

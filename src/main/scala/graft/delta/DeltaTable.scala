@@ -1250,10 +1250,11 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   /** The one predicate DELETE/UPDATE routine (DELETE is UPDATE with no
     * assignments, `set` None), in both arms:
-    *  - one match pass over the slim stats-skipped candidates names the
-    *    files holding a matching row (`DeltaScan.matchCounts`; the DV
-    *    arm's [[dvMatchPerFile]] also builds their bitmaps); a call that
-    *    matches none commits nothing and returns the current version;
+    *  - one match aggregate over the slim stats-skipped candidates
+    *    ([[DeltaScan.matchPerFile]]) names the files holding a matching
+    *    row with their matched and live counts (the DV arm also takes
+    *    their bitmaps); a call that matches none commits nothing and
+    *    returns the current version;
     *  - the rewrite arm re-stages the matched files as their surviving
     *    rows plus the assigned copies; a DELETE without a change feed
     *    drops fully matched files unread;
@@ -1283,21 +1284,20 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val candidates = scan.collectAddFiles(slim = true)
     if (candidates.isEmpty) return snap.version
     val cond = coalesce(expr(predicateSql), lit(false))
-    val dvFiles =
-      if (dv) dvMatchPerFile(scan, candidates, predicateSql) else Nil
-    val counts =
-      if (dv) dvFiles.map(f => f._1 -> (f._3, f._4)).toMap
-      else scan.matchCounts(candidates, cond)
-    val byPath = keyedByPath(candidates)
-    val matchedAdds = byPath.collect { case (k, a) if counts.contains(k) => a }
-    if (matchedAdds.isEmpty) return snap.version
+    val matches = DeltaScan.matchPerFile(
+      scan.assemble(candidates, keepMeta = true), cond, bitmaps = dv)
+      .map(m => m.key -> m).toMap
+    val fileKey = GraftFileIndex.fileKeyOf(spark, root)
+    val matched = candidates.flatMap(a => matches.get(fileKey(a)).map(a -> _))
+    if (matched.isEmpty) return snap.version
+    val matchedAdds = matched.map(_._1)
     val cdf = TableChanges.cdfEnabled(snap.metadata)
     // a DELETE's fully matched files leave no survivors: only the
     // rewrite arm's change feed reads them
     val readAdds =
       if (set.isEmpty && dv) Nil
-      else if (set.isEmpty && !cdf) byPath.collect {
-        case (k, a) if counts.get(k).exists { case (m, n) => m < n } => a }
+      else if (set.isEmpty && !cdf)
+        matched.collect { case (a, m) if m.matched < m.live => a }
       else matchedAdds
 
     val (newAdds, cdcActions) =
@@ -1326,27 +1326,16 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       }
     // the re-adds keep their original stats, fetched by reference as
     // the candidate collect was slim
-    val partial = dvFiles.filter(f => f._3 != f._4)
-    val byKey = byPath.toMap
-    val swapped = dvSwapAdds(partial, byKey,
-      statsForPaths(scan, partial.map(f => byKey(f._1).path).toSet))
+    val partial =
+      if (dv) matched.filter { case (_, m) => m.matched != m.live } else Nil
+    val swapped = dvSwapAdds(partial,
+      statsForPaths(scan, partial.map(_._1.path).toSet))
     val (newAddsRt, domains) = assignRowIds(snap, newAdds)
     commit(Some(snap), op, Map("predicate" -> predicateSql),
       Actions(protocol = if (dv) dvUpgrade(snap) else None, domains = domains,
         removes = matchedAdds.map(tombstone(_, dataChange = true)),
         adds = swapped ++ newAddsRt, cdc = cdcActions),
       Reads(Some(predicateSql)))
-  }
-
-  /** Each add keyed by the qualified, URI-decoded path its rows report
-    * as `__path` — the key joining per-file match results back to the
-    * adds, in input order.
-    */
-  private[graft] def keyedByPath(
-      adds: Seq[AddFile]): Seq[(String, AddFile)] = {
-    val qfs = fs
-    adds.map(a => qfs.makeQualified(Storage.childPath(root,
-      Storage.decodeUriPath(a.path))).toUri.getPath -> a)
   }
 
   /** Read specific add files with partition values injected. */
@@ -1422,33 +1411,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     } ++ rtCols.map(ColumnMapping.qcol): _*)
   }
 
-  /** ONE distributed pass per candidate file: build the new-deletion
-    * bitmap ON THE EXECUTORS (groupByKey + mapGroups — compressed
-    * bitmap bytes travel to the driver, never row-index lists; a
-    * 1B-row DELETE funnels kilobytes, not gigabytes) and count
-    * matched/live rows for the fully-deleted-file check. Returns the
-    * files holding a matching row: the DV arm's match pass.
-    */
-  private def dvMatchPerFile(scan: DeltaScan, candidates: Seq[AddFile],
-      predicateSql: String): Seq[(String, Array[Byte], Long, Long)] = {
-    val withMeta = scan.assemble(candidates, keepMeta = true)
-    import spark.implicits._
-    withMeta.select(col("__path"), col("__ridx"),
-        coalesce(expr(predicateSql), lit(false)).as("__m"))
-      .as[(String, Long, Boolean)]
-      .groupByKey(_._1)
-      .mapGroups { (path: String, it: Iterator[(String, Long, Boolean)]) =>
-        val rb = new org.roaringbitmap.longlong.Roaring64NavigableMap()
-        var live = 0L
-        var matched = 0L
-        it.foreach { case (_, ridx, m) =>
-          live += 1
-          if (m) { matched += 1; rb.addLong(ridx) }
-        }
-        (path, DeletionVectors.bitmapBytes(rb), matched, live)
-      }.filter(_._3 > 0).collect().toSeq
-  }
-
   /** The DV-swap re-adds, built once for every DV writer: each partly
     * matched file's new bitmap merges with its existing DV at BITMAP
     * level (assemble already excluded old-DV rows, so cardinalities
@@ -1459,19 +1421,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * PHYSICAL file (protocol contract — external readers may otherwise
     * do metadata-only aggregates over dead rows).
     */
-  private def dvSwapAdds(
-      partialFiles: Seq[(String, Array[Byte], Long, Long)],
-      byPath: Map[String, AddFile],
+  private def dvSwapAdds(partialFiles: Seq[(AddFile, FileMatch)],
       statsOf: Map[String, String]): Seq[AddFile] = {
     val conf = hconf
     val merged: Seq[(String, Array[Byte], Long)] = partialFiles.map {
-      case (p, bytes, matched, _) =>
-        byPath(p).deletionVector match {
+      case (a, m) =>
+        a.deletionVector match {
           case Some(old) =>
             val oldBytes = DeletionVectors.readBitmapBytes(old, root, conf)
-            (p, DeletionVectors.orBitmaps(oldBytes, bytes),
-              old.cardinality + matched)
-          case None => (p, bytes, matched)
+            (a.path, DeletionVectors.orBitmaps(oldBytes, m.bitmap),
+              old.cardinality + m.matched)
+          case None => (a.path, m.bitmap, m.matched)
         }
     }
     val (inlineSized, fileSized) = merged.partition {
@@ -1483,9 +1443,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }.toMap ++
       (if (fileSized.isEmpty) Map.empty[String, DeletionVectorDescriptor]
        else DeletionVectors.writeBitmaps(fileSized, root, conf))
-    partialFiles.map { case (p, _, _, _) =>
-      val a = byPath(p)
-      a.copy(deletionVector = Some(descs(p)), dataChange = true,
+    partialFiles.map { case (a, _) =>
+      a.copy(deletionVector = Some(descs(a.path)), dataChange = true,
         stats = statsOf.get(a.path).orElse(a.stats)
           .map(StatsJson.markNonTight))
     }
@@ -1520,16 +1479,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * [[graft.delta.EqualityDeletes.commitAsDeletionVectors]]
     * materializes tree-level equality deletes into the log.
     */
-  private[graft] def commitDvSwaps(snap: Snapshot, gonePaths: Seq[String],
-      partialFiles: Seq[(String, Array[Byte], Long, Long)],
-      byPath: Map[String, AddFile], opName: String,
+  private[graft] def commitDvSwaps(snap: Snapshot, gone: Seq[AddFile],
+      partialFiles: Seq[(AddFile, FileMatch)], opName: String,
       opParams: Map[String, String],
       readPredicate: Option[String]): Long =
     commit(Some(snap), opName, opParams,
       Actions(protocol = dvUpgrade(snap),
-        removes = (gonePaths ++ partialFiles.map(_._1))
-          .map(p => tombstone(byPath(p), dataChange = true)),
-        adds = dvSwapAdds(partialFiles, byPath, Map.empty)),
+        removes = (gone ++ partialFiles.map(_._1))
+          .map(tombstone(_, dataChange = true)),
+        adds = dvSwapAdds(partialFiles, Map.empty)),
       Reads(readPredicate))
 
   /** The first-use deletionVectors protocol upgrade, None when the
@@ -1631,7 +1589,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           val touched = withMeta.alias("t").join(src, cond, "inner")
             .select(col("__path")).distinct()
             .collect().map(_.getString(0)).toSet
-          keyedByPath(allAdds).collect { case (k, a) if touched(k) => a }
+          val fileKey = GraftFileIndex.fileKeyOf(spark, root)
+          allAdds.filter(a => touched(fileKey(a)))
         }
 
       val cdf = TableChanges.cdfEnabled(snap.metadata)

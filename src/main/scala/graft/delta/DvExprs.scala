@@ -11,7 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * UDF here would sever WholeStageCodegen on every DV-table scan; a
   * native Expression keeps the whole scan → mask-filter → project
   * pipeline in one generated loop, with the broadcast bitmap handle
-  * materialized once as a codegen reference object.
+  * materialized once as a codegen reference object. The path child is
+  * the scan's `_metadata.file_path` verbatim (`__path`), probed as the
+  * `UTF8String` it already is.
   */
 case class DvLiveExpr(left: Expression, right: Expression,
     masks: Broadcast[DvMasks]) extends BinaryExpression {
@@ -20,7 +22,8 @@ case class DvLiveExpr(left: Expression, right: Expression,
   override def prettyName: String = "dv_live"
 
   override protected def nullSafeEval(path: Any, ridx: Any): Any =
-    !masks.value.contains(path.toString, ridx.asInstanceOf[Long])
+    !masks.value.contains(path.asInstanceOf[UTF8String],
+      ridx.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -28,7 +31,7 @@ case class DvLiveExpr(left: Expression, right: Expression,
       classOf[Broadcast[DvMasks]].getName)
     nullSafeCodeGen(ctx, ev, (p, r) =>
       s"${ev.value} = !((graft.delta.DvMasks) $bc.value())" +
-        s".contains($p.toString(), $r);")
+        s".contains($p, $r);")
   }
 
   override protected def withNewChildrenInternal(
@@ -65,49 +68,13 @@ case class DvResolveLocExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Codegen'd CDF DV-swap tagger: "insert" (row restored by the swap),
-  * "delete" (newly deleted), or NULL (row not part of the change).
-  */
-case class DvChangeExpr(left: Expression, right: Expression,
-    masks: Broadcast[DvSwapMasks]) extends BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dv_change"
-
-  override protected def nullSafeEval(path: Any, ridx: Any): Any = {
-    val tag = masks.value.changeOf(path.toString,
-      ridx.asInstanceOf[Long])
-    if (tag == null) null else UTF8String.fromString(tag)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val bc = ctx.addReferenceObj("dvSwapMasks", masks,
-      classOf[Broadcast[DvSwapMasks]].getName)
-    nullSafeCodeGen(ctx, ev, (p, r) => {
-      val tag = ctx.freshName("tag")
-      s"""String $tag = ((graft.delta.DvSwapMasks) $bc.value())
-         |  .changeOf($p.toString(), $r);
-         |if ($tag == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = UTF8String.fromString($tag); }
-         |""".stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Version-keyed CDF DV-swap tagger for the COLLAPSED range plan: when
   * one scan arm serves DV-swap files from MANY commits (the reference
   * `Load` operator's file-constant commit version,
   * kernel/src/plans/ir/nodes.rs:330-472), the same data file can be
   * swapped in several in-range commits, so the mask lookup must key on
-  * (commit version, path) — the version rides in as a per-file
-  * constant partition column. Mask keys are `"<version>:<absPath>"`
-  * (unambiguous: a version has no ':').
+  * (commit version, `_metadata.file_path`) — the version rides in as a
+  * per-file constant partition column.
   */
 case class DvChangeAtExpr(first: Expression, second: Expression,
     third: Expression, masks: Broadcast[DvSwapMasks])
@@ -118,12 +85,9 @@ case class DvChangeAtExpr(first: Expression, second: Expression,
   override def prettyName: String = "dv_change_at"
 
   override protected def nullSafeEval(
-      version: Any, path: Any, ridx: Any): Any = {
-    val tag = masks.value.changeOf(
-      version.asInstanceOf[Long].toString + ":" + path.toString,
-      ridx.asInstanceOf[Long])
-    if (tag == null) null else UTF8String.fromString(tag)
-  }
+      version: Any, path: Any, ridx: Any): Any =
+    masks.value.changeOf(version.asInstanceOf[Long],
+      path.asInstanceOf[UTF8String], ridx.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -131,10 +95,10 @@ case class DvChangeAtExpr(first: Expression, second: Expression,
       classOf[Broadcast[DvSwapMasks]].getName)
     nullSafeCodeGen(ctx, ev, (v, p, r) => {
       val tag = ctx.freshName("tag")
-      s"""String $tag = ((graft.delta.DvSwapMasks) $bc.value())
-         |  .changeOf($v + ":" + $p.toString(), $r);
+      s"""UTF8String $tag = ((graft.delta.DvSwapMasks) $bc.value())
+         |  .changeOf($v, $p, $r);
          |if ($tag == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = UTF8String.fromString($tag); }
+         |else { ${ev.value} = $tag; }
          |""".stripMargin
     })
   }

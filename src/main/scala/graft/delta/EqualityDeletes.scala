@@ -151,7 +151,7 @@ object EqualityDeletes {
     * delete commits accumulated. Each row's sequence resolves from the
     * stored [[SEQ_COL]] constant when its file carries one, falling
     * back to the registered descriptor's sequence broadcast-joined on
-    * the normalized file path — so foreign delete files (an Iceberg
+    * the file's `_metadata.file_path` — so foreign delete files (an Iceberg
     * writer stores no sequence column; descriptors can point at them)
     * mix freely with graft-written files in one group instead of
     * reading a NULL sequence that silently never matches. Duplicate
@@ -166,11 +166,11 @@ object EqualityDeletes {
     val fs = Storage.fs(rootPath, spark.sessionState.newHadoopConf())
     val paths = files.map(f =>
       tableRoot.stripSuffix("/") + "/" + f.location)
-    // descriptor sequence keyed by the same normalized URI path the
-    // scan's `_metadata.file_path` reduces to (O(#delete files) rows)
+    // descriptor sequence keyed as the scan reports `_metadata.file_path`
+    // (O(#delete files) rows)
     val seqByPath = files.map { f =>
-      fs.makeQualified(Storage.childPath(rootPath, f.location))
-        .toUri.getPath -> f.sequenceNumber
+      GraftFileIndex.fileKey(fs.makeQualified(
+        Storage.childPath(rootPath, f.location))) -> f.sequenceNumber
     }
     import spark.implicits._
     val descSeq = broadcast(seqByPath.toDF("__fp", "__dseq"))
@@ -188,8 +188,7 @@ object EqualityDeletes {
     // file's deletes from the anti-join
     val resolvedSeq = coalesce(col(SEQ_COL), col("__dseq"))
     val keyed = one
-      .withColumn("__fp", Storage.decodeUriPathCol(regexp_replace(
-        col("_metadata.file_path"), Storage.URI_PREFIX_REGEX, "")))
+      .withColumn("__fp", col("_metadata.file_path"))
       .join(descSeq, Seq("__fp"), "left")
       .select(names.map(col) :+
         when(resolvedSeq.isNull, raise_error(concat(
@@ -353,42 +352,31 @@ object EqualityDeletes {
     (withSeq, deletes)
   }
 
-  /** Matched rows of the sequence-ordered apply as per-file bitmaps:
-    * assemble the tree's live data with `keepMeta` (so `__path` /
-    * `__ridx` surface), semi-join each equality-id group (a row
-    * matching several groups lands twice — the bitmap absorbs it),
-    * fold row indexes into portable roaring bitmaps on the EXECUTORS.
-    * Returns (the assembled data frame for follow-up aggregates, the
-    * collected per-file (normalized path, bitmap bytes, count)).
+  /** Files of the tree's live data holding a row the sequence-ordered
+    * apply deletes, through the shared per-file match aggregate
+    * ([[DeltaScan.matchPerFile]]): each equality-id group left-joins
+    * onto the data (its keys are unique, so every data row stays one
+    * row) and flags the rows it matches; the aggregate returns each
+    * matched file's matched and live counts and the bitmap of its
+    * matched row indexes, built on the executors.
     */
-  private def matchedBitmaps(snap: Snapshot,
+  private def matchedFiles(snap: Snapshot,
       withSeq: Seq[(AddFile, Long)], deletes: Seq[EqDeleteFile])
-      : (DataFrame, Array[(String, Array[Byte], Long)]) = {
-    val spark = snap.spark
-    val tableRoot = snap.tableRoot.toString
-    val scan = snap.scanBuilder().build()
-    val data = scan.assembleWithConstants(
+      : Seq[FileMatch] = {
+    val data = snap.scanBuilder().build().assembleWithConstants(
       withSeq.map { case (a, seq) => a -> Map("__seq" -> seq.toString) },
       Seq(StructField("__seq", LongType)), keepMeta = true)
-    val matched = deleteGroupFrames(spark, tableRoot, snap.dataSchema,
-      deletes).map { case (names, del) =>
-        val cond = names.map(n => data(n) <=> del(n)).reduce(_ && _) &&
-          data("__seq") < del(SEQ_COL)
-        data.join(del, cond, "left_semi").select(col("__path"), col("__ridx"))
-      }.reduce(_.union(_))
-    import spark.implicits._
-    val perFile: Array[(String, Array[Byte], Long)] = matched
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (path: String, it: Iterator[(String, Long)]) =>
-        val rb = new org.roaringbitmap.longlong.Roaring64NavigableMap()
-        var n = 0L
-        it.foreach { case (_, ridx) =>
-          if (!rb.contains(ridx)) { n += 1; rb.addLong(ridx) }
-        }
-        (path, DeletionVectors.bitmapBytes(rb), n)
-      }.collect()
-    (data, perFile)
+      .withColumn("__m", lit(false))
+    val flagged = deleteGroupFrames(snap.spark, snap.tableRoot.toString,
+      snap.dataSchema, deletes).foldLeft(data) { case (acc, (names, del)) =>
+        val cond = names.map(n => acc(n) <=> del(n)).reduce(_ && _) &&
+          acc("__seq") < del(SEQ_COL)
+        acc.join(del, cond, "left").select(
+          acc.columns.toSeq.filter(_ != "__m").map(c =>
+            acc(ColumnMapping.quoted(c))) :+
+            (acc("__m") || del(SEQ_COL).isNotNull).as("__m"): _*)
+      }
+    DeltaScan.matchPerFile(flagged, col("__m"), bitmaps = true)
   }
 
   /** Materialize a tree's equality deletes into the DELTA LOG as a
@@ -427,39 +415,24 @@ object EqualityDeletes {
       return (snap.version, ContentTree.writeTree(snap, cleaned,
         ContentTree.DEFAULT_LEAF_FANOUT))
     }
-    val (data, perFile) = matchedBitmaps(snap, withSeq, deletes)
+    val perFile = matchedFiles(snap, withSeq, deletes)
     if (perFile.isEmpty) {
       return (snap.version, ContentTree.writeTree(snap, cleaned,
         ContentTree.DEFAULT_LEAF_FANOUT))
     }
-    // live row counts decide full-file deletes (remove without re-add)
-    // — only MATCHED files can be fully dead, so the count restricts
-    // to them (a broadcast semi-join): the collect stays O(#matched),
-    // never O(#live files in the table)
-    val matchedPathsDf = {
-      import spark.implicits._
-      broadcast(perFile.map(_._1).toSeq.toDF("__path"))
-    }
-    val liveCounts: Map[String, Long] = data
-      .join(matchedPathsDf, Seq("__path"), "left_semi")
-      .groupBy(col("__path"))
-      .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // commit identity comes from the LOG's own adds — path encoding,
     // stats and DV descriptors must match the log's current lines, not
     // the tree's re-derived (URI-decoded, statless) view of them
-    val byPath =
-      t.keyedByPath(snap.scanBuilder().build().collectAddFiles()).toMap
-    require(perFile.forall(p => byPath.contains(p._1)),
+    val fileKey = GraftFileIndex.fileKeyOf(spark, snap.tableRoot)
+    val byPath = snap.scanBuilder().build().collectAddFiles()
+      .map(a => fileKey(a) -> a).toMap
+    require(perFile.forall(m => byPath.contains(m.key)),
       "tree is stale against the snapshot — advance or rebuild it " +
         "before materializing its equality deletes")
-    val matchedFiles = perFile.toSeq.map { case (p, bits, n) =>
-      (p, bits, n, liveCounts.getOrElse(p, n))
-    }
-    val (gone, partial) = matchedFiles.partition {
-      case (_, _, matched, live) => matched == live
-    }
-    val committed = t.commitDvSwaps(snap, gone.map(_._1), partial,
-      byPath, "DELETE",
+    // a file whose every live row matched is removed without a re-add
+    val (gone, partial) = perFile.partition(m => m.matched == m.live)
+    val committed = t.commitDvSwaps(snap, gone.map(m => byPath(m.key)),
+      partial.map(m => byPath(m.key) -> m), "DELETE",
       Map("mode" -> "equality-delete-materialization",
         "deleteFiles" -> deletes.size.toString),
       readPredicate = None)
@@ -472,39 +445,35 @@ object EqualityDeletes {
     // verbatim) — deriving it directly skips the interim cleaned-tree
     // write plus updateRoot's log-diff replay and bitmap re-reads.
     val conf = spark.sessionState.newHadoopConf()
-    // tree entry paths come from entryToAdd ALREADY URI-decoded (the
-    // tree stores decoded locations) — decoding again would mis-key a
-    // file name containing a literal percent-escape
-    val byPathTree: Map[String, AddFile] = withSeq.map { case (a, _) =>
-      fs.makeQualified(Storage.childPath(snap.tableRoot, a.path))
-        .toUri.getPath -> a
-    }.toMap
+    // keyed as the scan served the tree's adds
+    val byPathTree: Map[String, AddFile] =
+      withSeq.map { case (a, _) => fileKey(a) -> a }.toMap
     // merged DVs for the surviving swapped files, persisted tree-side
     // (tree metadata cannot reference the inline descriptors the log
     // commit may have routed small bitmaps into)
     val mergedTree: Seq[(String, Array[Byte], Long)] =
-      partial.map { case (p, newBits, n, _) =>
-        val a = byPathTree(p)
+      partial.map { m =>
+        val a = byPathTree(m.key)
         a.deletionVector match {
           case Some(old) =>
             (a.path, DeletionVectors.orBitmaps(
               DeletionVectors.readBitmapBytes(old, snap.tableRoot, conf),
-              newBits), old.cardinality + n)
-          case None => (a.path, newBits, n)
+              m.bitmap), old.cardinality + m.matched)
+          case None => (a.path, m.bitmap, m.matched)
         }
       }
     val treeDescs =
       if (mergedTree.isEmpty) Map.empty[String, DeletionVectorDescriptor]
       else DeletionVectors.writeBitmaps(mergedTree, snap.tableRoot,
         conf, prefix = "_delta_log/_amt")
-    val updates = partial.map { case (p, newBits, _, _) =>
-      val a = byPathTree(p)
+    val updates = partial.map { m =>
+      val a = byPathTree(m.key)
       val info = ContentTree.extractDeletionVectorContent(
         treeDescs(a.path))
       (a.path, info.location, info.offset, info.sizeInBytes,
-        info.cardinality, newBits, false)
-    } ++ gone.map { case (p, _, _, _) =>
-      (byPathTree(p).path, null: String, 0L, 0L, 0L,
+        info.cardinality, m.bitmap, false)
+    } ++ gone.map { m =>
+      (byPathTree(m.key).path, null: String, 0L, 0L, 0L,
         null: Array[Byte], true)
     }
     import spark.implicits._
@@ -595,35 +564,33 @@ object EqualityDeletes {
       numLeaves)
     if (withSeq.isEmpty) return droppedOnly()
 
-    val (_, perFile) = matchedBitmaps(snap, withSeq, deletes)
+    val perFile = matchedFiles(snap, withSeq, deletes)
     if (perFile.isEmpty) return droppedOnly()
 
-    // normalized scan path -> tree entry location; tree paths are
-    // ALREADY decoded (entryToAdd), so no second decodeUriPath here
-    val byPath: Map[String, (AddFile, Long)] = withSeq.map { case (a, s) =>
-      fs.makeQualified(Storage.childPath(snap.tableRoot, a.path))
-        .toUri.getPath -> (a, s)
-    }.toMap
+    // scan key -> tree entry, keyed as the scan served the tree's adds
+    val fileKey = GraftFileIndex.fileKeyOf(spark, snap.tableRoot)
+    val byPath: Map[String, AddFile] =
+      withSeq.map { case (a, _) => fileKey(a) -> a }.toMap
     // merge with existing DVs at bitmap level; assemble already
     // excluded old-DV rows, so cardinalities simply add
-    val merged = perFile.toSeq.map { case (p, newBits, n) =>
-      val (add, _) = byPath(p)
+    val merged = perFile.map { m =>
+      val add = byPath(m.key)
       add.deletionVector match {
         case Some(old) =>
           val oldBytes = DeletionVectors.readBitmapBytes(old,
             snap.tableRoot, conf)
-          (add.path, DeletionVectors.orBitmaps(oldBytes, newBits),
-            old.cardinality + n)
-        case None => (add.path, newBits, n)
+          (add.path, DeletionVectors.orBitmaps(oldBytes, m.bitmap),
+            old.cardinality + m.matched)
+        case None => (add.path, m.bitmap, m.matched)
       }
     }
     val descs = DeletionVectors.writeBitmaps(merged, snap.tableRoot,
       conf, prefix = "_delta_log/_amt")
-    val updates = perFile.toSeq.map { case (p, newBits, n) =>
-      val (add, _) = byPath(p)
+    val updates = perFile.map { m =>
+      val add = byPath(m.key)
       val info = ContentTree.extractDeletionVectorContent(descs(add.path))
       (add.path, info.location, info.offset, info.sizeInBytes,
-        info.cardinality, newBits)
+        info.cardinality, m.bitmap)
     }
     import spark.implicits._
     val updDf = broadcast(updates.toDF(

@@ -1,6 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression}
@@ -26,7 +27,8 @@ import scala.collection.mutable
   * `Row` array, and the index simultaneously. At 10⁷ files that is the
   * difference between one copy of the split list (which Spark's scan
   * exec materializes regardless — the delta-spark envelope) and three.
-  * DV descriptors surviving the same pass ride along as [[dvRefs]].
+  * DV descriptors surviving the same pass ride along as [[dvRefs]],
+  * keyed by [[GraftFileIndex.fileKey]].
   */
 class GraftFileIndex private (
     spark: SparkSession,
@@ -80,6 +82,34 @@ class GraftFileIndex private (
 
 object GraftFileIndex {
 
+  /** The row key of a data file: exactly the string Spark's scan
+    * reports as `_metadata.file_path` for the `FileStatus` at `path`
+    * (Spark 4.1 `FileFormat.BASE_METADATA_EXTRACTORS`:
+    * `new Path(pf.filePath.toPath.toString).toUri.toString`). Scans
+    * carry that column verbatim as `__path`, so every per-file mask,
+    * match result and join keys through here and no row ever
+    * re-derives its file's identity.
+    */
+  def fileKey(path: Path): String =
+    new Path(SparkPath.fromPath(path).toPath.toString).toUri.toString
+
+  /** [[fileKey]] of the file an index over `tableRoot` serves for an
+    * add — the driver side of every per-file lookup against `__path`.
+    * Qualifies the root once.
+    */
+  def fileKeyOf(spark: SparkSession, tableRoot: Path): AddFile => String = {
+    val root = qualifiedRoot(spark, tableRoot)
+    a => fileKey(filePath(root, a))
+  }
+
+  private def qualifiedRoot(spark: SparkSession, tableRoot: Path): Path =
+    Storage.fs(tableRoot, spark.sessionState.newHadoopConf())
+      .makeQualified(tableRoot)
+
+  /** The data file an index rooted at `root` serves for `a`. */
+  private def filePath(root: Path, a: AddFile): Path =
+    Storage.childPath(root, Storage.decodeUriPath(a.path))
+
   /** Single-pass streaming construction: group files by partition
     * values, collect DV references, and sum sizes while the iterator
     * drains (one bounded batch in flight when fed from
@@ -96,20 +126,18 @@ object GraftFileIndex {
       adds: Iterator[AddFile]): (
       IndexedSeq[(Map[String, String], Array[FileStatus])],
       Seq[(String, DeletionVectorDescriptor)], Long) = {
-    val fs = Storage.fs(tableRoot, spark.sessionState.newHadoopConf())
-    val qualifiedRoot = fs.makeQualified(tableRoot)
+    val root = qualifiedRoot(spark, tableRoot)
     val groups = mutable.LinkedHashMap
       .empty[Map[String, String], mutable.ArrayBuffer[FileStatus]]
     val dv = mutable.ArrayBuffer.empty[(String, DeletionVectorDescriptor)]
     var total = 0L
     adds.foreach { a =>
-      val abs = Storage.childPath(qualifiedRoot,
-        Storage.decodeUriPath(a.path))
+      val abs = filePath(root, a)
       val st = new FileStatus(a.size, false, 1, 128L << 20,
         a.modificationTime, abs)
       groups.getOrElseUpdate(a.partitionValues,
         mutable.ArrayBuffer.empty[FileStatus]) += st
-      a.deletionVector.foreach(d => dv += abs.toUri.getPath -> d)
+      a.deletionVector.foreach(d => dv += fileKey(abs) -> d)
       total += a.size
     }
     // canonical group order: the handoff arrives in shuffle-fetch

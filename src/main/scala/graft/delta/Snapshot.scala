@@ -516,12 +516,9 @@ object Snapshot {
   private def footerSchema(path: Path,
       conf: org.apache.hadoop.conf.Configuration)
       : org.apache.parquet.schema.MessageType = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf, path)
-        .withMetadataFilter(org.apache.parquet.format.converter
-          .ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
+    ParquetFooterStats.readFooter(path, conf, org.apache.parquet.format
+      .converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .getFileMetaData.getSchema
   }
 
   /** Does a classic-named single-part checkpoint carry V2 content?

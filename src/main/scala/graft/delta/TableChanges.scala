@@ -320,7 +320,8 @@ object TableChanges {
     val deleteFiles = ArrayBuffer.empty[(Long, AddFile, Map[String, String])]
     val pairFiles = ArrayBuffer.empty[(AddFile, Map[String, String])]
     val swaps = scala.collection.mutable.Map
-      .empty[String, (Array[Byte], Array[Byte])]
+      .empty[Long, Map[String, (Array[Byte], Array[Byte])]]
+    val fileKey = GraftFileIndex.fileKeyOf(spark, root)
 
     parsed.foreach { case (v, ts, fc) =>
       val c = consts(v, ts)
@@ -341,7 +342,7 @@ object TableChanges {
         // probe instead of a position join. Masks key on
         // (version, path): the same file can be swapped by several
         // in-range commits and all share the single pair arm.
-        fc.pairs.foreach { case (p, a, r) =>
+        fc.pairs.foreach { case (_, a, r) =>
           val addB = a.deletionVector
             .map(DeletionVectors.readBitmapBytes(_, root, conf))
             .getOrElse(DeletionVectors.emptyBitmap)
@@ -353,10 +354,8 @@ object TableChanges {
           if (DeletionVectors.cardinality(restored) > 0 ||
               DeletionVectors.cardinality(deleted) > 0) {
             pairFiles += ((a.copy(deletionVector = None), c))
-            val abs = fs.makeQualified(
-              Storage.childPath(root, Storage.decodeUriPath(p)))
-              .toUri.getPath
-            swaps(s"$v:$abs") = (restored, deleted)
+            swaps(v) = swaps.getOrElse(v, Map.empty) +
+              (fileKey(a) -> ((restored, deleted)))
           }
         }
       }

@@ -21,17 +21,28 @@ class DmlSpec extends AnyFunSuite {
     "deleteWhereDV" -> ((t, p) => t.deleteWhereDV(p)),
     "updateWhereDV" -> ((t, p) => t.updateWhereDV(p, Map("v" -> "v + 1"))))
 
+  /** Partition-value prefix of the odd shape: a space, `%` and `+`,
+    * which an add's path, the file's name and `_metadata.file_path`
+    * each spell differently.
+    */
+  private val odd = "a b%c+"
+
   /** 200 rows, CDF on, in 4 files (16 when partitioned on `p`); ids are
     * spread round-robin, so stats skipping keeps every file for a
-    * modulo predicate.
+    * modulo predicate. The odd shape is partitioned on string values
+    * prefixed by [[odd]] and tracks row ids.
     */
-  private def table(partitioned: Boolean): (String, DeltaTable) = {
+  private def table(partitioned: Boolean,
+      oddValues: Boolean = false): (String, DeltaTable) = {
     val dir = TestSpark.tmpDir("dml")
-    val df = spark.range(200).select($"id", ($"id" % 4).as("p"),
+    val p = if (oddValues) concat(lit(odd), ($"id" % 4).cast("string"))
+      else $"id" % 4
+    val df = spark.range(200).select($"id", p.as("p"),
       ($"id" * 10).as("v")).repartition(4)
     DeltaTable.create(spark, dir, df.schema,
       partitionColumns = if (partitioned) Seq("p") else Nil,
-      configuration = Map(TableChanges.CDF_ENABLED_KEY -> "true"))
+      configuration = Map(TableChanges.CDF_ENABLED_KEY -> "true") ++
+        (if (oddValues) Map(RowTracking.ENABLED_KEY -> "true") else Nil))
     val t = DeltaTable.forPath(spark, dir)
     t.append(df)
     (dir, t)
@@ -47,11 +58,16 @@ class DmlSpec extends AnyFunSuite {
     }
   }
 
-  for ((name, run) <- entryPoints; partitioned <- Seq(false, true)) {
-    val shape = if (partitioned) "a partitioned" else "an unpartitioned"
-    test(s"$name on $shape CDF table touches only the file holding the " +
+  private val shapes = Seq(
+    ("an unpartitioned CDF table", false, false),
+    ("a partitioned CDF table", true, false),
+    ("a row-tracked partitioned CDF table whose partition values hold " +
+      "a space, % and +", true, true))
+
+  for ((name, run) <- entryPoints; (shape, partitioned, oddValues) <- shapes) {
+    test(s"$name on $shape touches only the file holding the " +
       "matching row; a zero-match call commits nothing") {
-      val (dir, t) = table(partitioned)
+      val (dir, t) = table(partitioned, oddValues)
       val before = t.scan(None).collectAddFiles()
       assert(before.size == (if (partitioned) 16 else 4))
       val v0 = t.snapshot().version
@@ -91,6 +107,36 @@ class DmlSpec extends AnyFunSuite {
       assert(feed == want)
       assert(t.toDF.count() == (if (name.startsWith("delete")) 199 else 200))
     }
+  }
+
+  test("MERGE upsert and row-id read on a row-tracked partitioned table " +
+      "whose partition values hold a space, % and +") {
+    val (dir, t) = table(partitioned = true, oddValues = true)
+    def rowIds(): Map[Long, Long] = t.scan(None).toDFWithRowIds
+      .select($"id", $"_row_id").as[(Long, Long)].collect().toMap
+    val ids0 = rowIds()
+    assert(ids0.size == 200 && ids0.values.toSet.size == 200)
+    val src = Seq((7L, s"${odd}3", 1L), (500L, s"${odd}0", 5L))
+      .toDF("id", "p", "v")
+    import MergeClause._
+    val v = t.merge(src, "t.id = s.id", Seq(
+      MatchedUpdate(None, Map("v" -> "s.v")),
+      NotMatchedInsert(None, Map("id" -> "s.id", "p" -> "s.p",
+        "v" -> "s.v"))))
+    // only the file holding id 7 is touched
+    assert(logActions(dir, v).count(_._1 == "remove") == 1)
+    val rows = t.toDF.select("id", "p", "v").as[(Long, String, Long)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(rows.size == 201)
+    assert(rows(7L) == ((7L, s"${odd}3", 1L)))
+    assert(rows(500L) == ((500L, s"${odd}0", 5L)))
+    assert(rows(8L) == ((8L, s"${odd}0", 80L)))
+    // the row-id read keys every file: ids survive the upsert, and the
+    // inserted row takes a fresh one
+    val ids1 = rowIds()
+    assert(ids1.size == 201)
+    ids0.foreach { case (id, rid) => assert(ids1(id) == rid) }
+    assert(!ids0.values.toSet.contains(ids1(500L)))
   }
 
   test("a rewrite DELETE rewrites only the partly matched file and " +

@@ -66,6 +66,10 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan.contains("dv_live"), plan.take(800))
     assert(!plan.contains("UDF"), plan.take(800))
     assert(plan.contains("*(1)"), plan.take(800))
+    // rows carry `_metadata.file_path` verbatim as their file key: no
+    // per-row regex or URI decode
+    assert(!plan.contains("regexp_replace"), plan)
+    assert(!plan.contains("url_decode"), plan)
   }
 
   test("optimized write: a partitioned append collapses to one file " +
