@@ -1623,7 +1623,7 @@ object ContentTree {
           tableRootUriPath))
       }
     AddFile(
-      path = r.getAs[String]("location"),
+      path = Storage.encodeUriPath(r.getAs[String]("location")),
       partitionValues = Option(r.getAs[Map[String, String]]("partition"))
         .getOrElse(Map.empty),
       size = r.getAs[Long]("fileSizeInBytes"),

@@ -194,14 +194,16 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
   /** Collect the surviving adds to the driver. `slim = true` strips
     * stats JSON + tags first — at millions of files that is the
     * difference between collecting gigabytes and collecting path
-    * metadata. The metadata QUERY stays distributed either way; only
-    * the final file list materializes ([[addFileIterator]] is the
-    * streaming handoff beyond even that).
+    * metadata. `where` further filters the log's add rows (`add.*`).
+    * The metadata QUERY stays distributed either way; only the final
+    * file list materializes ([[addFileIterator]] is the streaming
+    * handoff beyond even that).
     */
-  private[graft] def collectAddFiles(slim: Boolean): Seq[AddFile] = {
+  private[graft] def collectAddFiles(slim: Boolean,
+      where: Column = lit(true)): Seq[AddFile] = {
     val t0 = Metrics.now()
     val df = if (!slim) filesDF else slimFilesDF
-    val proj = df.select("add.*")
+    val proj = df.filter(where).select("add.*")
     // force optimization + physical planning so planNs/execNs cleanly
     // partition the total (AQE may still re-plan during execution)
     proj.queryExecution.executedPlan
@@ -217,6 +219,22 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
       pipelineExecMs = pipeMs))
     out
   }
+
+  /** Original stats JSON for the named add paths — the stats-by-
+    * reference leg of the slim DV-DML collects: the candidate collect
+    * stays slim (path/pv/size/DV), and only the files that re-enter the
+    * log as DV swaps pull their stats, bounding the driver's stats heap
+    * by the commit's own write amplification instead of the candidate
+    * set. A plain `IN` filter over [[filesDF]], so a driver-small
+    * snapshot's local file list answers it with no Spark job.
+    */
+  private[graft] def statsForPaths(paths: Set[String]): Map[String, String] =
+    if (paths.isEmpty) Map.empty
+    else filesDF.filter(col("add.path").isin(paths.toSeq: _*))
+      .select(col("add.path"), col("add.stats"))
+      .collect()
+      .flatMap(r => Option(r.getString(1)).map(r.getString(0) -> _))
+      .toMap
 
   /** Stream the surviving SLIM adds to the driver one partition at a
     * time (`toLocalIterator`): the metadata query stays distributed and

@@ -416,7 +416,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   private def stageFiles(df: DataFrame, snap: Snapshot,
       passthrough: Seq[String] = Nil,
-      nullGeneratedAsOmitted: Boolean = false): Seq[AddFile] = {
+      nullGeneratedAsOmitted: Boolean = false,
+      rowLevel: Boolean = false): Seq[AddFile] = {
     val partCols = snap.partitionColumns
     val stage = "part-" + UUID.randomUUID().toString.substring(0, 8)
     val stagePath = new Path(root, stage)
@@ -459,43 +460,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
               d.withColumn(DeltaTable.MAT_PART_PREFIX + c, col(s"`$c`"))),
             physPartCols.map(DeltaTable.MAT_PART_PREFIX + _))
 
-    // INT96 (Spark's legacy default) carries no usable footer stats and
-    // is non-standard; micros is lossless for Spark timestamps. Scoped
-    // set/restore around this one write job. Tables that opted into
-    // variantShredding additionally write variant columns shredded
-    // ({metadata, value, typed_value}) with an inferred typed_value
-    // schema, so downstream scans prune into the typed subcolumns.
-    // table property turns shredding on; an EXPLICIT session-level
-    // writeShredding.enabled=false still wins (Spark's session conf is
-    // the user's per-write escape hatch — e.g. staging one unshredded
-    // file into an otherwise-shredded table)
-    val shred = snap.metadata.configuration
-      .get(DeltaTable.VARIANT_SHREDDING_KEY)
-      .exists(_.equalsIgnoreCase("true")) &&
-      !spark.conf.getOption("spark.sql.variant.writeShredding.enabled")
-        .exists(_.equalsIgnoreCase("false"))
-    val scopedConfs: Seq[(String, String)] =
-      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") ++
-      (if (shred)
-        Seq("spark.sql.variant.writeShredding.enabled" -> "true",
-          "spark.sql.variant.inferShreddingSchema" -> "true")
-       else Nil)
-    // Optimized write (delta.autoOptimize.optimizeWrite): shuffle on
-    // the partition columns before a partitioned write, so every
-    // partition VALUE lands in one task and writes ONE file instead of
-    // inputPartitions × values small files — the small-file defense at
-    // streaming-ingest scale. AQE coalesces tiny shuffle partitions
-    // into shared tasks without changing the one-file-per-value shape.
+    // Optimized write (delta.autoOptimize.optimizeWrite, and always for
+    // row-level DML and MERGE, whose input is a union of row sets that
+    // would each write their own file per value): see [[rebalanced]].
     // Clustered tables already range-partition (their own layout);
     // unpartitioned tables bin-pack via OPTIMIZE instead — a blind
-    // repartition there would just serialize the write.
-    val optimizeWrite = snap.metadata.configuration
+    // shuffle there would just serialize the write.
+    val optimizeWrite = rowLevel || snap.metadata.configuration
       .get(DeltaTable.OPTIMIZE_WRITE_KEY).exists(_.equalsIgnoreCase("true"))
     val laidOut =
-      if (optimizeWrite && clusterCols.isEmpty && partByCols.nonEmpty)
-        toWrite.repartition(partByCols.map(c => col(s"`$c`")): _*)
+      if (optimizeWrite && clusterCols.isEmpty) rebalanced(toWrite, partByCols)
       else toWrite
-    DeltaTable.ScopedSessionConf.withConfs(spark, scopedConfs) {
+    DeltaTable.ScopedSessionConf.withConfs(spark, writeConfs(snap)) {
       val writer = laidOut.write.mode("overwrite")
       // delta.parquet.compression.codec: table-pinned codec beats the
       // session default (a 100 TB table's scan cost is set at write
@@ -602,6 +578,65 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       staged.size.toLong, staged.map(_.size).sum))
     staged
   }
+
+  /** Session confs scoped around a staging write. INT96 (Spark's
+    * legacy default) carries no usable footer stats and is
+    * non-standard; micros is lossless for Spark timestamps. Tables that
+    * opted into variantShredding additionally write variant columns
+    * shredded ({metadata, value, typed_value}) with an inferred
+    * typed_value schema, so downstream scans prune into the typed
+    * subcolumns. The table property turns shredding on; an EXPLICIT
+    * session-level writeShredding.enabled=false still wins (Spark's
+    * session conf is the user's per-write escape hatch — e.g. staging
+    * one unshredded file into an otherwise-shredded table).
+    */
+  private def writeConfs(snap: Snapshot): Seq[(String, String)] = {
+    val shred = snap.metadata.configuration
+      .get(DeltaTable.VARIANT_SHREDDING_KEY)
+      .exists(_.equalsIgnoreCase("true")) &&
+      !spark.conf.getOption("spark.sql.variant.writeShredding.enabled")
+        .exists(_.equalsIgnoreCase("false"))
+    Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") ++
+      (if (shred)
+        Seq("spark.sql.variant.writeShredding.enabled" -> "true",
+          "spark.sql.variant.inferShreddingSchema" -> "true")
+       else Nil)
+  }
+
+  /** A row-level write's staging: its data rows (none for a DV DELETE)
+    * through [[stageFiles]]' optimized-write layout, and its change-data
+    * images through [[stageCdcMulti]]. The two are independent writes
+    * into different directories, so the images stage on a thread of
+    * their own while the data stages on this one, and their planning
+    * and jobs overlap; both finish before either result (or failure)
+    * returns, so no write is left running. The side thread inherits
+    * the caller's Spark local properties (job group, SQL execution), as
+    * Spark's own child threads do.
+    */
+  private def stageRowLevel(rows: Option[DataFrame], changes: Seq[DataFrame],
+      snap: Snapshot, rtCols: Seq[String]): (Seq[AddFile], Seq[AddCDCFile]) = {
+    def data = rows.fold(Seq.empty[AddFile])(
+      stageFiles(_, snap, rtCols, rowLevel = true))
+    if (changes.isEmpty) return (data, Nil)
+    @volatile var cdc: scala.util.Try[Seq[AddCDCFile]] = null
+    val t = new Thread(() => cdc = scala.util.Try(stageCdcMulti(changes, snap)),
+      "graft-cdc-stage")
+    t.setDaemon(true)
+    t.start()
+    val staged = scala.util.Try(data)
+    t.join()
+    (staged.get, cdc.get)
+  }
+
+  /** The optimized-write layout of a partitioned write: Spark's
+    * REBALANCE on the physical partition columns, so every partition
+    * VALUE lands in one task and writes ONE file instead of
+    * inputPartitions × values small files. AQE packs small values into
+    * shared tasks and splits a skewed one. Unpartitioned: unchanged.
+    */
+  private def rebalanced(df: DataFrame, partByCols: Seq[String]): DataFrame =
+    if (partByCols.isEmpty) df
+    else df.hint("rebalance", partByCols.map(c => col(s"`$c`")): _*)
 
   /** Rewrite the whole table range-sorted on its clustering columns
     * (reference transaction/data_layout.rs; the OPTIMIZE analog).
@@ -792,36 +827,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // count CHANGED — the ones the triggering commit touched. Scoping
     // the candidate scan to them turns the per-commit probe from
     // O(live files) into O(commit) at ingest scale (a 5M-file table
-    // would otherwise replay + collect its whole file list after
-    // every append). The predicate is partition-value exact-match,
-    // built only for string/integral partition types (timestamp/
-    // decimal literal round-trips are format-sensitive and a wrongly
-    // PRUNED partition would silently skip its compaction); capped at
-    // 64 touched partitions so the predicate never explodes — wider
-    // commits fall back to the full scan.
-    // partitionValues are keyed by PHYSICAL name (column mapping); the
-    // predicate names the logical column and backslash-escapes its
-    // literal (Spark SQL string literals treat '\' as an escape)
-    val partFields = snap.partitionColumns.map(c =>
-      snap.schema.fields.find(_.name == c).get)
-    val safePartTypes = partFields.forall(_.dataType match {
-      case StringType | IntegerType | LongType | ShortType |
-           ByteType | BooleanType => true
-      case _ => false
-    })
-    val predicate: Option[String] = touchedPartitions
-      .filter(p => partFields.nonEmpty && safePartTypes &&
-        p.nonEmpty && p.size <= 64)
+    // would otherwise replay + collect its whole file list after every
+    // append). The scope matches the log's own partitionValues map —
+    // PHYSICAL names, the exact strings the commit's adds carry —
+    // null-safely, so every partition type and column mapping scope
+    // without a literal round-trip.
+    val scope = touchedPartitions.filter(_ => snap.partitionColumns.nonEmpty)
       .map(_.toSeq.map { pv =>
-        partFields.map { f =>
-          pv.getOrElse(ColumnMapping.physicalName(f), null) match {
-            case null => s"`${f.name}` IS NULL"
-            case v => s"`${f.name}` = '" +
-              v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-          }
-        }.mkString("(", " AND ", ")")
-      }.mkString(" OR "))
-    val small = new DeltaScan(snap, predicate).collectAddFiles(slim = true)
+        pv.map { case (k, v) => col("add.partitionValues")(k) <=> lit(v) }
+          .foldLeft(lit(true))(_ && _)
+      }.foldLeft(lit(false))(_ || _))
+    val small = new DeltaScan(snap, None)
+      .collectAddFiles(slim = true, scope.getOrElse(lit(true)))
       .filter(_.size < targetBytes / 2)
     val toCompact = small.groupBy(_.partitionValues).values
       .filter(_.size >= minNumFiles).toSeq.flatten
@@ -949,31 +966,32 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   }
 
   /** Stage CDF `_change_data` files for change-typed row sets (logical
-    * table columns), written with physical names + a physical
-    * `_change_type` column, partitioned like the table, as ONE write
-    * job: each branch carries its `_change_type` literal through a
-    * unionByName, so an UPDATE's pre+post images (or a MERGE's four
-    * image kinds) cost one Spark job instead of one per kind. cdc
+    * table columns plus `_change_type`, as [[changeImages]] builds
+    * them), written with physical names + a physical `_change_type`
+    * column, partitioned and [[rebalanced]] like the row-level data
+    * write, as ONE write: a MERGE's images and inserts share one write
+    * and one file per partition value instead of one per kind. cdc
     * files legally mix change types — `_change_type` is a physical
     * data column, never per-file metadata. A commit carrying cdc
     * actions is read ONLY through them (reference
     * table_changes/log_replay.rs classification), which is what makes
     * partial file rewrites CDF-correct.
     */
-  private def stageCdcMulti(parts: Seq[(DataFrame, String)],
+  private def stageCdcMulti(parts: Seq[DataFrame],
       snap: Snapshot): Seq[AddCDCFile] = {
     if (parts.isEmpty) return Nil
     val physPartCols = snap.partitionColumns.map(c =>
       ColumnMapping.physicalName(snap.schema.fields.find(_.name == c).get))
     val stagePath = new Path(new Path(root, "_change_data"),
       "cdc-" + UUID.randomUUID().toString.substring(0, 8))
-    val renamed = parts.map { case (df, changeType) =>
-      physicalProjection(df, snap)
-        .withColumn("_change_type", lit(changeType))
-    }.reduce(_.unionByName(_))
-    val writer = renamed.write.mode("overwrite")
-    (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*) else writer)
-      .parquet(stagePath.toString)
+    val renamed = parts
+      .map(physicalProjection(_, snap, Seq(TableChanges.CHANGE_TYPE)))
+      .reduce(_.unionByName(_))
+    val writer = rebalanced(renamed, physPartCols).write.mode("overwrite")
+    DeltaTable.ScopedSessionConf.withConfs(spark, writeConfs(snap)) {
+      (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
+       else writer).parquet(stagePath.toString)
+    }
     val success = new Path(stagePath, "_SUCCESS")
     if (fs.exists(success)) fs.delete(success, false)
     Storage.listFilesRecursive(fs, stagePath)
@@ -1307,29 +1325,27 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         // materialized columns; updated rows keep the id but take the
         // new add's default commit version
         val (full, rtCols) = readFilesForRewrite(snap, readAdds)
-        val cached = cdf || set.isDefined
-        if (cached) full.persist()
-        val matched = full.filter(cond)
-        val applied = set.map(s =>
-          assignUpdates(matched, snap, Seq(None -> s), rtCols))
-        // survivors: NOT(cond) OR cond IS NULL (DELETE's 3VL contract);
-        // stageFiles drops an all-deleted rewrite's zero rows
-        val survivors = if (dv) None else Some(full.filter(not(cond)))
-        val staged = stageFiles(
-          (survivors ++ applied).reduce(_.unionByName(_)), snap, rtCols)
-        val cdc =
+        val matchedRows = full.filter(cond)
+        // one projection each: the rewrite arm stages every read row —
+        // a DELETE's survivors (NOT(cond) OR cond IS NULL, its 3VL
+        // contract), an UPDATE's rows assigned where cond holds; the DV
+        // arm stages only the assigned matched rows. stageFiles drops an
+        // all-deleted rewrite's zero rows
+        stageRowLevel(Some(set.fold(full.filter(not(cond))) { s =>
+            if (dv) assignUpdates(matchedRows, snap, Seq(None -> s), rtCols)
+            else assignUpdates(full, snap, Seq(Some(cond) -> s), rtCols)
+          }),
           if (!cdf) Nil
-          else stageCdcMulti(applied.fold(Seq(matched -> "delete"))(a =>
-            Seq(matched -> "update_preimage", a -> "update_postimage")), snap)
-        if (cached) full.unpersist()
-        (staged, cdc)
+          else Seq(changeImages(matchedRows, snap, set.toSeq.map(None -> _),
+            lit(set.isDefined))),
+          snap, rtCols)
       }
     // the re-adds keep their original stats, fetched by reference as
     // the candidate collect was slim
     val partial =
       if (dv) matched.filter { case (_, m) => m.matched != m.live } else Nil
     val swapped = dvSwapAdds(partial,
-      statsForPaths(scan, partial.map(_._1.path).toSet))
+      scan.statsForPaths(partial.map(_._1.path).toSet))
     val (newAddsRt, domains) = assignRowIds(snap, newAdds)
     commit(Some(snap), op, Map("predicate" -> predicateSql),
       Actions(protocol = if (dv) dvUpgrade(snap) else None, domains = domains,
@@ -1381,17 +1397,21 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * untagged clause), cast to the column type; generated columns not
     * explicitly assigned are recomputed from the post-assignment row
     * (stored values are stale once a base column changes); row-tracking
-    * columns keep the id with a nulled commit version, so updated rows
-    * take the new add's default version. `qual` prefixes current-value
-    * references (`t.` inside MERGE's join).
+    * columns keep the id, and a row some clause assigns gets a nulled
+    * commit version, so it takes the new add's default version. `qual`
+    * prefixes current-value references (`t.` inside MERGE's join).
     */
   private def assignUpdates(rows: DataFrame, snap: Snapshot,
       clauses: Seq[(Option[Column], Map[String, String])],
-      rtCols: Seq[String], qual: String = ""): DataFrame = {
+      rtCols: Seq[String], qual: String = "",
+      keep: Seq[String] = Nil): DataFrame = {
     def cur(name: String): Column = col(qual + ColumnMapping.quoted(name))
     val rtUpdated: Seq[Column] = rtCols match {
       case Seq(idCol, vCol) =>
-        Seq(cur(idCol).as(idCol), lit(null).cast("long").as(vCol))
+        val hit = clauses.map(_._1.getOrElse(lit(true)))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        Seq(cur(idCol).as(idCol),
+          when(hit, lit(null)).otherwise(cur(vCol)).cast("long").as(vCol))
       case _ => Nil
     }
     val assigned = rows.select(snap.schema.fields.toIndexedSeq.map { f =>
@@ -1401,14 +1421,38 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           tag.fold(x)(when(_, x).otherwise(v))
         }
       }.as(f.name, f.metadata)
-    } ++ rtUpdated: _*)
+    } ++ rtUpdated ++ keep.map(col): _*)
     val regen = WriteValidation.generated(snap) -- clauses.flatMap(_._2.keys)
     if (regen.isEmpty) assigned
     else assigned.select(snap.schema.fields.toIndexedSeq.map { f =>
       regen.get(f.name)
         .map(e => expr(e).cast(f.dataType).as(f.name, f.metadata))
         .getOrElse(ColumnMapping.qcol(f.name))
-    } ++ rtCols.map(ColumnMapping.qcol): _*)
+    } ++ (rtCols ++ keep).map(ColumnMapping.qcol): _*)
+  }
+
+  /** The change feed's images of `rows` in one projection, so a CDF
+    * write reads them once: each row's pre-image (`update_preimage`
+    * where `updated` holds, `delete` otherwise) and each updated row's
+    * post-image under `clauses` (`update_postimage`), as the table's
+    * logical columns plus `_change_type`.
+    */
+  private def changeImages(rows: DataFrame, snap: Snapshot,
+      clauses: Seq[(Option[Column], Map[String, String])], updated: Column,
+      qual: String = ""): DataFrame = {
+    val fields = snap.schema.fields.toIndexedSeq
+    def image(cols: Seq[Column], changeType: Column): Column =
+      struct(cols :+ changeType.as(TableChanges.CHANGE_TYPE): _*)
+    val pre = image(fields.map(f =>
+        col(qual + ColumnMapping.quoted(f.name)).as(f.name)),
+      when(updated, lit("update_preimage")).otherwise(lit("delete")))
+    assignUpdates(rows.withColumn("__pre", pre).withColumn("__upd", updated),
+        snap, clauses, Nil, qual, keep = Seq("__pre", "__upd"))
+      .select(explode(array(col("__pre"), when(col("__upd"),
+        image(fields.map(f => ColumnMapping.qcol(f.name)),
+          lit("update_postimage"))))).as("__img"))
+      .filter(col("__img").isNotNull)
+      .select(col("__img.*"))
   }
 
   /** The DV-swap re-adds, built once for every DV writer: each partly
@@ -1450,29 +1494,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }
   }
 
-  /** Original stats JSON for the named add paths, fetched in ONE
-    * targeted metadata pass — the stats-by-reference leg of the slim
-    * DV-DML collects: the candidate collect stays slim (path/pv/size/
-    * DV), and only the files that actually re-enter the log as DV
-    * swaps pull their stats, bounding the driver's stats heap by the
-    * commit's own write amplification instead of the candidate set
-    * (at 5M files a broad-predicate DV DELETE used to collect
-    * gigabytes of stats JSON it mostly never re-emitted).
-    */
-  private def statsForPaths(scan: DeltaScan,
-      paths: Set[String]): Map[String, String] = {
-    if (paths.isEmpty) return Map.empty
-    val spark2 = spark
-    import spark2.implicits._
-    val want = broadcast(paths.toSeq.toDF("__p"))
-    scan.filesDF
-      .join(want, col("add.path") === col("__p"), "left_semi")
-      .select(col("add.path"), col("add.stats"))
-      .collect()
-      .flatMap(r => Option(r.getString(1)).map(r.getString(0) -> _))
-      .toMap
-  }
-
   /** A DV-swap-only commit: remove+add pairs swapping each file's
     * deletion vector (fully-dead files remove without re-add), plus the
     * first-use protocol upgrade — how
@@ -1505,10 +1526,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * whose condition holds wins (Delta MERGE contract; the kernel
     * supplies the building blocks — file-granular remove+add rewrite,
     * reference transaction/mod.rs — and delta-spark defines clause
-    * semantics). Spark-first shape: ONE inner join finds touched
-    * files; only those files rewrite; matched/survivor/insert row sets
-    * are plain joins over the candidate rows, so everything stays
-    * distributed and the source is free to broadcast when small.
+    * semantics). Spark-first shape: one match pass over target ⋈
+    * source ([[DeltaScan.matchPerFile]]) names the touched files and
+    * checks ambiguity; only those files are read again, left-outer
+    * joined to the source to tag kept, updated and deleted rows, and
+    * NOT MATCHED inserts anti-join the source against them alone.
+    * Everything stays distributed and the source is free to broadcast
+    * when small.
     *
     * `condSql` and clause expressions reference the target as `t` and
     * the source as `s` (NOT MATCHED BY SOURCE clauses see `t` only).
@@ -1572,122 +1596,84 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // slim: MERGE tombstones + rewrites need no stats JSON (see DELETE)
     val allAdds = scan.collectAddFiles(slim = true)
     val cond = expr(condSql)
-    val src = source.alias("s")
-    src.persist()
-    var fullId: DataFrame = null
-    var bsTagged: DataFrame = null
+    // the marker tells matched from unmatched target rows after the
+    // left-outer join below. Each pass re-reads the source, so only a
+    // nondeterministic one is pinned (every pass must see the same rows)
+    val src = source.withColumn(DeltaTable.MERGE_SOURCE_ROW, lit(true))
+      .alias("s")
+    val pinSource = !src.queryExecution.analyzed.deterministic
+    if (pinSource) src.persist()
+    var insertRaw: Option[DataFrame] = None
     try {
-      // -- touched files: the only full-table join; candidate files
-      //    contain every matching target row by construction. BY SOURCE
-      //    clauses can hit any unmatched row anywhere → all files
-      val candidates: Seq[AddFile] =
-        if (allAdds.isEmpty) Nil
-        else if (bySourceClauses.nonEmpty) allAdds
-        else if (matchedClauses.isEmpty) Nil
+      // -- one match pass over every file (target ⋈ source): the files
+      //    holding a matched row, each with its join-row count and the
+      //    bitmap of its distinct matched rows — more join rows than
+      //    bitmap members means a target row matched several source rows
+      val touched: Seq[AddFile] =
+        if (allAdds.isEmpty || matchedClauses.isEmpty) Nil
         else {
-          val withMeta = scan.assemble(allAdds, keepMeta = true)
-          val touched = withMeta.alias("t").join(src, cond, "inner")
-            .select(col("__path")).distinct()
-            .collect().map(_.getString(0)).toSet
+          val matches = DeltaScan.matchPerFile(
+            scan.assemble(allAdds, keepMeta = true).alias("t")
+              .join(src, cond), lit(true), bitmaps = true)
+          require(matches.forall(m =>
+              m.matched == DeletionVectors.cardinality(m.bitmap)),
+            "MERGE: a target row matched multiple source rows with " +
+              "matched clauses present (ambiguous)")
+          val keys = matches.map(_.key).toSet
           val fileKey = GraftFileIndex.fileKeyOf(spark, root)
-          allAdds.filter(a => touched(fileKey(a)))
+          allAdds.filter(a => keys(fileKey(a)))
         }
+      // BY SOURCE clauses can hit any unmatched row anywhere → all files
+      val candidates = if (bySourceClauses.nonEmpty) allAdds else touched
 
-      val cdf = TableChanges.cdfEnabled(snap.metadata)
-      // row-tracking tables read the candidates WITH their row ids so
-      // kept/updated target rows stage them through (updated rows null
-      // the commit version — they take the new add's default)
+      // -- the one read of the candidate files: a left-outer join
+      //    against the source tags every row with its first applicable
+      //    clause, matched ("a") or by source ("b"), "keep" otherwise.
+      //    Row-tracking tables read the candidates WITH their row ids so
+      //    kept/updated rows stage them through.
       val (fullRead, rtCols) = readFilesForRewrite(snap, candidates)
-      fullId = fullRead
-        .withColumn("_tid", monotonically_increasing_id()).persist()
-      val tgt = fullId.alias("t")
-      def tcol(name: String): Column = col("t." + ColumnMapping.quoted(name))
-      val preCols = snap.schema.fields.toIndexedSeq
-        .map(f => tcol(f.name).as(f.name, f.metadata)) ++
-        rtCols.map(c => tcol(c).as(c))
+      val tagged =
+        if (candidates.isEmpty) None
+        else Some(fullRead.alias("t").join(src, cond, "left_outer")
+          .withColumn("_action",
+            when(col("s." + DeltaTable.MERGE_SOURCE_ROW).isNotNull,
+              clauseTag(matchedClauses, "a", "keep"))
+              .otherwise(clauseTag(bySourceClauses, "b", "keep"))))
+      val clauseTags =
+        matchedClauses.zipWithIndex.map { case (c, i) => c -> s"a$i" } ++
+        bySourceClauses.zipWithIndex.map { case (c, i) => c -> s"b$i" }
+      val updateTags = clauseTags.collect {
+        case (_: MatchedUpdate | _: NotMatchedBySourceUpdate, t) => t }
+      val deleteTags = clauseTags.collect {
+        case (_: MatchedDelete | _: NotMatchedBySourceDelete, t) => t }
+      val changed = updateTags ++ deleteTags
+      // the clause whose tag a row carries assigns; rows no update
+      // clause tagged keep their values
+      val assignments = clauseTags.collect {
+        case (c, t) if updateTags.contains(t) =>
+          Some(col("_action") === t) -> c.assignments }
+      // kept and updated rows in one projection
+      val rewritten = tagged.map(r => assignUpdates(
+        r.filter(!col("_action").isin(deleteTags: _*)), snap, assignments,
+        rtCols, qual = "t."))
 
-      // -- matched rows, tagged with the first applicable clause.
-      //    Persisted: the dup check, update pre/post, delete and keep
-      //    row sets plus their CDF stagings all derive from this one
-      //    join — without caching each job re-executes it
-      val matchedTagged = tgt.join(src, cond, "inner")
-        .withColumn("_action", clauseTag(matchedClauses, "a", "keep"))
-        .persist()
-      if (matchedClauses.nonEmpty && candidates.nonEmpty) {
-        val dup = matchedTagged.groupBy(col("_tid")).count()
-          .filter(col("count") > 1).limit(1).count()
-        require(dup == 0, "MERGE: a target row matched multiple " +
-          "source rows with matched clauses present (ambiguous)")
-      }
-      val updateTags = matchedClauses.zipWithIndex.collect {
-        case (_: MatchedUpdate, i) => s"a$i" }
-      val deleteTags = matchedClauses.zipWithIndex.collect {
-        case (_: MatchedDelete, i) => s"a$i" }
-
-      // post-update rows: the clause whose tag the row carries assigns
-      def updateCascade(rows: DataFrame, cls: Seq[MergeClause],
-          prefix: String): DataFrame =
-        assignUpdates(rows, snap, cls.zipWithIndex.map { case (c, i) =>
-          Some(col("_action") === s"$prefix$i") -> c.assignments
-        }, rtCols, qual = "t.")
-      val updatedPre =
-        if (updateTags.isEmpty) None
-        else Some(matchedTagged.filter(col("_action").isin(updateTags: _*)))
-      val updatedPost =
-        updatedPre.map(updateCascade(_, matchedClauses, "a"))
-      val deletedRows =
-        if (deleteTags.isEmpty) None
-        else Some(matchedTagged.filter(col("_action").isin(deleteTags: _*))
-          .select(preCols: _*))
-      val keptMatched = matchedTagged.filter(col("_action") === "keep")
-        .select(preCols: _*)
-
-      // -- target rows with no source match: plain survivors, or the
-      //    NOT MATCHED BY SOURCE cascade when such clauses exist
-      val unmatchedTgt = tgt.join(src, cond, "left_anti")
-      val (survivors, bsUpdatedPre, bsUpdatedPost, bsDeleted) =
-        if (bySourceClauses.isEmpty)
-          (unmatchedTgt.select(preCols: _*), None, None, None)
-        else {
-          val tagged = unmatchedTgt
-            .withColumn("_action", clauseTag(bySourceClauses, "b", "keep"))
-            .persist()
-          bsTagged = tagged
-          val updTags = bySourceClauses.zipWithIndex.collect {
-            case (_: NotMatchedBySourceUpdate, i) => s"b$i" }
-          val delTags = bySourceClauses.zipWithIndex.collect {
-            case (_: NotMatchedBySourceDelete, i) => s"b$i" }
-          val pre =
-            if (updTags.isEmpty) None
-            else Some(tagged.filter(col("_action").isin(updTags: _*)))
-          (tagged.filter(col("_action") === "keep").select(preCols: _*),
-            pre,
-            pre.map(updateCascade(_, bySourceClauses, "b")),
-            if (delTags.isEmpty) None
-            else Some(tagged.filter(col("_action").isin(delTags: _*))
-              .select(preCols: _*)))
-        }
-
-      // -- not-matched source rows → insert projections. Columns no
-      //    clause supplies stay ABSENT when identity/generated/default
-      //    machinery fills them, NULL otherwise.
+      // -- not-matched source rows → insert projections. NOT MATCHED is
+      //    against the WHOLE target, and every matching target row lives
+      //    in a touched file (the match pass covered every file); with
+      //    no matched clause the anti-join reads the whole table.
+      //    Columns no clause supplies stay ABSENT when identity/
+      //    generated/default machinery fills them, NULL otherwise.
       val genCols = WriteValidation.generated(snap)
       val idCols = IdentityColumns.specs(snap.schema).map(_.name).toSet
-      val (insertRaw, identityCols): (Option[DataFrame], Set[String]) =
-        if (insertClauses.isEmpty) (None, Set.empty)
+      val antiAdds =
+        if (matchedClauses.isEmpty && bySourceClauses.isEmpty) allAdds
+        else candidates
+      val identityCols: Set[String] =
+        if (insertClauses.isEmpty) Set.empty
         else {
-          // NOT MATCHED means unmatched against the WHOLE target; when
-          // no file was a rewrite candidate the anti-join reads the
-          // full table directly (matching rows only live in candidate
-          // files, so candidate rows suffice otherwise)
-          val antiTarget =
-            if (candidates.isEmpty && allAdds.nonEmpty)
-              scan.assemble(allAdds, keepMeta = false).alias("t")
-            else tgt
-          val unmatched =
-            if (allAdds.isEmpty) src
-            else src.join(antiTarget, cond, "left_anti")
-          val tagged = unmatched
+          val unmatched = (if (antiAdds.isEmpty) src
+            else src.join(readFiles(snap, antiAdds).alias("t"), cond,
+              "left_anti"))
             .withColumn("_action", clauseTag(insertClauses, "i", "skip"))
             .filter(col("_action") =!= "skip")
           val supplied = insertClauses.flatMap(_.values.keys).toSet
@@ -1705,31 +1691,28 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
             }
             v.as(f.name, f.metadata)
           }
-          val raw = tagged.select(insCols: _*)
-          val (assigned, idents) = IdentityColumns.assign(raw, snap)
-          // persisted: staged once for data, once more for CDF inserts
-          (Some(WriteValidation.prepare(assigned, snap).persist()), idents)
+          val (raw, idents) =
+            IdentityColumns.assign(unmatched.select(insCols: _*), snap)
+          val prepared = WriteValidation.prepare(raw, snap)
+          // generated identities must read the same in the data and
+          // CDF stagings
+          if (idents.exists(c => !supplied(c))) prepared.persist()
+          insertRaw = Some(prepared)
+          idents
         }
 
-      val outParts = Seq(Some(survivors), Some(keptMatched),
-        updatedPost, bsUpdatedPost, insertRaw).flatten
       // inserts carry no materialized columns — allowMissingColumns
       // fills NULL, so inserted rows take the new add's FRESH defaults
-      val out = outParts.reduce(
-        _.unionByName(_, allowMissingColumns = rtCols.nonEmpty))
-      val newAdds =
-        if (candidates.isEmpty && insertRaw.isEmpty) Nil
-        else stageFiles(out, snap, rtCols)
+      val (newAdds, cdcActions) = stageRowLevel(
+        (rewritten ++ insertRaw).reduceOption(
+          _.unionByName(_, allowMissingColumns = rtCols.nonEmpty)),
+        if (!TableChanges.cdfEnabled(snap.metadata)) Nil
+        else tagged.filter(_ => changed.nonEmpty).map(r => changeImages(
+          r.filter(col("_action").isin(changed: _*)), snap, assignments,
+          col("_action").isin(updateTags: _*), qual = "t.")).toSeq ++
+          insertRaw.map(_.withColumn(TableChanges.CHANGE_TYPE, lit("insert"))),
+        snap, rtCols)
       if (candidates.isEmpty && newAdds.isEmpty) return snap.version
-
-      val cdcActions =
-        if (!cdf) Nil
-        else stageCdcMulti(
-          (updatedPre.toSeq ++ bsUpdatedPre).map(r =>
-            r.select(preCols: _*) -> "update_preimage") ++
-          (updatedPost.toSeq ++ bsUpdatedPost).map(_ -> "update_postimage") ++
-          (deletedRows.toSeq ++ bsDeleted).map(_ -> "delete") ++
-          insertRaw.toSeq.map(_ -> "insert"), snap)
 
       val idHwms = IdentityColumns.hwmFromStats(newAdds, snap, identityCols)
       val idMeta = if (idHwms.isEmpty) None
@@ -1738,18 +1721,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       // MERGE reads under a join condition, not a single-table
       // predicate — no stats proof possible, so any concurrent add is
       // a conflict (predicate None keeps the check conservative)
-      val committed = commit(Some(snap), "MERGE", Map("predicate" -> condSql),
+      commit(Some(snap), "MERGE", Map("predicate" -> condSql),
         Actions(metadata = idMeta, domains = domains,
           removes = candidates.map(tombstone(_, dataChange = true)),
           adds = newAddsRt, cdc = cdcActions),
         Reads(None))
-      matchedTagged.unpersist()
-      insertRaw.foreach(_.unpersist())
-      committed
     } finally {
-      src.unpersist()
-      if (fullId != null) fullId.unpersist()
-      if (bsTagged != null) bsTagged.unpersist()
+      if (pinSource) src.unpersist()
+      insertRaw.foreach(_.unpersist())
     }
   }
 
@@ -3595,6 +3574,10 @@ object DeltaTable {
     */
   val VARIANT_SHREDDING_KEY = "delta.enableVariantShredding"
   val OPTIMIZE_WRITE_KEY = "delta.autoOptimize.optimizeWrite"
+  /** MERGE's source-row marker: non-null exactly on matched rows of
+    * the target ⋈ source left-outer join.
+    */
+  private val MERGE_SOURCE_ROW = "__merge_source_row"
   val AUTO_COMPACT_KEY = "delta.autoOptimize.autoCompact"
   /** partitionBy alias prefix used when partition columns are
     * materialized into data files (IcebergCompat).

@@ -470,11 +470,11 @@ object EqualityDeletes {
       val a = byPathTree(m.key)
       val info = ContentTree.extractDeletionVectorContent(
         treeDescs(a.path))
-      (a.path, info.location, info.offset, info.sizeInBytes,
-        info.cardinality, m.bitmap, false)
+      (Storage.decodeUriPath(a.path), info.location, info.offset,
+        info.sizeInBytes, info.cardinality, m.bitmap, false)
     } ++ gone.map { m =>
-      (byPathTree(m.key).path, null: String, 0L, 0L, 0L,
-        null: Array[Byte], true)
+      (Storage.decodeUriPath(byPathTree(m.key).path), null: String, 0L,
+        0L, 0L, null: Array[Byte], true)
     }
     import spark.implicits._
     val updDf = broadcast(updates.toDF("__loc", "__dvloc", "__dvoff",
@@ -589,8 +589,8 @@ object EqualityDeletes {
     val updates = perFile.map { m =>
       val add = byPath(m.key)
       val info = ContentTree.extractDeletionVectorContent(descs(add.path))
-      (add.path, info.location, info.offset, info.sizeInBytes,
-        info.cardinality, m.bitmap)
+      (Storage.decodeUriPath(add.path), info.location, info.offset,
+        info.sizeInBytes, info.cardinality, m.bitmap)
     }
     import spark.implicits._
     val updDf = broadcast(updates.toDF(

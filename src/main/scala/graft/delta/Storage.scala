@@ -98,6 +98,18 @@ object Storage {
     try java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
     catch { case _: IllegalArgumentException => p }
 
+  /** The exact inverse of [[decodeUriPath]]: percent-encodes '%' and
+    * every other ASCII character a URI path may not hold literally (a
+    * space, say); '/', the path grammar's punctuation and non-ASCII
+    * characters stay as they are, as in Hadoop's raw paths.
+    */
+  def encodeUriPath(p: String): String =
+    if (!p.exists(escaped)) p
+    else p.flatMap(c => if (escaped(c)) f"%%${c.toInt}%02X" else c.toString)
+
+  private def escaped(c: Char): Boolean =
+    c < 0x80 && !c.isLetterOrDigit && "-._~!$&'()*+,;=:@/".indexOf(c) < 0
+
   /** Column twin of [[decodeUriPath]] — the ONE decode idiom for
     * action paths inside distributed plans: a literal '+' stays
     * literal, a malformed percent-escape passes through undecoded

@@ -1,5 +1,6 @@
 package graft.delta
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -184,6 +185,48 @@ class ClusteringSpec extends AnyFunSuite {
     t.autoCompact(minNumFiles = 3)
     assert(files("b").size == 1)
     assert(t.toDF.count() == 6)
+  }
+
+  /** Three appends of `values` (one row, so one file, per partition
+    * value each), then a probe scoped to the log's own partitionValues
+    * of all values but one: exactly the scoped values compact.
+    */
+  private def assertScopedCompaction(name: String, values: Column,
+      count: Int, conf: Map[String, String] = Map.empty): Unit = {
+    val dir = TestSpark.tmpDir(name)
+    val src = spark.range(count).select($"id".as("k"), values.as("p"))
+      .coalesce(1)
+    DeltaTable.create(spark, dir, src.schema, Seq("p"), configuration = conf)
+    val t = DeltaTable.forPath(spark, dir)
+    (1 to 3).foreach(_ => t.append(src))
+    def groups() = t.scan(None).collectAddFiles(slim = true)
+      .groupBy(_.partitionValues).map { case (pv, fs) => pv -> fs.size }
+    val before = groups()
+    assert(before.size == count && before.values.forall(_ == 3))
+    val scoped = before.keys.toSeq.sortBy(_.toString).drop(1).toSet
+    t.autoCompact(minNumFiles = 3, touchedPartitions = Some(scoped))
+    val after = groups()
+    assert(after.keySet == before.keySet)
+    after.foreach { case (pv, n) =>
+      assert(n == (if (scoped(pv)) 1 else 3), s"$name: $pv has $n files")
+    }
+    assert(t.toDF.count() == 3L * count)
+  }
+
+  test("auto-compact scopes string, int, date, timestamp and decimal " +
+      "partitions, a column-mapped table and a 65-partition commit " +
+      "exactly") {
+    assertScopedCompaction("scope-string", concat(lit("v"), $"id"), 2)
+    assertScopedCompaction("scope-int", $"id".cast("int"), 2)
+    assertScopedCompaction("scope-date",
+      date_add(lit("2024-02-28").cast("date"), $"id".cast("int")), 2)
+    assertScopedCompaction("scope-timestamp",
+      timestamp_seconds($"id" * 3601 + 1700000000L), 2)
+    assertScopedCompaction("scope-decimal",
+      ($"id" + 0.25).cast("decimal(10,2)"), 2)
+    assertScopedCompaction("scope-cm", concat(lit("v"), $"id"), 2,
+      conf = Map(ColumnMapping.MODE_KEY -> "name"))
+    assertScopedCompaction("scope-65", $"id".cast("int"), 66)
   }
 
   /** Three single-row appends into partition value `p` of an

@@ -792,6 +792,25 @@ class ContentTreeSpec extends AnyFunSuite {
     assert(new DeltaScan(snap, None).assemble(adds, keepMeta = false)
       .count() == 1000L)
   }
+  test("tree read of a table whose partition values hold a space and " +
+      "% returns the log read's rows") {
+    val dir = TestSpark.tmpDir("ct_pct")
+    val df = spark.range(10).select(col("id"),
+      concat(lit("a b%c"), (col("id") % 2).cast("string")).as("p"))
+    DeltaTable.create(spark, dir, df.schema, Seq("p"))
+    DeltaTable.forPath(spark, dir).append(df)
+    val snap = DeltaTable.forPath(spark, dir).snapshot()
+    val root = ContentTree.writeTree(snap, ContentTree.entriesDF(snap),
+      numLeaves = 2)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "p").collect().map(r => (r.getLong(0), r.getString(1)))
+        .toSet
+    val viaTree = rows(EqualityDeletes.readApplying(snap,
+      root.resolve(snap.tableRoot.toString)))
+    assert(viaTree.size == 10)
+    assert(viaTree == rows(snap.toDF))
+  }
+
   /** Pin the manifest-reuse probe ON for small fixtures: updateRoot
     * skips the probe below graft.tree.reuseProbeMinEntries (merging a
     * tiny tree outright is cheaper), but these tests exist to verify

@@ -139,6 +139,23 @@ class DmlSpec extends AnyFunSuite {
     assert(!ids0.values.toSet.contains(ids1(500L)))
   }
 
+  test("an updateWhere matching rows in two partitions adds at most one " +
+      "data file and one cdc file per partition") {
+    val (dir, t) = table(partitioned = true)
+    val v = t.updateWhere("id % 4 IN (1, 2) AND id < 40", Map("v" -> "-v"))
+    val acts = logActions(dir, v)
+    def perPartition(kind: String) = acts.collect { case (`kind`, a) =>
+      a.get("partitionValues").get("p").asText }
+      .groupBy(identity).map { case (p, fs) => p -> fs.size }
+    assert(perPartition("remove").keySet == Set("1", "2"))
+    assert(perPartition("remove").values.sum > 2,
+      "the predicate should touch several files per partition")
+    assert(perPartition("add") == Map("1" -> 1, "2" -> 1))
+    assert(perPartition("cdc") == Map("1" -> 1, "2" -> 1))
+    assert(t.toDF.filter($"v" < 0).count() == 20)
+    assert(t.toDF.count() == 200)
+  }
+
   test("a rewrite DELETE rewrites only the partly matched file and " +
       "drops a fully matched one unread") {
     val dir = TestSpark.tmpDir("dml-reads")

@@ -1,5 +1,8 @@
 package graft.delta
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -228,5 +231,96 @@ class MergeSpec extends AnyFunSuite {
     assert(t.scan(Some("p = 'p2'")).toDF
       .as[(Long, String, Double)].collect().toSet ==
       Set((2L, "p2", 20.0), (3L, "p2", 3.0)))
+  }
+
+  /** A partitioned CDF table (`id`, `part`, `v`) of 200 rows over
+    * partitions 0-3, staged as one append and then four single-partition
+    * appends, so each partition holds two files.
+    */
+  private def partitionedCdf(name: String): (String, DeltaTable) = {
+    val dir = TestSpark.tmpDir(name)
+    def rows(ids: Range, part: Option[Int]) = ids.map(i =>
+      (i.toLong, part.getOrElse(i % 4), i.toLong * 10)).toDF("id", "part", "v")
+    DeltaTable.create(spark, dir, rows(0 until 1, None).schema, Seq("part"),
+      Map(TableChanges.CDF_ENABLED_KEY -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(rows(0 until 160, None).coalesce(1))
+    (0 until 4).foreach(p =>
+      t.append(rows(160 + p * 10 until 170 + p * 10, Some(p)).coalesce(1)))
+    (dir, t)
+  }
+
+  private def logActions(dir: String, v: Long): Seq[(String, String)] = {
+    val p = new Path(FileNames.logDir(new Path(dir)), f"$v%020d.json")
+    val fs = Storage.fs(p, spark.sessionState.newHadoopConf())
+    Storage.readLines(fs, p).map(JsonLog.parseLine).map { n =>
+      val k = n.fieldNames().next()
+      k -> Option(n.get(k).get("path")).map(_.asText).orNull
+    }
+  }
+
+  private def upsert(t: DeltaTable, src: org.apache.spark.sql.DataFrame) =
+    t.merge(src, "t.id = s.id", Seq(
+      MatchedUpdate(None, Map("v" -> "s.v")),
+      NotMatchedInsert(None,
+        Map("id" -> "s.id", "part" -> "s.part", "v" -> "s.v"))))
+
+  test("partitioned CDF upsert touching one partition removes only the " +
+      "matched file and adds one data file and one cdc file") {
+    val (dir, t) = partitionedCdf("mrg_onepart")
+    val v = upsert(t, Seq((5L, 1, -1L), (1000L, 1, 7L)).toDF("id", "part", "v"))
+    val acts = logActions(dir, v)
+    val removed = acts.collect { case ("remove", p) => p }
+    assert(removed.size == 1 && removed.head.contains("part=1/"))
+    assert(acts.count(_._1 == "add") == 1)
+    assert(acts.count(_._1 == "cdc") == 1)
+    assert(t.toDF.filter($"id".isin(5L, 1000L)).as[(Long, Int, Long)]
+      .collect().toSet == Set((5L, 1, -1L), (1000L, 1, 7L)))
+    assert(t.toDF.count() == 201)
+  }
+
+  test("a MERGE that matches no target row plans a single target scan") {
+    val (_, t) = partitionedCdf("mrg_nomatch")
+    val r = new InMemoryReporter
+    val prev = Metrics.reporter
+    Metrics.reporter = r
+    try upsert(t, Seq((1000L, 2, 7L), (1001L, 3, 8L)).toDF("id", "part", "v"))
+    finally Metrics.reporter = prev
+    val scans = r.events.collect {
+      case e: MetricEvent.IoBytes if e.phase == "data_scan" => e.files }
+    assert(scans == Seq(8L), s"target scans: $scans")
+    assert(t.toDF.count() == 202)
+  }
+
+  test("a MERGE of 10 updates and 10 inserts into a 4-partition CDF " +
+      "table runs at most 11 Spark jobs") {
+    val (dir, t) = partitionedCdf("mrg_jobs")
+    val src = ((0L until 10L).map(i => (i * 7, (i * 7 % 4).toInt, -i)) ++
+      (0L until 10L).map(i => (5000 + i, (i % 4).toInt, i)))
+      .toDF("id", "part", "v").coalesce(1)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val v = try {
+      val v = upsert(t, src)
+      TestListenerBus.drain(sc)
+      v
+    } finally sc.removeSparkListener(listener)
+    // the match pass (source broadcast, partial-aggregate exchange,
+    // collect), then the data and change-data writes, each a source
+    // broadcast, the insert anti-join's broadcast, a rebalance exchange
+    // and the write
+    assert(jobs.get <= 11, s"${jobs.get} Spark jobs ran")
+    val feed = TableChanges.read(spark, dir, v, Some(v))
+      .groupBy(TableChanges.CHANGE_TYPE).count().as[(String, Long)]
+      .collect().toMap
+    assert(feed == Map("update_preimage" -> 10L, "update_postimage" -> 10L,
+      "insert" -> 10L))
+    assert(t.toDF.count() == 210)
   }
 }

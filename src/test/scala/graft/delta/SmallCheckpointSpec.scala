@@ -84,6 +84,30 @@ class SmallCheckpointSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("the DV arm's stats-by-reference fetch on a driver-small " +
+      "snapshot launches no Spark job") {
+    val dir = build()
+    val snap = Snapshot.forTable(spark, dir)
+    val scan = snap.scanBuilder().build()
+    val want = scan.collectAddFiles(slim = false).take(2)
+      .map(a => a.path -> a.stats.get).toMap
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val got = scan.statsForPaths(want.keySet)
+      TestListenerBus.drain(sc)
+      assert(snap.smallState && want.size == 2)
+      assert(got == want)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("driver and distributed replay keep the same files: no, classic " +
       "and multi-part checkpoint; partition and stats predicates; DVs " +
       "on a column-mapped table") {

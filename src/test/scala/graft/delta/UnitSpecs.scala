@@ -77,6 +77,16 @@ class StoragePathSpec extends AnyFunSuite {
     assert(!Storage.isAbsoluteUri("/rooted/f.parquet"))
     assert(!Storage.isAbsoluteUri(":broken"))
   }
+
+  test("encodeUriPath is the exact inverse of decodeUriPath") {
+    assert(Storage.encodeUriPath("p=a b%25c1/f.parquet") ==
+      "p=a%20b%2525c1/f.parquet")
+    assert(Storage.encodeUriPath("p=1/part-0.parquet") == "p=1/part-0.parquet")
+    Seq("p=a b%c1/f.parquet", "x=a+b/%2B/é ü\t\"<>#?[]^`{|}/f",
+        "file:/abs/ts=2024-01-01 00:00:00/f.parquet", "%zz%", "")
+      .foreach(p =>
+        assert(Storage.decodeUriPath(Storage.encodeUriPath(p)) == p, p))
+  }
 }
 
 class PartitionValuesSpec extends AnyFunSuite {
