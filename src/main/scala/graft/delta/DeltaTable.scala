@@ -417,7 +417,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   private def stageFiles(df: DataFrame, snap: Snapshot,
       passthrough: Seq[String] = Nil,
       nullGeneratedAsOmitted: Boolean = false,
-      rowLevel: Boolean = false): Seq[AddFile] = {
+      rebalance: Boolean = false): Seq[AddFile] = {
     val partCols = snap.partitionColumns
     val stage = "part-" + UUID.randomUUID().toString.substring(0, 8)
     val stagePath = new Path(root, stage)
@@ -461,12 +461,12 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
             physPartCols.map(DeltaTable.MAT_PART_PREFIX + _))
 
     // Optimized write (delta.autoOptimize.optimizeWrite, and always for
-    // row-level DML and MERGE, whose input is a union of row sets that
-    // would each write their own file per value): see [[rebalanced]].
+    // MERGE, whose rows are a union of joined row sets that would each
+    // write their own file per value): see [[rebalanced]].
     // Clustered tables already range-partition (their own layout);
     // unpartitioned tables bin-pack via OPTIMIZE instead — a blind
     // shuffle there would just serialize the write.
-    val optimizeWrite = rowLevel || snap.metadata.configuration
+    val optimizeWrite = rebalance || snap.metadata.configuration
       .get(DeltaTable.OPTIMIZE_WRITE_KEY).exists(_.equalsIgnoreCase("true"))
     val laidOut =
       if (optimizeWrite && clusterCols.isEmpty) rebalanced(toWrite, partByCols)
@@ -601,31 +601,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         Seq("spark.sql.variant.writeShredding.enabled" -> "true",
           "spark.sql.variant.inferShreddingSchema" -> "true")
        else Nil)
-  }
-
-  /** A row-level write's staging: its data rows (none for a DV DELETE)
-    * through [[stageFiles]]' optimized-write layout, and its change-data
-    * images through [[stageCdcMulti]]. The two are independent writes
-    * into different directories, so the images stage on a thread of
-    * their own while the data stages on this one, and their planning
-    * and jobs overlap; both finish before either result (or failure)
-    * returns, so no write is left running. The side thread inherits
-    * the caller's Spark local properties (job group, SQL execution), as
-    * Spark's own child threads do.
-    */
-  private def stageRowLevel(rows: Option[DataFrame], changes: Seq[DataFrame],
-      snap: Snapshot, rtCols: Seq[String]): (Seq[AddFile], Seq[AddCDCFile]) = {
-    def data = rows.fold(Seq.empty[AddFile])(
-      stageFiles(_, snap, rtCols, rowLevel = true))
-    if (changes.isEmpty) return (data, Nil)
-    @volatile var cdc: scala.util.Try[Seq[AddCDCFile]] = null
-    val t = new Thread(() => cdc = scala.util.Try(stageCdcMulti(changes, snap)),
-      "graft-cdc-stage")
-    t.setDaemon(true)
-    t.start()
-    val staged = scala.util.Try(data)
-    t.join()
-    (staged.get, cdc.get)
   }
 
   /** The optimized-write layout of a partitioned write: Spark's
@@ -832,11 +807,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // PHYSICAL names, the exact strings the commit's adds carry —
     // null-safely, so every partition type and column mapping scope
     // without a literal round-trip.
-    val scope = touchedPartitions.filter(_ => snap.partitionColumns.nonEmpty)
-      .map(_.toSeq.map { pv =>
-        pv.map { case (k, v) => col("add.partitionValues")(k) <=> lit(v) }
-          .foldLeft(lit(true))(_ && _)
-      }.foldLeft(lit(false))(_ || _))
+    val physCols = snap.partitionColumns.map(c =>
+      ColumnMapping.physicalName(snap.schema.fields.find(_.name == c).get))
+    val scope = touchedPartitions.filter(_ => physCols.nonEmpty)
+      .map(PartitionValues.scope(physCols, _))
     val small = new DeltaScan(snap, None)
       .collectAddFiles(slim = true, scope.getOrElse(lit(true)))
       .filter(_.size < targetBytes / 2)
@@ -968,17 +942,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   /** Stage CDF `_change_data` files for change-typed row sets (logical
     * table columns plus `_change_type`, as [[changeImages]] builds
     * them), written with physical names + a physical `_change_type`
-    * column, partitioned and [[rebalanced]] like the row-level data
-    * write, as ONE write: a MERGE's images and inserts share one write
-    * and one file per partition value instead of one per kind. cdc
+    * column, partitioned like the table (and [[rebalanced]] when asked,
+    * as MERGE's data write is), as ONE write: a MERGE's images and
+    * inserts share one write and one file per partition value. cdc
     * files legally mix change types — `_change_type` is a physical
     * data column, never per-file metadata. A commit carrying cdc
     * actions is read ONLY through them (reference
     * table_changes/log_replay.rs classification), which is what makes
     * partial file rewrites CDF-correct.
     */
-  private def stageCdcMulti(parts: Seq[DataFrame],
-      snap: Snapshot): Seq[AddCDCFile] = {
+  private def stageCdcMulti(parts: Seq[DataFrame], snap: Snapshot,
+      rebalance: Boolean = false): Seq[AddCDCFile] = {
     if (parts.isEmpty) return Nil
     val physPartCols = snap.partitionColumns.map(c =>
       ColumnMapping.physicalName(snap.schema.fields.find(_.name == c).get))
@@ -987,7 +961,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val renamed = parts
       .map(physicalProjection(_, snap, Seq(TableChanges.CHANGE_TYPE)))
       .reduce(_.unionByName(_))
-    val writer = rebalanced(renamed, physPartCols).write.mode("overwrite")
+    val writer = (if (rebalance) rebalanced(renamed, physPartCols)
+      else renamed).write.mode("overwrite")
     DeltaTable.ScopedSessionConf.withConfs(spark, writeConfs(snap)) {
       (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*)
        else writer).parquet(stagePath.toString)
@@ -1324,21 +1299,30 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         // row-tracking tables: survivors keep their row ids through the
         // materialized columns; updated rows keep the id but take the
         // new add's default commit version
-        val (full, rtCols) = readFilesForRewrite(snap, readAdds)
-        val matchedRows = full.filter(cond)
-        // one projection each: the rewrite arm stages every read row —
-        // a DELETE's survivors (NOT(cond) OR cond IS NULL, its 3VL
-        // contract), an UPDATE's rows assigned where cond holds; the DV
-        // arm stages only the assigned matched rows. stageFiles drops an
-        // all-deleted rewrite's zero rows
-        stageRowLevel(Some(set.fold(full.filter(not(cond))) { s =>
-            if (dv) assignUpdates(matchedRows, snap, Seq(None -> s), rtCols)
-            else assignUpdates(full, snap, Seq(Some(cond) -> s), rtCols)
-          }),
-          if (!cdf) Nil
-          else Seq(changeImages(matchedRows, snap, set.toSeq.map(None -> _),
-            lit(set.isDefined))),
-          snap, rtCols)
+        val (read, rtCols) = readFilesForRewrite(snap, readAdds)
+        // Spark pads each file by its open cost, so small touched files
+        // read as a task each, and each task writes its own file per
+        // partition value: read instead in as many tasks as the bytes
+        // call for, so a small rewrite writes one file per value with
+        // no shuffle. The data and change-data writes share one read
+        val full = read.coalesce(readTasks(readAdds))
+        if (cdf) full.persist()
+        try {
+          val matchedRows = full.filter(cond)
+          // one projection each: the rewrite arm stages every read row —
+          // a DELETE's survivors (NOT(cond) OR cond IS NULL, its 3VL
+          // contract), an UPDATE's rows assigned where cond holds; the DV
+          // arm stages only the assigned matched rows. stageFiles drops
+          // an all-deleted rewrite's zero rows
+          val staged = stageFiles(set.fold(full.filter(not(cond))) { s =>
+              if (dv) assignUpdates(matchedRows, snap, Seq(None -> s), rtCols)
+              else assignUpdates(full, snap, Seq(Some(cond) -> s), rtCols)
+            }, snap, rtCols)
+          (staged,
+            if (!cdf) Nil
+            else stageCdcMulti(Seq(changeImages(matchedRows, snap,
+              set.toSeq.map(None -> _), lit(set.isDefined))), snap))
+        } finally if (cdf) full.unpersist()
       }
     // the re-adds keep their original stats, fetched by reference as
     // the candidate collect was slim
@@ -1352,6 +1336,18 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         removes = matchedAdds.map(tombstone(_, dataChange = true)),
         adds = swapped ++ newAddsRt, cdc = cdcActions),
       Reads(Some(predicateSql)))
+  }
+
+  /** Spark's read split sizing for `adds` without the per-file open
+    * cost: their bytes over max(openCost, bytes / parallelism), capped
+    * at maxPartitionBytes per task.
+    */
+  private def readTasks(adds: Seq[AddFile]): Int = {
+    val conf = spark.sessionState.conf
+    val bytes = adds.map(_.size).sum
+    val split = math.min(conf.filesMaxPartitionBytes, math.max(
+      conf.filesOpenCostInBytes, bytes / spark.sparkContext.defaultParallelism))
+    math.max(1L, (bytes + split - 1) / split).toInt
   }
 
   /** Read specific add files with partition values injected. */
@@ -1435,16 +1431,21 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * write reads them once: each row's pre-image (`update_preimage`
     * where `updated` holds, `delete` otherwise) and each updated row's
     * post-image under `clauses` (`update_postimage`), as the table's
-    * logical columns plus `_change_type`.
+    * logical columns plus `_change_type`. With no clause every row is a
+    * delete, and the images are a plain projection.
     */
   private def changeImages(rows: DataFrame, snap: Snapshot,
       clauses: Seq[(Option[Column], Map[String, String])], updated: Column,
       qual: String = ""): DataFrame = {
     val fields = snap.schema.fields.toIndexedSeq
+    val preCols = fields.map(f =>
+      col(qual + ColumnMapping.quoted(f.name)).as(f.name))
+    if (clauses.isEmpty)
+      return rows.select(
+        preCols :+ lit("delete").as(TableChanges.CHANGE_TYPE): _*)
     def image(cols: Seq[Column], changeType: Column): Column =
       struct(cols :+ changeType.as(TableChanges.CHANGE_TYPE): _*)
-    val pre = image(fields.map(f =>
-        col(qual + ColumnMapping.quoted(f.name)).as(f.name)),
+    val pre = image(preCols,
       when(updated, lit("update_preimage")).otherwise(lit("delete")))
     assignUpdates(rows.withColumn("__pre", pre).withColumn("__upd", updated),
         snap, clauses, Nil, qual, keep = Seq("__pre", "__upd"))
@@ -1596,14 +1597,16 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // slim: MERGE tombstones + rewrites need no stats JSON (see DELETE)
     val allAdds = scan.collectAddFiles(slim = true)
     val cond = expr(condSql)
+    val cdf = TableChanges.cdfEnabled(snap.metadata)
     // the marker tells matched from unmatched target rows after the
-    // left-outer join below. Each pass re-reads the source, so only a
-    // nondeterministic one is pinned (every pass must see the same rows)
+    // left-outer join below. The match pass and the writes must all see
+    // the same source rows: a source that might read differently on a
+    // second run is pinned
     val src = source.withColumn(DeltaTable.MERGE_SOURCE_ROW, lit(true))
       .alias("s")
-    val pinSource = !src.queryExecution.analyzed.deterministic
-    if (pinSource) src.persist()
-    var insertRaw: Option[DataFrame] = None
+    var pinned = Seq.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pinned :+= df.persist(); df }
+    if (!MergeClause.rereadsAlike(src)) pin(src)
     try {
       // -- one match pass over every file (target ⋈ source): the files
       //    holding a matched row, each with its join-row count and the
@@ -1632,13 +1635,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       //    Row-tracking tables read the candidates WITH their row ids so
       //    kept/updated rows stage them through.
       val (fullRead, rtCols) = readFilesForRewrite(snap, candidates)
-      val tagged =
-        if (candidates.isEmpty) None
-        else Some(fullRead.alias("t").join(src, cond, "left_outer")
-          .withColumn("_action",
-            when(col("s." + DeltaTable.MERGE_SOURCE_ROW).isNotNull,
-              clauseTag(matchedClauses, "a", "keep"))
-              .otherwise(clauseTag(bySourceClauses, "b", "keep"))))
       val clauseTags =
         matchedClauses.zipWithIndex.map { case (c, i) => c -> s"a$i" } ++
         bySourceClauses.zipWithIndex.map { case (c, i) => c -> s"b$i" }
@@ -1647,6 +1643,17 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val deleteTags = clauseTags.collect {
         case (_: MatchedDelete | _: NotMatchedBySourceDelete, t) => t }
       val changed = updateTags ++ deleteTags
+      // with the change feed on, the data and change-data writes read
+      // the tagged rows and the insert rows from one materialization each
+      val feedsChanges = cdf && changed.nonEmpty
+      val tagged =
+        if (candidates.isEmpty) None
+        else Some(fullRead.alias("t").join(src, cond, "left_outer")
+          .withColumn("_action",
+            when(col("s." + DeltaTable.MERGE_SOURCE_ROW).isNotNull,
+              clauseTag(matchedClauses, "a", "keep"))
+              .otherwise(clauseTag(bySourceClauses, "b", "keep"))))
+          .map(r => if (feedsChanges) pin(r) else r)
       // the clause whose tag a row carries assigns; rows no update
       // clause tagged keep their values
       val assignments = clauseTags.collect {
@@ -1668,8 +1675,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val antiAdds =
         if (matchedClauses.isEmpty && bySourceClauses.isEmpty) allAdds
         else candidates
-      val identityCols: Set[String] =
-        if (insertClauses.isEmpty) Set.empty
+      val (insertRaw, identityCols): (Option[DataFrame], Set[String]) =
+        if (insertClauses.isEmpty) (None, Set.empty)
         else {
           val unmatched = (if (antiAdds.isEmpty) src
             else src.join(readFiles(snap, antiAdds).alias("t"), cond,
@@ -1693,26 +1700,27 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           }
           val (raw, idents) =
             IdentityColumns.assign(unmatched.select(insCols: _*), snap)
+          // pinned with the change feed on, so the data rows and the
+          // insert images carry the same generated identities and
+          // defaults (current_timestamp() included)
           val prepared = WriteValidation.prepare(raw, snap)
-          // generated identities must read the same in the data and
-          // CDF stagings
-          if (idents.exists(c => !supplied(c))) prepared.persist()
-          insertRaw = Some(prepared)
-          idents
+          (Some(if (cdf) pin(prepared) else prepared), idents)
         }
 
       // inserts carry no materialized columns — allowMissingColumns
       // fills NULL, so inserted rows take the new add's FRESH defaults
-      val (newAdds, cdcActions) = stageRowLevel(
-        (rewritten ++ insertRaw).reduceOption(
-          _.unionByName(_, allowMissingColumns = rtCols.nonEmpty)),
-        if (!TableChanges.cdfEnabled(snap.metadata)) Nil
-        else tagged.filter(_ => changed.nonEmpty).map(r => changeImages(
-          r.filter(col("_action").isin(changed: _*)), snap, assignments,
-          col("_action").isin(updateTags: _*), qual = "t.")).toSeq ++
-          insertRaw.map(_.withColumn(TableChanges.CHANGE_TYPE, lit("insert"))),
-        snap, rtCols)
+      val newAdds = (rewritten ++ insertRaw).reduceOption(
+          _.unionByName(_, allowMissingColumns = rtCols.nonEmpty))
+        .fold(Seq.empty[AddFile])(stageFiles(_, snap, rtCols, rebalance = true))
       if (candidates.isEmpty && newAdds.isEmpty) return snap.version
+      val cdcActions =
+        if (!cdf) Nil
+        else stageCdcMulti(tagged.filter(_ => feedsChanges).map(r =>
+          changeImages(r.filter(col("_action").isin(changed: _*)), snap,
+            assignments, col("_action").isin(updateTags: _*), qual = "t."))
+          .toSeq ++
+          insertRaw.map(_.withColumn(TableChanges.CHANGE_TYPE, lit("insert"))),
+          snap, rebalance = true)
 
       val idHwms = IdentityColumns.hwmFromStats(newAdds, snap, identityCols)
       val idMeta = if (idHwms.isEmpty) None
@@ -1726,10 +1734,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           removes = candidates.map(tombstone(_, dataChange = true)),
           adds = newAddsRt, cdc = cdcActions),
         Reads(None))
-    } finally {
-      if (pinSource) src.unpersist()
-      insertRaw.foreach(_.unpersist())
-    }
+    } finally pinned.foreach(_.unpersist())
   }
 
   /** MERGE's first-match-wins clause tag: `prefix + i` for the first

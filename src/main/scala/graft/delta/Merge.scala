@@ -1,5 +1,7 @@
 package graft.delta
 
+import org.apache.spark.sql.DataFrame
+
 /** MERGE INTO clause forms (reference: the kernel exposes the
   * building blocks — file-granular rewrite via add/remove pairs,
   * transaction/mod.rs — and delta-spark defines the clause semantics;
@@ -53,4 +55,23 @@ object MergeClause {
   /** WHEN NOT MATCHED BY SOURCE [AND condition] THEN DELETE. */
   final case class NotMatchedBySourceDelete(
       condition: Option[String]) extends MergeClause
+
+  /** Whether running `df` again surely yields the same rows: a
+    * deterministic plan of projections, filters and repartitions over
+    * in-memory rows or a range, with no subquery. Joins, limits,
+    * samples and external sources may not.
+    */
+  private[delta] def rereadsAlike(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.plans.logical
+    val plan = df.queryExecution.analyzed
+    plan.deterministic && plan.find(n =>
+      n.expressions.exists(SubqueryExpression.hasSubquery) || (n match {
+        case _: logical.LocalRelation | _: logical.Range |
+             _: logical.Project | _: logical.Filter |
+             _: logical.SubqueryAlias | _: logical.Repartition |
+             _: logical.RepartitionByExpression => false
+        case _ => true
+      })).isEmpty
+  }
 }

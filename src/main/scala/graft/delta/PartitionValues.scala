@@ -5,7 +5,7 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Partition-value string (de)serialization per the Delta protocol
@@ -81,6 +81,23 @@ object PartitionValues {
       case BinaryType => new String(v.asInstanceOf[Array[Byte]], "UTF-8")
       case _ => v.toString // integral, float, boolean
     }
+  }
+
+  /** Log rows whose `add.partitionValues` equal one of `touched` on the
+    * physical partition columns `physCols`, exactly and null-safely. One
+    * IN over a canonical key per row — each value as `<chars>:<value>`,
+    * a null as `-`, comma-joined, so no two value lists share a key — so
+    * the predicate's depth does not grow with the number of values.
+    */
+  def scope(physCols: Seq[String],
+      touched: Set[Map[String, String]]): Column = {
+    def key(vs: Seq[Option[String]]): String = vs.map(_.fold("-")(v =>
+      s"${v.codePointCount(0, v.length)}:$v")).mkString(",")
+    concat_ws(",", physCols.map { c =>
+      val v = col("add.partitionValues")(c)
+      coalesce(concat(length(v).cast("string"), lit(":"), v), lit("-"))
+    }: _*).isin(touched.toSeq.map(pv =>
+      key(physCols.map(c => Option(pv.getOrElse(c, null))))): _*)
   }
 
   /** SQL expression string that casts partition-string map entries to the

@@ -229,6 +229,23 @@ class ClusteringSpec extends AnyFunSuite {
     assertScopedCompaction("scope-65", $"id".cast("int"), 66)
   }
 
+  test("the auto-compaction scope over 5,000 touched partition values " +
+      "keeps exactly the touched value lists, nulls included") {
+    def pv(p: String, q: String) = Map("p" -> p, "q" -> q)
+    val touched = (0 until 5000).map(i =>
+      pv(s"v$i", if (i % 7 == 0) null else s"$i")).toSet ++
+      Set(pv("a,b", "c"), pv("1:x", "-"), pv("\u00e9\ud83d\ude00", null))
+    val log = Seq(pv("v0", null), pv("v1", "1"), pv("v7", null),
+        pv("v1", null), pv("v0", "0"), pv("v5000", "5000"),
+        pv("a,b", "c"), pv("a", "b,c"), pv("1:x", "-"), pv("1:x", null),
+        pv("\u00e9\ud83d\ude00", null), pv("\u00e9", null))
+      .toDF("partitionValues").select(struct($"partitionValues").as("add"))
+    val kept = log.filter(PartitionValues.scope(Seq("p", "q"), touched))
+      .select($"add.partitionValues").as[Map[String, String]].collect().toSet
+    assert(kept == Set(pv("v0", null), pv("v1", "1"), pv("v7", null),
+      pv("a,b", "c"), pv("1:x", "-"), pv("\u00e9\ud83d\ude00", null)))
+  }
+
   /** Three single-row appends into partition value `p` of an
     * auto-compacting table (threshold 3): the third must compact the
     * partition to one file.

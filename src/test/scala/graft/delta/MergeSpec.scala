@@ -279,6 +279,44 @@ class MergeSpec extends AnyFunSuite {
     assert(t.toDF.count() == 201)
   }
 
+  test("CDF MERGE: an inserted row's current_timestamp() default reads " +
+      "the same in the table and in its insert image") {
+    val dir = TestSpark.tmpDir("mrg_cdf_default")
+    val schema = org.apache.spark.sql.types.StructType(
+      Seq((1L, 1L)).toDF("id", "v").schema.fields :+
+        org.apache.spark.sql.types.StructField("ts",
+          org.apache.spark.sql.types.TimestampType, nullable = true,
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .putString(WriteValidation.DEFAULT_KEY, "current_timestamp()")
+            .build()))
+    DeltaTable.create(spark, dir, schema,
+      configuration = Map(TableChanges.CDF_ENABLED_KEY -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(Seq((1L, 1L)).toDF("id", "v"))
+    val v = t.merge(Seq((1L, 10L), (5L, 50L)).toDF("id", "v"), "t.id = s.id",
+      Seq(MatchedUpdate(None, Map("v" -> "s.v")),
+        NotMatchedInsert(None, Map("id" -> "s.id", "v" -> "s.v"))))
+    val stored = t.toDF.filter($"id" === 5L).select("ts").as[java.sql.Timestamp]
+      .collect().toSeq
+    val image = TableChanges.read(spark, dir, v, Some(v))
+      .filter(col(TableChanges.CHANGE_TYPE) === "insert")
+      .select("ts").as[java.sql.Timestamp].collect().toSeq
+    assert(stored.size == 1 && stored.head != null && image == stored)
+  }
+
+  test("MERGE re-reads only sources that surely read alike; it pins " +
+      "joins, limits, file reads and nondeterministic sources") {
+    val local = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    assert(MergeClause.rereadsAlike(local.coalesce(1).filter($"k" > 0)))
+    assert(MergeClause.rereadsAlike(spark.range(10).select($"id" * 2)))
+    assert(!MergeClause.rereadsAlike(local.join(local, "k")))
+    assert(!MergeClause.rereadsAlike(spark.range(10).toDF.limit(3)))
+    assert(!MergeClause.rereadsAlike(local.withColumn("r", rand())))
+    val dir = TestSpark.tmpDir("mrg_reread") + "/src"
+    local.write.parquet(dir)
+    assert(!MergeClause.rereadsAlike(spark.read.parquet(dir)))
+  }
+
   test("a MERGE that matches no target row plans a single target scan") {
     val (_, t) = partitionedCdf("mrg_nomatch")
     val r = new InMemoryReporter
@@ -312,9 +350,10 @@ class MergeSpec extends AnyFunSuite {
       v
     } finally sc.removeSparkListener(listener)
     // the match pass (source broadcast, partial-aggregate exchange,
-    // collect), then the data and change-data writes, each a source
-    // broadcast, the insert anti-join's broadcast, a rebalance exchange
-    // and the write
+    // collect); the data write (source broadcast, the tagged rows'
+    // materialization, the insert anti-join's broadcast, the insert
+    // rows' materialization, a rebalance exchange, the write); the
+    // change-data write from both materializations (rebalance, write)
     assert(jobs.get <= 11, s"${jobs.get} Spark jobs ran")
     val feed = TableChanges.read(spark, dir, v, Some(v))
       .groupBy(TableChanges.CHANGE_TYPE).count().as[(String, Long)]
