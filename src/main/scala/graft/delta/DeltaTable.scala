@@ -1302,10 +1302,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         val (read, rtCols) = readFilesForRewrite(snap, readAdds)
         // Spark pads each file by its open cost, so small touched files
         // read as a task each, and each task writes its own file per
-        // partition value: read instead in as many tasks as the bytes
-        // call for, so a small rewrite writes one file per value with
-        // no shuffle. The data and change-data writes share one read
-        val full = read.coalesce(readTasks(readAdds))
+        // partition value: a partitioned table reads instead in as many
+        // tasks as the bytes call for, so a small rewrite writes one
+        // file per value with no shuffle. Unpartitioned files keep one
+        // task each, so their rewrites keep their stats ranges apart.
+        // The data and change-data writes share one read
+        val full =
+          if (snap.partitionColumns.isEmpty) read
+          else read.coalesce(readTasks(readAdds))
         if (cdf) full.persist()
         try {
           val matchedRows = full.filter(cond)
