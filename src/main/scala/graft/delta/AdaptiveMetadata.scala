@@ -120,18 +120,8 @@ object AdaptiveMetadata {
       }
       one("protocol").foreach(n => protocol = Some(JsonLog.parseProtocol(n)))
       one("metaData").foreach(n => metadata = Some(JsonLog.parseMetadata(n)))
-      one("txn").foreach { n =>
-        txns += SetTransaction(
-          n.get("appId").asText,
-          n.get("version").asLong,
-          Option(n.get("lastUpdated")).filterNot(_.isNull).map(_.asLong))
-      }
-      one("domainMetadata").foreach { n =>
-        domains += DomainMetadata(
-          n.get("domain").asText,
-          n.get("configuration").asText,
-          Option(n.get("removed")).exists(_.asBoolean))
-      }
+      one("txn").foreach(n => txns += JsonLog.parseTxn(n))
+      one("domainMetadata").foreach(n => domains += JsonLog.parseDomain(n))
       one("sidecar").foreach { n =>
         val sc = Sidecar(
           n.get("path").asText,

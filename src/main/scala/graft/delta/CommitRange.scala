@@ -47,17 +47,10 @@ final class CommitRange private (
     ordered.iterator.map { case (cf, mtime) =>
       val conf = spark.sessionState.newHadoopConf()
       val fs = Storage.fs(cf.path, conf)
-      val ict = Storage.readLines(fs, cf.path).iterator
-        .filter(_.contains("\"commitInfo\""))
-        .map(JsonLog.parseLine)
-        .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
-        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-          .filterNot(_.isNull).map(_.asLong))
-        .nextOption()
       val df = spark.read.schema(LogSchema.full).json(cf.path.toString)
         .filter(kinds.map(k => col(k).isNotNull).reduce(_ || _))
         .select(kinds.map(col): _*)
-      Commit(cf.version, ict.getOrElse(mtime), df)
+      Commit(cf.version, JsonLog.commitTimestamp(fs, cf.path, mtime), df)
     }
   }
 
@@ -73,21 +66,10 @@ final class CommitRange private (
       s.version == startVersion,
       s"seed snapshot at ${s.version} does not adjoin [$startVersion, " +
         s"$endVersion]"))
-    var p = seed.map(_.protocol)
-    var m = seed.map(_.metadata)
-    val conf = spark.sessionState.newHadoopConf()
-    files.foreach { case (cf, _) =>
-      val fs = Storage.fs(cf.path, conf)
-      Storage.readLines(fs, cf.path).foreach { line =>
-        if (line.contains("\"protocol\"") || line.contains("\"metaData\"")) {
-          val n = JsonLog.parseLine(line)
-          val pp = n.get("protocol"); val mm = n.get("metaData")
-          if (pp != null && !pp.isNull) p = Some(JsonLog.parseProtocol(pp))
-          if (mm != null && !mm.isNull) m = Some(JsonLog.parseMetadata(mm))
-        }
-      }
-    }
-    (p, m)
+    val paths = files.reverse.map(_._1.path)
+    val (p, m) = JsonLog.protocolAndMetadata(
+      Storage.fs(paths.head, spark.sessionState.newHadoopConf()), paths)
+    (p.orElse(seed.map(_.protocol)), m.orElse(seed.map(_.metadata)))
   }
 }
 

@@ -1013,15 +1013,11 @@ object ContentTree {
       spark.sessionState.newHadoopConf())
     val commit = FileNames.commitFile(
       FileNames.logDir(snap.tableRoot), version)
-    val adds = Storage.readLines(fs, commit).flatMap { line =>
-      if (line.isEmpty) None
-      else {
-        val n = JsonLog.parseLine(line)
-        require(Option(n.get("remove")).forall(_.isNull),
-          s"commit $version carries removes — use updateRoot")
-        Option(n.get("add")).filterNot(_.isNull).map(RowCodec.jsonToAdd)
-      }
-    }
+    val actions = JsonLog.readCommit(fs, commit, Set("add", "remove"))
+      .map(_._2)
+    require(actions.forall(_.remove.isEmpty),
+      s"commit $version carries removes — use updateRoot")
+    val adds = actions.flatMap(_.add)
     if (adds.isEmpty) return prev.copy(version = version)
     val addRows: Seq[Row] = adds.map(a =>
       new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
@@ -1064,28 +1060,18 @@ object ContentTree {
     val best = scala.collection.mutable.HashMap
       .empty[String, (AddFile, Long, Int)]
     ((base + 1) to target).foreach { v =>
-      Storage.readLines(fs, FileNames.commitFile(logDir, v))
-        .foreach { line =>
-          if (line.nonEmpty) {
-            val n = JsonLog.parseLine(line)
-            val addN = Option(n.get("add")).filterNot(_.isNull)
-            val remN = Option(n.get("remove")).filterNot(_.isNull)
-            val hit: Option[(String, (AddFile, Long, Int))] =
-              addN.map { a =>
-                val af = RowCodec.jsonToAdd(a)
-                (Storage.decodeUriPath(af.path), (af, v, 1))
-              }.orElse(remN.map { r =>
-                (Storage.decodeUriPath(r.get("path").asText),
-                  (null: AddFile, v, 0))
-              })
-            hit.foreach { case (loc, w) =>
-              val keep = best.get(loc).forall { c =>
-                w._2 > c._2 || (w._2 == c._2 && w._3 > c._3)
-              }
-              if (keep) best(loc) = w
-            }
-          }
+      JsonLog.readCommit(fs, FileNames.commitFile(logDir, v),
+          Set("add", "remove")).foreach { case (_, a) =>
+        val (loc, w) = a.add match {
+          case Some(af) => (Storage.decodeUriPath(af.path), (af, v, 1))
+          case None =>
+            (Storage.decodeUriPath(a.remove.get.path), (null: AddFile, v, 0))
         }
+        val keep = best.get(loc).forall { c =>
+          w._2 > c._2 || (w._2 == c._2 && w._3 > c._3)
+        }
+        if (keep) best(loc) = w
+      }
     }
     val schema = StructType(Seq(
       StructField("loc", StringType),

@@ -104,29 +104,24 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         case CommitResponse.Committed(cv, _) =>
           // commit JSON bytes: the log-growth half of write-side I/O
           // accounting (data_write covers the parquet half)
-          if (Metrics.reporter ne NoOpReporter)
-            Metrics.report(MetricEvent.IoBytes(opId, "commit_write",
-              1L, content.getBytes("UTF-8").length.toLong))
+          Metrics.report(MetricEvent.IoBytes(opId, "commit_write",
+            1L, Storage.utf8Length(content)))
           Metrics.report(MetricEvent.TransactionCommitSuccess(opId,
             Metrics.now() - t0, cv, attempts))
           return cv
         case CommitResponse.Conflict(_) => ()
       }
       attempts += 1
-      val winner = Storage.readLines(fs, resolveCommitPath(v))
-        .filter(_.nonEmpty)
-      def winnerField(field: String) = winner.iterator
-        .filter(_.contains("\"" + field + "\""))
-        .map(JsonLog.parseLine)
-        .flatMap(n => Option(n.get(field)).filterNot(_.isNull))
-      if (winnerField("protocol").nonEmpty)
+      val winner = JsonLog.readCommit(fs, resolveCommitPath(v),
+        Set("protocol", "metaData", "txn", "add", "remove")).map(_._2)
+      if (winner.exists(_.protocol.nonEmpty))
         fail(new ProtocolChangedException(
           s"concurrent protocol change at version $v for $pathStr"))
-      if (winnerField("metaData").nonEmpty)
+      if (winner.exists(_.metaData.nonEmpty))
         fail(new MetadataChangedException(
           s"concurrent metadata change at version $v for $pathStr"))
       if (txnAppIds.nonEmpty) {
-        winnerField("txn").map(_.get("appId").asText)
+        winner.flatMap(_.txn).map(_.appId)
           .find(txnAppIds.contains)
           .foreach(app => fail(new ConcurrentTransactionException(
             s"concurrent transaction for appId '$app' at version $v " +
@@ -139,7 +134,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         case Some(rs) =>
           // delete/delete: the winner removed a file we also remove —
           // both transactions acted on the same rows
-          winnerField("remove").map(RowCodec.jsonToRemove)
+          winner.flatMap(_.remove)
             .map(r => Storage.canonicalPathKey(r.path))
             .find(rs.removedKeys.contains)
             .foreach(p => fail(new ConcurrentDeleteDeleteException(
@@ -153,8 +148,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           // remove/remove check above already catches compactions that
           // touched OUR files, so they never conflict with a predicate
           // (delta-spark excludes them under WriteSerializable too)
-          val winAdds = winnerField("add").map(RowCodec.jsonToAdd)
-            .filter(_.dataChange).toSeq
+          val winAdds = winner.flatMap(_.add).filter(_.dataChange)
           if (winAdds.nonEmpty && !rs.maintenance) {
             val disjoint = rs.predicateSql.isDefined && {
               val rows: Seq[org.apache.spark.sql.Row] = winAdds.map(a =>
@@ -181,8 +175,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           // (delta.isolationLevel; WriteSerializable keeps the default
           // append-commutes-with-anything behavior)
           if (serializable &&
-              winnerField("remove").exists(r =>
-                Option(r.get("dataChange")).forall(_.asBoolean)))
+              winner.flatMap(_.remove).exists(_.dataChange))
             fail(new ConcurrentWriteException(
               s"serializable isolation: concurrent data removal at " +
                 s"version $v for $pathStr"))
@@ -232,7 +225,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     // of clock skew (reference transaction/commit_info.rs:484)
     def ictAt(v: Long): Option[Long] =
       if (!stampsIct) None
-      else Some(math.max(now(), commitIct(v - 1).getOrElse(0L) + 1))
+      else Some(math.max(now(), commitIct(v - 1) + 1))
     val firstIct = ictAt(start)
     val meta = actions.metadata.map { m =>
       if (baseMeta.exists(!ictOn(_)) && ictOn(m))
@@ -371,18 +364,13 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
         .find(_.version == version).map(_.location))
       .getOrElse(FileNames.commitFile(logDir, version))
 
-  /** In-commit timestamp of the commit file at `version`, if any. */
-  private def commitIct(version: Long): Option[Long] = {
-    if (version < 0) return None
+  /** In-commit timestamp of the commit file at `version`; 0 when it has
+    * none.
+    */
+  private def commitIct(version: Long): Long = {
+    if (version < 0) return 0L
     val p = resolveCommitPath(version)
-    if (!fs.exists(p)) None
-    else Storage.readLines(fs, p).iterator
-      .filter(_.contains("\"commitInfo\""))
-      .map(JsonLog.parseLine)
-      .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
-      .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-        .filterNot(_.isNull).map(_.asLong))
-      .nextOption()
+    if (!fs.exists(p)) 0L else JsonLog.commitTimestamp(fs, p, 0L)
   }
 
   /** Publish ratified catalog commits `<= upToVersion` (default: all)
@@ -2781,17 +2769,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * DataFrame, the table listing distributes one subtree per task,
     * dead files fall out of an anti-join, and the deletes run on
     * executors — the driver never holds the file list of a 100 TB
-    * table. `graft.vacuum.forceDistributed=1` forces the wide arm
-    * (spec hook, mirroring `graft.tree.smallHandoffEntries`).
+    * table. `graft.replay.driverMaxBytes=0` forces the wide arm.
     */
   def vacuum(dryRun: Boolean = false): Seq[String] = {
     val snap = snapshot()
     val retention = tombstoneRetentionMillis(snap.metadata)
     val cutoff = now() - retention
     val rootUri = fs.makeQualified(root).toUri.getPath
-    val forceWide = sys.props.get("graft.vacuum.forceDistributed")
-      .exists(_ == "1")
-    if (snap.smallState && !forceWide)
+    if (snap.smallState)
       vacuumDriver(snap, cutoff, rootUri, dryRun)
     else vacuumDistributed(snap, cutoff, rootUri, dryRun)
   }
@@ -2953,23 +2938,21 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * external-cleaner casualties) so every later read stops failing
     * with FILE_NOT_EXIST. `dryRun` lists the missing paths without
     * committing. Scale mirrors vacuum's gate: small tables probe
-    * against one driver listing; past [[Snapshot.smallState]] (or
-    * `graft.fsck.forceDistributed=1`) the live adds stay a DataFrame,
-    * the listing distributes, and missing artifacts fall out of an
-    * anti-join — only the BROKEN adds (the commit's own payload,
-    * O(missing)) ever reach the driver. The repair commit carries
-    * plain removes (dataChange=true): downstream CDF/streaming
-    * readers crossing it see row-level deletes they cannot re-read
-    * (the bytes are gone) — delta-spark's FSCK has the same boundary.
+    * against one driver listing; past [[Snapshot.smallState]] the live
+    * adds stay a DataFrame, the listing distributes, and missing
+    * artifacts fall out of an anti-join — only the BROKEN adds (the
+    * commit's own payload, O(missing)) ever reach the driver. The
+    * repair commit carries plain removes (dataChange=true): downstream
+    * CDF/streaming readers crossing it see row-level deletes they
+    * cannot re-read (the bytes are gone) — delta-spark's FSCK has the
+    * same boundary.
     */
   def fsckRepair(dryRun: Boolean = false): Seq[String] = {
     val snap = snapshot()
     if (!dryRun) writerGate(snap, mutating = true)
     val rootUri = fs.makeQualified(root).toUri.getPath
-    val forceWide = sys.props.get("graft.fsck.forceDistributed")
-      .exists(_ == "1")
     val missing: Seq[AddFile] =
-      if (snap.smallState && !forceWide) fsckMissingDriver(snap, rootUri)
+      if (snap.smallState) fsckMissingDriver(snap, rootUri)
       else fsckMissingDistributed(snap, rootUri)
     if (dryRun || missing.isEmpty) return missing.map(_.path)
     // maintenance conflict shape: a concurrent APPEND's new files exist
@@ -3095,38 +3078,34 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
   /** Write `lo.hi.compacted.json` — the range's actions reduced to their
     * newest-wins survivors (reference kernel/src/log_compaction/
     * writer.rs:140): latest P&M if present in range, latest txn per
-    * appId, and the latest file action per (path, dvId) including remove
-    * tombstones. Readers substitute it for the commit run.
+    * appId, latest domain metadata per domain (removals included, so a
+    * removal still shadows an older checkpoint row), and the latest file
+    * action per (path, dvId) including remove tombstones. Readers
+    * substitute it for the commit run.
     */
   def compactLog(lo: Long, hi: Long): Long = {
     require(lo <= hi, s"invalid compaction range [$lo, $hi]")
-    var protocol: Option[String] = None
-    var metadata: Option[String] = None
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    val fileLines = scala.collection.mutable.ArrayBuffer.empty[String]
+    // newest first, first seen wins: one survivor line per (rank, id),
+    // the rank ordering P&M, txns, domains, then file actions
+    val survivors = scala.collection.mutable.LinkedHashMap
+      .empty[(Int, String), String]
     (hi to lo by -1).foreach { v =>
       val p = FileNames.commitFile(logDir, v)
       require(fs.exists(p), s"missing commit $v for compaction")
-      Storage.readLines(fs, p).filter(_.nonEmpty).foreach { line =>
-        val n = JsonLog.parseLine(line)
-        def has(f: String) = n.get(f) != null && !n.get(f).isNull
-        if (has("protocol") && protocol.isEmpty) protocol = Some(line)
-        else if (has("metaData") && metadata.isEmpty) metadata = Some(line)
-        else if (has("txn")) {
-          val app = n.get("txn").get("appId").asText
-          if (!txns.contains(app)) txns(app) = line
-        } else if (has("add") || has("remove")) {
-          val side = if (has("add")) "add" else "remove"
-          val a = n.get(side)
-          val key = Snapshot.fileKey(a.get("path").asText,
-            Option(a.get("deletionVector")).filterNot(_.isNull)
-              .map(RowCodec.jsonToDv))
-          if (seen.add(key)) fileLines += line
-        }
+      JsonLog.readCommit(fs, p, Set("protocol", "metaData", "txn",
+          "domainMetadata", "add", "remove")).foreach { case (line, a) =>
+        val key =
+          if (a.protocol.nonEmpty) (0, "")
+          else if (a.metaData.nonEmpty) (1, "")
+          else if (a.txn.nonEmpty) (2, a.txn.get.appId)
+          else if (a.domainMetadata.nonEmpty) (3, a.domainMetadata.get.domain)
+          else a.add.map(f => (4, Snapshot.fileKey(f.path, f.deletionVector)))
+            .getOrElse((4, Snapshot.fileKey(a.remove.get.path,
+              a.remove.get.deletionVector)))
+        if (!survivors.contains(key)) survivors(key) = line
       }
     }
-    val lines = protocol.toSeq ++ metadata.toSeq ++ txns.values ++ fileLines
+    val lines = survivors.toSeq.sortBy(_._1._1).map(_._2)
     val dest = new Path(logDir, f"$lo%020d.$hi%020d.compacted.json")
     if (!Storage.putIfAbsent(fs, dest, lines.mkString("", "\n", "\n")))
       throw new IllegalStateException(s"compacted file already exists: $dest")
@@ -3157,19 +3136,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     Storage.listSorted(fs, logDir).flatMap { st =>
       FileNames.parse(st) match {
         case Some(FileNames.CommitFile(v, p, _)) =>
-          val op = Storage.readLines(fs, p).iterator
-            .map(JsonLog.parseLine)
-            .collectFirst {
-              case n if n.has("commitInfo") && !n.get("commitInfo").isNull =>
-                val ci = n.get("commitInfo")
-                val ts = Option(ci.get("inCommitTimestamp"))
-                  .filterNot(_.isNull).map(_.asLong)
-                  .getOrElse(st.getModificationTime)
-                (ts, Option(ci.get("operation")).map(_.asText).getOrElse(""),
-                  Option(ci.get("correlationId")).filterNot(_.isNull)
-                    .map(_.asText))
-            }.getOrElse((st.getModificationTime, "", None))
-          Some((v, op._1, op._2, op._3))
+          val ci = JsonLog.commitInfo(fs, p)
+          Some((v, JsonLog.timestamp(ci, st.getModificationTime),
+            ci.fold("")(_.operation), ci.flatMap(_.correlationId)))
         case _ => None
       }
     }
@@ -3195,14 +3164,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     private val tsCache = scala.collection.mutable.HashMap.empty[Int, Long]
     def tsOf(i: Int): Long = tsCache.getOrElseUpdate(i, {
       val (c, st) = commits(i)
-      Storage.readLines(fs, c.path).iterator
-        .filter(_.contains("\"commitInfo\""))
-        .map(JsonLog.parseLine)
-        .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
-        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-          .filterNot(_.isNull).map(_.asLong))
-        .nextOption()
-        .getOrElse(st.getModificationTime)
+      JsonLog.commitTimestamp(fs, c.path, st.getModificationTime)
     })
     private val conf = snapshot().metadata.configuration
     val ictOn: Boolean = conf.get(DeltaTable.ICT_ENABLED_KEY)

@@ -150,9 +150,9 @@ object LogSegment {
                   proto = Some(JsonLog.parseProtocol(el.get("protocol")))
                 case "metaData" =>
                   meta = Some(JsonLog.parseMetadata(el.get("metaData")))
-                case "txn" => txns += RowCodec.jsonToTxn(el.get("txn"))
+                case "txn" => txns += JsonLog.parseTxn(el.get("txn"))
                 case "domainMetadata" =>
-                  dms += RowCodec.jsonToDomain(el.get("domainMetadata"))
+                  dms += JsonLog.parseDomain(el.get("domainMetadata"))
                 case "checkpointMetadata" =>
                   cmv = Some(el.get("checkpointMetadata")
                     .get("version").asLong)

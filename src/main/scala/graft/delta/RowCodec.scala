@@ -1,13 +1,10 @@
 package graft.delta
 
-import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 
-import scala.jdk.CollectionConverters._
-
 /** Row <-> action-case-class conversions for the `LogSchema` structs —
-  * used by the driver fast-path replay (actions parsed on the driver,
+  * used by the driver fast-path replay (actions decoded by [[JsonLog]],
   * then lifted into a DataFrame) and when collecting scan-file rows.
   */
 object RowCodec {
@@ -100,68 +97,4 @@ object RowCodec {
     r.getAs[Int]("minReaderVersion"), r.getAs[Int]("minWriterVersion"),
     opt[scala.collection.Seq[String]](r, "readerFeatures").map(_.toSeq),
     opt[scala.collection.Seq[String]](r, "writerFeatures").map(_.toSeq))
-
-  // ---------- JsonNode -> case class (driver fast-path replay) ----------
-  private def optText(n: JsonNode, f: String): Option[String] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asText)
-  private def optLong(n: JsonNode, f: String): Option[Long] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asLong)
-  private def optInt(n: JsonNode, f: String): Option[Int] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asInt)
-  private def optBool(n: JsonNode, f: String): Option[Boolean] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asBoolean)
-  private def strMap(n: JsonNode): Map[String, String] =
-    n.properties().asScala.map { e =>
-      e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)
-    }.toMap
-
-  def jsonToDv(n: JsonNode): DeletionVectorDescriptor =
-    DeletionVectorDescriptor(
-      n.get("storageType").asText, n.get("pathOrInlineDv").asText,
-      optInt(n, "offset"), n.get("sizeInBytes").asInt,
-      n.get("cardinality").asLong)
-
-  def jsonToAdd(n: JsonNode): AddFile = AddFile(
-    path = n.get("path").asText,
-    partitionValues = Option(n.get("partitionValues")).filterNot(_.isNull)
-      .map(strMap).getOrElse(Map.empty),
-    size = n.get("size").asLong,
-    modificationTime = optLong(n, "modificationTime").getOrElse(0L),
-    dataChange = optBool(n, "dataChange").getOrElse(true),
-    stats = optText(n, "stats"),
-    tags = Option(n.get("tags")).filterNot(_.isNull).map(strMap),
-    deletionVector = Option(n.get("deletionVector")).filterNot(_.isNull)
-      .map(jsonToDv),
-    baseRowId = optLong(n, "baseRowId"),
-    defaultRowCommitVersion = optLong(n, "defaultRowCommitVersion"),
-    clusteringProvider = optText(n, "clusteringProvider"))
-
-  def jsonToCdc(n: JsonNode): AddCDCFile = AddCDCFile(
-    path = n.get("path").asText,
-    partitionValues = Option(n.get("partitionValues")).filterNot(_.isNull)
-      .map(strMap).getOrElse(Map.empty),
-    size = n.get("size").asLong,
-    dataChange = optBool(n, "dataChange").getOrElse(false))
-
-  def jsonToTxn(n: JsonNode): SetTransaction = SetTransaction(
-    n.get("appId").asText, n.get("version").asLong, optLong(n, "lastUpdated"))
-
-  def jsonToDomain(n: JsonNode): DomainMetadata = DomainMetadata(
-    n.get("domain").asText, optText(n, "configuration").getOrElse(""),
-    optBool(n, "removed").getOrElse(false))
-
-  def jsonToRemove(n: JsonNode): RemoveFile = RemoveFile(
-    path = n.get("path").asText,
-    deletionTimestamp = optLong(n, "deletionTimestamp"),
-    dataChange = optBool(n, "dataChange").getOrElse(true),
-    extendedFileMetadata = optBool(n, "extendedFileMetadata"),
-    partitionValues = Option(n.get("partitionValues")).filterNot(_.isNull)
-      .map(strMap),
-    size = optLong(n, "size"),
-    stats = optText(n, "stats"),
-    tags = Option(n.get("tags")).filterNot(_.isNull).map(strMap),
-    deletionVector = Option(n.get("deletionVector")).filterNot(_.isNull)
-      .map(jsonToDv),
-    baseRowId = optLong(n, "baseRowId"),
-    defaultRowCommitVersion = optLong(n, "defaultRowCommitVersion"))
 }

@@ -371,22 +371,14 @@ class Snapshot(
     def domain(d: DomainMetadata): Unit =
       if (!domains.contains(d.domain)) domains(d.domain) = d
     val fs = fsys
+    val kinds = Set("txn", "domainMetadata") ++
+      (if (keepFiles) Set("add", "remove") else Nil)
     segment.deltas.sortBy(f => -LogSegment.endVersion(f)).foreach { c =>
       val v = LogSegment.endVersion(c)
-      Storage.readLines(fs, c.path).foreach { line =>
-        if (line.nonEmpty && (keepFiles || line.contains("\"txn\"") ||
-            line.contains("\"domainMetadata\""))) {
-          val n = JsonLog.parseLine(line)
-          def field(name: String) = Option(n.get(name)).filterNot(_.isNull)
-          field("txn").foreach(t => txn(RowCodec.jsonToTxn(t)))
-          field("domainMetadata")
-            .foreach(d => domain(RowCodec.jsonToDomain(d)))
-          if (keepFiles) field("add") match {
-            case Some(a) => file(Some(RowCodec.jsonToAdd(a)), None, v)
-            case None => field("remove").foreach(r =>
-              file(None, Some(RowCodec.jsonToRemove(r)), v))
-          }
-        }
+      JsonLog.readCommit(fs, c.path, kinds).foreach { case (_, a) =>
+        a.txn.foreach(txn)
+        a.domainMetadata.foreach(domain)
+        if (a.add.nonEmpty || a.remove.nonEmpty) file(a.add, a.remove, v)
       }
     }
     segment.checkpointVersion.foreach { v =>
@@ -698,26 +690,8 @@ object Snapshot {
     }
 
     // newest-first P&M replay over commits
-    var protocol: Option[Protocol] = None
-    var metadata: Option[Metadata] = None
-    segment.deltas.sortBy(f => -LogSegment.endVersion(f)).iterator
-      .takeWhile(_ => protocol.isEmpty || metadata.isEmpty)
-      .foreach { c =>
-        Cancellation.check() // poll between commit files
-        Storage.readLines(fs, c.path).foreach { line =>
-          // cheap substring pre-filter: data commits are overwhelmingly
-          // add/remove lines — parsing every one makes newest-first P&M
-          // replay O(log bytes) in JSON parsing instead of I/O
-          if (line.contains("\"protocol\"") || line.contains("\"metaData\"")) {
-            val n = JsonLog.parseLine(line)
-            val p = n.get("protocol"); val m = n.get("metaData")
-            if (p != null && !p.isNull && protocol.isEmpty)
-              protocol = Some(JsonLog.parseProtocol(p))
-            if (m != null && !m.isNull && metadata.isEmpty)
-              metadata = Some(JsonLog.parseMetadata(m))
-          }
-        }
-      }
+    var (protocol, metadata) = JsonLog.protocolAndMetadata(fs,
+      segment.deltas.sortBy(f => -LogSegment.endVersion(f)).map(_.path))
     // fall back to the checkpoint (V2: the top-level file carries P&M)
     val pmFromCheckpoint = protocol.isEmpty || metadata.isEmpty
     if (pmFromCheckpoint && segment.checkpointParts.nonEmpty) {
@@ -780,21 +754,12 @@ object Snapshot {
       // dropping it would cost the refreshed snapshot the
       // skip-the-top-level V2 read
       prev.segment.lastCheckpointHint)
-    var protocol = prev.protocol
-    var metadata = prev.metadata
-    newCommits.foreach { c =>
-      Storage.readLines(fs, c.path).foreach { line =>
-        if (line.contains("\"protocol\"") || line.contains("\"metaData\"")) {
-          val n = JsonLog.parseLine(line)
-          val p = n.get("protocol"); val m = n.get("metaData")
-          if (p != null && !p.isNull) protocol = JsonLog.parseProtocol(p)
-          if (m != null && !m.isNull) metadata = JsonLog.parseMetadata(m)
-        }
-      }
-    }
+    val (protocol, metadata) =
+      JsonLog.protocolAndMetadata(fs, newCommits.reverse.map(_.path))
     // refresh always advances to the current latest (incremental.rs)
-    gated(new Snapshot(prev.spark, prev.tableRoot, segment, protocol,
-      metadata, true))
+    gated(new Snapshot(prev.spark, prev.tableRoot, segment,
+      protocol.getOrElse(prev.protocol), metadata.getOrElse(prev.metadata),
+      true))
   }
 
   /** The reader-side protocol gate alone (reference

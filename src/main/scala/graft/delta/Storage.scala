@@ -135,6 +135,19 @@ object Storage {
   def canonicalPathKey(p: String): String =
     p.replaceFirst(URI_PREFIX_REGEX, "")
 
+  /** Byte length of `s` encoded as UTF-8, without encoding it. */
+  def utf8Length(s: String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      n += (if (c < 0x80) 1 else if (c < 0x800 || Character.isSurrogate(c)) 2
+        else 3)
+      i += 1
+    }
+    n
+  }
+
   /** Atomic put-if-absent via write-to-temp + atomic publish. A naive
     * create(overwrite=false) has TWO races a concurrent committer hits:
     * the exists-then-create window lets two writers both "win" (the

@@ -84,18 +84,20 @@ object TableChanges {
         */
       pairs: Seq[(String, AddFile, RemoveFile)])
 
-  private def classifyActions(
-      lines: Seq[com.fasterxml.jackson.databind.JsonNode]): FileClasses = {
-    val cdcs = lines.flatMap(n => Option(n.get("cdc")).filterNot(_.isNull))
-      .map(RowCodec.jsonToCdc)
+  /** The action kinds a CDF pass reads from a commit file. */
+  private val CdfKinds =
+    Set("metaData", "protocol", "commitInfo", "cdc", "add", "remove")
+
+  private def commitTs(actions: Seq[SingleAction], mtime: Long): Long =
+    JsonLog.timestamp(actions.iterator.flatMap(_.commitInfo).nextOption(),
+      mtime)
+
+  private def classifyActions(actions: Seq[SingleAction]): FileClasses = {
+    val cdcs = actions.flatMap(_.cdc)
     if (cdcs.nonEmpty)
       return FileClasses(cdcs, Nil, Nil, Nil)
-    val adds = lines.flatMap(n =>
-        Option(n.get("add")).filterNot(_.isNull)).map(RowCodec.jsonToAdd)
-      .filter(_.dataChange)
-    val removes = lines.flatMap(n =>
-        Option(n.get("remove")).filterNot(_.isNull))
-      .map(RowCodec.jsonToRemove).filter(_.dataChange)
+    val adds = actions.flatMap(_.add).filter(_.dataChange)
+    val removes = actions.flatMap(_.remove).filter(_.dataChange)
     val remByPath = removes.map(r => r.path -> r).toMap
     val addByPath = adds.map(a => a.path -> a).toMap
     val pairPaths = addByPath.keySet.intersect(remByPath.keySet)
@@ -204,14 +206,11 @@ object TableChanges {
         Cancellation.check() // poll between commit versions
         val v = cf.version
         val t0 = Metrics.now()
-        val lines = Storage.readLines(fs, cf.path).filter(_.nonEmpty)
-          .map(JsonLog.parseLine)
+        val actions = JsonLog.readCommit(fs, cf.path, CdfKinds).map(_._2)
 
         // in-range metadata/protocol changes must keep the range readable
-        lines.foreach { n =>
-          val m = n.get("metaData")
-          if (m != null && !m.isNull) {
-            val meta = JsonLog.parseMetadata(m)
+        actions.foreach { a =>
+          a.metaData.foreach { meta =>
             require(cdfEnabled(meta),
               s"change data feed disabled at version $v")
             SchemaEvolution.validate(meta.schema, endSnap.schema).foreach(
@@ -232,19 +231,13 @@ object TableChanges {
           // table_changes/log_replay.rs:129 'ensure reading is supported
           // on any protocol updates') — the end snapshot's gate cannot
           // see a feature added and removed inside the range
-          val pr = n.get("protocol")
-          if (pr != null && !pr.isNull)
-            Snapshot.requireReadable(JsonLog.parseProtocol(pr))
+          a.protocol.foreach(Snapshot.requireReadable)
         }
 
-        val ict = lines.iterator.flatMap { n =>
-          Option(n.get("commitInfo")).filterNot(_.isNull)
-            .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-              .filterNot(_.isNull).map(_.asLong))
-        }.nextOption()
         Metrics.report(MetricEvent.CdfCommitParsed(opId,
           Metrics.now() - t0, v))
-        (v, ict.getOrElse(st.getModificationTime), classifyActions(lines))
+        (v, commitTs(actions, st.getModificationTime),
+          classifyActions(actions))
     }
     // driver-envelope gauge: the classify pass buffers exactly the
     // range's FILE ACTIONS (slim FileClasses rows), nothing fatter
@@ -474,38 +467,25 @@ object TableChanges {
     val fs = Storage.fs(root, conf)
     val cf = FileNames.commitFile(FileNames.logDir(root), version)
     val st = fs.getFileStatus(cf)
-    val lines = Storage.readLines(fs, cf).filter(_.nonEmpty)
-      .map(JsonLog.parseLine)
-    val ict = lines.iterator.flatMap { n =>
-      Option(n.get("commitInfo")).filterNot(_.isNull)
-        .flatMap(ci => Option(ci.get("inCommitTimestamp"))
-          .filterNot(_.isNull).map(_.asLong))
-    }.nextOption()
+    val actions = JsonLog.readCommit(fs, cf, CdfKinds).map(_._2)
     val tsCol = lit(new java.sql.Timestamp(
-      ict.getOrElse(st.getModificationTime)))
+      commitTs(actions, st.getModificationTime)))
     val scan = new DeltaScan(snap, None)
     def stamp(df: DataFrame): DataFrame = df
       .withColumn(COMMIT_VERSION, lit(version))
       .withColumn(COMMIT_TIMESTAMP, tsCol)
 
-    val cdcs = lines.flatMap(n => Option(n.get("cdc")).filterNot(_.isNull))
-      .map(RowCodec.jsonToCdc)
-    val body = if (cdcs.nonEmpty) {
-      val asAdds = cdcs.slice(from, until).map(c => AddFile(c.path,
+    val fc = classifyActions(actions)
+    val body = if (fc.cdcs.nonEmpty) {
+      val asAdds = fc.cdcs.slice(from, until).map(c => AddFile(c.path,
         c.partitionValues, c.size, 0L, dataChange = false))
       stamp(scan.assemble(asAdds, keepMeta = false,
         extraPhysical = Seq(StructField(CHANGE_TYPE, StringType))))
     } else {
-      val adds = lines.flatMap(n =>
-          Option(n.get("add")).filterNot(_.isNull)).map(RowCodec.jsonToAdd)
-        .filter(_.dataChange)
-      val removes = lines.flatMap(n =>
-          Option(n.get("remove")).filterNot(_.isNull))
-        .map(RowCodec.jsonToRemove).filter(_.dataChange)
-      require(removes.isEmpty,
+      require(fc.plainRemoves.isEmpty && fc.pairs.isEmpty,
         s"commit $version rewrites or deletes data files without cdc " +
           "files — it is not file-sliceable and must stream atomically")
-      stamp(scan.assemble(adds.slice(from, until), keepMeta = false)
+      stamp(scan.assemble(fc.plainAdds.slice(from, until), keepMeta = false)
         .withColumn(CHANGE_TYPE, lit("insert")))
     }
     val outCols = snap.schema.fieldNames.toSeq ++

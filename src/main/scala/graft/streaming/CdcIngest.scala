@@ -161,16 +161,9 @@ object CdcIngest {
         s"commit $v missing from the replay window ($after, " +
           s"${snap.version}]: log cleanup outran the tree root — " +
           "rebuild the tree (writeRoot) instead of replaying the batch")
-      val hit =
-        graft.delta.Storage.readLines(fs, f).exists { line =>
-          line.nonEmpty && {
-            val n = graft.delta.JsonLog.parseLine(line)
-            val txn = n.get("txn")
-            txn != null && !txn.isNull &&
-              txn.get("appId").asText == appId &&
-              txn.get("version").asLong == batchId
-          }
-        }
+      val hit = graft.delta.JsonLog.readCommit(fs, f, Set("txn"))
+        .exists(_._2.txn.exists(t =>
+          t.appId == appId && t.version == batchId))
       if (hit) Some(v) else None
     }.nextOption()
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SQLContext}
 
-import graft.delta.{DeltaScan, FileNames, JsonLog, RowCodec, Snapshot, Storage, TableChanges}
+import graft.delta.{DeltaScan, FileNames, JsonLog, Snapshot, Storage, TableChanges}
 
 /** Structured Streaming source over a Delta table: offsets are
   * (version, fileIndex) positions, each microbatch is a file slice of
@@ -162,7 +162,8 @@ class DeltaSource(
       s
     }
 
-  private def commitLines(v: Long): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+  /** Commit `v`'s metaData, cdc, add and remove actions. */
+  private def commitActions(v: Long): Seq[graft.delta.SingleAction] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(tablePath)
     val fs = Storage.fs(root, conf)
@@ -173,7 +174,8 @@ class DeltaSource(
         s"commit $v is missing from the log (vacuumed or compacted " +
           "away) — restart the stream without startingVersion to " +
           "begin from a fresh snapshot")
-    Storage.readLines(fs, p).filter(_.nonEmpty).map(JsonLog.parseLine)
+    JsonLog.readCommit(fs, p, Set("metaData", "cdc", "add", "remove"))
+      .map(_._2)
   }
 
   /** One commit's streamed adds (validated for delete/rewrite
@@ -184,15 +186,10 @@ class DeltaSource(
   private def tailAdds(v: Long): IndexedSeq[graft.delta.AddFile] =
     tailAddsCache.getOrElseUpdate(v, {
       if (tailAddsCache.size > 256) tailAddsCache.clear() // bounded
-      val lines = commitLines(v)
-      requireSchemaUnchanged(v, lines)
-      val vAdds = lines.flatMap(n =>
-        Option(n.get("add")).filterNot(_.isNull))
-        .map(RowCodec.jsonToAdd).filter(_.dataChange)
-      val hasRemoves = lines.exists { n =>
-        val rem = n.get("remove")
-        rem != null && !rem.isNull && RowCodec.jsonToRemove(rem).dataChange
-      }
+      val actions = commitActions(v)
+      requireSchemaUnchanged(v, actions)
+      val vAdds = actions.flatMap(_.add).filter(_.dataChange)
+      val hasRemoves = actions.exists(_.remove.exists(_.dataChange))
       if (hasRemoves && skipChangeCommits) IndexedSeq.empty
       else {
         if (hasRemoves && !ignoreDeletes)
@@ -222,17 +219,16 @@ class DeltaSource(
     * data shape is load-bearing here.
     */
   private def requireSchemaUnchanged(v: Long,
-      lines: Seq[com.fasterxml.jackson.databind.JsonNode]): Unit = {
+      actions: Seq[graft.delta.SingleAction]): Unit = {
     // commits at or below the pinned snapshot carry HISTORY (e.g. the
     // CREATE's metaData when replaying startingVersion=0): the pinned
     // schema is the latest there, and the schema-first read reconciles
     // old files into it — only changes AFTER the pin are unsafe
     if (v <= initialSnapshot.version) return
-    lines.iterator
-      .map(_.get("metaData")).find(m => m != null && !m.isNull)
+    actions.iterator.flatMap(_.metaData).nextOption()
       .foreach { m =>
         val newSchema = org.apache.spark.sql.types.DataType
-          .fromJson(m.get("schemaString").asText)
+          .fromJson(m.schemaString)
           .asInstanceOf[StructType]
         def shape(st: StructType): Seq[(String, String)] =
           st.fields.toSeq.map(f => (f.name, f.dataType.simpleString))
@@ -259,21 +255,14 @@ class DeltaSource(
   private def cdfInfo(v: Long): (IndexedSeq[Long], Boolean) =
     cdfInfoCache.getOrElseUpdate(v, {
       if (cdfInfoCache.size > 4096) cdfInfoCache.clear() // bounded
-      val lines = commitLines(v)
-      def acts(field: String) = lines
-        .flatMap(n => Option(n.get(field)).filterNot(_.isNull))
-        .filter(a =>
-          !a.has("dataChange") || a.get("dataChange").asBoolean(true))
-      val cdcs = lines.flatMap(n =>
-        Option(n.get("cdc")).filterNot(_.isNull))
-      def sizeOf(a: com.fasterxml.jackson.databind.JsonNode): Long =
-        Option(a.get("size")).filterNot(_.isNull).map(_.asLong).getOrElse(0L)
-      if (cdcs.nonEmpty) (cdcs.map(sizeOf).toIndexedSeq, true)
+      val actions = commitActions(v)
+      val cdcs = actions.flatMap(_.cdc)
+      if (cdcs.nonEmpty) (cdcs.map(_.size).toIndexedSeq, true)
       else {
-        val adds = acts("add")
-        val removes = acts("remove")
-        if (removes.isEmpty) (adds.map(sizeOf).toIndexedSeq, true)
-        else ((adds ++ removes).map(sizeOf).toIndexedSeq, false)
+        val adds = actions.flatMap(_.add).filter(_.dataChange).map(_.size)
+        val removes = actions.flatMap(_.remove).filter(_.dataChange)
+          .map(_.size.getOrElse(0L))
+        (adds ++ removes).toIndexedSeq -> removes.isEmpty
       }
     })
 

@@ -120,6 +120,20 @@ class CheckpointV2Spec extends AnyFunSuite {
 
     // time travel INTO the compacted range must fail loudly, not lie
     intercept[Exception] { t.snapshot(Some(2L)) }
+
+    // a compacted range keeps its domain metadata: ALTER CLUSTER BY
+    // inside it still reads back once the file substitutes the commits
+    t.alterClusterBy(Seq("l_quantity"))      // v5
+    t.append(src.filter($"l_quantity" < 2))  // v6
+    t.append(src.filter($"l_quantity" < 2))  // v7
+    assert(Clustering.columns(t.snapshot()) == Seq("l_quantity"))
+    t.compactLog(5, 6)
+    val snap3 = t.snapshot()
+    assert(snap3.segment.deltas.exists {
+      case c: FileNames.CompactedFile => c.version == 5L
+      case _ => false
+    })
+    assert(Clustering.columns(snap3) == Seq("l_quantity"))
   }
 
   /** Checkpoint `t` in `layout` ("classic" or "v2") and return the

@@ -183,9 +183,9 @@ class DmlFuzzSpec extends AnyFunSuite {
           // half the runs take the distributed arm, so BOTH vacuum
           // paths fuzz against the same model
           if (rnd.nextBoolean())
-            System.setProperty("graft.vacuum.forceDistributed", "1")
+            spark.conf.set("graft.replay.driverMaxBytes", "0")
           try t.vacuum()
-          finally System.clearProperty("graft.vacuum.forceDistributed")
+          finally spark.conf.unset("graft.replay.driverMaxBytes")
           readFloor = version
         case 6 => // restore to a safe target (segment + data intact)
           val targets = history.keys

@@ -40,6 +40,22 @@ class RowTrackingSpec extends AnyFunSuite {
     }
   }
 
+  test("log compaction keeps the high-water mark: later row ids stay " +
+      "unique") {
+    val dir = TestSpark.tmpDir("rtcompact")
+    val a = (1 to 50).map(i => (i.toLong, s"a$i")).toDF("k", "s")
+    DeltaTable.create(spark, dir, a.schema, configuration = conf)
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(a) // v1
+    t.append(a) // v2
+    t.compactLog(1, 2)
+    assert(RowTracking.highWaterMark(t.snapshot()) == 99L)
+    t.append(a) // v3
+    val ids = t.scan(None).toDFWithRowIds.select("_row_id")
+    assert(ids.count() == 150)
+    assert(ids.distinct().count() == 150)
+  }
+
   test("_row_id / _row_commit_version are unique and stable") {
     val dir = TestSpark.tmpDir("rtids")
     val a = (1 to 100).map(i => (i.toLong, i * 2.0)).toDF("k", "x")

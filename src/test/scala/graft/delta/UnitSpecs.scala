@@ -6,6 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 class JsonLogSpec extends AnyFunSuite {
+  private val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+    new org.apache.hadoop.conf.Configuration())
+
+  private def commitFile(lines: Seq[String]): org.apache.hadoop.fs.Path = {
+    val f = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(TestSpark.tmpDir("jsonlog")), "c", ".json")
+    java.nio.file.Files.write(f, lines.mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    new org.apache.hadoop.fs.Path(f.toUri)
+  }
+
   test("action JSON round trip: add with escapes and options") {
     val a = AddFile(
       path = "p=1/part-00\"x\t.parquet",
@@ -14,12 +25,74 @@ class JsonLogSpec extends AnyFunSuite {
       stats = Some("""{"numRecords":2}"""),
       deletionVector = Some(DeletionVectorDescriptor("u", "abc", Some(1), 40, 2)))
     val line = JsonLog.writeAction(SingleAction(add = Some(a)))
-    val n = JsonLog.parseLine(line)
-    val back = RowCodec.jsonToAdd(n.get("add"))
-    assert(back == a)
+    assert(JsonLog.readCommit(fs, commitFile(Seq(line)), JsonLog.AllKinds) ==
+      Seq(line -> SingleAction(add = Some(a))))
     // absent optionals are omitted, not null
     assert(!line.contains("baseRowId"))
     assert(line.contains("\"q\":null"))
+
+    // every action kind round-trips through writeAction -> readCommit
+    val protocol = Protocol(3, 7, Some(Seq("deletionVectors")),
+      Some(Seq("deletionVectors", "domainMetadata")))
+    val metadata = graft.delta.Metadata("id1", Some("t"), Some("d"),
+      Format("parquet", Map("o" -> "1")),
+      StructType(Seq(StructField("a", LongType))).json, Seq("a"),
+      Map("k" -> "v"), Some(1L))
+    val everyKind = Seq(
+      SingleAction(txn = Some(SetTransaction("app", 3L, Some(9L)))),
+      SingleAction(add = Some(a.copy(tags = Some(Map("t" -> "v")),
+        baseRowId = Some(4L), defaultRowCommitVersion = Some(2L),
+        clusteringProvider = Some("liquid")))),
+      SingleAction(remove = Some(RemoveFile("r.parquet", Some(1L),
+        dataChange = false, Some(true), Some(Map("p" -> "1")), Some(10L),
+        Some("{}"), Some(Map("t" -> "v")), a.deletionVector, Some(4L),
+        Some(2L)))),
+      SingleAction(metaData = Some(metadata)),
+      SingleAction(protocol = Some(protocol)),
+      SingleAction(cdc = Some(AddCDCFile("c.parquet", Map("p" -> "1"), 5L))),
+      SingleAction(commitInfo = Some(CommitInfo(7L, "WRITE",
+        Map("mode" -> "Append"), Some("e"), Some(8L), Some("corr")))),
+      SingleAction(domainMetadata = Some(
+        DomainMetadata("d", """{"k":1}""", removed = true))),
+      SingleAction(sidecar = Some(Sidecar("s.parquet", 11L, 12L,
+        Some(Map("x" -> "y"))))),
+      SingleAction(checkpointMetadata = Some(
+        CheckpointMetadata(13L, Some(Map("a" -> "b"))))))
+    assert(everyKind.size == JsonLog.AllKinds.size)
+    val lines = everyKind.map(JsonLog.writeAction)
+    val path = commitFile(lines)
+    assert(JsonLog.readCommit(fs, path, JsonLog.AllKinds) ==
+      lines.zip(everyKind))
+
+    // a subset of kinds decodes only those kinds
+    assert(JsonLog.readCommit(fs, path, Set("add", "commitInfo"))
+      .map(_._2) == everyKind.filter(x =>
+        x.add.nonEmpty || x.commitInfo.nonEmpty))
+
+    // an add whose tags mention "protocol" passes the pre-filter but
+    // stays an add, and P&M replay looks past it
+    val tagged = SingleAction(add = Some(a.copy(
+      tags = Some(Map("kind" -> "protocol")))))
+    val taggedPath = commitFile(Seq(JsonLog.writeAction(tagged)))
+    assert(JsonLog.readCommit(fs, taggedPath, JsonLog.AllKinds)
+      .map(_._2) == Seq(tagged))
+    assert(JsonLog.readCommit(fs, taggedPath, Set("protocol")).isEmpty)
+    assert(JsonLog.protocolAndMetadata(fs, Seq(taggedPath, path)) ==
+      (Some(protocol), Some(metadata)))
+
+    // a foreign commitInfo with no operation and no in-commit timestamp
+    // gives history() an empty op and the file's modification time
+    val spark = TestSpark.spark
+    val dir = TestSpark.tmpDir("foreignci")
+    DeltaTable.create(spark, dir, StructType(Seq(StructField("a", LongType))))
+    val v1 = FileNames.commitFile(
+      FileNames.logDir(new org.apache.hadoop.fs.Path(dir)), 1L)
+    val f = new java.io.File(v1.toUri.getPath)
+    java.nio.file.Files.write(f.toPath,
+      "{\"commitInfo\":{\"engineInfo\":\"foreign\"}}\n".getBytes("UTF-8"))
+    assert(f.setLastModified(1600000000000L))
+    val h = DeltaTable.forPath(spark, dir).history()
+    assert(h.last == ((1L, 1600000000000L, "")))
   }
 
   test("metadata round trip preserves schema string") {

@@ -150,7 +150,7 @@ class VacuumSpec extends AnyFunSuite {
     Thread.sleep(50)
     val dryDriver = t.vacuum(dryRun = true)
     assert(dryDriver.nonEmpty)
-    System.setProperty("graft.vacuum.forceDistributed", "1")
+    spark.conf.set("graft.replay.driverMaxBytes", "0")
     try {
       val dryWide = t.vacuum(dryRun = true)
       assert(dryWide.toSet == dryDriver.toSet,
@@ -160,7 +160,7 @@ class VacuumSpec extends AnyFunSuite {
       assert(deleted.toSet == dryDriver.toSet)
       assert(t.toDF.orderBy("k").collect().toSeq == before)
       assert(t.vacuum(dryRun = true).isEmpty)
-    } finally System.clearProperty("graft.vacuum.forceDistributed")
+    } finally spark.conf.unset("graft.replay.driverMaxBytes")
   }
 
   test("distributed fsck arm: same missing set and repair as the " +
@@ -187,7 +187,7 @@ class VacuumSpec extends AnyFunSuite {
     // every add resolving a bitmap in it is broken
     val dryDriver = t.fsckRepair(dryRun = true)
     assert(dryDriver.nonEmpty)
-    System.setProperty("graft.fsck.forceDistributed", "1")
+    spark.conf.set("graft.replay.driverMaxBytes", "0")
     try {
       val dryWide = t.fsckRepair(dryRun = true)
       assert(dryWide.toSet == dryDriver.toSet,
@@ -197,7 +197,7 @@ class VacuumSpec extends AnyFunSuite {
       // reads recover, and a second pass finds nothing
       t.toDF.count()
       assert(t.fsckRepair(dryRun = true).isEmpty)
-    } finally System.clearProperty("graft.fsck.forceDistributed")
+    } finally spark.conf.unset("graft.replay.driverMaxBytes")
   }
 
   test("vacuum reports reclaimed files/bytes (vacuum_delete metric)") {
