@@ -18,7 +18,7 @@ object Tables {
       // TIMESTAMP(MICROS, ntz) (reads as TIMESTAMP_NTZ) in others. Branch
       // on the type the scan actually produced and normalize to a UTC
       // TimestampType either way, so queries see one stable schema.
-      import org.apache.spark.sql.functions.{col, expr}
+      import org.apache.spark.sql.functions.expr
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
       if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
             .forall(_ != "true"))

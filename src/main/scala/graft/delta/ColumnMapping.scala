@@ -37,23 +37,12 @@ object ColumnMapping {
     * (recursive; logical types are preserved).
     */
   def physicalSchema(schema: StructType): StructType =
-    StructType(schema.fields.map(physicalField))
-
-  private def physicalField(f: StructField): StructField = {
-    val mb = new MetadataBuilder().withMetadata(f.metadata)
-    if (f.metadata.contains(ID_KEY))
-      mb.putLong(PARQUET_ID_KEY, f.metadata.getLong(ID_KEY))
-    f.copy(name = physicalName(f), dataType = physicalType(f.dataType),
-      metadata = mb.build())
-  }
-
-  private def physicalType(dt: DataType): DataType = dt match {
-    case s: StructType => physicalSchema(s)
-    case a: ArrayType => a.copy(elementType = physicalType(a.elementType))
-    case m: MapType => m.copy(keyType = physicalType(m.keyType),
-      valueType = physicalType(m.valueType))
-    case other => other
-  }
+    NestedFields.map(schema) { (_, f) =>
+      val mb = new MetadataBuilder().withMetadata(f.metadata)
+      if (f.metadata.contains(ID_KEY))
+        mb.putLong(PARQUET_ID_KEY, f.metadata.getLong(ID_KEY))
+      f.copy(name = physicalName(f), metadata = mb.build())
+    }
 
   /** validate_schema_column_mapping (reference
     * column_mapping.rs:82-114): id/name mode requires EVERY field —
@@ -65,22 +54,17 @@ object ColumnMapping {
     */
   def validateSchemaAnnotations(schema: StructType, mode: String): Unit = {
     if (mode == "none") return
-    def walk(st: StructType, prefix: String): Unit =
-      st.fields.foreach { f =>
-        val path = prefix + f.name
+    NestedFields.fieldsWithPaths(schema).foreach {
+      case path @ (_ :+ NestedFields.Field(f)) =>
+        // the error names struct fields only, without slot segments
         require(f.metadata.contains(PHYS_NAME_KEY) &&
             f.metadata.contains(ID_KEY),
           s"column mapping mode '$mode' requires physicalName and id " +
-            s"annotations on every field; '$path' is missing them")
-        def nested(dt: DataType): Unit = dt match {
-          case s: StructType => walk(s, path + ".")
-          case a: ArrayType => nested(a.elementType)
-          case m: MapType => nested(m.keyType); nested(m.valueType)
-          case _ => ()
-        }
-        nested(f.dataType)
-      }
-    walk(schema, "")
+            "annotations on every field; '" + path.collect {
+              case NestedFields.Field(p) => p.name }.mkString(".") +
+            "' is missing them")
+      case _ => ()
+    }
   }
 
   /** Remove `delta.columnMapping.*` annotations recursively — the
@@ -93,20 +77,10 @@ object ColumnMapping {
     * shape.
     */
   def stripAnnotations(schema: StructType): StructType =
-    StructType(schema.fields.map { f =>
-      val m = new MetadataBuilder().withMetadata(f.metadata)
-        .remove(PHYS_NAME_KEY).remove(ID_KEY).build()
-      f.copy(dataType = typeStripAnnotations(f.dataType), metadata = m)
-    })
-
-  private def typeStripAnnotations(dt: DataType): DataType = dt match {
-    case s: StructType => stripAnnotations(s)
-    case a: ArrayType =>
-      a.copy(elementType = typeStripAnnotations(a.elementType))
-    case m: MapType => m.copy(keyType = typeStripAnnotations(m.keyType),
-      valueType = typeStripAnnotations(m.valueType))
-    case other => other
-  }
+    NestedFields.map(schema) { (_, f) =>
+      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+        .remove(PHYS_NAME_KEY).remove(ID_KEY).build())
+    }
 
   /** Remove `parquet.field.id` annotations recursively. Name-mode READS
     * must resolve by name only — a read schema carrying field ids makes
@@ -115,29 +89,14 @@ object ColumnMapping {
     * read.
     */
   def withoutFieldIds(schema: StructType): StructType =
-    StructType(schema.fields.map { f =>
-      val m = new MetadataBuilder().withMetadata(f.metadata)
-        .remove(PARQUET_ID_KEY).build()
-      f.copy(dataType = typeWithoutFieldIds(f.dataType), metadata = m)
-    })
-
-  private def typeWithoutFieldIds(dt: DataType): DataType = dt match {
-    case s: StructType => withoutFieldIds(s)
-    case a: ArrayType => a.copy(elementType = typeWithoutFieldIds(a.elementType))
-    case m: MapType => m.copy(keyType = typeWithoutFieldIds(m.keyType),
-      valueType = typeWithoutFieldIds(m.valueType))
-    case other => other
-  }
+    NestedFields.map(schema) { (_, f) =>
+      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+        .remove(PARQUET_ID_KEY).build())
+    }
 
   /** Strip metadata so a logical-cast target carries clean field names. */
-  private def plainType(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      StructField(f.name, plainType(f.dataType), f.nullable)))
-    case a: ArrayType => a.copy(elementType = plainType(a.elementType))
-    case m: MapType => m.copy(keyType = plainType(m.keyType),
-      valueType = plainType(m.valueType))
-    case other => other
-  }
+  private def plainType(dt: DataType): DataType =
+    NestedFields.map(dt)((_, f) => StructField(f.name, f.dataType, f.nullable))
 
   /** Column selecting the physical top-level field of `f` renamed (with
     * all nested fields) to the logical shape. Struct casts in Spark are
@@ -173,27 +132,17 @@ object ColumnMapping {
     */
   def assignMetadata(schema: StructType, startId: Long = 0L): (StructType, Long) = {
     var next = startId
-    // TOTAL type recursion: struct fields anywhere — map keys, nested
-    // arrays/maps — need annotations (the snapshot gate's
-    // validateSchemaAnnotations enforces exactly this; a writer
-    // shallower than the gate would brick its own tables)
-    def annotateType(t: DataType): DataType = t match {
-      case nested: StructType => annotate(nested)
-      case a: ArrayType => a.copy(elementType = annotateType(a.elementType))
-      case m: MapType => m.copy(keyType = annotateType(m.keyType),
-        valueType = annotateType(m.valueType))
-      case other => other
-    }
-    def annotate(s: StructType): StructType = StructType(s.fields.map { f =>
+    // TOTAL: struct fields anywhere — map keys, nested arrays/maps —
+    // need annotations (the snapshot gate's validateSchemaAnnotations
+    // enforces exactly this; a writer shallower than the gate would
+    // brick its own tables)
+    val out = NestedFields.map(schema) { (_, f) =>
       next += 1
-      val id = next
-      val dt = annotateType(f.dataType)
       val mb = new MetadataBuilder().withMetadata(f.metadata)
-        .putLong(ID_KEY, id)
+        .putLong(ID_KEY, next)
         .putString(PHYS_NAME_KEY, s"col-${java.util.UUID.randomUUID()}")
-      StructField(f.name, dt, f.nullable, mb.build())
-    })
-    val out = annotate(schema)
+      StructField(f.name, f.dataType, f.nullable, mb.build())
+    }
     (out, next)
   }
 
@@ -205,19 +154,12 @@ object ColumnMapping {
     * kernel/src/transaction/schema_evolution.rs:764-783, delta-spark's
     * `findMaxColumnId`).
     */
-  def maxAssignedId(schema: StructType): Long = {
-    def ofType(dt: DataType): Long = dt match {
-      case s: StructType => maxAssignedId(s)
-      case a: ArrayType => ofType(a.elementType)
-      case m: MapType => math.max(ofType(m.keyType), ofType(m.valueType))
-      case _ => 0L
+  def maxAssignedId(schema: StructType): Long =
+    NestedFields.fieldsWithPaths(schema).map(_.last).foldLeft(0L) {
+      case (acc, NestedFields.Field(f)) if f.metadata.contains(ID_KEY) =>
+        math.max(acc, f.metadata.getLong(ID_KEY))
+      case (acc, _) => acc
     }
-    schema.fields.foldLeft(0L) { (acc, f) =>
-      val own = if (f.metadata.contains(ID_KEY))
-        f.metadata.getLong(ID_KEY) else 0L
-      math.max(acc, math.max(own, ofType(f.dataType)))
-    }
-  }
 
   /** Reconcile column-mapping annotations across a schema evolution:
     * fields surviving from `old` (matched by name at each depth) keep

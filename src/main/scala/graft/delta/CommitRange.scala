@@ -6,15 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Public raw-commit iteration over an inclusive `[start, end]` version
   * range (reference kernel/src/commit_range/mod.rs): the range holds
-  * resolved bounds + commit-file pointers; reading actions is LAZY —
-  * no JSON I/O happens until a commit's `actions` DataFrame executes.
-  * Build `forTable` (lists `_delta_log/`) or `fromSnapshot` (reuses a
-  * snapshot's segment, no listing).
+  * resolved bounds + commit-file pointers. `commits` reads each commit
+  * file once on the driver, as the iterator reaches it, for its
+  * commitInfo timestamp; the commit's `actions` DataFrame reads the
+  * file again when it executes. Build `forTable` (lists `_delta_log/`)
+  * or `fromSnapshot` (reuses a snapshot's segment, no listing).
   *
-  * This is the building block under CDF, incremental scan, and the
-  * streaming source — exposed so users can run their own incremental
-  * processing over commits (audit, replication, compaction planning)
-  * without re-implementing log listing and contiguity validation.
+  * A public API for users' own incremental processing over commits
+  * (audit, replication, compaction planning) without re-implementing
+  * log listing and contiguity validation. CDF, incremental scan and
+  * the streaming source do not use it; they read commits through
+  * `JsonLog` directly.
   */
 final class CommitRange private (
     spark: SparkSession,

@@ -554,13 +554,9 @@ object ContentTree {
     * input against a non-nullable target field.
     */
   private def asNullable(st: StructType): StructType =
-    StructType(st.fields.map { f =>
-      f.dataType match {
-        case s: StructType =>
-          f.copy(dataType = asNullable(s), nullable = true)
-        case _ => f.copy(nullable = true)
-      }
-    })
+    NestedFields.map(st) { (path, f) =>
+      if (NestedFields.viaStructs(path)) f.copy(nullable = true) else f
+    }
 
   /** Entries per leaf node before another leaf level would be needed;
     * with the default fan-out a 5M-add table lands ~300k entries

@@ -122,25 +122,7 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
       // renamed logical → physical first. Paths are LOGICAL leaf paths
       // into nested structs; each segment renames independently.
       val physData = ColumnMapping.physicalSchema(snapshot.dataSchema)
-      def l2pWalk(st: StructType,
-          prefix: Seq[String], physPrefix: Seq[String],
-          out: scala.collection.mutable.Map[Seq[String], Seq[String]])
-          : Unit =
-        st.fields.foreach { f =>
-          val lp = prefix :+ f.name
-          val pp = physPrefix :+ ColumnMapping.physicalName(f)
-          out(lp) = pp
-          f.dataType match {
-            case nested: StructType => l2pWalk(nested, lp, pp, out)
-            case _ =>
-          }
-        }
-      val l2p = {
-        val m = scala.collection.mutable.Map
-          .empty[Seq[String], Seq[String]]
-        l2pWalk(snapshot.dataSchema, Nil, Nil, m)
-        m
-      }
+      val l2p = DeltaScan.logicalToPhysical(snapshot.dataSchema)
       val physConjuncts = dataConjuncts.map(_.transform {
         case a: UnresolvedAttribute if l2p.contains(a.nameParts) =>
           UnresolvedAttribute(l2p(a.nameParts))
@@ -525,6 +507,17 @@ class DeltaScan(val snapshot: Snapshot, val predicateSql: Option[String]) {
 }
 
 object DeltaScan {
+
+  /** Physical path of every field of `schema` reached through struct
+    * fields only, keyed by its logical path (each segment renames
+    * independently).
+    */
+  private[delta] def logicalToPhysical(
+      schema: StructType): Map[Seq[String], Seq[String]] =
+    NestedFields.fieldsWithPaths(schema).filter(NestedFields.viaStructs)
+      .map(path => path.map(_.name) -> path.collect {
+        case NestedFields.Field(f) => ColumnMapping.physicalName(f) })
+      .toMap
 
   /** The per-file match aggregate every predicate-DML path shares (both
     * DELETE/UPDATE arms, equality-delete materialization): over `rows`,

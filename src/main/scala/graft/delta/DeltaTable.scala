@@ -1752,6 +1752,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val snap = snapshot()
     SchemaEvolution.validate(snap.schema, newSchema).foreach(msg =>
       throw new IllegalArgumentException(s"illegal schema evolution: $msg"))
+    // siblings differing only in case make every later read of the table
+    // ambiguous (Spark resolves column names case-insensitively)
+    NestedFields.fieldsWithPaths(newSchema).map(_.map(_.name)).toSeq
+      .groupBy(p => p.init :+ p.last.toLowerCase(java.util.Locale.ROOT))
+      .valuesIterator.find(_.size > 1).foreach { paths =>
+        throw new IllegalArgumentException("illegal schema evolution: " +
+          paths.map(_.mkString(".")).mkString("columns '", "' and '", "'") +
+          " differ only in case")
+      }
     val schemaDiff = SchemaEvolution.diff(snap.schema, newSchema)
     val widens = schemaDiff.changed.nonEmpty
     val cmMode = ColumnMapping.mode(snap.metadata)
@@ -1838,28 +1847,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
             "sibling column")
         (fields.take(i + 1) :+ nf) ++ fields.drop(i + 1)
     }
-    def insert(s: StructType, p: Seq[String]): StructType = p match {
-      case Seq(leaf) =>
-        require(!s.fieldNames.contains(leaf),
-          s"column '${path.mkString(".")}' already exists")
-        StructType(place(s.fields,
-          StructField(leaf, dataType, nullable = true)))
-      case step +: rest =>
-        val i = s.fieldNames.indexOf(step)
-        require(i >= 0, s"no struct column '$step'")
-        def descend(dt: DataType): DataType = dt match {
-          case inner: StructType => insert(inner, rest)
-          case a: ArrayType => a.copy(elementType = descend(a.elementType))
-          case m: MapType => m.copy(valueType = descend(m.valueType))
-          case other => throw new IllegalArgumentException(
-            s"cannot add '${path.mkString(".")}': '$step' is " +
-              s"${other.simpleString}, not a struct")
-        }
-        val f = s.fields(i)
-        StructType(s.fields.updated(i,
-          f.copy(dataType = descend(f.dataType))))
-    }
-    alterSchema(insert(snap.schema, path))
+    alterSchema(NestedFields.modifyAt(snap.schema, path, "add",
+        missing = "no struct column") { (s, leaf) =>
+      // case-insensitive, like Spark's column resolution: `ID` beside
+      // `id` would make every later read of the table ambiguous
+      require(!s.fieldNames.exists(_.equalsIgnoreCase(leaf)),
+        s"column '${path.mkString(".")}' already exists")
+      StructType(place(s.fields, StructField(leaf, dataType, nullable = true)))
+    })
   }
 
   /** ALTER COLUMN DROP NOT NULL (loosening; SET NOT NULL refuses — old
@@ -1870,27 +1865,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     require(nullable,
       s"cannot SET NOT NULL on '${path.mkString(".")}': existing rows " +
         "cannot be proven non-null (drop and re-add, or rewrite)")
-    val snap = snapshot()
-    def patch(s: StructType, p: Seq[String]): StructType = {
-      val i = s.fieldNames.indexOf(p.head)
-      require(i >= 0, s"no column '${p.head}'")
-      val f = s.fields(i)
-      if (p.tail.isEmpty)
-        StructType(s.fields.updated(i, f.copy(nullable = true)))
-      else {
-        def descend(dt: DataType): DataType = dt match {
-          case inner: StructType => patch(inner, p.tail)
-          case a: ArrayType => a.copy(elementType = descend(a.elementType))
-          case m: MapType => m.copy(valueType = descend(m.valueType))
-          case other => throw new IllegalArgumentException(
-            s"cannot alter '${path.mkString(".")}': '${p.head}' is " +
-              s"${other.simpleString}, not a struct")
-        }
-        StructType(s.fields.updated(i,
-          f.copy(dataType = descend(f.dataType))))
-      }
-    }
-    alterSchema(patch(snap.schema, path))
+    alterSchema(NestedFields.modifyAt(snapshot().schema, path, "alter")(
+      updateField(_, _)(_.copy(nullable = true))))
   }
 
   /** ALTER COLUMN SET DEFAULT sql / DROP DEFAULT (None). The default
@@ -1911,13 +1887,10 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           s"invalid DEFAULT expression '$d': ${e.getMessage}")
       }
     }
-    def patch(s: StructType, p: Seq[String]): StructType = {
-      val i = s.fieldNames.indexOf(p.head)
-      require(i >= 0, s"no column '${p.head}'")
-      val f = s.fields(i)
-      if (p.tail.isEmpty) {
+    alterSchema(NestedFields.modifyAt(snap.schema, path, "alter") {
+      (s, leaf) => updateField(s, leaf) { f =>
         require(!f.metadata.contains(WriteValidation.GENERATION_KEY),
-          s"'${p.head}' is a generated column — it cannot also carry " +
+          s"'$leaf' is a generated column — it cannot also carry " +
             "a default")
         // only CURRENT_DEFAULT (future writes). EXISTS_DEFAULT is
         // fixed at column-add time — setting it here would make rows
@@ -1929,21 +1902,9 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
           case Some(d) => mb.putString(WriteValidation.DEFAULT_KEY, d)
           case None => mb.remove(WriteValidation.DEFAULT_KEY)
         }
-        StructType(s.fields.updated(i, f.copy(metadata = mb.build())))
-      } else {
-        def descend(dt: DataType): DataType = dt match {
-          case inner: StructType => patch(inner, p.tail)
-          case a: ArrayType => a.copy(elementType = descend(a.elementType))
-          case m: MapType => m.copy(valueType = descend(m.valueType))
-          case other => throw new IllegalArgumentException(
-            s"cannot alter '${path.mkString(".")}': '${p.head}' is " +
-              s"${other.simpleString}, not a struct")
-        }
-        StructType(s.fields.updated(i,
-          f.copy(dataType = descend(f.dataType))))
+        f.copy(metadata = mb.build())
       }
-    }
-    alterSchema(patch(snap.schema, path))
+    })
   }
 
   /** ALTER TABLE ALTER COLUMN TYPE (widening only). */
@@ -1955,23 +1916,8 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     */
   def widenColumn(path: Seq[String], to: DataType): Long = {
     require(path.nonEmpty, "empty column path")
-    val snap = snapshot()
-    def patch(s: StructType, p: Seq[String]): StructType = {
-      val i = s.fieldNames.indexOf(p.head)
-      require(i >= 0, s"no column '${p.head}'")
-      val f = s.fields(i)
-      def descend(dt: DataType): DataType = dt match {
-        case inner: StructType => patch(inner, p.tail)
-        case a: ArrayType => a.copy(elementType = descend(a.elementType))
-        case m: MapType => m.copy(valueType = descend(m.valueType))
-        case other => throw new IllegalArgumentException(
-          s"cannot widen '${path.mkString(".")}': '${p.head}' is " +
-            s"${other.simpleString}, not a struct")
-      }
-      StructType(s.fields.updated(i, f.copy(dataType =
-        if (p.tail.isEmpty) to else descend(f.dataType))))
-    }
-    alterSchema(patch(snap.schema, path))
+    alterSchema(NestedFields.modifyAt(snapshot().schema, path, "widen")(
+      updateField(_, _)(_.copy(dataType = to))))
   }
 
   /** ALTER TABLE RENAME COLUMN (reference
@@ -1991,29 +1937,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       "RENAME COLUMN requires column mapping (set " +
         s"'${ColumnMapping.MODE_KEY}' to 'name' or 'id' first)")
     rejectIfReferenced(snap, path, "rename")
-    def rec(s: StructType, p: Seq[String]): StructType = {
-      val i = s.fieldNames.indexOf(p.head)
-      require(i >= 0, s"no column '${p.head}'")
-      val f = s.fields(i)
-      if (p.tail.isEmpty) {
+    val finalSchema = NestedFields.modifyAt(snap.schema, path, "rename") {
+      (s, leaf) => updateField(s, leaf) { f =>
         require(!s.fields.exists(x =>
             (x ne f) && x.name.equalsIgnoreCase(newName)),
           s"column '$newName' already exists")
-        StructType(s.fields.updated(i, f.copy(name = newName)))
-      } else {
-        def descend(dt: DataType): DataType = dt match {
-          case inner: StructType => rec(inner, p.tail)
-          case a: ArrayType => a.copy(elementType = descend(a.elementType))
-          case m: MapType => m.copy(valueType = descend(m.valueType))
-          case other => throw new IllegalArgumentException(
-            s"cannot rename '${path.mkString(".")}': '${p.head}' is " +
-              s"${other.simpleString}, not a struct")
-        }
-        StructType(s.fields.updated(i,
-          f.copy(dataType = descend(f.dataType))))
+        f.copy(name = newName)
       }
     }
-    val finalSchema = rec(snap.schema, path)
     val newPartCols =
       if (path.length == 1)
         snap.partitionColumns.map(c => if (c == path.head) newName else c)
@@ -2051,29 +1982,15 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     require(!Clustering.physicalColumns(snap).contains(physPath),
       s"cannot drop clustering column '${path.mkString(".")}' — " +
         "re-cluster without it first")
-    def rec(s: StructType, p: Seq[String]): StructType = {
-      val i = s.fieldNames.indexOf(p.head)
-      require(i >= 0, s"no column '${p.head}'")
-      if (p.tail.isEmpty) {
+    val finalSchema = NestedFields.modifyAt(snap.schema, path, "drop") {
+      (s, leaf) =>
+        val i = s.fieldNames.indexOf(leaf)
+        require(i >= 0, s"no column '$leaf'")
         require(s.fields.length > 1,
           s"cannot drop '${path.mkString(".")}': a struct must keep " +
             "at least one column")
         StructType(s.fields.patch(i, Nil, 1))
-      } else {
-        val f = s.fields(i)
-        def descend(dt: DataType): DataType = dt match {
-          case inner: StructType => rec(inner, p.tail)
-          case a: ArrayType => a.copy(elementType = descend(a.elementType))
-          case m: MapType => m.copy(valueType = descend(m.valueType))
-          case other => throw new IllegalArgumentException(
-            s"cannot drop '${path.mkString(".")}': '${p.head}' is " +
-              s"${other.simpleString}, not a struct")
-        }
-        StructType(s.fields.updated(i,
-          f.copy(dataType = descend(f.dataType))))
-      }
     }
-    val finalSchema = rec(snap.schema, path)
     val dotted = path.mkString(".")
     val newConfig = statsColumnsEdit(snap.metadata.configuration) { entry =>
       if (entry == dotted || entry.startsWith(dotted + ".")) None
@@ -2112,21 +2029,33 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     }
   }
 
-  /** Physical path of a (possibly nested) logical column. */
+  /** Rewrite the existing field `leaf` of `s` — the last step of every
+    * ALTER editor that changes a column in place.
+    */
+  private def updateField(s: StructType, leaf: String)(
+      f: StructField => StructField): StructType = {
+    val i = s.fieldNames.indexOf(leaf)
+    require(i >= 0, s"no column '$leaf'")
+    StructType(s.fields.updated(i, f(s.fields(i))))
+  }
+
+  /** Physical path of a (possibly nested) logical column; every step
+    * but the first must address into a struct.
+    */
   private def physicalPathOf(schema: StructType,
       path: Seq[String]): Seq[String] = {
-    var cur: DataType = schema
-    path.map { step =>
-      cur match {
-        case st: StructType =>
-          val f = st.fields.find(_.name == step).getOrElse(
-            throw new IllegalArgumentException(s"no column '$step'"))
-          cur = f.dataType
-          ColumnMapping.physicalName(f)
-        case other => throw new IllegalArgumentException(
-          s"'$step' addresses into ${other.simpleString}, not a struct")
-      }
-    }
+    val fields = NestedFields.fieldsWithPaths(schema).collect {
+      case p @ (_ :+ NestedFields.Field(f)) if NestedFields.viaStructs(p) =>
+        p.map(_.name) -> f
+    }.toMap
+    path.indices.map { k =>
+      fields.getOrElse(path.take(k + 1), throw new IllegalArgumentException(
+        fields.get(path.take(k)).map(_.dataType) match {
+          case Some(other) if !other.isInstanceOf[StructType] =>
+            s"'${path(k)}' addresses into ${other.simpleString}, not a struct"
+          case _ => s"no column '${path(k)}'"
+        }))
+    }.map(ColumnMapping.physicalName)
   }
 
   /** Map each `delta.dataSkippingStatsColumns` entry through `f`
@@ -3661,17 +3590,8 @@ object DeltaTable {
       .exists(_.equalsIgnoreCase("true"))
     val wantsRowTracking = finalConfig.get(RowTracking.ENABLED_KEY)
       .exists(_.equalsIgnoreCase("true"))
-    def hasVariant(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case _: org.apache.spark.sql.types.VariantType => true
-        case st: StructType => st.fields.exists(f => hasVariant(f.dataType))
-        case a: org.apache.spark.sql.types.ArrayType =>
-          hasVariant(a.elementType)
-        case m: org.apache.spark.sql.types.MapType =>
-          hasVariant(m.keyType) || hasVariant(m.valueType)
-        case _ => false
-      }
-    val wantsVariant = hasVariant(finalSchema)
+    val wantsVariant = NestedFields.fieldsWithPaths(finalSchema).exists(
+      _.last.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType])
     val wantsGeo = GeoTypes.containsGeo(finalSchema)
     // variantShredding (reference table_features/mod.rs:630-645,
     // ReaderWriter): files may store variant as

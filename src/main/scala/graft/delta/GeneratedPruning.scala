@@ -1,9 +1,8 @@
 package graft.delta
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 /** Partition-filter derivation for GENERATED partition columns

@@ -128,11 +128,10 @@ object GeoTypes {
 
   /** Does any field (at any struct depth) carry a geo annotation? */
   def containsGeo(st: StructType): Boolean =
-    st.fields.exists { f =>
-      f.metadata.contains(GEO_KEY) || (f.dataType match {
-        case s: StructType => containsGeo(s)
-        case _ => false
-      })
+    NestedFields.fieldsWithPaths(st).exists {
+      case path @ (_ :+ NestedFields.Field(f)) =>
+        NestedFields.viaStructs(path) && f.metadata.contains(GEO_KEY)
+      case _ => false
     }
 
   /** Annotate a Spark field as a geometry/geography column (the

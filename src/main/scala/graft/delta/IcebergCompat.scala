@@ -159,42 +159,20 @@ object IcebergCompat {
 
   /** Generalized allow-list walk shared by V1/V2/V3 validation. */
   private[delta] def firstOffending(schema: StructType,
-      allow: DataType => Boolean): Option[String] = {
-    def walk(path: Seq[String], dt: DataType): Option[String] =
-      if (!allow(dt))
-        Some(s"${path.mkString(".")} (${dt.simpleString})")
-      else dt match {
-        case st: StructType =>
-          st.fields.iterator
-            .flatMap(f => walk(path :+ f.name, f.dataType))
-            .nextOption()
-        case at: ArrayType => walk(path :+ "element", at.elementType)
-        case mt: MapType =>
-          walk(path :+ "key", mt.keyType)
-            .orElse(walk(path :+ "value", mt.valueType))
-        case _ => None
-      }
-    schema.fields.iterator
-      .flatMap(f => walk(Seq(f.name), f.dataType))
-      .nextOption()
-  }
+      allow: DataType => Boolean): Option[String] =
+    NestedFields.fieldsWithPaths(schema)
+      .find(path => !allow(path.last.dataType))
+      .map(path => s"${path.map(_.name).mkString(".")} " +
+        s"(${path.last.dataType.simpleString})")
 
-  /** First field (dotted path) carrying the deprecated
-    * `parquet.field.nested.ids` metadata key.
+  /** First field (dotted path, struct nesting only) carrying the
+    * deprecated `parquet.field.nested.ids` metadata key.
     */
-  private[delta] def legacyNestedIds(schema: StructType): Option[String] = {
-    def walk(path: Seq[String], f: StructField): Option[String] =
-      if (f.metadata.contains(LEGACY_NESTED_IDS_KEY))
-        Some(path.mkString("."))
-      else f.dataType match {
-        case st: StructType =>
-          st.fields.iterator
-            .flatMap(c => walk(path :+ c.name, c))
-            .nextOption()
-        case _ => None
-      }
-    schema.fields.iterator
-      .flatMap(f => walk(Seq(f.name), f))
-      .nextOption()
-  }
+  private[delta] def legacyNestedIds(schema: StructType): Option[String] =
+    NestedFields.fieldsWithPaths(schema).collectFirst {
+      case path @ (_ :+ NestedFields.Field(f)) if
+          NestedFields.viaStructs(path) &&
+            f.metadata.contains(LEGACY_NESTED_IDS_KEY) =>
+        path.map(_.name).mkString(".")
+    }
 }

@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.spark.sql.types.{Metadata => FieldMetadata, MetadataBuilder, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Identity column assignment (reference schema/mod.rs:253-313

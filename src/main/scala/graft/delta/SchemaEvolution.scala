@@ -80,23 +80,22 @@ object SchemaEvolution {
     */
   def diffByFieldId(oldSchema: StructType,
       newSchema: StructType): FieldIdDiff = {
-    def flatten(st: StructType, prefix: String)
-        : Seq[(Option[Long], String, StructField)] =
-      st.fields.toSeq.flatMap { f =>
-        val id =
-          if (f.metadata.contains(ColumnMapping.ID_KEY))
-            Some(f.metadata.getLong(ColumnMapping.ID_KEY))
-          else None
-        val path = prefix + f.name
-        (id, path, f) +: (f.dataType match {
-          case s: StructType => flatten(s, path + ".")
-          case ArrayType(s: StructType, _) =>
-            flatten(s, path + ".element.")
-          case MapType(_, s: StructType, _) =>
-            flatten(s, path + ".value.")
-          case _ => Nil
-        })
-      }
+    import NestedFields.{Field, Slot}
+    // struct fields, entered through at most one array element or map
+    // value slot at a time (never a map key)
+    def flatten(st: StructType): Seq[(Option[Long], String, StructField)] =
+      NestedFields.fieldsWithPaths(st).collect {
+        case path @ (_ :+ Field(f)) if path.zip(path.tail).forall {
+            case (s: Slot, next) =>
+              s.name != "key" && next.isInstanceOf[Field]
+            case _ => true
+          } =>
+          val id =
+            if (f.metadata.contains(ColumnMapping.ID_KEY))
+              Some(f.metadata.getLong(ColumnMapping.ID_KEY))
+            else None
+          (id, path.map(_.name).mkString("."), f)
+      }.toSeq
     def leaf(p: String): String = p.substring(p.lastIndexOf('.') + 1)
     def isStructish(dt: DataType): Boolean = dt match {
       case _: StructType => true
@@ -104,8 +103,8 @@ object SchemaEvolution {
       case MapType(_, _: StructType, _) => true
       case _ => false
     }
-    val o = flatten(oldSchema, "")
-    val n = flatten(newSchema, "")
+    val o = flatten(oldSchema)
+    val n = flatten(newSchema)
     val oById = o.collect { case (Some(i), p, f) => i -> (p, f) }.toMap
     val nById = n.collect { case (Some(i), p, f) => i -> (p, f) }.toMap
     val added = Seq.newBuilder[(String, StructField)]
@@ -245,5 +244,106 @@ object SchemaEvolution {
       .filter(f => find(table, f.name).isEmpty)
       .map(_.copy(nullable = true))
     StructType(kept ++ added)
+  }
+}
+
+/** The one recursion over a single nested Delta schema (reference
+  * kernel/src/schema/mod.rs type tree; schema_evolution.rs
+  * modify_field_at_path). A schema nests through struct fields, array
+  * elements, and map keys and values; every reader and writer that
+  * walks one schema goes through [[map]], [[fieldsWithPaths]] or
+  * [[modifyAt]], and narrows the walk by filtering on the path it is
+  * handed rather than by writing its own recursion.
+  */
+object NestedFields {
+
+  /** One step down a schema: into a struct field, or into the
+    * `element` slot of an array or the `key` / `value` slot of a map.
+    * Either way the step knows the type it leads to.
+    */
+  sealed trait Step {
+    def name: String
+    def dataType: DataType
+  }
+  final case class Field(field: StructField) extends Step {
+    def name: String = field.name
+    def dataType: DataType = field.dataType
+  }
+  final case class Slot(name: String, dataType: DataType) extends Step
+
+  type Path = Seq[Step]
+
+  /** True when `path` reaches its position through struct fields only
+    * (no array or map on the way).
+    */
+  def viaStructs(path: Path): Boolean = path.forall(_.isInstanceOf[Field])
+
+  /** Rewrite every struct field at any depth under `dt`, through array
+    * elements and map keys and values. `f` sees each field top-down —
+    * before its own children — with the path that reaches it (the
+    * field's own step last), and the walk continues into the type of
+    * the field `f` returns. Fields are visited in schema order, map keys
+    * before values.
+    */
+  def map[T <: DataType](dt: T)(f: (Path, StructField) => StructField): T = {
+    def rewrite(prefix: Path, t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map { field =>
+        val path = prefix :+ Field(field)
+        val out = f(path, field)
+        out.copy(dataType = rewrite(path, out.dataType))
+      })
+      case a: ArrayType => a.copy(elementType =
+        rewrite(prefix :+ Slot("element", a.elementType), a.elementType))
+      case m: MapType => m.copy(
+        keyType = rewrite(prefix :+ Slot("key", m.keyType), m.keyType),
+        valueType = rewrite(prefix :+ Slot("value", m.valueType), m.valueType))
+      case other => other
+    }
+    rewrite(Vector.empty, dt).asInstanceOf[T]
+  }
+
+  /** Every position under `dt` — struct fields and array/map slots —
+    * lazily in pre-order (schema order, map keys before values), each as
+    * the path that reaches it, the position itself last.
+    */
+  def fieldsWithPaths(dt: DataType): Iterator[Path] = {
+    def below(prefix: Path, t: DataType): Iterator[Path] = t match {
+      case s: StructType => s.fields.iterator.flatMap(f => at(prefix :+ Field(f)))
+      case a: ArrayType => at(prefix :+ Slot("element", a.elementType))
+      case m: MapType => at(prefix :+ Slot("key", m.keyType)) ++
+        at(prefix :+ Slot("value", m.valueType))
+      case _ => Iterator.empty
+    }
+    def at(path: Path): Iterator[Path] =
+      Iterator.single(path) ++ below(path, path.last.dataType)
+    below(Vector.empty, dt)
+  }
+
+  /** Replace the struct holding the last step of the column `path` with
+    * `edit(struct, lastStep)`. Every earlier step names a field of the
+    * current struct (else `"$missing '<step>'"`), and that field's type
+    * is entered through any arrays (element) and maps (value, never key)
+    * down to a struct; any other type fails as "cannot `verb` ...".
+    */
+  def modifyAt(schema: StructType, path: Seq[String], verb: String,
+      missing: String = "no column")(
+      edit: (StructType, String) => StructType): StructType = {
+    def at(s: StructType, p: Seq[String]): StructType =
+      if (p.tail.isEmpty) edit(s, p.head)
+      else {
+        val i = s.fieldNames.indexOf(p.head)
+        require(i >= 0, s"$missing '${p.head}'")
+        def descend(dt: DataType): DataType = dt match {
+          case inner: StructType => at(inner, p.tail)
+          case a: ArrayType => a.copy(elementType = descend(a.elementType))
+          case m: MapType => m.copy(valueType = descend(m.valueType))
+          case other => throw new IllegalArgumentException(
+            s"cannot $verb '${path.mkString(".")}': '${p.head}' is " +
+              s"${other.simpleString}, not a struct")
+        }
+        val f = s.fields(i)
+        StructType(s.fields.updated(i, f.copy(dataType = descend(f.dataType))))
+      }
+    at(schema, path)
   }
 }

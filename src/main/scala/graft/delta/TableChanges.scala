@@ -1,6 +1,5 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -92,6 +91,19 @@ object TableChanges {
     JsonLog.timestamp(actions.iterator.flatMap(_.commitInfo).nextOption(),
       mtime)
 
+  /** Physical name of every struct field of `schema`, keyed by its
+    * logical path. Total over container nesting: struct fields inside
+    * arrays and map keys/values carry physical names too (assignMetadata
+    * is total for the same reason), so a flip on `arr.element.x` cannot
+    * escape the range guard; the `element`/`key`/`value` segments tell
+    * container positions apart in the key.
+    */
+  private[delta] def physicalNames(schema: StructType): Map[Seq[String], String] =
+    NestedFields.fieldsWithPaths(schema).collect {
+      case path @ (_ :+ NestedFields.Field(f)) =>
+        path.map(_.name) -> ColumnMapping.physicalName(f)
+    }.toMap
+
   private def classifyActions(actions: Seq[SingleAction]): FileClasses = {
     val cdcs = actions.flatMap(_.cdc)
     if (cdcs.nonEmpty)
@@ -165,32 +177,7 @@ object TableChanges {
     // actions: the end snapshot's gate never sees a change that is
     // reverted before the range's end).
     val endMode = ColumnMapping.mode(endSnap.metadata)
-    // total over container nesting: struct fields inside arrays and map
-    // keys/values carry physical names too (ColumnMapping.annotateType
-    // is total for the same reason) — a flip on `arr.element.x` must
-    // not escape the guard; synthetic `element`/`key`/`value` segments
-    // disambiguate container positions in the path key
-    def physType(dt: org.apache.spark.sql.types.DataType,
-        prefix: Seq[String]): Iterator[(Seq[String], String)] = dt match {
-      case st: org.apache.spark.sql.types.StructType => physMapIt(st, prefix)
-      case a: org.apache.spark.sql.types.ArrayType =>
-        physType(a.elementType, prefix :+ "element")
-      case m: org.apache.spark.sql.types.MapType =>
-        physType(m.keyType, prefix :+ "key") ++
-          physType(m.valueType, prefix :+ "value")
-      case _ => Iterator.empty
-    }
-    def physMapIt(s: org.apache.spark.sql.types.StructType,
-        prefix: Seq[String]): Iterator[(Seq[String], String)] =
-      s.fields.iterator.flatMap { f =>
-        val p = prefix :+ f.name
-        Iterator(p -> ColumnMapping.physicalName(f)) ++
-          physType(f.dataType, p)
-      }
-    def physMap(s: org.apache.spark.sql.types.StructType,
-        prefix: Seq[String]): Map[Seq[String], String] =
-      physMapIt(s, prefix).toMap
-    val endPhys = physMap(endSnap.schema, Nil)
+    val endPhys = physicalNames(endSnap.schema)
 
     // ---- SINGLE parse + classify + validate pass over the range ----
     // Each commit JSON is read and classified exactly ONCE; the
@@ -220,7 +207,7 @@ object TableChanges {
             require(ColumnMapping.mode(meta) == endMode,
               s"column mapping mode changes at version $v inside the " +
                 "CDF range")
-            physMap(meta.schema, Nil).foreach { case (p, phys) =>
+            physicalNames(meta.schema).foreach { case (p, phys) =>
               endPhys.get(p).foreach(ep => require(ep == phys,
                 s"column '${p.mkString(".")}' changes physical name at " +
                   s"version $v inside the CDF range"))

@@ -149,7 +149,6 @@ object Similarity {
   def trainCentroids(vecs: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, iterations: Int): Array[(Long, Array[Double])] = {
     val spark = vecs.sparkSession
-    import spark.implicits._
     val ds = asVecs(vecs, idCol, vecCol)
     var cents: Array[(Long, Array[Double], Double)] =
       ds.filter(_.id < numCentroids).collect().sortBy(_.id)
@@ -326,8 +325,6 @@ object Similarity {
 
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String,
       numCentroids: Int, nprobe: Int, k: Int, queryMaxId: Long): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
     val centroids = asVecs(vecs, idCol, vecCol)
       .filter(_.id < numCentroids).collect().sortBy(_.id)
       .map(c => (c.id, c.v, norm(c.v)))

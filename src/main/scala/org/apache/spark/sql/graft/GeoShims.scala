@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DoubleType}
 
 /** Input-type declarations for external expressions: the
   * `ExpectsInputTypes.inputTypes` signature names the private[sql]

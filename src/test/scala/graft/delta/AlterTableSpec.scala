@@ -504,4 +504,291 @@ class AlterTableSpec extends AnyFunSuite {
     assert(pd.dropped.map(_._1).toSet == Set("k", "gone"))
     assert(pd.added.map(_._1).toSet == Set("key", "fresh"))
   }
+
+  /** Compact type rendering for the nesting table below: `!` marks NOT
+    * NULL, `=sql` a CURRENT_DEFAULT; `label` names each struct field.
+    */
+  private def shape(dt: DataType,
+      label: StructField => String = _.name): String = dt match {
+    case s: StructType => s.fields.map { f =>
+      label(f) + ":" + shape(f.dataType, label) +
+        (if (f.nullable) "" else "!") +
+        (if (f.metadata.contains(WriteValidation.DEFAULT_KEY))
+          "=" + f.metadata.getString(WriteValidation.DEFAULT_KEY)
+        else "")
+    }.mkString("struct<", ",", ">")
+    case a: ArrayType => s"array<${shape(a.elementType, label)}>"
+    case m: MapType =>
+      s"map<${shape(m.keyType, label)},${shape(m.valueType, label)}>"
+    case other => other.simpleString
+  }
+
+  // a struct in a struct, in an array, as a map key and as a map value
+  private val nestingSchema = StructType.fromDDL(
+    "k BIGINT, s STRUCT<a: INT, t: STRUCT<b: INT NOT NULL>>, " +
+      "arr ARRAY<STRUCT<c: INT NOT NULL, d: INT>>, " +
+      "m MAP<STRUCT<kk: INT NOT NULL>, STRUCT<v: INT NOT NULL, w: INT>>")
+  private val nestingShape =
+    "struct<k:bigint,s:struct<a:int,t:struct<b:int!>>," +
+      "arr:array<struct<c:int!,d:int>>," +
+      "m:map<struct<kk:int!>,struct<v:int!,w:int>>>"
+
+  /** Rewrite every struct field under `dt` top-down (test-side twin of
+    * the production walk, so the expectations do not lean on it).
+    */
+  private def everyField(dt: DataType)(g: StructField => StructField)
+      : DataType = dt match {
+    case s: StructType => StructType(s.fields.map { f =>
+      val out = g(f)
+      out.copy(dataType = everyField(out.dataType)(g))
+    })
+    case a: ArrayType => a.copy(elementType = everyField(a.elementType)(g))
+    case m: MapType => m.copy(keyType = everyField(m.keyType)(g),
+      valueType = everyField(m.valueType)(g))
+    case other => other
+  }
+
+  /** `nestingSchema` with metadata `key -> "x"` on every field named
+    * `name`.
+    */
+  private def tagged(name: String, key: String): StructType =
+    everyField(nestingSchema) { f =>
+      if (f.name != name) f
+      else f.copy(metadata = new MetadataBuilder()
+        .withMetadata(f.metadata).putString(key, "x").build())
+    }.asInstanceOf[StructType]
+
+  test("nested-schema positions: every ALTER editor pins its schema or " +
+      "its error through struct, array, map-key and map-value paths") {
+    val base = shape(nestingSchema)
+    assert(base == nestingShape)
+    // (label, edit, Right(from -> to) on the base shape | Left(error))
+    type Row = (String, DeltaTable => Unit, Either[String, (String, String)])
+    val add = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.addColumn(p, StringType); () }
+    val nullable = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.setColumnNullable(p, nullable = true); () }
+    val default = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.setColumnDefault(p, Some("7")); () }
+    val widen = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.widenColumn(p, LongType); () }
+    val rename = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.renameColumn(p, "r"); () }
+    val drop = (p: Seq[String]) => (t: DeltaTable) =>
+      { t.dropColumn(p); () }
+    val rows: Seq[Row] = Seq(
+      ("add s.t.z", add(Seq("s", "t", "z")),
+        Right("t:struct<b:int!>" -> "t:struct<b:int!,z:string>")),
+      ("add arr.z", add(Seq("arr", "z")),
+        Right("d:int>>" -> "d:int,z:string>>")),
+      ("add m.z (map value)", add(Seq("m", "z")),
+        Right("w:int>>" -> "w:int,z:string>>")),
+      ("add m.kk (lands in the map value)", add(Seq("m", "kk")),
+        Right("w:int>>" -> "w:int,kk:string>>")),
+      ("add s.t.b (exists)", add(Seq("s", "t", "b")),
+        Left("column 's.t.b' already exists")),
+      ("add k.z", add(Seq("k", "z")),
+        Left("cannot add 'k.z': 'k' is bigint, not a struct")),
+      ("add nope.z", add(Seq("nope", "z")), Left("no struct column 'nope'")),
+      ("add K (case collision)", add(Seq("K")),
+        Left("column 'K' already exists")),
+      ("add s.T (nested case collision)", add(Seq("s", "T")),
+        Left("column 's.T' already exists")),
+      ("nullable s.t.b", nullable(Seq("s", "t", "b")),
+        Right("b:int!" -> "b:int")),
+      ("nullable arr.c", nullable(Seq("arr", "c")),
+        Right("c:int!" -> "c:int")),
+      ("nullable m.v", nullable(Seq("m", "v")), Right("v:int!" -> "v:int")),
+      ("nullable m.kk", nullable(Seq("m", "kk")), Left("no column 'kk'")),
+      ("nullable k.z", nullable(Seq("k", "z")),
+        Left("cannot alter 'k.z': 'k' is bigint, not a struct")),
+      ("nullable nope.z", nullable(Seq("nope", "z")),
+        Left("no column 'nope'")),
+      ("default s.t.b", default(Seq("s", "t", "b")),
+        Right("b:int!" -> "b:int!=7")),
+      ("default arr.d", default(Seq("arr", "d")),
+        Right("d:int>>" -> "d:int=7>>")),
+      ("default m.w", default(Seq("m", "w")),
+        Right("w:int>>" -> "w:int=7>>")),
+      ("default m.kk", default(Seq("m", "kk")), Left("no column 'kk'")),
+      ("default k.z", default(Seq("k", "z")),
+        Left("cannot alter 'k.z': 'k' is bigint, not a struct")),
+      ("widen s.t.b", widen(Seq("s", "t", "b")),
+        Right("b:int!" -> "b:bigint!")),
+      ("widen arr.c", widen(Seq("arr", "c")),
+        Right("c:int!" -> "c:bigint!")),
+      ("widen m.v", widen(Seq("m", "v")), Right("v:int!" -> "v:bigint!")),
+      ("widen m.kk", widen(Seq("m", "kk")), Left("no column 'kk'")),
+      ("widen k.z", widen(Seq("k", "z")),
+        Left("cannot widen 'k.z': 'k' is bigint, not a struct")),
+      ("widen nope.z", widen(Seq("nope", "z")), Left("no column 'nope'")),
+      ("rename s.t.b", rename(Seq("s", "t", "b")),
+        Right("b:int!" -> "r:int!")),
+      ("rename arr.c", rename(Seq("arr", "c")), Right("c:int!" -> "r:int!")),
+      ("rename m.v", rename(Seq("m", "v")), Right("v:int!" -> "r:int!")),
+      ("rename m.kk", rename(Seq("m", "kk")), Left("no column 'kk'")),
+      ("rename m.v to an existing sibling", (t: DeltaTable) =>
+        { t.renameColumn(Seq("m", "v"), "W"); () },
+        Left("column 'W' already exists")),
+      ("rename k.z", rename(Seq("k", "z")),
+        Left("cannot rename 'k.z': 'k' is bigint, not a struct")),
+      ("drop s.a", drop(Seq("s", "a")),
+        Right("s:struct<a:int," -> "s:struct<")),
+      ("drop s.t.b (last field)", drop(Seq("s", "t", "b")),
+        Left("cannot drop 's.t.b': a struct must keep at least one column")),
+      ("drop arr.c", drop(Seq("arr", "c")),
+        Left("'c' addresses into array<struct<c:int,d:int>>, not a struct")),
+      ("drop m.v", drop(Seq("m", "v")), Left("'v' addresses into " +
+        "map<struct<kk:int>,struct<v:int,w:int>>, not a struct")),
+      ("drop m.kk", drop(Seq("m", "kk")), Left("'kk' addresses into " +
+        "map<struct<kk:int>,struct<v:int,w:int>>, not a struct")),
+      ("drop k.z", drop(Seq("k", "z")),
+        Left("'z' addresses into bigint, not a struct")),
+      ("drop nope", drop(Seq("nope")), Left("no column 'nope'")),
+      ("alterSchema adding K", (t: DeltaTable) => {
+        t.alterSchema(StructType(t.snapshot().schema.fields :+
+          StructField("K", IntegerType))); ()
+      }, Left("illegal schema evolution: columns 'k' and 'K' differ " +
+        "only in case")),
+      ("alterSchema adding s.A", (t: DeltaTable) => {
+        val cur = t.snapshot().schema
+        val s = cur("s").dataType.asInstanceOf[StructType]
+        t.alterSchema(StructType(cur.fields.updated(1, cur("s").copy(
+          dataType = s.add("A", IntegerType))))); ()
+      }, Left("illegal schema evolution: columns 's.a' and 's.A' differ " +
+        "only in case")))
+    val mismatches = rows.zipWithIndex.flatMap { case ((label, edit, want), i) =>
+      val dir = TestSpark.tmpDir(s"nesting$i")
+      // rename/drop need column mapping; the default rows run without
+      // it, because on a column-mapped table alterSchema's reconcile
+      // puts the old field metadata back and the new default is lost
+      val mode = if (label.startsWith("default")) "none" else "name"
+      DeltaTable.create(spark, dir, nestingSchema,
+        configuration = Map(ColumnMapping.MODE_KEY -> mode))
+      val t = DeltaTable.forPath(spark, dir)
+      val got = scala.util.Try(edit(t)).toEither.left.map {
+        case e: IllegalArgumentException =>
+          e.getMessage.stripPrefix("requirement failed: ")
+        case e => throw e
+      }.map(_ => shape(t.snapshot().schema))
+      val expected = want.map { case (from, to) =>
+        assert(base.contains(from), label)
+        base.replace(from, to)
+      }
+      if (got == expected) None else Some(s"$label: got $got")
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
+  test("nested-schema positions: column-mapping transforms, physical " +
+      "name maps and the single-schema checks pin their exact output") {
+    import ColumnMapping._
+    // deterministic annotations: pre-order ids, physical name p<id>
+    def annotated(skip: String = ""): StructType = {
+      var n = 0L
+      everyField(nestingSchema) { f =>
+        n += 1
+        if (f.name == skip) f
+        else f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+          .putLong(ID_KEY, n).putString(PHYS_NAME_KEY, s"p$n").build())
+      }.asInstanceOf[StructType]
+    }
+    val det = annotated()
+    def idOf(f: StructField, key: String, mark: String): String =
+      if (f.metadata.contains(key)) mark + f.metadata.getLong(key) else ""
+    val withIds = (f: StructField) => f.name + idOf(f, ID_KEY, "#")
+
+    // assignMetadata: the same pre-order ids, fresh col-<uuid> names
+    val (assigned, maxId) = assignMetadata(nestingSchema)
+    assert(maxId == 12 && maxAssignedId(assigned) == 12 &&
+      maxAssignedId(det) == 12 && maxAssignedId(nestingSchema) == 0)
+    assert(shape(assigned, withIds) == shape(det, withIds))
+    assert(shape(det, withIds) == "struct<k#1:bigint," +
+      "s#2:struct<a#3:int,t#4:struct<b#5:int!>>," +
+      "arr#6:array<struct<c#7:int!,d#8:int>>," +
+      "m#9:map<struct<kk#10:int!>,struct<v#11:int!,w#12:int>>>")
+    assert(shape(assigned, f => f.metadata.getString(PHYS_NAME_KEY)
+      .take(4)).split("col-").length == 13)
+
+    // physicalSchema renames every field and carries parquet.field.id;
+    // withoutFieldIds drops the ids only; stripAnnotations drops the
+    // mapping keys only
+    val phys = physicalSchema(det)
+    val physLabel = (f: StructField) => f.name +
+      idOf(f, PARQUET_ID_KEY, "@") + idOf(f, ID_KEY, "#") +
+      (if (f.metadata.contains(PHYS_NAME_KEY)) "~" else "")
+    val physShape = "struct<p1@1#1~:bigint," +
+      "p2@2#2~:struct<p3@3#3~:int,p4@4#4~:struct<p5@5#5~:int!>>," +
+      "p6@6#6~:array<struct<p7@7#7~:int!,p8@8#8~:int>>," +
+      "p9@9#9~:map<struct<p10@10#10~:int!>,struct<p11@11#11~:int!," +
+      "p12@12#12~:int>>>"
+    assert(shape(phys, physLabel) == physShape)
+    assert(shape(withoutFieldIds(phys), physLabel) ==
+      physShape.replaceAll("@\\d+", ""))
+    assert(shape(stripAnnotations(phys), physLabel) ==
+      physShape.replaceAll("#\\d+~", ""))
+    assert(stripAnnotations(det) == nestingSchema)
+    assert(withoutFieldIds(det) == det)
+
+    // toLogical: the physical columns cast back to clean logical types
+    val physDf = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], phys)
+    val logical = physDf.select(det.fields.map(toLogical).toSeq: _*)
+    assert(shape(logical.schema) == nestingShape)
+    assert(logical.schema.map(_.dataType) == nestingSchema.map(_.dataType))
+
+    // validateSchemaAnnotations names the unannotated field by its
+    // struct-field path, without element/key/value segments
+    validateSchemaAnnotations(det, "name")
+    validateSchemaAnnotations(nestingSchema, "none")
+    Seq("b" -> "s.t.b", "c" -> "arr.c", "kk" -> "m.kk", "w" -> "m.w")
+      .foreach { case (skip, path) =>
+        val e = intercept[IllegalArgumentException](
+          validateSchemaAnnotations(annotated(skip), "id"))
+        assert(e.getMessage == "requirement failed: column mapping mode " +
+          "'id' requires physicalName and id annotations on every field; " +
+          s"'$path' is missing them")
+      }
+
+    // CDF's physical-name map: every field, with slot segments
+    assert(TableChanges.physicalNames(det) == Map(
+      Seq("k") -> "p1", Seq("s") -> "p2", Seq("s", "a") -> "p3",
+      Seq("s", "t") -> "p4", Seq("s", "t", "b") -> "p5",
+      Seq("arr") -> "p6", Seq("arr", "element", "c") -> "p7",
+      Seq("arr", "element", "d") -> "p8", Seq("m") -> "p9",
+      Seq("m", "key", "kk") -> "p10", Seq("m", "value", "v") -> "p11",
+      Seq("m", "value", "w") -> "p12"))
+    // the scan's logical -> physical predicate map: struct fields only
+    assert(DeltaScan.logicalToPhysical(det) == Map(
+      Seq("k") -> Seq("p1"), Seq("s") -> Seq("p2"),
+      Seq("s", "a") -> Seq("p2", "p3"), Seq("s", "t") -> Seq("p2", "p4"),
+      Seq("s", "t", "b") -> Seq("p2", "p4", "p5"),
+      Seq("arr") -> Seq("p6"), Seq("m") -> Seq("p9")))
+
+    // field-id diff: structs, array elements and map values of struct
+    // type, never map keys
+    val d = SchemaEvolution.diffByFieldId(det, StructType(Nil))
+    assert(d.dropped.map(_._1) == Seq("k", "s", "s.a", "s.t", "s.t.b",
+      "arr", "arr.element.c", "arr.element.d", "m", "m.value.v",
+      "m.value.w"))
+
+    // icebergCompat allow-list walk reports slots too; the legacy-ids
+    // and geo checks descend structs only
+    assert(IcebergCompat.firstOffending(det, _ != IntegerType) ==
+      Some("s.a (int)"))
+    assert(IcebergCompat.firstOffending(det, {
+      case _: MapType => false; case _ => true }) ==
+      Some("m (map<struct<kk:int>,struct<v:int,w:int>>)"))
+    val arrOfInt = StructType.fromDDL("x ARRAY<MAP<STRING, INT>>")
+    assert(IcebergCompat.firstOffending(arrOfInt, _ != IntegerType) ==
+      Some("x.element.value (int)"))
+    val legacy = IcebergCompat.LEGACY_NESTED_IDS_KEY
+    assert(IcebergCompat.legacyNestedIds(tagged("b", legacy)) ==
+      Some("s.t.b"))
+    assert(IcebergCompat.legacyNestedIds(tagged("c", legacy)).isEmpty)
+    assert(IcebergCompat.legacyNestedIds(tagged("v", legacy)).isEmpty)
+    assert(GeoTypes.containsGeo(tagged("b", GeoTypes.GEO_KEY)))
+    assert(!GeoTypes.containsGeo(tagged("c", GeoTypes.GEO_KEY)))
+    assert(!GeoTypes.containsGeo(tagged("kk", GeoTypes.GEO_KEY)))
+  }
 }
