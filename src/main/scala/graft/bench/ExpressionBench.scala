@@ -22,19 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object ExpressionBench {
 
-  /** Standalone probe: `sbt "runMain graft.bench.ExpressionBench"`. */
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // warmup
-    println(run(spark))
-    spark.stop()
-  }
-
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime()
     f

@@ -77,19 +77,4 @@ object TreeBench {
       "tree_prune_300k" -> prune,
       "tree_pruned_ratio_300k" -> pruned.toDouble / total)
   }
-
-  def main(args: Array[String]): Unit = {
-    // GRAFT_TREE_PHASES=1: print per-phase TREEPHASE lines (forensics)
-    if (sys.env.get("GRAFT_TREE_PHASES").contains("1"))
-      sys.props("graft.tree.phaseTimings") = "true"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    (1 to 3).foreach(i => println(s"TREEBENCH rep$i ${run(s)}"))
-    s.stop()
-  }
 }

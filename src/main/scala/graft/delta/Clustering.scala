@@ -122,7 +122,7 @@ object Clustering {
     val zCol = {
       val bucketCols = nums.zipWithIndex.map { case ((_, nc), i) =>
         val bs = if (row.isNullAt(i)) Nil
-          else row.getSeq[Double](i).filter(b => b != null && !b.isNaN)
+          else row.getSeq[Double](i).filter(b => !b.isNaN)
         if (bs.isEmpty) lit(0L)
         else {
           // rank within the sorted boundary array via a single

@@ -162,12 +162,12 @@ object ColumnMapping {
     }
 
   /** Reconcile column-mapping annotations across a schema evolution:
-    * fields surviving from `old` (matched by name at each depth) keep
-    * their id + physical name; fields NEW at any depth — including a
-    * field added inside an existing struct — get fresh annotations
-    * starting after `startId`. A widened leaf keeps its annotation (the
-    * physical column is the same). Returns (annotated schema, max id
-    * used).
+    * fields surviving from `old` (matched by name at each depth) take
+    * the new field's metadata with the old field's id, physical name and
+    * nested ids; fields NEW at any depth — including a field added inside
+    * an existing struct — get fresh annotations starting after
+    * `startId`. A widened leaf keeps its annotation (the physical column
+    * is the same). Returns (annotated schema, max id used).
     */
   def reconcile(old: StructType, nu: StructType,
       startId: Long): (StructType, Long) = {
@@ -195,12 +195,27 @@ object ColumnMapping {
         oldByName.get(f.name) match {
           case Some(of) =>
             f.copy(dataType = recType(of.dataType, f.dataType),
-              metadata = of.metadata)
+              metadata = withMappingOf(of, f))
           case None => fresh(f)
         }
       })
     }
     val out = rec(old, nu)
     (out, next)
+  }
+
+  /** `f`'s metadata with the column-mapping annotations of `of`. */
+  private def withMappingOf(of: StructField, f: StructField): Metadata = {
+    val o = of.metadata
+    val mb = new MetadataBuilder().withMetadata(f.metadata)
+      .remove(ID_KEY).remove(PHYS_NAME_KEY)
+      .remove(IcebergCompat.NESTED_IDS_KEY)
+    if (o.contains(ID_KEY)) mb.putLong(ID_KEY, o.getLong(ID_KEY))
+    if (o.contains(PHYS_NAME_KEY))
+      mb.putString(PHYS_NAME_KEY, o.getString(PHYS_NAME_KEY))
+    if (o.contains(IcebergCompat.NESTED_IDS_KEY))
+      mb.putMetadata(IcebergCompat.NESTED_IDS_KEY,
+        o.getMetadata(IcebergCompat.NESTED_IDS_KEY))
+    mb.build()
   }
 }

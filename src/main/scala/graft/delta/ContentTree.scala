@@ -123,9 +123,7 @@ object ContentTree {
   def resolveDvLocation(storageType: String,
       pathOrInlineDv: String): String = storageType match {
     case "p" => pathOrInlineDv
-    case "u" => DeletionVectors.relativePath("u", pathOrInlineDv, "")
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot decode relative DV '$pathOrInlineDv'"))
+    case "u" => DeletionVectors.relativePath(pathOrInlineDv)
     case "i" => throw new IllegalArgumentException(
       "Inline deletion vectors are not supported. They must be " +
         "persisted first.")
@@ -564,20 +562,6 @@ object ContentTree {
     */
   val DEFAULT_LEAF_FANOUT = 16
 
-  /** Bench-probe phase timing (`-Dgraft.tree.phaseTimings=true`):
-    * prints one TREEPHASE line per internal phase of writeTree /
-    * updateRoot so the bench probes can attribute wall time to the
-    * phase that actually dominates. Off by default — a plain
-    * passthrough costing one sys-prop read.
-    */
-  private def phase[A](name: String)(f: => A): A =
-    if (!sys.props.get("graft.tree.phaseTimings").contains("true")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"TREEPHASE $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Write the snapshot's content tree as a TWO-LEVEL manifest
     * hierarchy under `_delta_log/_amt/` (mod.rs:240-242 `DataManifest`
     * root entries + mod.rs:302-342 `ManifestInfo`): leaf nodes are
@@ -668,10 +652,10 @@ object ContentTree {
     // hierarchy shape is unchanged. Parallelism tracks the upstream
     // stage (the distributed replay/merge), which AQE sizes to the
     // data — big builds stay wide, tiny frames legitimately collapse.
-    phase("leafWrite")(entries1.to(target)
+    entries1.to(target)
       .withColumn("leafKey",
         pmod(xxhash64(grouping), lit(numLeaves.toLong)).cast(IntegerType))
-      .write.partitionBy("leafKey").parquet(leavesAbs))
+      .write.partitionBy("leafKey").parquet(leavesAbs)
 
     val fs = Storage.fs(snap.tableRoot,
       spark.sessionState.newHadoopConf())
@@ -689,7 +673,7 @@ object ContentTree {
       .otherwise(0)).cast(IntegerType)
     def rws(s: Int) = sum(when(col("tracking.status") === s,
       coalesce(col("recordCount"), lit(0L))).otherwise(0L))
-    val infoRows = phase("infoAgg")(
+    val infoRows =
       if (leafFiles.isEmpty) Array.empty[Row]
       else spark.read.parquet(leavesAbs).groupBy("leafKey").agg(
         cnt(TrackingStatus.Added).as("af"),
@@ -701,7 +685,7 @@ object ContentTree {
         rws(TrackingStatus.Deleted).as("dr"),
         rws(TrackingStatus.Replaced).as("rr"),
         fmin(col("tracking.sequenceNumber")).as("minSeq"),
-        fcount(lit(1)).as("entries")).collect())
+        fcount(lit(1)).as("entries")).collect()
 
     val rootRows: Seq[Row] = infoRows.toSeq.map { r =>
       val k = r.getInt(0)
@@ -721,9 +705,8 @@ object ContentTree {
         null, null, null, 4, null)
     }
     // the ROOT is O(numLeaves) rows by design — one task is the point
-    phase("rootWrite")(
-      spark.createDataFrame((rootRows ++ extraRootRows).asJava, entrySchema)
-        .coalesce(1).write.parquet(absTree + "/root"))
+    spark.createDataFrame((rootRows ++ extraRootRows).asJava, entrySchema)
+      .coalesce(1).write.parquet(absTree + "/root")
     val rootBytes = Storage.listFilesRecursive(fs,
       new org.apache.hadoop.fs.Path(absTree + "/root")).map(_.getLen).sum
     // loose-row count rides in the root descriptor so the fold-
@@ -1128,8 +1111,7 @@ object ContentTree {
     // JSON scan plus two shuffles, and the local relation broadcasts
     // into the merge join for free. Big windows/commits stay on the
     // distributed diff.
-    val smallWinner = phase("winner")(
-      smallRangeWinner(spark, snap, prev.version))
+    val smallWinner = smallRangeWinner(spark, snap, prev.version)
     val winner = smallWinner.getOrElse {
       val diff = IncrementalScan.fileDiff(spark,
         snap.tableRoot.toString, prev.version, snap.version)
@@ -1149,7 +1131,7 @@ object ContentTree {
     // add side: which adds carry inline DVs (they must persist before
     // entering tree metadata) and whether any is a dataChange=false
     // rewrite (the compaction guard below) — previously two jobs
-    val probe = phase("dvProbe")(winner.filter(col("isAdd") === 1 &&
+    val probe = winner.filter(col("isAdd") === 1 &&
         (col("add.deletionVector.storageType") === "i" ||
           col("add.dataChange") === false))
       .select(col("add.path").as("p"),
@@ -1158,7 +1140,7 @@ object ContentTree {
         col("add.deletionVector.sizeInBytes").as("sz"),
         col("add.deletionVector.cardinality").as("card"),
         col("add.dataChange").as("dc"))
-      .collect().toIndexedSeq)
+      .collect().toIndexedSeq
     val movedRows = probe.exists(!_.getAs[Boolean]("dc"))
     val inlineRows =
       if (!hasDvFeature(snap)) Nil
@@ -1184,7 +1166,7 @@ object ContentTree {
     // data rows in the root, a schema change since the previous build —
     // falls back to merging the whole previous tree.
     val prevRootDf = spark.read.parquet(prev.resolve(tableRootStr))
-    val prevRootRows = phase("prevRoot")(prevRootDf.collect().toSeq)
+    val prevRootRows = prevRootDf.collect().toSeq
     val manifestRows = prevRootRows.filter { r =>
       val ct = r.getAs[Int]("contentType")
       ct == DataContentType.DataManifest ||
@@ -1264,7 +1246,7 @@ object ContentTree {
           // row) only for rows that SURVIVE the semi-join instead of
           // for all 5M (phase probe: 3.0 s → ~1 s on the 5M bench).
           val diffLocs = winner.select(col("loc").as("location"))
-          val affected = phase("reuseProbe")(leavesDF
+          val affected = leavesDF
             .select(col("location"),
               col("_metadata.file_path").as("__fp"))
             .join(if (smallWinner.isDefined) broadcast(diffLocs)
@@ -1274,7 +1256,7 @@ object ContentTree {
                 Storage.URI_PREFIX_REGEX, ""),
               "/[^/]*$", "").cast(StringType)).as("__leafDir"))
             .distinct()
-            .collect().map(_.getString(0)).toSet)
+            .collect().map(_.getString(0)).toSet
           // qualify through the filesystem so a RELATIVE table root
           // (tests run on one) still compares equal to _metadata's
           // absolute file paths
@@ -1487,9 +1469,9 @@ object ContentTree {
       if (deleteContent.schema.fieldNames.contains(n)) col(n)
       else lit(null).cast(entrySchema(n).dataType).as(n)
     } :+ lit(null).cast(statsSchema).as(CONTENT_STATS)
-    val root = phase("mergeWrite")(writeTree(snap,
+    val root = writeTree(snap,
       updated.unionByName(deleteContent.select(deleteCols: _*)),
-      effLeaves, carriedRootRows))
+      effLeaves, carriedRootRows)
     winner.unpersist()
     if (smallMerge) prevAll.unpersist()
     root

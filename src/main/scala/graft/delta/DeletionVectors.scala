@@ -189,31 +189,18 @@ object DeletionVectors {
       conf: Configuration): Array[Long] =
     deserializeBitmap(readBitmapBytes(dv, tableRoot, conf))
 
-  /** Table-relative path of a stored DV file, when it has one: a 'u'
-    * descriptor resolves to `[prefix/]deletion_vector_<uuid>.bin` —
-    * THE SAME resolution `readBitmapBytes` uses (vacuum's live-set must
-    * match the reader or a live DV written with a random prefix gets
-    * vacuumed: data loss); a 'p' descriptor pointing inside `tableRoot`
-    * resolves to its relative path; inline ('i') and out-of-table 'p'
-    * descriptors have none.
+  /** Table-relative path of a `u` descriptor's file,
+    * `[prefix/]deletion_vector_<uuid>.bin` ([[Storage.dvFile]] resolves
+    * it under the table root).
     */
-  def relativePath(storageType: String, pathOrInlineDv: String,
-      tableRootUriPath: String): Option[String] = storageType match {
-    case "u" =>
-      val enc = pathOrInlineDv
-      val prefix = enc.substring(0, enc.length - 20)
-      val uuidBytes = z85Decode(enc.substring(enc.length - 20))
-      val bb = ByteBuffer.wrap(uuidBytes)
-      val uuid = new UUID(bb.getLong, bb.getLong)
-      val name = s"deletion_vector_$uuid.bin"
-      Some(if (prefix.isEmpty) name
-           else s"${prefix.stripSuffix("/")}/$name")
-    case "p" =>
-      val abs = new Path(pathOrInlineDv).toUri.getPath
-      val root = tableRootUriPath.stripSuffix("/")
-      if (abs.startsWith(root + "/")) Some(abs.stripPrefix(root + "/"))
-      else None
-    case _ => None
+  def relativePath(pathOrInlineDv: String): String = {
+    val enc = pathOrInlineDv
+    val prefix = enc.substring(0, enc.length - 20)
+    val uuidBytes = z85Decode(enc.substring(enc.length - 20))
+    val bb = ByteBuffer.wrap(uuidBytes)
+    val uuid = new UUID(bb.getLong, bb.getLong)
+    val name = s"deletion_vector_$uuid.bin"
+    if (prefix.isEmpty) name else s"${prefix.stripSuffix("/")}/$name"
   }
 
   /** The raw portable-bitmap bytes for a descriptor (no row-index
@@ -229,12 +216,7 @@ object DeletionVectors {
       require(magic == PORTABLE_MAGIC, s"invalid inline DV magic $magic")
       bytes.drop(4)
     case "u" | "p" =>
-      val path = dv.storageType match {
-        case "p" => new Path(dv.pathOrInlineDv)
-        case _ =>
-          new Path(tableRoot, relativePath(
-            dv.storageType, dv.pathOrInlineDv, "").get)
-      }
+      val path = Storage.dvFile(tableRoot, dv).get
       val fs = Storage.fs(path, conf)
       val len = fs.getFileStatus(path).getLen.toInt
       val all = new Array[Byte](len)

@@ -913,7 +913,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     * column mapping is off).
     */
   private def physicalProjection(df: DataFrame, snap: Snapshot,
-      passthrough: Seq[String] = Nil): DataFrame = {
+      passthrough: Seq[String]): DataFrame = {
     val physSchema = ColumnMapping.physicalSchema(snap.schema)
     df.select(
       snap.schema.fields.zip(physSchema.fields).map { case (lf, pf) =>
@@ -1978,8 +1978,14 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     require(!(path.length == 1 && snap.partitionColumns.contains(path.head)),
       s"cannot drop partition column '${path.head}'")
     rejectIfReferenced(snap, path, "drop")
-    val physPath = physicalPathOf(snap.schema, path)
-    require(!Clustering.physicalColumns(snap).contains(physPath),
+    // a clustering column is reached through struct fields only, never
+    // through an array or a map
+    val physPath = NestedFields.fieldsWithPaths(snap.schema).collectFirst {
+      case p if NestedFields.viaStructs(p) && p.map(_.name) == path =>
+        p.collect { case NestedFields.Field(f) =>
+          ColumnMapping.physicalName(f) }
+    }
+    require(!physPath.exists(Clustering.physicalColumns(snap).contains),
       s"cannot drop clustering column '${path.mkString(".")}' — " +
         "re-cluster without it first")
     val finalSchema = NestedFields.modifyAt(snap.schema, path, "drop") {
@@ -2037,25 +2043,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
     val i = s.fieldNames.indexOf(leaf)
     require(i >= 0, s"no column '$leaf'")
     StructType(s.fields.updated(i, f(s.fields(i))))
-  }
-
-  /** Physical path of a (possibly nested) logical column; every step
-    * but the first must address into a struct.
-    */
-  private def physicalPathOf(schema: StructType,
-      path: Seq[String]): Seq[String] = {
-    val fields = NestedFields.fieldsWithPaths(schema).collect {
-      case p @ (_ :+ NestedFields.Field(f)) if NestedFields.viaStructs(p) =>
-        p.map(_.name) -> f
-    }.toMap
-    path.indices.map { k =>
-      fields.getOrElse(path.take(k + 1), throw new IllegalArgumentException(
-        fields.get(path.take(k)).map(_.dataType) match {
-          case Some(other) if !other.isInstanceOf[StructType] =>
-            s"'${path(k)}' addresses into ${other.simpleString}, not a struct"
-          case _ => s"no column '${path(k)}'"
-        }))
-    }.map(ColumnMapping.physicalName)
   }
 
   /** Map each `delta.dataSkippingStatsColumns` entry through `f`
@@ -2658,8 +2645,7 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       val dv = a.deletionVector.map { d =>
         d.storageType match {
           case "u" =>
-            val rel = DeletionVectors.relativePath(
-              "u", d.pathOrInlineDv, "").get
+            val rel = DeletionVectors.relativePath(d.pathOrInlineDv)
             d.copy(storageType = "p",
               pathOrInlineDv = new Path(srcRootQ, rel).toString)
           case _ => d // "p" is already absolute; "i" is inline bytes
@@ -2684,205 +2670,169 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
 
   // ---------------- vacuum ----------------
 
-  /** Delete data files no longer referenced by the current snapshot
-    * whose tombstones are older than the retention window (the
-    * operation vacuumProtocolCheck gates; file set reasoning follows
-    * the checkpoint tombstone-retention contract). Never touches
-    * `_delta_log`. Returns the deleted (or would-be deleted, with
-    * `dryRun = true`) table-relative paths.
+  /** Delete the files the log no longer references (the Delta Lake
+    * paper's VACUUM): every file under the table root outside
+    * `_delta_log`, not hidden, older than the retention cutoff, and named
+    * by neither a live add nor a remove whose tombstone is still inside
+    * the retention window (CDF readers within retention resolve those).
+    * An action names its data file and its DV file, resolved by
+    * [[Storage.actionFiles]] exactly as the reader resolves them, and
+    * both sides compare as qualified paths — an add naming its file by
+    * an absolute URI is as live as a relative one. Returns the deleted
+    * (or, with `dryRun = true`, would-be deleted) table-relative paths.
     *
-    * Scale: gated on the same [[Snapshot.smallState]] threshold as the
-    * scan handoff. Small tables compare the recursive listing against
-    * the live set as Scala sets on the driver (one listing, no jobs).
-    * Past the gate, EVERYTHING fans out: the live set stays a
-    * DataFrame, the table listing distributes one subtree per task,
-    * dead files fall out of an anti-join, and the deletes run on
-    * executors — the driver never holds the file list of a 100 TB
-    * table. `graft.replay.driverMaxBytes=0` forces the wide arm.
+    * Scale: gated on [[Snapshot.smallState]], like the scan handoff.
+    * Small tables take the difference as Scala sets on the driver (one
+    * listing, no Spark jobs). Past the gate it is an anti-join: the kept
+    * files stay a Dataset, the listing walks one subtree per task, and
+    * the deletes run on executors, so the driver never holds the file
+    * list. `graft.replay.driverMaxBytes=0` forces the wide arm.
     */
   def vacuum(dryRun: Boolean = false): Seq[String] = {
     val snap = snapshot()
-    val retention = tombstoneRetentionMillis(snap.metadata)
-    val cutoff = now() - retention
-    val rootUri = fs.makeQualified(root).toUri.getPath
-    if (snap.smallState)
-      vacuumDriver(snap, cutoff, rootUri, dryRun)
-    else vacuumDistributed(snap, cutoff, rootUri, dryRun)
-  }
-
-  private def vacuumDriver(snap: Snapshot, cutoff: Long,
-      rootUri: String, dryRun: Boolean): Seq[String] = {
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-
-    // live = every file the current snapshot reads (data + DV files);
-    // DV paths resolve through the SAME prefix logic as the reader
-    // (DeletionVectors.relativePath) — a live DV written with a random
-    // prefix must never look dead
-    val live: Set[String] = {
-      val adds = new DeltaScan(snap, None).collectAddFiles(slim = true)
-      adds.map(a => Storage.decodeUriPath(a.path)).toSet ++
-        adds.flatMap(_.deletionVector).flatMap(dv =>
-          DeletionVectors.relativePath(
-            dv.storageType, dv.pathOrInlineDv, rootUri))
-    }
-
-    // recently removed files stay until their tombstones expire — and so
-    // do their DV files (CDF readers within retention resolve them)
-    val protectedTombstones: Set[String] = snap.latestActions
-      .filter(col("remove").isNotNull && unexpiredTombstone(cutoff))
-      .select(col("remove.path"),
-        col("remove.deletionVector.storageType"),
-        col("remove.deletionVector.pathOrInlineDv")).collect()
-      .flatMap { r =>
-        Seq(Storage.decodeUriPath(r.getString(0))) ++
-          (if (r.isNullAt(1)) Nil
-           else DeletionVectors.relativePath(
-             r.getString(1), r.getString(2), rootUri))
-      }.toSet
-
-    val candidates = Storage.listFilesRecursive(fs, root)
-      .filter { st =>
-        val r = rel(st.getPath)
-        !r.startsWith(FileNames.LOG_DIR) &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") &&
-          st.getModificationTime < cutoff &&
-          !live.contains(r) && !protectedTombstones.contains(r)
+    val cutoff = now() - tombstoneRetentionMillis(snap.metadata)
+    val qroot = fs.makeQualified(root)
+    val kept = Seq(
+      new DeltaScan(snap, None).filesDF
+        .select(col("add.path"), col("add.deletionVector")),
+      snap.latestActions
+        .filter(col("remove").isNotNull && unexpiredTombstone(cutoff))
+        .select(col("remove.path"), col("remove.deletionVector")))
+    val files = DeltaTable.namedFiles(qroot.toString) _
+    val vacuumable = DeltaTable.vacuumable(cutoff) _
+    // (relative path, length) of every dead file
+    val deleted: Seq[(String, Long)] =
+      if (snap.smallState) {
+        val keep = kept.flatMap(_.collect()).flatMap(files).toSet
+        val dead = listTableDriver(qroot)
+          .filter(r => vacuumable(r) && !keep(r._1))
+        if (!dryRun) dead.foreach(r => fs.delete(new Path(r._1), false))
+        dead.map(r => (r._2, r._4))
+      } else {
+        import spark.implicits._
+        val keep = kept.reduce(_ union _).flatMap(files).toDF("path")
+        val bconf = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(hconf))
+        val dead = listTableDistributed(qroot, bconf).filter(vacuumable)
+          .toDF("path", "rel", "mtime", "len")
+          .join(keep, Seq("path"), "left_anti")
+          .select("path", "rel", "len").as[(String, String, Long)]
+        val out = (if (dryRun) dead else dead.mapPartitions { it =>
+          // executor-local FS clients; re-deleting a gone file in a
+          // retried task is a no-op
+          val conf = bconf.value.value
+          it.map { r =>
+            val p = new Path(r._1)
+            p.getFileSystem(conf).delete(p, false)
+            r
+          }
+        }).map(r => (r._2, r._3)).collect().toSeq
+        bconf.destroy()
+        out
       }
-      .map(st => (rel(st.getPath), st.getPath, st.getLen))
-
-    if (!dryRun) {
-      candidates.foreach { case (_, p, _) => fs.delete(p, false) }
+    if (!dryRun)
       // reclaimed bytes — the gauge that says whether vacuums keep up
       // with write amplification
-      Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
-        "vacuum_delete", candidates.size.toLong,
-        candidates.map(_._3).sum))
-    }
-    candidates.map(_._1)
+      Metrics.report(MetricEvent.IoBytes(Metrics.newId(), "vacuum_delete",
+        deleted.size.toLong, deleted.map(_._2).sum))
+    deleted.map(_._1)
   }
 
-  /** The wide vacuum arm — semantics identical to [[vacuumDriver]],
-    * every O(#files) step distributed. Live-artifact derivation (data
-    * path + DV path per add) runs as a narrow flatMap over the slim
-    * add columns; the listing parallelizes one top-level subtree per
-    * task; dead = candidates ANTI-JOIN keep-set (a shuffle join — the
-    * two biggest frames never meet the driver); deletes run
-    * per-partition with executor-local FS clients (idempotent:
-    * a retried task re-deleting a gone file is a no-op). Only the
-    * deleted REL PATHS collect — the API's return value, O(deleted).
+  /** Every file under the table root outside `_delta_log`, as
+    * [[DeltaTable.listingRow]]s, listed on the driver.
     */
-  private def vacuumDistributed(snap: Snapshot, cutoff: Long,
-      rootUri: String, dryRun: Boolean): Seq[String] = {
-    import spark.implicits._
-    def artifactPaths(df: DataFrame) =
-      df.select(col("path"), col("storageType"), col("pathOrInlineDv"))
-        .as[(String, String, String)]
-        .flatMap { case (p, st, pd) =>
-          Seq(Storage.decodeUriPath(p)) ++
-            (if (st == null) Nil
-             else DeletionVectors.relativePath(st, pd, rootUri))
-        }
-    val live = artifactPaths(new DeltaScan(snap, None).filesDF.select(
-      col("add.path").as("path"),
-      col("add.deletionVector.storageType").as("storageType"),
-      col("add.deletionVector.pathOrInlineDv").as("pathOrInlineDv")))
-    val protectedTombstones = artifactPaths(snap.latestActions
-      .filter(col("remove").isNotNull && unexpiredTombstone(cutoff))
-      .select(col("remove.path").as("path"),
-        col("remove.deletionVector.storageType").as("storageType"),
-        col("remove.deletionVector.pathOrInlineDv")
-          .as("pathOrInlineDv")))
-    val keep = live.union(protectedTombstones).toDF("rel")
-
-    // any hidden path still filters per-file, exactly as the driver
-    // arm does
-    val bconf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(hconf))
-    val candidates = listTableDistributed(bconf)
-      .map { case (abs, uriPath, mtime, len) =>
-        (abs, uriPath.stripPrefix(rootUri).stripPrefix("/"), mtime,
-          len) }
-      .filter { case (_, r, mtime, _) =>
-        val name = r.substring(r.lastIndexOf('/') + 1)
-        !r.startsWith(FileNames.LOG_DIR) && !name.startsWith("_") &&
-          !name.startsWith(".") && mtime < cutoff
-      }.toDF("abs", "rel", "mtime", "len")
-
-    val dead = candidates.join(keep, Seq("rel"), "left_anti")
-      .select(col("abs"), col("rel"), col("len"))
-      .as[(String, String, Long)]
-    val out =
-      if (dryRun) dead.map(_._2).collect().toSeq
-      else {
-        val deleted = dead.mapPartitions { it =>
-          val conf = bconf.value.value
-          it.map { case (abs, r, len) =>
-            val p = new Path(abs)
-            p.getFileSystem(conf).delete(p, false)
-            (r, len)
-          }
-        }.collect().toSeq
-        Metrics.report(MetricEvent.IoBytes(Metrics.newId(),
-          "vacuum_delete", deleted.size.toLong,
-          deleted.map(_._2).sum))
-        deleted.map(_._1)
-      }
-    bconf.destroy()
-    out
+  private def listTableDriver(qroot: Path): Seq[DeltaTable.ListingRow] = {
+    val (dirs, top) = listTopLevel(qroot)
+    top ++ DeltaTable.walk(qroot.toString, dirs.iterator, hconf)
   }
 
-  /** Every file under the table root outside `_delta_log`, listed
-    * wide for the distributed VACUUM and FSCK arms: the driver lists
-    * ONE level and tasks walk their subtrees with executor-local FS
-    * clients from `bconf`; `_delta_log` is never walked. Rows are
-    * (absolute path, URI path, modification time, length).
+  /** [[listTableDriver]] for the wide arms: the driver lists the top
+    * level and each subdirectory is walked by a task with an
+    * executor-local FS client from `bconf`.
     */
-  private def listTableDistributed(bconf: org.apache.spark.broadcast
-      .Broadcast[org.apache.spark.util.SerializableConfiguration])
-      : org.apache.spark.sql.Dataset[(String, String, Long, Long)] = {
+  private def listTableDistributed(qroot: Path,
+      bconf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration])
+      : org.apache.spark.sql.Dataset[DeltaTable.ListingRow] = {
     import spark.implicits._
-    val (topDirs, topFiles) =
-      Storage.fs(root, hconf).listStatus(root).toSeq.partition(_.isDirectory)
-    val subdirs = topDirs.map(_.getPath)
-      .filterNot(_.getName == FileNames.LOG_DIR).map(_.toString)
+    val (dirs, top) = listTopLevel(qroot)
+    val rootStr = qroot.toString
     val fromDirs =
-      if (subdirs.isEmpty) spark.emptyDataset[(String, String, Long, Long)]
-      else spark.sparkContext
-        .parallelize(subdirs, math.min(subdirs.size, 256))
-        .mapPartitions { it =>
-          val conf = bconf.value.value
-          it.flatMap { d =>
-            val p = new Path(d)
-            Storage.listFilesRecursive(p.getFileSystem(conf), p)
-              .map(DeltaTable.listingRow)
-          }
-        }.toDS()
-    fromDirs.union(spark.createDataset(topFiles.map(DeltaTable.listingRow)))
+      if (dirs.isEmpty) spark.emptyDataset[DeltaTable.ListingRow]
+      else spark.sparkContext.parallelize(dirs, math.min(dirs.size, 256))
+        .mapPartitions(it => DeltaTable.walk(rootStr, it, bconf.value.value))
+        .toDS()
+    fromDirs.union(top.toDS())
+  }
+
+  /** The root's subdirectories other than `_delta_log`, and the listing
+    * rows of its top-level files.
+    */
+  private def listTopLevel(qroot: Path)
+      : (Seq[String], Seq[DeltaTable.ListingRow]) = {
+    val (dirs, files) = fs.listStatus(qroot).toSeq.partition(_.isDirectory)
+    (dirs.map(_.getPath).filterNot(_.getName == FileNames.LOG_DIR)
+      .map(_.toString), files.map(DeltaTable.listingRow(qroot.toString)))
   }
 
   /** FSCK REPAIR TABLE (delta-spark parity): tombstone live add entries
-    * whose data files are MISSING from storage (manually deleted,
-    * external-cleaner casualties) so every later read stops failing
-    * with FILE_NOT_EXIST. `dryRun` lists the missing paths without
-    * committing. Scale mirrors vacuum's gate: small tables probe
-    * against one driver listing; past [[Snapshot.smallState]] the live
-    * adds stay a DataFrame, the listing distributes, and missing
-    * artifacts fall out of an anti-join — only the BROKEN adds (the
-    * commit's own payload, O(missing)) ever reach the driver. The
-    * repair commit carries plain removes (dataChange=true): downstream
-    * CDF/streaming readers crossing it see row-level deletes they
-    * cannot re-read (the bytes are gone) — delta-spark's FSCK has the
-    * same boundary.
+    * whose data file or DV file is MISSING from storage (manually
+    * deleted, external-cleaner casualties) so every later read stops
+    * failing with FILE_NOT_EXIST. `dryRun` lists the broken adds' paths
+    * without committing. Files are resolved by [[Storage.actionFiles]]
+    * as the reader and VACUUM resolve them; those under the root are
+    * judged against one listing of it, and the rare ones outside it (a
+    * shallow clone's source files, external `p` DVs) are probed one by
+    * one. Scale mirrors vacuum's gate: past [[Snapshot.smallState]] the
+    * live adds stay a DataFrame, the listing distributes, and missing
+    * files fall out of an anti-join — only the broken adds (the
+    * commit's own payload) reach the driver. The repair commit carries
+    * plain removes (dataChange=true): downstream CDF/streaming readers
+    * crossing it see row-level deletes they cannot re-read (the bytes
+    * are gone) — delta-spark's FSCK has the same boundary.
     */
   def fsckRepair(dryRun: Boolean = false): Seq[String] = {
     val snap = snapshot()
     if (!dryRun) writerGate(snap, mutating = true)
-    val rootUri = fs.makeQualified(root).toUri.getPath
+    val qroot = fs.makeQualified(root)
+    val scan = new DeltaScan(snap, None)
+    val inRoot = DeltaTable.underRoot(qroot.toString) _
+    def exists(file: String): Boolean = {
+      val p = new Path(file)
+      Storage.fs(p, hconf).exists(p)
+    }
     val missing: Seq[AddFile] =
-      if (snap.smallState) fsckMissingDriver(snap, rootUri)
-      else fsckMissingDistributed(snap, rootUri)
+      if (snap.smallState) {
+        val present = listTableDriver(qroot).map(_._1).toSet
+        // slim: path/partitionValues/size/deletionVector only — never
+        // stats JSON (gigabytes at millions of files)
+        scan.collectAddFiles(slim = true).filter(a =>
+          Storage.actionFiles(qroot, a.path, a.deletionVector)
+            .map(_.toString)
+            .exists(f => if (inRoot(f)) !present(f) else !exists(f)))
+      } else {
+        import spark.implicits._
+        val files = DeltaTable.namedFiles(qroot.toString) _
+        val bconf = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(hconf))
+        val present = listTableDistributed(qroot, bconf).map(_._1)
+          .toDF("file")
+        val probes = scan.filesDF
+          .select(col("add.path"), col("add.deletionVector"))
+          .flatMap(r => files(r).map(f => (r.getString(0), f, inRoot(f))))
+          .toDF("path", "file", "inRoot")
+        val goneOutside = probes.filter(!col("inRoot"))
+          .select("path", "file").as[(String, String)].collect()
+          .collect { case (p, f) if !exists(f) => p }
+        val gone = probes.filter(col("inRoot"))
+          .join(present, Seq("file"), "left_anti").select("path")
+          .union(goneOutside.toSeq.toDF("path"))
+        val out = scan.filesDF
+          .join(gone, col("add.path") === gone("path"), "left_semi")
+          .select(col("add.*")).collect().map(RowCodec.rowToAdd).toSeq
+        bconf.destroy()
+        out
+      }
     if (dryRun || missing.isEmpty) return missing.map(_.path)
     // maintenance conflict shape: a concurrent APPEND's new files exist
     // by construction (never "missing"), so it commutes; remove/remove
@@ -2892,114 +2842,6 @@ class DeltaTable(val spark: SparkSession, val pathStr: String,
       Actions(removes = missing.map(tombstone(_, dataChange = true))),
       Maintenance)
     missing.map(_.path)
-  }
-
-  private def fsckMissingDriver(snap: Snapshot,
-      rootUri: String): Seq[AddFile] = {
-    // slim: fsck needs path/partitionValues/size/deletionVector only —
-    // never stats JSON (gigabytes at millions of files)
-    val adds = new DeltaScan(snap, None).collectAddFiles(slim = true)
-    // ONE recursive listing answers existence for everything under the
-    // table root (vacuum's approach — per-file exists() would be
-    // O(files) SERIAL round trips on an object store); only
-    // absolute-URI adds outside the root (a shallow clone's source
-    // files, rare by construction) fall back to per-file probes
-    val present: Set[String] = Storage.listFilesRecursive(fs, root)
-      .map(st => fs.makeQualified(st.getPath).toUri.getPath).toSet
-    // under-root needs a path-SEGMENT boundary (root `/data/t` must not
-    // claim `/data/t2/x.parquet`): a sibling dir whose name extends the
-    // root would otherwise be judged against the root-only listing and
-    // live files tombstoned
-    val rootPrefix = rootUri.stripSuffix("/") + "/"
-    def gone(p: Path): Boolean = {
-      val pfs = Storage.fs(p, hconf)
-      val q = pfs.makeQualified(p).toUri.getPath
-      if (q == rootUri || q.startsWith(rootPrefix)) !present(q)
-      else !pfs.exists(p)
-    }
-    adds.filter(brokenAdd(_, rootUri)(gone))
-  }
-
-  /** A live add is broken when its DATA file is gone OR its
-    * deletion-vector FILE is gone (the bitmap is unrecoverable, and
-    * every scan of the file fails with the same FILE_NOT_EXIST this
-    * repair exists to clear) — both repair by tombstoning the add.
-    */
-  private def brokenAdd(a: AddFile, rootUri: String)(
-      gone: Path => Boolean): Boolean =
-    gone(Storage.childPath(root, Storage.decodeUriPath(a.path))) ||
-      a.deletionVector.exists { d =>
-        DeletionVectors.relativePath(
-            d.storageType, d.pathOrInlineDv, rootUri) match {
-          case Some(rel) => gone(Storage.childPath(root, rel))
-          case None if d.storageType == "p" =>
-            gone(new Path(d.pathOrInlineDv)) // external absolute DV
-          case None => false // inline bytes never go missing
-        }
-      }
-
-  /** The wide fsck arm — same missing-artifact semantics as
-    * [[fsckMissingDriver]], O(#files) work distributed. Under-root
-    * artifact probes become an anti-join of (add, expected uri)
-    * against the distributed listing; only ABSOLUTE-URI artifacts (a
-    * shallow clone's source files, external "p" DVs — rare by
-    * construction) collect for exact per-file driver probes. The full
-    * add rows fetched at the end are exactly the broken ones.
-    */
-  private def fsckMissingDistributed(snap: Snapshot,
-      rootUri: String): Seq[AddFile] = {
-    import spark.implicits._
-    val rootPrefix = rootUri.stripSuffix("/") + "/"
-    val scan = new DeltaScan(snap, None)
-
-    // `_delta_log` holds no data or DV artifacts
-    val bconf = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(hconf))
-    val present = listTableDistributed(bconf).map(_._2).toDF("uri")
-
-    val slim = scan.filesDF.select(col("add.path").as("path"),
-      col("add.deletionVector.storageType").as("st"),
-      col("add.deletionVector.pathOrInlineDv").as("pd"))
-    // (add path, expected artifact uri) rows for every UNDER-ROOT
-    // artifact; DV paths anchor at the table root regardless of where
-    // the data file lives
-    val probes = slim.as[(String, String, String)].flatMap {
-      case (p, st, pd) =>
-        val dec = Storage.decodeUriPath(p)
-        val data =
-          if (Storage.isAbsoluteUri(dec) || dec.startsWith("/")) Nil
-          else Seq((p, rootPrefix + dec))
-        val dv =
-          if (st == null) Nil
-          else DeletionVectors.relativePath(st, pd, rootUri)
-            .map(rel => (p, rootPrefix + rel)).toSeq
-        data ++ dv
-    }.toDF("path", "uri")
-    val missingKeys = probes.join(present, Seq("uri"), "left_anti")
-      .select(col("path")).distinct()
-    val missingRel = scan.filesDF
-      .join(missingKeys, col("add.path") === missingKeys("path"),
-        "left_semi")
-      .select(col("add.*")).collect().map(RowCodec.rowToAdd).toSeq
-
-    // absolute-URI data paths and external "p" DVs: exact per-file
-    // probes on the driver (over-collection is safe — the probe is
-    // exact; these rows are rare by construction)
-    val decPath = Storage.decodeUriPathCol(col("add.path"))
-    val pdStripped = regexp_replace(
-      col("add.deletionVector.pathOrInlineDv"),
-      Storage.URI_PREFIX_REGEX, "")
-    val absCond =
-      decPath.rlike("^[a-zA-Z][a-zA-Z0-9+.\\-]*:") ||
-      decPath.startsWith("/") ||
-      (col("add.deletionVector.storageType") === "p" &&
-        !pdStripped.startsWith(rootPrefix))
-    val absolutes = scan.filesDF.filter(absCond)
-      .select(col("add.*")).collect().map(RowCodec.rowToAdd).toSeq
-    val absMissing = absolutes.filter(
-      brokenAdd(_, rootUri)(p => !Storage.fs(p, hconf).exists(p)))
-    bconf.destroy()
-    (missingRel ++ absMissing).map(a => a.path -> a).toMap.values.toSeq
   }
 
   // ---------------- log compaction ----------------
@@ -3442,12 +3284,45 @@ object DeltaTable {
   /** Never rebase. */
   private[delta] case object Strict extends CommitMode
 
-  /** A [[DeltaTable.listTableDistributed]] row: (absolute path, URI
-    * path, modification time, length).
+  /** One file of a table listing: (qualified path, path relative to the
+    * table root, modification time, length).
     */
-  private def listingRow(st: org.apache.hadoop.fs.FileStatus)
-      : (String, String, Long, Long) = (st.getPath.toString,
-    st.getPath.toUri.getPath, st.getModificationTime, st.getLen)
+  private type ListingRow = (String, String, Long, Long)
+
+  private def listingRow(root: String)(st: org.apache.hadoop.fs.FileStatus)
+      : ListingRow = {
+    val p = st.getPath.toString
+    (p, p.stripPrefix(root + "/"), st.getModificationTime, st.getLen)
+  }
+
+  /** Listing rows of every file under the directories `dirs`. */
+  private def walk(root: String, dirs: Iterator[String],
+      conf: org.apache.hadoop.conf.Configuration): Iterator[ListingRow] =
+    dirs.flatMap { d =>
+      val p = new Path(d)
+      Storage.listFilesRecursive(p.getFileSystem(conf), p)
+        .map(listingRow(root))
+    }
+
+  /** Whether a qualified `file` lies under the table `root` — on a path
+    * segment boundary, so root `/data/t` does not hold `/data/t2/x`.
+    */
+  private def underRoot(root: String)(file: String): Boolean =
+    file.startsWith(root + "/")
+
+  /** A listed file VACUUM may delete when nothing keeps it: older than
+    * `cutoff` and not hidden (`_` or `.` names).
+    */
+  private def vacuumable(cutoff: Long)(r: ListingRow): Boolean = {
+    val name = r._2.substring(r._2.lastIndexOf('/') + 1)
+    r._3 < cutoff && !name.startsWith("_") && !name.startsWith(".")
+  }
+
+  /** The qualified files a (path, deletionVector) action row names. */
+  private def namedFiles(root: String)(r: org.apache.spark.sql.Row)
+      : Seq[String] =
+    Storage.actionFiles(new Path(root), r.getString(0),
+      Option(r.getStruct(1)).map(RowCodec.rowToDv)).map(_.toString)
 
   /** How [[DeltaTable.writeCheckpoint]] lays out the reconciled state. */
   private[delta] sealed trait CheckpointLayout

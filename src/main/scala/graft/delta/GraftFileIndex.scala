@@ -99,16 +99,12 @@ object GraftFileIndex {
     */
   def fileKeyOf(spark: SparkSession, tableRoot: Path): AddFile => String = {
     val root = qualifiedRoot(spark, tableRoot)
-    a => fileKey(filePath(root, a))
+    a => fileKey(Storage.dataFile(root, a.path))
   }
 
   private def qualifiedRoot(spark: SparkSession, tableRoot: Path): Path =
     Storage.fs(tableRoot, spark.sessionState.newHadoopConf())
       .makeQualified(tableRoot)
-
-  /** The data file an index rooted at `root` serves for `a`. */
-  private def filePath(root: Path, a: AddFile): Path =
-    Storage.childPath(root, Storage.decodeUriPath(a.path))
 
   /** Single-pass streaming construction: group files by partition
     * values, collect DV references, and sum sizes while the iterator
@@ -132,7 +128,7 @@ object GraftFileIndex {
     val dv = mutable.ArrayBuffer.empty[(String, DeletionVectorDescriptor)]
     var total = 0L
     adds.foreach { a =>
-      val abs = filePath(root, a)
+      val abs = Storage.dataFile(root, a.path)
       val st = new FileStatus(a.size, false, 1, 128L << 20,
         a.modificationTime, abs)
       groups.getOrElseUpdate(a.partitionValues,

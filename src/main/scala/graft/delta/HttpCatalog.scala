@@ -753,7 +753,7 @@ class HttpCatalogClient(base: String, pageSize: Int = 1000,
     */
   @volatile var credentialRenewals: Int = 0
 
-  private def tableUri(table: String, suffix: String = ""): URI =
+  private def tableUri(table: String, suffix: String): URI =
     URI.create(s"$base$BASE${tablePath(catalogName, schemaName, table)}" +
       suffix)
 

@@ -90,6 +90,35 @@ object Storage {
         u.getPath.stripSuffix("/") + "/" + relativeDecoded)
   }
 
+  /** The storage files an `add` or `remove` names — its data file, then
+    * its deletion-vector file if it has one — qualified when `root` is.
+    * The reader, VACUUM and FSCK all resolve through here, so the file a
+    * scan reads is exactly the file VACUUM keeps and FSCK probes.
+    */
+  private[delta] def actionFiles(root: Path, path: String,
+      dv: Option[DeletionVectorDescriptor]): Seq[Path] =
+    dataFile(root, path) +: dv.flatMap(dvFile(root, _)).toSeq
+
+  /** The data file of a percent-encoded action `path`: under `root` when
+    * relative, as given when absolute.
+    */
+  private[delta] def dataFile(root: Path, path: String): Path =
+    childPath(root, decodeUriPath(path))
+
+  /** The file a deletion vector is stored in (reference
+    * kernel/src/actions/deletion_vector.rs `absolute_path`): a `u` DV's
+    * `[prefix/]deletion_vector_<uuid>.bin` under `root`, a `p` DV's path
+    * as given; an inline (`i`) DV names no file.
+    */
+  private[delta] def dvFile(root: Path,
+      dv: DeletionVectorDescriptor): Option[Path] =
+    dv.storageType match {
+      case "u" => Some(childPath(root,
+        DeletionVectors.relativePath(dv.pathOrInlineDv)))
+      case "p" => Some(childPath(root, dv.pathOrInlineDv))
+      case _ => None
+    }
+
   /** Decode a URI-encoded path (add/remove/cdc `path` fields are
     * percent-encoded per the protocol). A literal '+' is legal in a URI
     * path and must not decode to a space.

@@ -296,7 +296,7 @@ class DeltaSource(
     * one was prepared. None = no progress available.
     */
   private def advance(start: Option[DeltaSourceOffset], fileCap: Long,
-      versionCap: Long, byteCap: Long = Long.MaxValue)
+      versionCap: Long, byteCap: Long)
       : Option[DeltaSourceOffset] = {
     val hi = math.min(latestVersion,
       availableNowCeil.getOrElse(Long.MaxValue))

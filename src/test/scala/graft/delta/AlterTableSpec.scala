@@ -1,5 +1,6 @@
 package graft.delta
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -385,24 +386,38 @@ class AlterTableSpec extends AnyFunSuite {
   }
 
   test("setColumnDefault: writes fill omitted columns; feature declared") {
-    val dir = TestSpark.tmpDir("defapi")
-    val src = Seq((1L, "a")).toDF("k", "s")
-    DeltaTable.create(spark, dir, src.schema)
-    val t = DeltaTable.forPath(spark, dir)
-    t.append(src)
-    t.setColumnDefault(Seq("s"), Some("'filled'"))
-    assert(t.snapshot().protocol.writerFeatures
-      .exists(_.contains("allowColumnDefaults")))
-    // DataFrame append missing the column takes the default
-    t.append(Seq(Tuple1(2L)).toDF("k"))
-    assert(t.toDF.orderBy("k").select("s").as[String].collect().toSeq ==
-      Seq("a", "filled"))
-    // DROP DEFAULT: the omission becomes an analysis error again
-    t.setColumnDefault(Seq("s"), None)
-    intercept[Exception](t.append(Seq(Tuple1(3L)).toDF("k")))
-    // invalid default rejected up front
-    intercept[IllegalArgumentException](
-      t.setColumnDefault(Seq("s"), Some("no_such_col + 1")))
+    // on a column-mapped table the default lands beside the field's
+    // unchanged mapping annotations
+    for (mode <- Seq("none", "name")) {
+      val dir = TestSpark.tmpDir("defapi")
+      val src = Seq((1L, "a")).toDF("k", "s")
+      DeltaTable.create(spark, dir, src.schema,
+        configuration = Map(ColumnMapping.MODE_KEY -> mode))
+      val t = DeltaTable.forPath(spark, dir)
+      t.append(src)
+      def mapping(m: Metadata): Option[(Long, String)] =
+        if (!m.contains(ColumnMapping.ID_KEY)) None
+        else Some((m.getLong(ColumnMapping.ID_KEY),
+          m.getString(ColumnMapping.PHYS_NAME_KEY)))
+      val before = t.snapshot().schema("s").metadata
+      t.setColumnDefault(Seq("s"), Some("'filled'"))
+      val after = t.snapshot().schema("s").metadata
+      assert(after.getString(WriteValidation.DEFAULT_KEY) == "'filled'", mode)
+      assert(mapping(before).isDefined == (mode == "name") &&
+        mapping(after) == mapping(before), mode)
+      assert(t.snapshot().protocol.writerFeatures
+        .exists(_.contains("allowColumnDefaults")))
+      // DataFrame append missing the column takes the default
+      t.append(Seq(Tuple1(2L)).toDF("k"))
+      assert(t.toDF.orderBy("k").select("s").as[String].collect().toSeq ==
+        Seq("a", "filled"), mode)
+      // DROP DEFAULT: the omission becomes an analysis error again
+      t.setColumnDefault(Seq("s"), None)
+      intercept[Exception](t.append(Seq(Tuple1(3L)).toDF("k")))
+      // invalid default rejected up front
+      intercept[IllegalArgumentException](
+        t.setColumnDefault(Seq("s"), Some("no_such_col + 1")))
+    }
   }
 
   test("guards: nondeterministic DML predicates, protected property " +
@@ -637,13 +652,12 @@ class AlterTableSpec extends AnyFunSuite {
       ("drop s.t.b (last field)", drop(Seq("s", "t", "b")),
         Left("cannot drop 's.t.b': a struct must keep at least one column")),
       ("drop arr.c", drop(Seq("arr", "c")),
-        Left("'c' addresses into array<struct<c:int,d:int>>, not a struct")),
-      ("drop m.v", drop(Seq("m", "v")), Left("'v' addresses into " +
-        "map<struct<kk:int>,struct<v:int,w:int>>, not a struct")),
-      ("drop m.kk", drop(Seq("m", "kk")), Left("'kk' addresses into " +
-        "map<struct<kk:int>,struct<v:int,w:int>>, not a struct")),
+        Right("struct<c:int!,d:int>" -> "struct<d:int>")),
+      ("drop m.v", drop(Seq("m", "v")),
+        Right("struct<v:int!,w:int>" -> "struct<w:int>")),
+      ("drop m.kk", drop(Seq("m", "kk")), Left("no column 'kk'")),
       ("drop k.z", drop(Seq("k", "z")),
-        Left("'z' addresses into bigint, not a struct")),
+        Left("cannot drop 'k.z': 'k' is bigint, not a struct")),
       ("drop nope", drop(Seq("nope")), Left("no column 'nope'")),
       ("alterSchema adding K", (t: DeltaTable) => {
         t.alterSchema(StructType(t.snapshot().schema.fields :+
@@ -659,12 +673,9 @@ class AlterTableSpec extends AnyFunSuite {
         "only in case")))
     val mismatches = rows.zipWithIndex.flatMap { case ((label, edit, want), i) =>
       val dir = TestSpark.tmpDir(s"nesting$i")
-      // rename/drop need column mapping; the default rows run without
-      // it, because on a column-mapped table alterSchema's reconcile
-      // puts the old field metadata back and the new default is lost
-      val mode = if (label.startsWith("default")) "none" else "name"
+      // rename/drop need column mapping
       DeltaTable.create(spark, dir, nestingSchema,
-        configuration = Map(ColumnMapping.MODE_KEY -> mode))
+        configuration = Map(ColumnMapping.MODE_KEY -> "name"))
       val t = DeltaTable.forPath(spark, dir)
       val got = scala.util.Try(edit(t)).toEither.left.map {
         case e: IllegalArgumentException =>
@@ -678,6 +689,24 @@ class AlterTableSpec extends AnyFunSuite {
       if (got == expected) None else Some(s"$label: got $got")
     }
     assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
+  test("dropColumn reaches a struct field in an array element and in a " +
+      "map value; existing rows read back without it") {
+    val dir = TestSpark.tmpDir("dropnested")
+    DeltaTable.create(spark, dir, nestingSchema,
+      configuration = Map(ColumnMapping.MODE_KEY -> "name"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(spark.createDataFrame(java.util.List.of(Row(1L,
+      Row(1, Row(2)), Seq(Row(3, 4)), Map(Row(5) -> Row(6, 7)))),
+      nestingSchema))
+    t.dropColumn(Seq("arr", "c"))
+    t.dropColumn(Seq("m", "v"))
+    assert(shape(t.snapshot().schema) == nestingShape
+      .replace("struct<c:int!,d:int>", "struct<d:int>")
+      .replace("struct<v:int!,w:int>", "struct<w:int>"))
+    assert(t.toDF.collect().toSeq == Seq(Row(1L, Row(1, Row(2)),
+      Seq(Row(4)), Map(Row(5) -> Row(7)))))
   }
 
   test("nested-schema positions: column-mapping transforms, physical " +

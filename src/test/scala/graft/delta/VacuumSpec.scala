@@ -1,5 +1,8 @@
 package graft.delta
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,7 +122,7 @@ class VacuumSpec extends AnyFunSuite {
     val txt = Storage.readLines(fs, commit).mkString("\n")
     val enc = """"pathOrInlineDv":"([^"]+)"""".r
       .findFirstMatchIn(txt).get.group(1)
-    val rel = DeletionVectors.relativePath("u", enc, "").get
+    val rel = DeletionVectors.relativePath(enc)
     fs.mkdirs(new org.apache.hadoop.fs.Path(root, "ab"))
     assert(fs.rename(new org.apache.hadoop.fs.Path(root, rel),
       new org.apache.hadoop.fs.Path(root, s"ab/$rel")))
@@ -137,7 +140,7 @@ class VacuumSpec extends AnyFunSuite {
   }
 
   test("distributed vacuum arm: same dead set, same deletes, same " +
-      "survivors as the driver arm (graft.vacuum.forceDistributed)") {
+      "survivors as the driver arm (graft.replay.driverMaxBytes=0)") {
     val dir = TestSpark.tmpDir("vacdist")
     val src = (1 to 200).map(i => (i.toLong, s"v$i", i % 4))
       .toDF("k", "s", "p")
@@ -164,7 +167,7 @@ class VacuumSpec extends AnyFunSuite {
   }
 
   test("distributed fsck arm: same missing set and repair as the " +
-      "driver arm (graft.fsck.forceDistributed)") {
+      "driver arm (graft.replay.driverMaxBytes=0)") {
     val dir = TestSpark.tmpDir("fsckdist")
     val src = (1 to 50000).map(i => (i.toLong, s"v$i", i % 2))
       .toDF("k", "s", "p")
@@ -270,5 +273,164 @@ class VacuumSpec extends AnyFunSuite {
     assert(t.fsckRepair(dryRun = true).isEmpty)
     assert(t.fsckRepair().isEmpty)
     assert(t.toDF.count() == 10)
+  }
+
+  /** Rewrite commit `v` of the table at `root` through `edit`, which
+    * must change it (how these tests plant descriptors and paths that no
+    * writer here produces).
+    */
+  private def patchCommit(root: Path, v: Long)(edit: String => String)
+      : Unit = {
+    val fs = Storage.fs(root, spark.sessionState.newHadoopConf())
+    val commit = FileNames.commitFile(FileNames.logDir(root), v)
+    val txt = Storage.readLines(fs, commit).mkString("\n")
+    val out = edit(txt)
+    assert(out != txt, s"commit $v unchanged")
+    fs.delete(commit, false)
+    Storage.put(fs, commit, out + "\n")
+  }
+
+  test("vacuum and fsck resolve every file an action names, on both " +
+      "arms: relative and absolute adds, prefixed u, p and inline DVs") {
+    for (wide <- Seq(false, true)) {
+      val dir = TestSpark.tmpDir("vacpaths") + "/t"
+      val root = new Path(dir)
+      val fs = Storage.fs(root, spark.sessionState.newHadoopConf())
+      def rows(ks: Range) =
+        ks.map(i => (i.toLong, s"v$i")).toDF("k", "s").coalesce(1)
+      DeltaTable.create(spark, dir, rows(1 to 1).schema, configuration = Map(
+        "delta.enableDeletionVectors" -> "true",
+        "delta.deletedFileRetentionDuration" -> "interval 0 hours"))
+      val t = DeltaTable.forPath(spark, dir)
+      def adds() = new DeltaScan(t.snapshot(), None).collectAddFiles()
+      def appendFile(ks: Range): String = {
+        val before = adds().map(_.path).toSet
+        t.append(rows(ks))
+        val added = adds().map(_.path).filterNot(before)
+        assert(added.size == 1, s"expected one file, got $added")
+        added.head
+      }
+      def dvOf(path: String) = adds().find(_.path == path).get
+        .deletionVector.get
+
+      val relative = appendFile(1 to 10)
+      val uDv = appendFile(1001 to 2000)
+      val pDv = appendFile(2001 to 3000)
+      val inline = appendFile(3001 to 3010)
+      val missing = appendFile(4001 to 4010)
+      // scattered deletes: bitmaps too large to inline -> DV files
+      t.deleteWhereDV("k > 1000 AND k <= 2000 AND k % 3 = 0")
+      // a writer that used a random directory prefix: the DV file moves
+      // under ab/ and its descriptor becomes "ab" + z85(uuid)
+      val enc = dvOf(uDv).pathOrInlineDv
+      val uRel = DeletionVectors.relativePath(enc)
+      fs.mkdirs(new Path(root, "ab"))
+      assert(fs.rename(new Path(root, uRel), new Path(root, s"ab/$uRel")))
+      patchCommit(root, t.snapshot().version)(_.replace(
+        s""""pathOrInlineDv":"$enc"""", s""""pathOrInlineDv":"ab$enc""""))
+      t.deleteWhereDV("k > 2000 AND k <= 3000 AND k % 3 = 0")
+      // the second DV file, named by its absolute URI inside the root
+      val pEnc = dvOf(pDv).pathOrInlineDv
+      val pAbs = fs.makeQualified(
+        new Path(root, DeletionVectors.relativePath(pEnc))).toString
+      patchCommit(root, t.snapshot().version)(_.replace(
+        s""""storageType":"u","pathOrInlineDv":"$pEnc"""",
+        s""""storageType":"p","pathOrInlineDv":"$pAbs""""))
+      t.deleteWhereDV("k = 3005")
+      assert(Seq(uDv, pDv, inline).map(dvOf(_).storageType) ==
+        Seq("u", "p", "i"))
+
+      // a live file inside the root and one in sibling `<dir>2` (its
+      // path starts with the root's), both added by absolute URI
+      rows(5001 to 5010).write.parquet(dir + "/extra")
+      rows(6001 to 6010).write.parquet(dir + "2")
+      val absolute = Seq(dir + "/extra", dir + "2").map { d =>
+        fs.makeQualified(fs.listStatus(new Path(d)).map(_.getPath)
+          .find(_.getName.endsWith(".parquet")).get)
+      }
+      Storage.put(fs, FileNames.commitFile(FileNames.logDir(root),
+          t.snapshot().version + 1),
+        absolute.map { p =>
+          val st = fs.getFileStatus(p)
+          JsonLog.writeAction(SingleAction(add = Some(AddFile(p.toString,
+            Map.empty, st.getLen, st.getModificationTime,
+            dataChange = true)))) + "\n"
+        }.mkString)
+
+      // one orphan, and one live file gone from storage
+      val orphan = "part-00000-orphan.snappy.parquet"
+      Storage.put(fs, new Path(root, orphan), "orphan")
+      assert(fs.delete(Storage.dataFile(root, missing), false))
+      Thread.sleep(50) // mtimes strictly below the vacuum cutoff
+
+      // every file the table leaves in storage and what must become of
+      // it: kept, deleted by VACUUM, or reported missing by FSCK
+      val files = Seq(
+        ("relative add", Storage.dataFile(root, relative), "kept"),
+        ("absolute in-root add", absolute(0), "kept"),
+        ("absolute sibling add", absolute(1), "kept"),
+        ("data file under a u DV", Storage.dataFile(root, uDv), "kept"),
+        ("prefixed u DV", new Path(root, s"ab/$uRel"), "kept"),
+        ("data file under a p DV", Storage.dataFile(root, pDv), "kept"),
+        ("in-root p DV", new Path(pAbs), "kept"),
+        ("data file under an inline DV", Storage.dataFile(root, inline),
+          "kept"),
+        ("planted orphan", new Path(root, orphan), "vacuumed"),
+        ("deleted live file", Storage.dataFile(root, missing), "missing"))
+      def named(fate: String) = files.filter(_._3 == fate).map(_._2)
+      assert(named("kept").forall(fs.exists) &&
+        named("vacuumed").forall(fs.exists) &&
+        !named("missing").exists(fs.exists))
+
+      def arm[A](f: => A): A =
+        if (!wide) f
+        else {
+          spark.conf.set("graft.replay.driverMaxBytes", "0")
+          try f finally spark.conf.unset("graft.replay.driverMaxBytes")
+        }
+      val label = if (wide) "wide arm" else "driver arm"
+      assert(arm(t.vacuum(dryRun = true)) == Seq(orphan), label)
+      assert(arm(t.fsckRepair(dryRun = true)) == Seq(missing), label)
+      assert(arm(t.fsckRepair()) == Seq(missing), label)
+      assert(arm(t.vacuum()) == Seq(orphan), label)
+      files.foreach { case (what, p, fate) =>
+        assert(fs.exists(p) == (fate == "kept"), s"$label: $what")
+      }
+      val survivors = (1 to 10) ++
+        (1001 to 3000).filter(_ % 3 != 0) ++
+        (3001 to 3010).filter(_ != 3005) ++ (5001 to 5010) ++ (6001 to 6010)
+      assert(t.toDF.select($"k").as[Long].collect().sorted.toSeq ==
+        survivors.map(_.toLong), label)
+    }
+  }
+
+  test("vacuum and fsck dry runs on a driver-small table launch no Spark " +
+      "job") {
+    val dir = TestSpark.tmpDir("vacjobs")
+    val src = (1 to 2000).map(i => (i.toLong, s"v$i")).toDF("k", "s")
+    DeltaTable.create(spark, dir, src.schema, configuration = Map(
+      "delta.enableDeletionVectors" -> "true",
+      "delta.deletedFileRetentionDuration" -> "interval 0 hours"))
+    val t = DeltaTable.forPath(spark, dir)
+    t.append(src.repartition(2))
+    t.deleteWhere("k <= 100") // rewrite leftovers: dead files
+    t.deleteWhereDV("k % 3 = 0") // live DV files
+    Thread.sleep(50)
+    assert(t.snapshot().smallState)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val dead = t.vacuum(dryRun = true)
+      val missing = t.fsckRepair(dryRun = true)
+      TestListenerBus.drain(sc)
+      assert(dead.nonEmpty && missing.isEmpty)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran")
+    } finally sc.removeSparkListener(listener)
   }
 }
